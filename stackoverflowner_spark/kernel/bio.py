@@ -97,6 +97,22 @@ def _relabel(rows: List[Optional[list]], spans: Sequence[Standoff]) -> None:
         row[0] = tag
 
 
+def _labelled_rows(final_text: str, spans: Sequence[Standoff]
+                   ) -> List[Optional[list]]:
+    """Tokenize each line of ``final_text`` and BIO-label ``spans``: one
+    ``[tag, start, end, token]`` row per token, ``None`` after each line.
+    Raises TokenizerGuardError if any line trips the tokenizer guard."""
+    rows: List[Optional[list]] = []
+    offset = 0
+    for s in final_text.splitlines(keepends=True):
+        for tok, pos in _tokenize_with_offsets(s):
+            rows.append(["O", pos + offset, pos + offset + len(tok), tok])
+        rows.append(None)
+        offset += len(s)
+    _relabel(rows, eliminate_overlaps(spans))
+    return rows
+
+
 def sentence_token_tags(final_text: str, spans: Sequence[Standoff]
                         ) -> List[Tuple[int, List[str], List[str]]]:
     """(sent_idx, tokens, tags) per non-empty sentence — the fused-kernel
@@ -106,17 +122,7 @@ def sentence_token_tags(final_text: str, spans: Sequence[Standoff]
     at corpus scale). Sentence numbering, token order and tags are
     IDENTICAL to grouping ``text_to_conll_rows`` output by sent_idx —
     gated by the fused-vs-modular equality tests."""
-    sentences = final_text.splitlines(keepends=True)
-    rows: List[Optional[list]] = []
-    offset = 0
-    for s in sentences:
-        for tok, pos in _tokenize_with_offsets(s):
-            rows.append(["O", pos + offset, pos + offset + len(tok), tok])
-        rows.append(None)
-        offset += len(s)
-
-    _relabel(rows, eliminate_overlaps(spans))
-
+    rows = _labelled_rows(final_text, spans)
     out: List[Tuple[int, List[str], List[str]]] = []
     toks: List[str] = []
     tags: List[str] = []
@@ -145,17 +151,7 @@ def text_to_conll_rows(final_text: str, spans: Sequence[Standoff]) -> List[Conll
     tokenizer guard; the caller drops the whole document (the reference skips
     the file, anntoconll.py:265-269).
     """
-    sentences = final_text.splitlines(keepends=True)
-    rows: List[Optional[list]] = []
-    offset = 0
-    for s in sentences:
-        for tok, pos in _tokenize_with_offsets(s):
-            rows.append(["O", pos + offset, pos + offset + len(tok), tok])
-        rows.append(None)
-        offset += len(s)
-
-    _relabel(rows, eliminate_overlaps(spans))
-
+    rows = _labelled_rows(final_text, spans)
     out: List[ConllRow] = []
     sent_idx = 0
     tok_idx = 0

@@ -11,8 +11,8 @@ engine-side counterpart: one confident single-token entity mention votes for
 its surface form, and other in-document occurrences of the same surface that
 the tagger left O inherit the majority label.
 
-Pure kernel (no Spark): the fused hot path (``pages_to_mentions_fused``)
-applies it inside the page loop — a page IS the document, so the pass costs
+Pure kernel (no Spark): the fused hot path applies it inside the page
+loop (``kernel/document.py`` ``page_batch_mentions``) — a page IS the document, so the pass costs
 zero shuffle; the declarative Spark twin (``operators/consistency.py``)
 states the same votes/relabel semantics as window + join for the driver
 oracle.

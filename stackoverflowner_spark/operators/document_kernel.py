@@ -8,6 +8,9 @@ triple aggregation. At 100 TB that matters more than anything else: no
 sentence-regroup shuffle exists because tokens never leave their sentence row
 until they are exploded for purely columnar consumers.
 
+The page loop itself is the Spark-free ``kernel/document.py``; the
+``mapInPandas`` bodies here only attach Spark columns to its results.
+
 Stage mirror of the reference trace (SURVEY.md §3.1):
   extract   = Extract_Text_From_XML + tokenize_and_annotae_post_body
   sentences = convert_standoff_to_conll (stokenizer + map_text_to_char + relabel)
@@ -16,18 +19,19 @@ Stage mirror of the reference trace (SURVEY.md §3.1):
 
 from __future__ import annotations
 
-import json
-from typing import Iterator, List
+from itertools import groupby
+from operator import attrgetter
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.bio import sentence_token_tags, text_to_conll_rows
-from ..kernel.conlleval import extract_chunks
-from ..kernel.htmltext import ExtractionError, extract_text
-from ..kernel.sentencize import Standoff, sentencize
+from ..kernel.bio import text_to_conll_rows
+from ..kernel.document import (  # noqa: F401  (MAX_HTML_BYTES: public here)
+    MAX_HTML_BYTES, PageError, mention_rows, page_batch_mentions, read_page)
+from ..kernel.sentencize import Standoff
 from ..kernel.sotok import TokenizerGuardError
 
 EXTRACTED_SCHEMA = T.StructType([
@@ -54,45 +58,52 @@ SENTENCES_SCHEMA = T.StructType([
     T.StructField("ends", T.ArrayType(T.IntegerType()), False),
 ])
 
+MENTIONS_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("sent_idx", T.IntegerType(), False),
+    T.StructField("tok_start", T.IntegerType(), False),
+    T.StructField("tok_end", T.IntegerType(), False),
+    T.StructField("surface", T.StringType(), False),
+    T.StructField("surface_norm", T.StringType(), False),
+    T.StructField("tag_type", T.StringType(), False),
+])
+MENTION_COLS = MENTIONS_SCHEMA.fieldNames()
+
+
+def page_bodies(pages: DataFrame, lang_filter: str | None, *extra: str
+                ) -> DataFrame:
+    """The kernel's input ``(url, *extra, html, text)``. text is nulled
+    where html exists, so the Arrow crossing ships one body per row, not
+    two (rows commonly carry both; this cuts Python-side ingress ~40%)."""
+    if lang_filter:
+        pages = pages.filter(F.col("lang") == lang_filter)
+    return pages.select(
+        "url", *extra, "html",
+        F.when(F.col("html").isNull(), F.col("text")).alias("text"))
+
 
 def extract_stage(pages: DataFrame, lang_filter: str | None = "en") -> DataFrame:
     """pages -> extracted. Column-pruned scan: only (url, html, text, lang)
     are read; the lang filter is pushed to the parquet scan before the UDF."""
-    if lang_filter:
-        pages = pages.filter(F.col("lang") == lang_filter)
-    # text is the html-less fallback only: null it out when html exists so
-    # the Arrow crossing ships one body per row, not two (rows commonly
-    # carry both; this cuts Python-side ingress ~40% on such tables)
-    cols = pages.select(
-        "url", "html",
-        F.when(F.col("html").isNull(), F.col("text")).alias("text"), "lang")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for url, html, text, lang in zip(pdf["url"], pdf["html"], pdf["text"], pdf["lang"]):
-                trunc = False
+            for url, lang, html, text in zip(pdf["url"], pdf["lang"],
+                                             pdf["html"], pdf["text"]):
                 try:
-                    if html is not None:
-                        raw = bytes(html)
-                        trunc = len(raw) > MAX_HTML_BYTES
-                        extracted = extract_text(
-                            raw[:MAX_HTML_BYTES].decode("utf-8", "replace"))
-                    elif text is not None:
-                        trunc = len(text) > MAX_HTML_BYTES
-                        extracted = text[:MAX_HTML_BYTES]
-                    else:
-                        raise ExtractionError("row has neither html nor text")
-                    final, anns = sentencize(extracted, url.rsplit("/", 1)[-1])
-                    out.append((url, lang, final,
-                                [(a.start, a.end, a.type, a.text) for a in anns],
-                                True, None, trunc))
-                except ExtractionError as e:
-                    out.append((url, lang, None, None, False, f"extract:{e}", trunc))
-            yield pd.DataFrame(out, columns=[
-                "url", "lang", "final_text", "anns", "ok", "err", "truncated"])
+                    final, anns, trunc = read_page(url, html, text)
+                except PageError as e:
+                    out.append((url, lang, None, None, False, f"extract:{e}",
+                                e.truncated))
+                    continue
+                out.append((url, lang, final,
+                            [(a.start, a.end, a.type, a.text) for a in anns],
+                            True, None, trunc))
+            yield pd.DataFrame(out, columns=EXTRACTED_SCHEMA.fieldNames())
 
-    return cols.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return page_bodies(pages, lang_filter, "lang").mapInPandas(
+        run, schema=EXTRACTED_SCHEMA)
 
 
 def sentences_stage(extracted: DataFrame) -> DataFrame:
@@ -115,17 +126,9 @@ def sentences_stage(extracted: DataFrame) -> DataFrame:
                 except TokenizerGuardError:
                     out.append((url, -1, [], [], [], []))
                     continue
-                by_sent: dict = {}
-                for r in conll:
-                    by_sent.setdefault(r.sent_idx, []).append(r)
-                for sent_idx, rs in by_sent.items():
-                    out.append((
-                        url, sent_idx,
-                        [r.token for r in rs],
-                        [r.tag for r in rs],
-                        [r.start for r in rs],
-                        [r.end for r in rs],
-                    ))
+                for sent_idx, rs in groupby(conll, key=attrgetter("sent_idx")):
+                    _, _, toks, tags, starts, ends = map(list, zip(*rs))
+                    out.append((url, sent_idx, toks, tags, starts, ends))
             yield pd.DataFrame(
                 out, columns=["url", "sent_idx", "tokens", "md_tags", "starts", "ends"])
 
@@ -147,14 +150,6 @@ def tokens_long(sentences: DataFrame) -> DataFrame:
         F.col("z.starts").alias("start"),
         F.col("z.ends").alias("end"),
     )
-
-
-MAX_HTML_BYTES = 2_000_000
-"""Spill policy for pathological pages (SURVEY.md §4 'giant pages bounded'):
-bodies above this cap are truncated at the cap before extraction and the row
-is countable via the `truncated` observation column in extract_stage. A 2 MB
-html body is ~50x the Common-Crawl median; beyond it the text is boilerplate
-with vanishing mention yield, and unbounded rows are what OOM executors."""
 
 
 # (applicationId, tagger id) -> (weak tagger ref, Broadcast). Bounded;
@@ -217,82 +212,19 @@ def pages_to_mentions_fused(pages: DataFrame, tagger,
     here (the raw fused kernel stays bitwise-equal to the modular stage
     chain); KGPipeline enables it on both of its paths.
     """
-    if lang_filter:
-        pages = pages.filter(F.col("lang") == lang_filter)
-    cols = pages.select(
-        "url", "html",
-        F.when(F.col("html").isNull(), F.col("text")).alias("text"))
-
     bc = _tagger_broadcast(pages.sparkSession, tagger)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = bc.value
-        batch_tag = getattr(tagger, "tag_sentences", None)
         for pdf in batches:
-            # phase 1: extract + sentencize the whole Arrow batch, collecting
-            # every sentence so taggers with a batched decode amortize their
-            # per-sentence numpy overhead across the batch
-            sents = []  # (url, sent_idx, tokens, md_tags)
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                try:
-                    if html is not None:
-                        body = bytes(html)[:MAX_HTML_BYTES].decode("utf-8", "replace")
-                        extracted = extract_text(body)
-                    elif text is not None:
-                        extracted = text[:MAX_HTML_BYTES]
-                    else:
-                        continue
-                    final, anns = sentencize(extracted, url.rsplit("/", 1)[-1])
-                    # per-sentence arrays directly — no per-token row
-                    # objects, no regroup dict (bitwise-equal to the
-                    # text_to_conll_rows grouping, gated vs the modular
-                    # stage chain)
-                    per_sent = sentence_token_tags(final, anns)
-                except (ExtractionError, TokenizerGuardError):
-                    continue
-                for sent_idx, toks, mds in per_sent:
-                    sents.append((url, sent_idx, toks, mds))
-            # phase 2: tag (batched when supported — same outputs, gated)
-            if batch_tag is not None:
-                all_tags = batch_tag([(toks, mds) for _, _, toks, mds in sents])
-            else:
-                all_tags = [tagger.tag(toks, mds) for _, _, toks, mds in sents]
-            # phase 2b (opt-in): per-document label-consistency — sentences
-            # of one page are contiguous in `sents`, so group runs suffice
-            if doc_consistency and sents:
-                from ..kernel.docconsist import doc_postpass
-                all_tags = list(all_tags)
-                i = 0
-                while i < len(sents):
-                    j = i
-                    while j < len(sents) and sents[j][0] == sents[i][0]:
-                        j += 1
-                    all_tags[i:j] = doc_postpass(
-                        [s[2] for s in sents[i:j]], all_tags[i:j])
-                    i = j
-            # phase 3: chunk extraction
-            out = []
-            for (url, sent_idx, tokens, _mds), tags in zip(sents, all_tags):
-                for typ, a, b in extract_chunks(tags):
-                    surface = " ".join(tokens[a:b])
-                    out.append((url, sent_idx, a, b, surface,
-                                surface.lower(), typ))
-            yield pd.DataFrame(out, columns=[
-                "url", "sent_idx", "tok_start", "tok_end", "surface",
-                "surface_norm", "tag_type"])
+            urls = pdf["url"].tolist()
+            rows, _counts = page_batch_mentions(
+                urls, pdf["html"], pdf["text"], tagger, doc_consistency)
+            yield pd.DataFrame([(urls[r[0]],) + r[1:] for r in rows],
+                               columns=MENTION_COLS)
 
-    return cols.mapInPandas(run, schema=MENTIONS_SCHEMA)
-
-
-MENTIONS_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("sent_idx", T.IntegerType(), False),
-    T.StructField("tok_start", T.IntegerType(), False),
-    T.StructField("tok_end", T.IntegerType(), False),
-    T.StructField("surface", T.StringType(), False),
-    T.StructField("surface_norm", T.StringType(), False),
-    T.StructField("tag_type", T.StringType(), False),
-])
+    return page_bodies(pages, lang_filter).mapInPandas(
+        run, schema=MENTIONS_SCHEMA)
 
 
 def seg_tags_stage(sentences: DataFrame, segmenter) -> DataFrame:
@@ -338,13 +270,8 @@ def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
             for url, sent_idx, tokens, md_tags in zip(
                     pdf["url"], pdf["sent_idx"], pdf["tokens"], pdf["md_tags"]):
                 tokens = list(tokens)
-                tags = tagger.tag(tokens, list(md_tags))
-                for typ, a, b in extract_chunks(tags):
-                    surface = " ".join(tokens[a:b])
-                    out.append((url, int(sent_idx), a, b, surface,
-                                surface.lower(), typ))
-            yield pd.DataFrame(out, columns=[
-                "url", "sent_idx", "tok_start", "tok_end", "surface",
-                "surface_norm", "tag_type"])
+                out.extend(mention_rows((url, int(sent_idx)), tokens,
+                                        tagger.tag(tokens, list(md_tags))))
+            yield pd.DataFrame(out, columns=MENTION_COLS)
 
     return rows.mapInPandas(run, schema=MENTIONS_SCHEMA)

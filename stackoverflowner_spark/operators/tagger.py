@@ -24,6 +24,12 @@ class Tagger:
     def tag(self, tokens: Sequence[str], md_tags: Sequence[str]) -> List[str]:
         raise NotImplementedError
 
+    def tag_sentences(self, sentences: Sequence[Tuple[Sequence[str], Sequence[str]]]
+                      ) -> List[List[str]]:
+        """Tag a batch of ``(tokens, md_tags)``; taggers with a batched
+        decode override this (same outputs as ``tag`` per sentence)."""
+        return [self.tag(tokens, md_tags) for tokens, md_tags in sentences]
+
 
 class GazetteerTagger(Tagger):
     """Deterministic gazetteer tagger: greedy longest alias match (up to

@@ -3,7 +3,8 @@
 The reference is strictly batch (corpus in, files out); at web scale the
 natural deployment is incremental: a stream of newly crawled pages appended
 to the pages table, mentions/triples maintained continuously. This module
-wires the SAME document kernel into readStream -> transform -> writeStream:
+wires the SAME document kernel (the Spark-free ``kernel/document.py`` page
+loop) into readStream -> transform -> writeStream:
 
 * file-source stream over a pages parquet directory (stand-in for an Iceberg
   streaming read / Kafka crawl feed),
@@ -18,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.document_kernel import MAX_HTML_BYTES, pages_to_mentions_fused
+from ..kernel.document import page_batch_mentions
+from ..operators.document_kernel import (_tagger_broadcast, page_bodies,
+                                         pages_to_mentions_fused)
 from ..operators.link import link
 from ..operators.tagger import GazetteerTagger
 from ..operators.triples import triples_from_linked
@@ -35,71 +38,36 @@ def stream_pages(spark: SparkSession, pages_dir: str,
     )
 
 
-def stream_mentions(pages_stream: DataFrame, tagger=None) -> DataFrame:
-    return pages_to_mentions_fused(pages_stream, tagger or GazetteerTagger())
-
-
 def windowed_mention_counts(pages_stream: DataFrame, tagger=None,
                             window: str = "10 minutes",
                             slide: str = "5 minutes",
                             watermark: str = "15 minutes") -> DataFrame:
     """Stateful example: mention counts per entity surface in sliding event-
-    time windows of warc_ts with a late-data watermark. A dedicated kernel
-    wrapper carries the event time through the Python stage so no
-    stream-stream join is needed."""
+    time windows of warc_ts with a late-data watermark. The kernel wrapper
+    carries the event time through the Python stage so no stream-stream join
+    is needed.
+
+    Every page is counted (no lang filter) and doc-consistency is OFF: the
+    mentions are exactly ``pages_to_mentions_fused(pages, tagger,
+    lang_filter=None, doc_consistency=False)``, the raw fused kernel and the
+    ``start_triples_stream`` default (gated in
+    tests/test_streaming_stateful.py)."""
     import pandas as pd
 
-    from ..kernel.conlleval import extract_chunks
-    from ..kernel.htmltext import ExtractionError, extract_text
-    from ..kernel.sentencize import sentencize
-    from ..kernel.bio import sentence_token_tags
-    from ..kernel.sotok import TokenizerGuardError
-
-    from ..operators.document_kernel import _tagger_broadcast
     bc = _tagger_broadcast(pages_stream.sparkSession, tagger or GazetteerTagger())
 
     def run(batches):
         tagger = bc.value
-        batch_tag = getattr(tagger, "tag_sentences", None)
         for pdf in batches:
-            # collect the micro-batch's sentences first so taggers with a
-            # batched decode (memoized batched Viterbi) amortize across the
-            # batch — the same phase structure as the fused batch kernel;
-            # per-sentence grouping and tags are identical (gated)
-            sents = []  # (url, ts, tokens, md_tags)
-            for url, ts, html, text in zip(pdf["url"], pdf["warc_ts"],
-                                           pdf["html"], pdf["text"]):
-                try:
-                    # same cap + null-row discipline as the fused batch kernel
-                    # (document_kernel.pages_to_mentions_fused): a row with
-                    # neither html nor text is allowed by PAGES_SCHEMA and
-                    # must not fail the micro-batch
-                    if html is not None:
-                        extracted = extract_text(
-                            bytes(html)[:MAX_HTML_BYTES].decode("utf-8", "replace"))
-                    elif text is not None:
-                        extracted = text[:MAX_HTML_BYTES]
-                    else:
-                        continue
-                    final, anns = sentencize(extracted, url.rsplit("/", 1)[-1])
-                    per_sent = sentence_token_tags(final, anns)
-                except (ExtractionError, TokenizerGuardError):
-                    continue
-                for _sent_idx, toks, mds in per_sent:
-                    sents.append((url, ts, toks, mds))
-            if batch_tag is not None:
-                all_tags = batch_tag([(t, m) for _, _, t, m in sents])
-            else:
-                all_tags = [tagger.tag(t, m) for _, _, t, m in sents]
-            out = []
-            for (url, ts, tokens, _mds), tags in zip(sents, all_tags):
-                for typ, a, b in extract_chunks(tags):
-                    out.append((url, ts, " ".join(tokens[a:b]).lower()))
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "surface_norm"])
+            urls = pdf["url"].tolist()
+            stamps = pdf["warc_ts"].tolist()
+            rows, _counts = page_batch_mentions(
+                urls, pdf["html"], pdf["text"], tagger, doc_consistency=False)
+            yield pd.DataFrame(
+                [(urls[p], stamps[p], norm) for p, _, _, _, _, norm, _ in rows],
+                columns=["url", "warc_ts", "surface_norm"])
 
-    mentions_ts = pages_stream.select(
-        "url", "warc_ts", "html",
-        F.when(F.col("html").isNull(), F.col("text")).alias("text")).mapInPandas(
+    mentions_ts = page_bodies(pages_stream, None, "warc_ts").mapInPandas(
         run, schema="url string, warc_ts timestamp, surface_norm string")
     return (
         mentions_ts.withWatermark("warc_ts", watermark)

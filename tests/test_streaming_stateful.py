@@ -82,3 +82,40 @@ def test_windowed_mention_counts(spark, tmp_path):
     assert out.count() > 0
     row = out.orderBy(F.desc("n_mentions")).first()
     assert row["n_mentions"] >= 1 and row["surface_norm"]
+
+
+def test_windowed_counts_equal_fused_kernel_without_consistency(spark, tmp_path):
+    """windowed_mention_counts keeps doc-consistency OFF and counts every
+    page: on a batch read it equals the raw fused kernel's mentions joined
+    to warc_ts by url and grouped by the same windows. The learned tagger
+    makes the gate non-vacuous: doc-consistency changes its counts."""
+    from stackoverflowner_spark.operators.document_kernel import (
+        pages_to_mentions_fused)
+    from stackoverflowner_spark.operators.tagger import default_tagger
+    from stackoverflowner_spark.sources.pages import synth_pages
+    from stackoverflowner_spark.streaming.ingest import windowed_mention_counts
+
+    src = str(tmp_path / "pages")
+    # page 357 is the first of the seed-42 synth pages the pass rewrites
+    synth_pages(spark, 400).write.mode("overwrite").parquet(src)
+    pages = spark.read.parquet(src)
+    tagger = default_tagger()
+    window, slide = "60 minutes", "30 minutes"
+
+    def collect(counts):
+        return sorted(map(tuple, counts.select(
+            "window.start", "window.end", "surface_norm",
+            "n_mentions").collect()))
+
+    def fused_counts(doc_consistency):
+        m = pages_to_mentions_fused(pages, tagger, lang_filter=None,
+                                    doc_consistency=doc_consistency)
+        return collect(m.join(pages.select("url", "warc_ts"), "url")
+                       .groupBy(F.window("warc_ts", window, slide),
+                                "surface_norm")
+                       .agg(F.count("*").alias("n_mentions")))
+
+    got = collect(windowed_mention_counts(pages, tagger, window=window,
+                                          slide=slide, watermark="2 hours"))
+    assert got and got == fused_counts(False)
+    assert got != fused_counts(True)
