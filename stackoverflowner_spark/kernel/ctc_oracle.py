@@ -76,22 +76,6 @@ def universe_where(col: str = "token") -> str:
     )
 
 
-def universe_where_spark(col: str = "token") -> str:
-    # Spark has no regexp_matches/contains(str,str) pair with these names in
-    # SQL expressions prior to 3.5 aliases; use rlike/instr equivalents.
-    core = _url_core_pattern().replace("'", "''").replace("\\", "\\\\")
-    return (
-        f"{col} != '' "
-        f"and {col} rlike '{ASCII_PATTERN}' "
-        f"and instr({col}, ':') = 0 "
-        f"and instr({col}, '/') = 0 "
-        f"and instr({col}, 'www') = 0 "
-        f"and instr({col}, chr(94)) = 0 "
-        f"and instr({col}, '$') = 0 "
-        f"and not {col} rlike '{core}'"
-    )
-
-
 # -- parquet sidecars ------------------------------------------------------- #
 
 

@@ -47,10 +47,3 @@ def merge_label(label: str) -> str:
         return label
     prefix, name = label.split("-", 1)
     return prefix + "-" + MERGE_MAP.get(name, name)
-
-
-def replace_unselected(label: str, selected: set) -> str:
-    if label == "O":
-        return label
-    name = label.replace("B-", "").replace("I-", "")
-    return label if name in selected else "O"

@@ -11,22 +11,10 @@ iteration order, no RNG), fit once driver-side and broadcast.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 from typing import Dict, Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
-
-# Decode precision switch: the inference fast path runs in float32 (halves
-# the Viterbi lattice's memory traffic — the saturated-core bottleneck) and
-# is gated tag-for-tag against the float64 reference decode on the gold
-# split and a 26k-sentence corpus. Those gates are empirical, not a proof:
-# a near-tie lattice score on unseen data could still flip a tag vs the
-# float64 path. SOKG_DECODE_DTYPE=float64 flips every inference buffer to
-# the reference dtype so such a divergence is diagnosable by re-running,
-# not silent. Read once at import; set it before executors start.
-_DECODE_DTYPE = (np.float64 if os.environ.get("SOKG_DECODE_DTYPE") == "float64"
-                 else np.float32)
 
 
 def _shape(word: str) -> str:
@@ -203,6 +191,11 @@ class AveragedPerceptron:
             prev = tag
         return out
 
+    def tag_sentences(self, sentences) -> List[List[str]]:
+        """``(words, mds, gazs)`` triples -> tags; the greedy decode has no
+        batched form, so this loops ``tag_sentence``."""
+        return [self.tag_sentence(*s) for s in sentences]
+
 
 def _emission_features(words: Sequence[str], i: int, md: str, gaz: str
                        ) -> List[str]:
@@ -251,12 +244,10 @@ class StructuredPerceptron:
         return t
 
     def _viterbi(self, E: np.ndarray) -> List[int]:
+        """Per-sentence float64 decode: the training path, and the
+        reference the float32 ``tag_sentences`` is gated against."""
         n, L = E.shape
-        # dtype follows E: the float32 inference path halves the O(n*L^2)
-        # lattice's memory traffic (the saturated-core bottleneck); the
-        # float64 training/reference decode is unchanged. Tag equality of
-        # the two is gated in tests on the gold split and a large corpus.
-        T = self._trans_f32() if E.dtype == np.float32 else self.trans
+        T = self.trans
         # transposed layout: cand[b, a] = dp[a] + T[a, b]; the argmax then
         # scans the CONTIGUOUS last axis (same additions, same first-index
         # tie-breaks over a -> bitwise-identical paths, ~3x less argmax time)
@@ -371,7 +362,7 @@ class StructuredPerceptron:
                 vec = self.w.get(f)
                 if vec is not None:
                     v = v + vec
-            v = v.astype(_DECODE_DTYPE)  # decode dtype (float32 default)
+            v = v.astype(np.float32)
             if len(cache) >= self._STATIC_CACHE_MAX:
                 cache.clear()
             cache[w] = v
@@ -393,60 +384,22 @@ class StructuredPerceptron:
                 if eq > 0:
                     d = ctx.get(f[:eq])
                     if d is not None:
-                        d[f[eq + 1:]] = vec.astype(_DECODE_DTYPE)
+                        d[f[eq + 1:]] = vec.astype(np.float32)
             self.__dict__["_ctx"] = ctx
         return ctx
-
-    def _fast_emissions(self, words, mds, gazs) -> np.ndarray:
-        """Same model, same features as ``_emissions`` — the word-static
-        feature subtotal is cached per word and only the 6 context features
-        (pw/nw/pw2/nw2/md/gaz) are looked up per occurrence, via the
-        value-keyed ``_ctx_vecs`` maps. Up to float-summation order this is
-        the identical emission matrix; Spark and local inference share this
-        code path (equality gated in tests)."""
-        n = len(words)
-        ctx = self._ctx_vecs()
-        pw_g, nw_g = ctx["pw"].get, ctx["nw"].get
-        pw2_g, nw2_g = ctx["pw2"].get, ctx["nw2"].get
-        md_g, gaz_g = ctx["md"].get, ctx["gaz"].get
-        pww_g, nww_g = ctx["pww"].get, ctx["nww"].get
-        E = np.zeros((n, len(self.labels)), dtype=_DECODE_DTYPE)
-        lws = [w.lower() for w in words]
-        for i in range(n):
-            lw = lws[i]
-            prev_w = lws[i - 1] if i > 0 else "<S>"
-            next_w = lws[i + 1] if i + 1 < n else "</S>"
-            prev_w2 = lws[i - 2] if i > 1 else "<S>"
-            next_w2 = lws[i + 2] if i + 2 < n else "</S>"
-            E[i] = self._static_vec(words[i])
-            # fixed channel order (pw, nw, pw2, nw2, md, gaz, pww, nww) —
-            # the same order as _batch_emissions, so the float summation
-            # order — and hence the bits — agree between the two paths
-            for vec in (pw_g(prev_w), nw_g(next_w),
-                        pw2_g(prev_w + "|" + lw), nw2_g(lw + "|" + next_w),
-                        md_g(mds[i]), gaz_g(gazs[i]),
-                        pww_g(prev_w2), nww_g(next_w2)):
-                if vec is not None:
-                    E[i] += vec
-        return E
-
-    def tag_sentence(self, words: Sequence[str], mds: Sequence[str],
-                     gazs: Sequence[str]) -> List[str]:
-        if not words:
-            return []
-        E = self._fast_emissions(words, mds, gazs)
-        return [self.labels[j] for j in self._viterbi(E)]
 
     def _batch_emissions(self, inputs) -> np.ndarray:
         """Flat ``(total_tokens, L)`` emission matrix for a whole batch.
 
-        Same model, same features, same per-element summation order as
-        ``_fast_emissions`` (static, pw, nw, pw2, nw2, md, gaz) — the Python
+        Same model, same features as ``_emissions``, in float32: the
+        word-static subtotal (``_static_vec``) plus the context channels in
+        a fixed order (pw, nw, pw2, nw2, md, gaz, pww, nww). The Python
         loop only interns each distinct feature VALUE to a dense id; the L
         floats per token move in nine C-side gather/adds instead of ~7
         numpy row ops per token. An absent feature contributes registry row
         0 (an IEEE zero add, which cannot change any downstream comparison).
-        Tag-level equality with ``tag_sentence`` is gated in tests."""
+        Tag-level equality with the float64 ``_emissions`` + ``_viterbi``
+        reference is gated in tests."""
         L = len(self.labels)
         ctx = self._ctx_vecs()
         pw_g, nw_g = ctx["pw"].get, ctx["nw"].get
@@ -458,7 +411,7 @@ class StructuredPerceptron:
         sids: List[int] = []
         chans = []
         for _ in range(8):
-            chans.append(({}, [np.zeros(L, dtype=_DECODE_DTYPE)], []))  # index, vecs, ids
+            chans.append(({}, [np.zeros(L, dtype=np.float32)], []))  # index, vecs, ids
         # unrolled channel blocks: each channel's (index, vecs, ids, get)
         # binds to locals once and the probe logic is inlined — no
         # per-token dispatch-tuple construction, no per-probe function
@@ -585,7 +538,7 @@ class StructuredPerceptron:
         mats = [(np.asarray(vecs), np.asarray(ids))
                 for _index, vecs, ids in chans if len(vecs) > 1]
         N = len(sid_arr)
-        E = np.empty((N, len(self.labels)), dtype=_DECODE_DTYPE)
+        E = np.empty((N, len(self.labels)), dtype=np.float32)
         # row-tiled accumulation: each ~670 KB tile takes all nine channel
         # adds while cache-resident instead of streaming the full (N, L)
         # array from DRAM once per channel; per-element add order is
@@ -599,30 +552,30 @@ class StructuredPerceptron:
             E[sl] = tile
         return E
 
+    def tag_sentence(self, words: Sequence[str], mds: Sequence[str],
+                     gazs: Sequence[str]) -> List[str]:
+        return self.tag_sentences([(words, mds, gazs)])[0]
+
     def tag_sentences(self, sentences) -> List[List[str]]:
-        """Batched inference: sentences of equal length share one vectorized
-        Viterbi (the DP is per-sentence independent, so the batched float
-        ops are BITWISE identical to ``tag_sentence`` — gated in tests).
-        The per-sentence numpy-call overhead dominates at L=41/n~12; the
-        (B, L, L) formulation amortizes it across the Arrow batch."""
-        out: List[Optional[List[str]]] = [None] * len(sentences)
-        nonempty: List[int] = []
-        for k, (words, _m, _g) in enumerate(sentences):
-            if not words:
-                out[k] = []
-            else:
-                nonempty.append(k)
+        """The inference path: ``(words, mds, gazs)`` triples -> tags.
+
+        One flat float32 emission pass over the whole batch, then sentences
+        of equal length share one batched Viterbi — the native C kernel
+        (kernel/viterbi_native.py, ~7x the numpy lattice's tokens/s) when
+        it loads, else ``viterbi_paths_numpy``. Both run the same float32
+        adds with first-occurrence argmax tie-breaks, so their paths are
+        bitwise equal (gated in tests). float32 halves the lattice's memory
+        traffic, the saturated-core bottleneck; tag equality with the
+        float64 ``_emissions`` + ``_viterbi`` reference is gated on the gold
+        split and on synthetic web pages — an empirical gate, not a proof:
+        a near-tie lattice score on unseen data could still flip a tag."""
+        from .viterbi_native import viterbi_lib, viterbi_paths
+
+        out: List[List[str]] = [[] for _ in sentences]
+        nonempty = [k for k, s in enumerate(sentences) if len(s[0])]
         if not nonempty:
-            return out  # type: ignore[return-value]
-        L = len(self.labels)
-        # float32 decode by default (gated vs float64 in tests); the
-        # SOKG_DECODE_DTYPE=float64 escape hatch runs the reference dtype
-        T = (self._trans_f32() if _DECODE_DTYPE is np.float32 else
-             self.trans.astype(np.float64))
-        TT = np.ascontiguousarray(T[:L].T)  # contiguous-argmax layout
-        cols = np.arange(L)
-        # one flat vectorized emission pass over the whole batch, then
-        # per-length gathers into the (B, n, L) lattice
+            return out
+        T = self._trans_f32()
         E_flat = self._batch_emissions([sentences[k] for k in nonempty])
         starts: Dict[int, int] = {}
         off = 0
@@ -631,61 +584,48 @@ class StructuredPerceptron:
             starts[k] = off
             off += len(sentences[k][0])
             by_len.setdefault(len(sentences[k][0]), []).append(k)
-        # native C kernel when available (kernel/viterbi_native.py):
-        # the identical float32 DP — same adds, same first-occurrence
-        # argmax tie-breaks, bitwise-equal paths (gated) — at ~7x the
-        # numpy lattice's tokens/s (numpy argmax over the L-sized
-        # candidate axis is a scalar loop; the C blend vectorizes). Falls
-        # through to the numpy tiles whenever the kernel is unavailable
-        # (no compiler) or the decode dtype is the float64 escape hatch.
-        native = None
-        if _DECODE_DTYPE is np.float32:
-            from .viterbi_native import viterbi_lib, viterbi_paths
-            native = viterbi_lib()
-        if native is not None:
-            NTILE = 1024  # bounds the (B, n, L) gather copy, not the DP
-            for n, idxs in by_len.items():
-                for t0 in range(0, len(idxs), NTILE):
-                    tile = idxs[t0:t0 + NTILE]
-                    row0 = np.asarray([starts[k] for k in tile])
-                    E = np.ascontiguousarray(
-                        E_flat[row0[:, None] + np.arange(n)])
-                    paths = viterbi_paths(native, E, T)
-                    for b, k in enumerate(tile):
-                        out[k] = [self.labels[j] for j in paths[b]]
-            return out  # type: ignore[return-value]
-        # B-tiling keeps the per-step (B, L, L) lattice buffer L2-resident
-        # (128*41*41*4 ≈ 860 KB): with thousands of equal-length sentences
-        # per Arrow batch an untiled buffer is tens of MB and every DP step
-        # round-trips DRAM — at 32 concurrent Python workers that saturates
-        # memory bandwidth long before the cores. Per-sentence float ops and
-        # tie-breaks are unchanged -> bitwise-identical paths (gated).
-        TILE = 128
-        bp_dtype = np.int8 if L <= 127 else np.int64
+        native = viterbi_lib()
+        # the tile bounds the (B, n, L) gather copy; the numpy lattice also
+        # keeps its per-step (B, L, L) buffer L2-resident (128*41*41*4 ≈
+        # 860 KB) — untiled, thousands of equal-length sentences per Arrow
+        # batch make it tens of MB and every DP step round-trips DRAM
+        tile_rows = 128 if native is None else 1024
         for n, idxs in by_len.items():
-            for t0 in range(0, len(idxs), TILE):
-                tile = idxs[t0:t0 + TILE]
-                B = len(tile)
+            for t0 in range(0, len(idxs), tile_rows):
+                tile = idxs[t0:t0 + tile_rows]
                 row0 = np.asarray([starts[k] for k in tile])
                 E = E_flat[row0[:, None] + np.arange(n)]  # (B, n, L) gather
-                dp = T[L] + E[:, 0]                     # (B, L)
-                back = np.zeros((B, n, L), dtype=bp_dtype)
-                rows = np.arange(B)[:, None]
-                cand = np.empty((B, L, L), dtype=T.dtype)  # reused buffer
-                for i in range(1, n):                   # no per-step alloc
-                    # cand[b, j, a] = dp[b, a] + T[a, j]: argmax over the
-                    # contiguous last axis, same values/tie-breaks as the
-                    # (a, j) layout (gated bitwise in tests)
-                    np.add(dp[:, None, :], TT[None], out=cand)
-                    bi = cand.argmax(axis=2)            # (B, L)
-                    back[:, i] = bi
-                    dp = cand[rows, cols[None, :], bi] + E[:, i]
-                last = dp.argmax(axis=1)                # (B,)
-                paths = np.zeros((B, n), dtype=np.int64)
-                paths[:, n - 1] = last
-                r = np.arange(B)
-                for i in range(n - 1, 0, -1):
-                    paths[:, i - 1] = back[r, i, paths[:, i]]
+                paths = None if native is None else viterbi_paths(native, E, T)
+                if paths is None:
+                    paths = viterbi_paths_numpy(E, T)
                 for b, k in enumerate(tile):
                     out[k] = [self.labels[j] for j in paths[b]]
-        return out  # type: ignore[return-value]
+        return out
+
+
+def viterbi_paths_numpy(E: np.ndarray, T: np.ndarray) -> np.ndarray:
+    """Batched Viterbi over same-length sentences: E (B, n, L), T (L+1, L)
+    with row L = START -> paths (B, n) int64. The DP is per-sentence
+    independent, so each path equals the per-sentence ``_viterbi`` run in
+    E's dtype; the (B, L, L) form amortizes the per-step numpy-call
+    overhead that dominates at L=41, n~12."""
+    B, n, L = E.shape
+    TT = np.ascontiguousarray(T[:L].T)
+    cols = np.arange(L)
+    rows = np.arange(B)[:, None]
+    dp = T[L] + E[:, 0]                                 # (B, L)
+    back = np.zeros((B, n, L), dtype=np.int8 if L <= 127 else np.int64)
+    cand = np.empty((B, L, L), dtype=T.dtype)           # reused buffer
+    for i in range(1, n):
+        # cand[b, j, a] = dp[b, a] + T[a, j]: argmax over the contiguous
+        # last axis, same values/tie-breaks as the (a, j) layout
+        np.add(dp[:, None, :], TT[None], out=cand)
+        bi = cand.argmax(axis=2)                        # (B, L)
+        back[:, i] = bi
+        dp = cand[rows, cols[None, :], bi] + E[:, i]
+    paths = np.zeros((B, n), dtype=np.int64)
+    paths[:, n - 1] = dp.argmax(axis=1)
+    r = np.arange(B)
+    for i in range(n - 1, 0, -1):
+        paths[:, i - 1] = back[r, i, paths[:, i]]
+    return paths

@@ -9,17 +9,24 @@ first-occurrence strict-``>`` blend vectorizes to ~0.7 us/token.
 
 Bitwise contract (gated in tests/test_viterbi_native.py): the C kernel
 performs EXACTLY the float32 adds of the numpy path
-(``StructuredPerceptron.tag_sentences``) in the same order —
+(``kernel.perceptron.viterbi_paths_numpy``) in the same order —
 ``dp[a] + T[a, j]``, winner = first ``a`` attaining the maximum (strict
 ``>`` blend == ``argmax`` first-max tie-break), ``dp' = best + E[i]`` —
 so decoded paths are identical bit for bit, not just tag-equal.
 
-Toolchain safety: the kernel is OPTIONAL. ``viterbi_fn()`` compiles the
-embedded source with the system cc at first use (cached per source hash
-under $TMPDIR, atomic rename so concurrent executor processes cannot see a
-partial .so) and returns None on ANY failure — no compiler, no dlopen, any
-OSError — in which case callers keep the numpy path. Nothing outside this
-module changes behavior when the kernel is unavailable.
+Toolchain safety: the kernel is OPTIONAL. ``viterbi_lib()`` compiles the
+embedded source with the system cc at first use and returns None on ANY
+failure — no compiler, no dlopen, any OSError, an unsafe cache — in which
+case callers keep the numpy path. The .so is cached in a per-user
+directory under $TMPDIR (``sokg_viterbi_cache_<uid>``, created 0700) and
+is loaded only when that directory and the file are owned by this user and
+writable by nobody else; another user who pre-creates the directory or
+plants a .so gets the numpy path, not code execution. The file name keys
+on the source hash AND the machine/host, because ``-march=native`` code
+built on one CPU can SIGILL on another when $TMPDIR is shared. Writes go
+through an atomic rename so concurrent executor processes cannot see a
+partial .so. Nothing outside this module changes behavior when the kernel
+is unavailable.
 """
 
 from __future__ import annotations
@@ -27,6 +34,8 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
+import stat
 import subprocess
 import tempfile
 from typing import Optional
@@ -78,25 +87,39 @@ void viterbi_batch(const float *E, const float *T,
 _CACHED: dict = {}
 
 
+def _private(path: str, is_dir: bool) -> bool:
+    """True when ``path`` is a real (non-symlink) directory or file owned
+    by this user and writable by no one else."""
+    st = os.lstat(path)
+    kind = stat.S_ISDIR(st.st_mode) if is_dir else stat.S_ISREG(st.st_mode)
+    return (kind and st.st_uid == os.getuid()
+            and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH))
+
+
 def _build() -> Optional[ctypes.CDLL]:
-    tag = hashlib.sha256(_SRC.encode()).hexdigest()[:16]
-    cache_dir = os.path.join(tempfile.gettempdir(), "sokg_viterbi_cache")
+    tag = hashlib.sha256("\0".join(
+        (_SRC, platform.machine(), platform.node())).encode()).hexdigest()[:16]
+    cache_dir = os.path.join(tempfile.gettempdir(),
+                             f"sokg_viterbi_cache_{os.getuid()}")
     so_path = os.path.join(cache_dir, f"viterbi_{tag}.so")
     try:
+        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
+        if not _private(cache_dir, is_dir=True):
+            return None
         if not os.path.exists(so_path):
-            os.makedirs(cache_dir, exist_ok=True)
             src_path = os.path.join(cache_dir, f"viterbi_{tag}.c")
             with open(src_path, "w") as f:
                 f.write(_SRC)
             tmp_so = os.path.join(cache_dir,
                                   f".viterbi_{tag}.{os.getpid()}.so")
-            # -march=native is safe: the .so is compiled on, and cached
-            # for, the machine it runs on (local-mode executors share it)
             subprocess.run(
                 ["cc", "-O3", "-march=native", "-funroll-loops", "-shared",
                  "-fPIC", "-o", tmp_so, src_path],
                 check=True, capture_output=True, timeout=120)
+            os.chmod(tmp_so, 0o700)  # a group-writable umask must not stick
             os.rename(tmp_so, so_path)  # atomic: readers never see partial
+        if not _private(so_path, is_dir=False):
+            return None
         lib = ctypes.CDLL(so_path)
         lib.viterbi_batch.argtypes = [
             ctypes.POINTER(ctypes.c_float), ctypes.POINTER(ctypes.c_float),
@@ -121,11 +144,18 @@ def viterbi_lib() -> Optional[ctypes.CDLL]:
 
 
 def viterbi_paths(lib: ctypes.CDLL, E, T) -> "object":
-    """Decode one same-length batch: E (B, n, L) float32 C-contiguous,
-    T (L+1, L) float32 C-contiguous -> paths (B, n) int64."""
+    """Decode one same-length batch: E (B, n, L), T (L+1, L), both float32
+    and C-contiguous -> paths (B, n) int64. The kernel reads raw pointers,
+    so any other dtype, layout or shape returns None (callers then take
+    the numpy path) instead of decoding garbage."""
     import numpy as np
 
+    if E.ndim != 3 or T.ndim != 2:
+        return None
     B, n, L = E.shape
+    if not (E.dtype == T.dtype == np.float32 and T.shape == (L + 1, L)
+            and E.flags.c_contiguous and T.flags.c_contiguous):
+        return None
     paths = np.empty((B, n), dtype=np.int64)
     dp = np.empty(L, dtype=np.float32)
     best = np.empty(L, dtype=np.float32)

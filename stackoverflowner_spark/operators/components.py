@@ -75,18 +75,3 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
             f"connected_components: not converged after {max_iter} "
             f"iterations — raise max_iter for high-diameter graphs")
     return labels.select("node", F.col("label").alias("component"))
-
-
-def canonical_components(dictionary: DataFrame, max_iter: int = 10) -> DataFrame:
-    """Collapse aliases sharing a canonical id (and canonicals sharing an
-    alias) into one component: edges alias_norm <-> canonical_id."""
-    edges = dictionary.select(
-        F.concat(F.lit("a:"), F.col("alias_norm")).alias("src"),
-        F.concat(F.lit("c:"), F.col("canonical_id")).alias("dst"),
-    ).distinct()
-    comps = connected_components(edges, max_iter=max_iter)
-    return (
-        comps.filter(F.col("node").startswith("c:"))
-        .select(F.expr("substring(node, 3)").alias("canonical_id"),
-                F.col("component"))
-    )

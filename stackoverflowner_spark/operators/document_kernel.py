@@ -230,21 +230,21 @@ def pages_to_mentions_fused(pages: DataFrame, tagger,
 def seg_tags_stage(sentences: DataFrame, segmenter) -> DataFrame:
     """sentences -> sentence rows + binary seg_tags column (reference stage 6,
     E2E_SoftNER.py:65-94 + segmenter predict): the aux channel the NER model
-    consumes. Row-local, narrow."""
+    consumes. Row-local, narrow; one ``tag_sentences`` call per Arrow
+    batch."""
     rows = sentences.filter(F.col("sent_idx") >= 0)
     schema = T.StructType(list(SENTENCES_SCHEMA.fields) + [
         T.StructField("seg_tags", T.ArrayType(T.StringType()), False)])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for url, sent_idx, tokens, md_tags, starts, ends in zip(
-                    pdf["url"], pdf["sent_idx"], pdf["tokens"], pdf["md_tags"],
-                    pdf["starts"], pdf["ends"]):
-                tokens = list(tokens)
-                seg = segmenter.tag(tokens, list(md_tags))
-                out.append((url, int(sent_idx), tokens, list(md_tags),
-                            list(starts), list(ends), seg))
+            sents = [(list(t), list(m))
+                     for t, m in zip(pdf["tokens"], pdf["md_tags"])]
+            segs = segmenter.tag_sentences(sents)
+            out = [(url, int(sent_idx), t, m, list(starts), list(ends), seg)
+                   for url, sent_idx, (t, m), starts, ends, seg in zip(
+                       pdf["url"], pdf["sent_idx"], sents, pdf["starts"],
+                       pdf["ends"], segs)]
             yield pd.DataFrame(out, columns=[
                 "url", "sent_idx", "tokens", "md_tags", "starts", "ends",
                 "seg_tags"])
@@ -258,7 +258,8 @@ def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
     ``tagger`` is any ``Tagger`` from operators.tagger (gazetteer default,
     model-pluggable per SURVEY.md §7 step 5). Row-local => narrow; the tagger
     ships as an explicit broadcast, unpickled once per worker
-    (see _tagger_broadcast).
+    (see _tagger_broadcast), and decodes each Arrow batch in one
+    ``tag_sentences`` call, as the fused kernel does.
     """
     rows = sentences.filter(F.col("sent_idx") >= 0)
     bc = _tagger_broadcast(sentences.sparkSession, tagger)
@@ -266,12 +267,13 @@ def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = bc.value
         for pdf in batches:
+            sents = [(list(t), list(m))
+                     for t, m in zip(pdf["tokens"], pdf["md_tags"])]
             out = []
-            for url, sent_idx, tokens, md_tags in zip(
-                    pdf["url"], pdf["sent_idx"], pdf["tokens"], pdf["md_tags"]):
-                tokens = list(tokens)
-                out.extend(mention_rows((url, int(sent_idx)), tokens,
-                                        tagger.tag(tokens, list(md_tags))))
+            for url, sent_idx, (tokens, _m), tags in zip(
+                    pdf["url"], pdf["sent_idx"], sents,
+                    tagger.tag_sentences(sents)):
+                out.extend(mention_rows((url, int(sent_idx)), tokens, tags))
             yield pd.DataFrame(out, columns=MENTION_COLS)
 
     return rows.mapInPandas(run, schema=MENTIONS_SCHEMA)

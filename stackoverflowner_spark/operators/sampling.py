@@ -51,12 +51,6 @@ def hash_split(df: DataFrame, weights: List[Tuple[str, float]],
     return df.withColumn("split", split)
 
 
-def split_counts(df: DataFrame, weights: List[Tuple[str, float]],
-                 id_col: str = "doc_id", salt: str = "split") -> DataFrame:
-    return (hash_split(df, weights, id_col, salt)
-            .groupBy("split").agg(F.count("*").alias("n")))
-
-
 def domain_cap(df: DataFrame, n: int, domain_col: str = "source",
                order_col: str = "n_chars", id_col: str = "doc_id",
                salt_buckets: int = 8) -> DataFrame:

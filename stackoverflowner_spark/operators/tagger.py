@@ -120,18 +120,11 @@ class PerceptronTagger(Tagger):
 
     def __init__(self, model, alias_types: Dict[str, str],
                  ctc_dict: Optional[Dict[str, str]] = None,
-                 use_seg_channel: bool = False,
-                 seg_model: Optional["PerceptronTagger"] = None):
+                 use_seg_channel: bool = False):
         self.model = model
         self.alias_types = alias_types
         self.ctc_dict = ctc_dict
         self.use_seg_channel = use_seg_channel
-        # r5: optional TRAINED binary segmenter (a nested PerceptronTagger
-        # over collapsed single-type spans) supplying the deployment seg
-        # channel; measured 78.2 dev channel-F1 vs the alias segmenter's
-        # 41.5 (the reference's own fixture channel: 93.9 — partially
-        # gold-derived, make_segment_pred.py). None = alias fallback.
-        self.seg_model = seg_model
         self._seg_base: Optional[GazetteerTagger] = None
 
     def _aux_channel(self, tokens: Sequence[str],
@@ -151,19 +144,14 @@ class PerceptronTagger(Tagger):
 
     def _infer_seg(self, tokens: Sequence[str],
                    md_tags: Sequence[str]) -> List[str]:
-        """Deployment seg channel for one sentence: the trained binary
-        segmenter when shipped with the artifact, else the alias
-        segmenter (the two-pass E2E flow: segmenter first, NER consumes
+        """Deployment seg channel for one sentence: the alias segmenter
+        (the two-pass E2E flow: segmenter first, NER consumes
         pred_seg_label)."""
-        seg_model = getattr(self, "seg_model", None)  # pre-r5 pickles
-        if seg_model is not None:
-            bio = seg_model.tag(tokens, md_tags)
-        else:
-            # the base segmenter is built once, not per sentence
-            if self._seg_base is None:
-                self._seg_base = GazetteerTagger(alias_map={
-                    k: ("x", v) for k, v in self.alias_types.items()})
-            bio = self._seg_base.tag(tokens, md_tags)
+        # the base segmenter is built once, not per sentence
+        if self._seg_base is None:
+            self._seg_base = GazetteerTagger(alias_map={
+                k: ("x", v) for k, v in self.alias_types.items()})
+        bio = self._seg_base.tag(tokens, md_tags)
         return ["Name" if t != "O" else "O" for t in bio]
 
     def _model_inputs(self, tokens: Sequence[str], md_tags: Sequence[str]):
@@ -171,7 +159,7 @@ class PerceptronTagger(Tagger):
         return (list(tokens), list(md_tags), self._aux_channel(tokens, seg))
 
     def tag(self, tokens: Sequence[str], md_tags: Sequence[str]) -> List[str]:
-        return self.model.tag_sentence(*self._model_inputs(tokens, md_tags))
+        return self.tag_sentences([(tokens, md_tags)])[0]
 
     _SENT_CACHE_MAX = 100_000
 
@@ -184,23 +172,20 @@ class PerceptronTagger(Tagger):
 
     def tag_sentences(self, sentences: List[Tuple[Sequence[str], Sequence[str]]]
                       ) -> List[List[str]]:
-        """Batched decode when the underlying model supports it (the fused
-        kernel hands over all sentences of an Arrow batch); identical
-        outputs to per-sentence ``tag`` (gated in tests).
+        """The one inference path: every caller (``tag`` included) hands
+        over a batch — the kernels pass all sentences of an Arrow batch —
+        and the model decodes it in one ``tag_sentences`` call.
 
         Whole-sentence memo: web text is full of repeated boilerplate
         sentences (~25% of the synthetic corpus, more on real crawls), and
         the tagger is a pure function of (tokens, md_tags) — repeats skip
         the seg/aux channels, the emission lookups and the Viterbi lattice
-        entirely. Executor-local, size-capped, never pickled.
-
-        Deliberately TASK-local, not process-level: sharing the memo (and
-        even the numeric weight caches) across tasks via a module-level
-        registry measured 1.7x SLOWER end-to-end in interleaved A/B runs —
-        the long-lived tracked containers make CPython's gen-2 GC passes
-        expensive exactly while the extraction kernel allocates heavily.
-        Cold-cache cost per task is ~0.7 core-ms/page; the GC tax was
-        bigger."""
+        entirely. Size-capped (oldest entries evicted first), never
+        pickled. The memo lives on the tagger instance, and the kernels
+        ship the tagger as a Spark broadcast (document_kernel
+        ``_tagger_broadcast``), which each reused Python worker unpickles
+        once and keeps across tasks and jobs — so the memo is per worker
+        process, not per task."""
         cache = self.__dict__.get("_sent_cache")
         if cache is None:
             cache = self.__dict__["_sent_cache"] = {}
@@ -215,25 +200,9 @@ class PerceptronTagger(Tagger):
                 # within-batch dedup: identical sentences decode once
                 pending.setdefault(key, []).append(k)
         if pending:
-            reps = [ks[0] for ks in pending.values()]
-            seg_model = getattr(self, "seg_model", None)  # pre-r5 pickles
-            if self.use_seg_channel and seg_model is not None:
-                # batch the nested segmenter decode too (it has its own
-                # batched Viterbi + memo), instead of per-sentence calls
-                seg_bios = seg_model.tag_sentences(
-                    [sentences[k] for k in reps])
-                inputs = []
-                for k, bio in zip(reps, seg_bios):
-                    t, m = sentences[k]
-                    seg = ["Name" if x != "O" else "O" for x in bio]
-                    inputs.append((list(t), list(m),
-                                   self._aux_channel(t, seg)))
-            else:
-                inputs = [self._model_inputs(*sentences[k]) for k in reps]
-            if hasattr(self.model, "tag_sentences"):
-                tagged = self.model.tag_sentences(inputs)
-            else:
-                tagged = [self.model.tag_sentence(*x) for x in inputs]
+            tagged = self.model.tag_sentences(
+                [self._model_inputs(*sentences[ks[0]])
+                 for ks in pending.values()])
             # evict only as many oldest entries as the insert overshoots the
             # cap (dict preserves insertion order) — a wholesale clear would
             # discard every accumulated hit and let the cache overshoot by
@@ -255,10 +224,7 @@ class PerceptronTagger(Tagger):
                       min_alias_count: int = 3, structured: bool = False,
                       ctc_path: Optional[str] = None,
                       seg_path: Optional[str] = None,
-                      seg_mode: str = "ref",
-                      own_seg_channels: Optional[list] = None,
-                      seg_model: Optional["PerceptronTagger"] = None
-                      ) -> "PerceptronTagger":
+                      seg_mode: str = "ref") -> "PerceptronTagger":
         """``structured=True`` trains the Viterbi-decoded variant
         (kernel.perceptron.StructuredPerceptron — the M10 CRF-decode shape).
         ``ctc_path`` adds the reference's CTC prediction dictionary
@@ -340,20 +306,8 @@ class PerceptronTagger(Tagger):
             md = [t.md_label for t in s]
             gold = [t.tag for t in s]
             if use_seg and seg_mode in ("own", "multi"):
-                # the deployment channel. ``own_seg_channels`` (sentence-
-                # aligned 'Name'/'O' lists, normally JACKKNIFED trained-
-                # segmenter predictions — fold models that never saw the
-                # sentence, so the train-time channel carries the same
-                # noise profile inference will) overrides the default
-                # alias-segmenter channel _model_inputs would build.
-                own = None
-                if own_seg_channels is not None and i < len(own_seg_channels):
-                    ch = own_seg_channels[i]
-                    if ch is not None and len(ch) == len(w):
-                        own = proto._aux_channel(w, ch)
-                if own is None:
-                    own = proto._model_inputs(w, md)[2]
-                data.append((w, md, own, gold))
+                # the deployment channel, built exactly as inference does
+                data.append((w, md, proto._model_inputs(w, md)[2], gold))
             if seg_mode in ("ref", "multi"):
                 seg = None
                 if seg_channels is not None and i < len(seg_channels) \
@@ -363,8 +317,7 @@ class PerceptronTagger(Tagger):
                     data.append((w, md, proto._aux_channel(w, seg), gold))
         model = StructuredPerceptron() if structured else AveragedPerceptron()
         model.fit(data, epochs=epochs)
-        return cls(model, alias_types, ctc_dict, use_seg_channel=use_seg,
-                   seg_model=seg_model)
+        return cls(model, alias_types, ctc_dict, use_seg_channel=use_seg)
 
     def save(self, path: str) -> None:
         import gzip
@@ -372,18 +325,19 @@ class PerceptronTagger(Tagger):
         with gzip.open(path, "wb") as f:
             pickle.dump({"model": self.model, "alias_types": self.alias_types,
                          "ctc_dict": self.ctc_dict,
-                         "use_seg_channel": self.use_seg_channel,
-                         "seg_model": getattr(self, "seg_model", None)}, f)
+                         "use_seg_channel": self.use_seg_channel}, f)
 
     @classmethod
     def load(cls, path: str) -> "PerceptronTagger":
+        """Keys other than the four ``save`` writes are ignored: older
+        artifacts also carry the removed nested-segmenter field (None in
+        both shipped ones)."""
         import gzip
         import pickle
         with gzip.open(path, "rb") as f:
             d = pickle.load(f)
         return cls(d["model"], d["alias_types"], d.get("ctc_dict"),
-                   d.get("use_seg_channel", False),
-                   seg_model=d.get("seg_model"))
+                   d.get("use_seg_channel", False))
 
 
 _DEFAULT_TAGGER: dict = {}
@@ -467,8 +421,8 @@ class ModelTagger(Tagger):
 
     # -- batched inference (predict_from_file evaluate() shape) ------------- #
 
-    def tag_batch(self, sentences: List[Tuple[Sequence[str], Sequence[str]]]
-                  ) -> List[List[str]]:
+    def tag_sentences(self, sentences: List[Tuple[Sequence[str], Sequence[str]]]
+                      ) -> List[List[str]]:
         """Tag many sentences with fixed-size forward batches. Words beyond
         the wordpiece budget get 'O' (the reference's writer *drops* them,
         softner_ner_predict_from_file.py:641-643 — a Tagger must stay total,
@@ -500,7 +454,7 @@ class ModelTagger(Tagger):
         return out
 
     def tag(self, tokens: Sequence[str], md_tags: Sequence[str]) -> List[str]:
-        return self.tag_batch([(list(tokens), list(md_tags))])[0]
+        return self.tag_sentences([(list(tokens), list(md_tags))])[0]
 
 
 _EXECUTOR_MODELS: Dict[str, object] = {}
@@ -576,7 +530,7 @@ def model_tag_stage(sentences, tagger: "ModelTagger"):
         for pdf in batches:
             sents = [(list(t), list(m))
                      for t, m in zip(pdf["tokens"], pdf["md_tags"])]
-            tags = tagger.tag_batch(sents) if sents else []
+            tags = tagger.tag_sentences(sents) if sents else []
             yield pd.DataFrame({
                 "url": pdf["url"], "sent_idx": pdf["sent_idx"],
                 "tokens": pdf["tokens"], "md_tags": pdf["md_tags"],

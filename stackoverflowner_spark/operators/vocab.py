@@ -7,7 +7,6 @@ key is the word, with AQE coalescing small partitions.
 Reference parity:
   create_dico      utils_so.py:53-65
   create_mapping   utils_so.py:68-76 (ids ordered by -freq, then item asc)
-  word vocab prune loader_so.py:319-336 (lowercase, keep freq >= 3)
   char vocab       loader_so.py:339-349
   tag vocab        loader_so.py:352-363
   entity ranking   utils_so.py:409-457 (Sort_Entity_by_Count)
@@ -34,13 +33,6 @@ def create_dico(items: DataFrame, col: str = "word") -> DataFrame:
 def create_mapping(dico: DataFrame, col: str = "word") -> DataFrame:
     w = Window.orderBy(F.desc("freq"), F.asc(col))
     return dico.withColumn("item_id", F.row_number().over(w))
-
-
-def word_vocab_pruned(df: DataFrame, text_col: str = "text",
-                      min_freq: int = 3) -> DataFrame:
-    words = df.select(F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"))
-    return (words.groupBy("word").agg(F.count("*").alias("freq"))
-            .filter(F.col("freq") >= min_freq))
 
 
 def char_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -47,9 +47,9 @@ def test_harness_total_and_deterministic():
     sents = [(["import", "numpy"], ["O", "O"]),
              (["use", "python", "the", "pandas"], ["O"] * 4),
              (["x" * 500], ["O"])]  # wordpiece-budget overflow -> padded O
-    tags = t.tag_batch(sents)
+    tags = t.tag_sentences(sents)
     assert [len(x) for x in tags] == [2, 4, 1]
-    assert t.tag_batch(sents) == tags                     # deterministic
+    assert t.tag_sentences(sents) == tags                 # deterministic
     assert t.tag(*sents[1]) == tags[1]                    # batch==single
 
 
@@ -98,10 +98,10 @@ def test_numpy_checkpoint_end_to_end(spark, tmp_path):
     sents = [(["import", "numpy"], ["O", "O"]),
              (["use", "python", "the", "pandas"], ["O"] * 4),
              (["spark", "fast"], ["O", "O"])]
-    local = t.tag_batch(sents)
+    local = t.tag_sentences(sents)
     assert [len(x) for x in local] == [2, 4, 2]
     assert all(tag in LABELS for tags in local for tag in tags)
-    assert t.tag_batch(sents) == local                    # deterministic
+    assert t.tag_sentences(sents) == local                # deterministic
     # singleton: the loaded forward is cached per process and reused
     assert ckpt in tg._EXECUTOR_MODELS
     assert tg._EXECUTOR_MODELS[ckpt] is tg._EXECUTOR_MODELS[ckpt]

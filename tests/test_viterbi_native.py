@@ -5,39 +5,21 @@ same order as the numpy lattice, strict-> first-occurrence tie-breaks —
 so decoded paths must be EQUAL (not just tag-equal), including on inputs
 engineered to tie. Also gates the end-to-end path: the shipped tagger
 artifact must decode a corpus identically with the kernel forced on and
-forced off.
+forced off. And the kernel must be refused, with numpy decoding instead,
+when its cache directory is writable by others or its inputs break the
+layout contract.
 """
+
+import os
+import tempfile
 
 import numpy as np
 import pytest
 
-from stackoverflowner_spark.kernel import perceptron as P
+from stackoverflowner_spark.kernel import viterbi_native as vn
+from stackoverflowner_spark.kernel.perceptron import viterbi_paths_numpy
 from stackoverflowner_spark.kernel.viterbi_native import (viterbi_lib,
                                                           viterbi_paths)
-
-
-def _numpy_paths(E_batch: np.ndarray, T: np.ndarray) -> np.ndarray:
-    """The tag_sentences numpy lattice, verbatim (tile-free: per-sentence
-    ops are independent, gated bitwise-equal in the existing suite)."""
-    B, n, L = E_batch.shape
-    TT = np.ascontiguousarray(T[:L].T)
-    cols = np.arange(L)
-    rows = np.arange(B)[:, None]
-    dp = T[L] + E_batch[:, 0]
-    back = np.zeros((B, n, L), dtype=np.int64)
-    cand = np.empty((B, L, L), dtype=T.dtype)
-    for i in range(1, n):
-        np.add(dp[:, None, :], TT[None], out=cand)
-        bi = cand.argmax(axis=2)
-        back[:, i] = bi
-        dp = cand[rows, cols[None, :], bi] + E_batch[:, i]
-    last = dp.argmax(axis=1)
-    paths = np.zeros((B, n), dtype=np.int64)
-    paths[:, n - 1] = last
-    r = np.arange(B)
-    for i in range(n - 1, 0, -1):
-        paths[:, i - 1] = back[r, i, paths[:, i]]
-    return paths
 
 
 def test_kernel_builds():
@@ -58,7 +40,7 @@ def test_paths_bitwise_equal_random(seed, B, n, L):
     # START -> I-* style pins, like the trained matrix
     T[L, ::3] = -10000.0
     E = rng.standard_normal((B, n, L)).astype(np.float32)
-    assert np.array_equal(viterbi_paths(lib, E, T), _numpy_paths(E, T))
+    assert np.array_equal(viterbi_paths(lib, E, T), viterbi_paths_numpy(E, T))
 
 
 def test_paths_bitwise_equal_with_ties():
@@ -70,10 +52,10 @@ def test_paths_bitwise_equal_with_ties():
     E = rng.integers(-2, 3, size=(B, n, L)).astype(np.float32)
     # integer-valued floats force exact score ties: first-occurrence
     # tie-breaks must agree everywhere
-    assert np.array_equal(viterbi_paths(lib, E, T), _numpy_paths(E, T))
+    assert np.array_equal(viterbi_paths(lib, E, T), viterbi_paths_numpy(E, T))
 
 
-def test_artifact_decode_identical_native_on_off(monkeypatch):
+def _artifact_and_corpus():
     from stackoverflowner_spark.operators.tagger import default_tagger
 
     tagger = default_tagger()
@@ -88,16 +70,54 @@ def test_artifact_decode_identical_native_on_off(monkeypatch):
         k = int(rng.integers(1, 14))
         toks = [words[int(i)] for i in rng.integers(0, len(words), size=k)]
         sents.append((toks, ["O"] * k))
+    return tagger, sents
 
-    def run():
-        tagger.__dict__.pop("_sent_cache", None)
-        tagger.model.__dict__.pop("_sent_cache", None)
-        return tagger.tag_sentences(sents)
 
-    got_native = run()
+def _cold_decode(tagger, sents):
+    tagger.__dict__.pop("_sent_cache", None)
+    return tagger.tag_sentences(sents)
+
+
+def test_artifact_decode_identical_native_on_off(monkeypatch):
+    tagger, sents = _artifact_and_corpus()
+    got_native = _cold_decode(tagger, sents)
     # force the numpy path by making the lib lookup fail
     monkeypatch.setattr(
         "stackoverflowner_spark.kernel.viterbi_native.viterbi_lib",
         lambda: None)
-    got_numpy = run()
-    assert got_native == got_numpy
+    assert _cold_decode(tagger, sents) == got_native
+
+
+@pytest.mark.parametrize("mode", [0o770, 0o707, 0o777], ids=oct)
+def test_shared_cache_dir_refused_numpy_decodes(monkeypatch, tmp_path, mode):
+    tagger, sents = _artifact_and_corpus()
+    want = _cold_decode(tagger, sents)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cache = tmp_path / f"sokg_viterbi_cache_{os.getuid()}"
+    cache.mkdir()
+    os.chmod(cache, mode)
+    monkeypatch.setattr(vn, "_CACHED", {})
+    assert viterbi_lib() is None
+    assert not any(cache.iterdir())  # nothing compiled into it either
+    assert _cold_decode(tagger, sents) == want
+    # the same directory made private is accepted: the refusal above was
+    # the mode check, not a missing compiler
+    os.chmod(cache, 0o700)
+    monkeypatch.setattr(vn, "_CACHED", {})
+    assert viterbi_lib() is not None
+
+
+def test_viterbi_paths_refuses_bad_layout():
+    lib = viterbi_lib()
+    assert lib is not None
+    rng = np.random.default_rng(3)
+    L, B, n = 7, 4, 5
+    T = rng.standard_normal((L + 1, L)).astype(np.float32)
+    E = rng.standard_normal((B, n, L)).astype(np.float32)
+    assert viterbi_paths(lib, E, T) is not None
+    assert viterbi_paths(lib, E.astype(np.float64), T) is None
+    assert viterbi_paths(lib, E, T.astype(np.float64)) is None
+    assert viterbi_paths(lib, E[:, ::-1], T) is None      # not C-contiguous
+    assert viterbi_paths(lib, E, np.asfortranarray(T)) is None
+    assert viterbi_paths(lib, E, T[:L]) is None            # no START row
+    assert viterbi_paths(lib, E[0], T) is None             # not (B, n, L)

@@ -41,9 +41,10 @@ FOLD_DIR = "/tmp/sokg_folds_v3"
 # but the single-shot test evaluation DROPPED to 66.80 vs this grid's
 # 67.29 — at high lam the decode leans on stacker logits calibrated on
 # jackknife channels, which amplifies the jackknife-vs-shipped-artifact
-# channel mismatch (the same memorization mode tune_fusion_dep.py
-# documents). The bounded grid keeps lam in the regime where the dev
-# gain transfers; see BENCH/BASELINE.md "widened-grid fusion" entry.
+# channel mismatch (the same memorization mode the deployment-channel
+# fusion entry in BENCH/BASELINE.md documents). The bounded grid keeps
+# lam in the regime where the dev gain transfers; see BENCH/BASELINE.md
+# "widened-grid fusion" entry.
 W2_GRID = [0.0, 0.2, 0.35, 0.5, 0.7]
 LAM_GRID = [0.0, 0.1, 0.25, 0.5, 1.0, 2.0]
 FUSION_CONFIG = os.path.join(ART_DIR, "fusion.json")
