@@ -1656,13 +1656,15 @@ def q_kg_triples_documents(spark, sf):
     # The flagship output under the hard correctness signal (VERDICT r3 #1):
     # the same documents-table text-ingest reduction as
     # kg_mentions_documents, extended through the REAL link + triple
-    # operators (link_broadcast cosine scoring vs the hashed-embedding
+    # operators (link_broadcast against the cosine-scored hashed-embedding
     # dictionary, then triples_from_linked's single-explode 3-predicate
     # emission, operators/triples.py:43). On this corpus the kernel
     # provably reduces to a 1-gram alias join, so the whole
     # mentions -> link -> triples chain is replayed in pure SQL: the join
-    # is exact-match (cosine of a string with itself is bitwise 1.0 —
-    # hashed_embedding L2-normalizes, kernel/ctc.py:187), and the triple
+    # is exact-match (every alias's precomputed link_score is the cosine of
+    # its L2-normalized hashed embedding, kernel/ctc.py:187, with its own
+    # float32-rounded copy — 1.0 to within 2.2e-16, far above the 0.99
+    # threshold, so no alias is filtered), and the triple
     # construction is three projections + distinct. part_hash is dropped
     # from the compare surface only because xxhash64 has no DuckDB twin.
     from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused

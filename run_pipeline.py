@@ -4,7 +4,7 @@
     spark-submit --py-files stackoverflowner_spark.zip run_pipeline.py \
         --pages /path/to/pages_parquet --out /path/to/out \
         [--mode fused|checkpointed] [--synth N] [--buckets 64] \
-        [--link broadcast|salted] [--lang en]
+        [--link broadcast|salted|fuzzy] [--lang en]
 
 With --synth N (no --pages), a deterministic synthetic pages table is
 generated in-flight. Checkpointed mode resumes automatically from the

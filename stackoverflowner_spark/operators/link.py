@@ -15,107 +15,51 @@ Two physical strategies, same logical result:
   aliases ("python") then spread across S reducers instead of one. AQE skew
   join remains enabled as a backstop (session.py).
 
-Scoring: cosine between the hashed surface-form embedding of the mention and
-the dictionary alias embedding (the fasttext stand-in; same operator shape
-as the reference-mandated scoring). Embeddings are computed once per
-distinct alias on the dictionary-sized side and broadcast; the per-row
-cosine is a JVM higher-order-function fold — no Python in the row-scale
-path (see _with_scores).
+Scoring: the cosine between the mention's hashed surface-form embedding
+and the alias embedding (the fasttext stand-in). The join is on
+``surface_norm == alias_norm``, so the score is a property of the dictionary
+row; the dictionary builders compute it once per alias
+(sources/dictionary.py ``alias_link_score``) and linking is one JVM join
+filtered on ``link_score >= MIN_LINK_SCORE`` — no Python at link time.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..kernel.ctc import hashed_embedding
 
 LINKED_COLS = [
     "url", "sent_idx", "tok_start", "tok_end", "surface", "surface_norm",
     "tag_type", "canonical_id", "entity_type", "link_score",
 ]
 
-
-def _with_scores(joined: DataFrame, dict_side: DataFrame) -> DataFrame:
-    """Cosine between the hashed surface-form embedding and the dictionary
-    alias embedding.
-
-    Scale shape (reworked r4): the joined stream's ``surface_norm`` domain
-    is BOUNDED BY THE DICTIONARY (every joined row matched an alias on
-    surface_norm = alias_norm), so the Python embedding runs once per
-    *distinct alias* on the dictionary-sized side — whose lineage is the
-    tiny dictionary, NOT the page kernel — is broadcast back, and the
-    per-row cosine is a pure JVM ``zip_with``/``aggregate`` fold. The r3
-    version scored every row OCCURRENCE in a pandas UDF — hundreds of
-    thousands of Python rows per 48k pages, and Catalyst additionally
-    evaluated the UDF under both the filter and the projection (two
-    ArrowEvalPython nodes, measured 20-30 s of the flagship at local[32]);
-    this plan runs Python on ~2k rows regardless of corpus size."""
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def embed_surface(surface: pd.Series) -> pd.Series:
-        if len(surface) == 0:
-            return pd.Series([], dtype="object")
-        q = hashed_embedding(list(surface.fillna("")), dim=64)
-        return pd.Series([list(map(float, row)) for row in q])
-
-    # the score is a pure function of (alias_norm, dictionary embedding):
-    # every joined row's surface_norm equals its alias_norm, and the
-    # embedding rides on that same dictionary row. So the ENTIRE scoring —
-    # surface embedding + cosine — happens on the dictionary-sized frame,
-    # and the corpus stream pays one broadcast-hash probe per row. (First
-    # attempt attached per-row zip_with/aggregate folds instead: higher-
-    # order functions are CodegenFallback, and the interpreted 2x64-element
-    # fold over ~590k joined rows burned ~20 JVM cores for seconds per 48k
-    # pages.)
-    surf_emb = (dict_side
-                .select(F.col("alias_norm").alias("surface_norm"),
-                        F.col("embedding"))
-                .dropDuplicates(["surface_norm"])
-                .withColumn("surf_emb", embed_surface("surface_norm")))
-    # dot(q, d / max(||d||, eps)) with q L2-normalized by construction —
-    # the same arithmetic the r3 numpy UDF ran, as a strict left-to-right
-    # fold (bitwise-stable across engines, cf. similarity._dot_col)
-    dot = F.aggregate(
-        F.zip_with("surf_emb", "embedding",
-                   lambda a, b: a * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    dnorm = F.sqrt(F.aggregate(
-        F.zip_with("embedding", "embedding",
-                   lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
-    scores = (surf_emb
-              .withColumn("link_score", dot / F.greatest(dnorm, F.lit(1e-12)))
-              .select("surface_norm", "link_score"))
-    return joined.join(F.broadcast(scores), "surface_norm")
+MIN_LINK_SCORE = 0.99
 
 
-def link_broadcast(mentions: DataFrame, dictionary: DataFrame,
-                   min_score: float = 0.99) -> DataFrame:
-    dict_side = dictionary.select("alias_norm", "canonical_id", "entity_type", "embedding")
-    joined = mentions.join(
-        F.broadcast(dict_side), mentions.surface_norm == dict_side.alias_norm, "inner")
-    return (_with_scores(joined, dict_side)
-            .filter(F.col("link_score") >= min_score).select(*LINKED_COLS))
+def _linkable(dictionary: DataFrame) -> DataFrame:
+    return (dictionary.filter(F.col("link_score") >= MIN_LINK_SCORE)
+            .select("alias_norm", "canonical_id", "entity_type", "link_score"))
+
+
+def link_broadcast(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
+    dict_side = _linkable(dictionary)
+    return mentions.join(
+        F.broadcast(dict_side), mentions.surface_norm == dict_side.alias_norm,
+        "inner").select(*LINKED_COLS)
 
 
 def link_salted(mentions: DataFrame, dictionary: DataFrame,
-                n_salts: int = 16, min_score: float = 0.99) -> DataFrame:
+                n_salts: int = 16) -> DataFrame:
     salted_mentions = mentions.withColumn(
         "salt", F.pmod(F.xxhash64("url", "sent_idx", "tok_start"), F.lit(n_salts)).cast("int"))
-    salted_dict = (
-        dictionary.select("alias_norm", "canonical_id", "entity_type", "embedding")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    )
-    joined = salted_mentions.join(
+    salted_dict = _linkable(dictionary).withColumn(
+        "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
+    return salted_mentions.join(
         salted_dict.hint("shuffle_hash"),
         (salted_mentions.surface_norm == salted_dict.alias_norm)
         & (salted_mentions.salt == salted_dict.salt),
         "inner",
-    )
-    return (_with_scores(joined, dictionary)
-            .filter(F.col("link_score") >= min_score).select(*LINKED_COLS))
+    ).select(*LINKED_COLS)
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -145,14 +89,13 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
 
 
 def link_fuzzy(mentions: DataFrame, dictionary: DataFrame,
-               max_dist: int = 1, min_len: int = 4,
-               min_score: float = 0.99) -> DataFrame:
+               max_dist: int = 1, min_len: int = 4) -> DataFrame:
     """link_broadcast plus a typo-repair pass for the leftovers: mentions
     whose surface_norm matches NO alias exactly are re-keyed to their
     nearest alias within Levenshtein ``max_dist`` (FastSS blocked join,
     operators/fuzzylink.py; best = min dist, then alias order — a total
     order, so the repair is deterministic) and linked through the same
-    scoring path. Exact rows are bit-identical to plain link_broadcast —
+    dictionary join. Exact rows are bit-identical to plain link_broadcast —
     the repair only ever touches rows the exact pass dropped.
 
     Scale shape: the anti-join and re-join ride the same broadcast
@@ -163,7 +106,7 @@ def link_fuzzy(mentions: DataFrame, dictionary: DataFrame,
     from .fuzzylink import fuzzy_join
     from pyspark.sql.window import Window
 
-    exact = link_broadcast(mentions, dictionary, min_score)
+    exact = link_broadcast(mentions, dictionary)
     aliases = dictionary.select("alias_norm").distinct()
     unmatched = mentions.join(
         F.broadcast(aliases),
@@ -180,13 +123,16 @@ def link_fuzzy(mentions: DataFrame, dictionary: DataFrame,
                 .drop("surface_norm")
                 .withColumnRenamed("_repair", "surface_norm"))
     return exact.unionByName(
-        link_broadcast(repaired, dictionary, min_score))
+        link_broadcast(repaired, dictionary))
+
+
+_STRATEGIES = {"broadcast": link_broadcast, "salted": link_salted,
+               "fuzzy": link_fuzzy}
 
 
 def link(mentions: DataFrame, dictionary: DataFrame, strategy: str = "broadcast",
          **kw) -> DataFrame:
-    if strategy == "salted":
-        return link_salted(mentions, dictionary, **kw)
-    if strategy == "fuzzy":
-        return link_fuzzy(mentions, dictionary, **kw)
-    return link_broadcast(mentions, dictionary, **kw)
+    if strategy not in _STRATEGIES:
+        raise ValueError(f"unknown link strategy {strategy!r}; "
+                         "expected broadcast|salted|fuzzy")
+    return _STRATEGIES[strategy](mentions, dictionary, **kw)

@@ -1,17 +1,23 @@
 """Deterministic software-entity dictionary (the broadcast linking side).
 
 Per FIXTURES.md §3: ``entity_dict(canonical_id, alias, entity_type,
-embedding, freq_rank)``. Synthesized deterministically (no external data):
-a fixed seed list of software entities with alias variants (case, dots,
-dashes — the shapes the tokenizer protects, e.g. ``javax.swing.Timer``),
-Zipfian ``freq_rank`` so head entities exercise skew handling, and hashed
-surface-form embeddings standing in for fasttext vectors (the reference's
-fasttext binary is an external download, utils_ctc/prediction_ctc.py:36-43).
+embedding, freq_rank, link_score)``. Synthesized deterministically (no
+external data): a fixed seed list of software entities with alias variants
+(case, dots, dashes — the shapes the tokenizer protects, e.g.
+``javax.swing.Timer``), Zipfian ``freq_rank`` so head entities exercise skew
+handling, and hashed surface-form embeddings standing in for fasttext vectors
+(the reference's fasttext binary is an external download,
+utils_ctc/prediction_ctc.py:36-43).
+
+``link_score`` is the cosine a mention gets when it links to the row. The
+linker joins on ``surface_norm == alias_norm``, so that cosine depends on the
+row alone and is computed here, once per alias, by ``alias_link_score``.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+import math
+from typing import List, Sequence, Tuple
 
 import numpy as np
 
@@ -64,6 +70,22 @@ def _alias_variants(name: str) -> List[str]:
     return sorted(variants)
 
 
+def alias_link_score(alias_norm: str, embedding: Sequence[float]) -> float:
+    """Cosine of the hashed surface-form embedding of ``alias_norm`` against
+    a dictionary row's float32-rounded ``embedding``, as a strict
+    left-to-right float64 fold: dot, then sqrt of the sum of squares, then
+    ``max(norm, 1e-12)``. The summation order is part of the contract (the
+    oracles replay it), so no ``np.dot``."""
+    q = hashed_embedding([alias_norm], dim=64)[0]
+    dot = 0.0
+    for a, b in zip(q, embedding):
+        dot += float(a) * b
+    sq = 0.0
+    for b in embedding:
+        sq += b * b
+    return dot / max(math.sqrt(sq), 1e-12)
+
+
 def build_dictionary_rows(extra_entities: List[Tuple[str, str]] | None = None
                           ) -> List[dict]:
     """Return dictionary rows as plain dicts (driver-side; the table is tiny
@@ -73,14 +95,17 @@ def build_dictionary_rows(extra_entities: List[Tuple[str, str]] | None = None
     for rank, (name, etype) in enumerate(entities, start=1):
         cid = "soft:" + name.lower()
         for alias in _alias_variants(name):
-            emb = hashed_embedding([alias.lower()], dim=64)[0]
+            alias_norm = alias.lower()
+            emb = hashed_embedding([alias_norm], dim=64)[0]
+            emb = [float(x) for x in emb.astype(np.float32)]
             rows.append({
                 "canonical_id": cid,
                 "alias": alias,
-                "alias_norm": alias.lower(),
+                "alias_norm": alias_norm,
                 "entity_type": etype,
-                "embedding": [float(x) for x in emb],
+                "embedding": emb,
                 "freq_rank": rank,
+                "link_score": alias_link_score(alias_norm, emb),
             })
     return rows
 
@@ -95,6 +120,7 @@ def dictionary_df(spark, extra_entities: List[Tuple[str, str]] | None = None):
         T.StructField("entity_type", T.StringType()),
         T.StructField("embedding", T.ArrayType(T.FloatType())),
         T.StructField("freq_rank", T.IntegerType()),
+        T.StructField("link_score", T.DoubleType()),
     ])
     return spark.createDataFrame(build_dictionary_rows(extra_entities), schema)
 

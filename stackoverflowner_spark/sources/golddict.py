@@ -9,6 +9,7 @@ Zipfian frequency rank so the salted-join path has real skew to chew on.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..kernel.conlleval import extract_chunks
 from ..kernel.ctc import hashed_embedding
+from .dictionary import alias_link_score
 
 _PHRASES_SCHEMA = T.StructType([
     T.StructField("surface", T.StringType()),
@@ -41,11 +43,11 @@ def entity_phrases(gold_sentences: DataFrame) -> DataFrame:
 
 
 def dictionary_from_gold(gold_sentences: DataFrame, min_count: int = 2,
-                         max_aliases: int = 50_000, embed_dim: int = 64
-                         ) -> DataFrame:
+                         max_aliases: int = 50_000) -> DataFrame:
     """Gold sentences -> entity_dict(canonical_id, alias, alias_norm,
-    entity_type, embedding, freq_rank). All aggregation distributed; the
-    embedding is attached in one vectorized pass at the end."""
+    entity_type, embedding, freq_rank, link_score). All aggregation
+    distributed; the embedding and its link score are attached in one
+    vectorized pass at the end."""
     phrases = entity_phrases(gold_sentences)
     counts = (
         phrases.groupBy(F.lower("surface").alias("alias_norm"),
@@ -78,12 +80,15 @@ def dictionary_from_gold(gold_sentences: DataFrame, min_count: int = 2,
         ).distinct()
     )
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(alias_norm: pd.Series) -> pd.Series:
+    @F.pandas_udf("embedding array<float>, link_score double")
+    def embed(alias_norm: pd.Series) -> pd.DataFrame:
         codes, uniq = pd.factorize(alias_norm.fillna(""))
-        mat = hashed_embedding(list(uniq), dim=embed_dim)
-        return pd.Series([[float(x) for x in mat[c]] for c in codes])
+        mat = hashed_embedding(list(uniq), dim=64).astype(np.float32)
+        embs = [[float(x) for x in row] for row in mat]
+        scores = [alias_link_score(a, e) for a, e in zip(uniq, embs)]
+        return pd.DataFrame({"embedding": [embs[c] for c in codes],
+                             "link_score": [scores[c] for c in codes]})
 
-    return aliases.withColumn("embedding", embed("alias_norm")).select(
-        "canonical_id", "alias", "alias_norm", "entity_type", "embedding",
-        "freq_rank")
+    return aliases.withColumn("_e", embed("alias_norm")).select(
+        "canonical_id", "alias", "alias_norm", "entity_type", "_e.embedding",
+        "freq_rank", "_e.link_score")

@@ -235,7 +235,7 @@ def test_dictionary_from_reference_gold(spark):
     assert n > 500
     cols = set(d.columns)
     assert cols == {"canonical_id", "alias", "alias_norm", "entity_type",
-                    "embedding", "freq_rank"}
+                    "embedding", "freq_rank", "link_score"}
     # head entities exist and are plausible software names
     head = [r.alias_norm for r in
             d.filter("freq_rank <= 15").select("alias_norm").distinct().collect()]

@@ -89,6 +89,7 @@ def test_link_plan_is_broadcast(spark, pages):
     plan = link_broadcast(mentions, dictionary_df(spark))._jdf.queryExecution() \
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_triples_shape_and_partition_hash(spark, pages):

@@ -23,15 +23,13 @@ Checklist:
   materialization is an `explode`, NOT a union of projections (a union made
   Catalyst re-run the Python kernel once per arm; fixed in
   operators/triples.py).
-* `BroadcastHashJoin ... BuildRight` on `alias_norm` — zero shuffle on the
-  (skewed) mention stream.
-* the only `ArrowEvalPython` sits on the dictionary-sized broadcast build
-  side (surface-embedding scoring), NEVER downstream of the kernel on the
-  corpus spine.
-* the only corpus-spine `Exchange` belongs to the evidence-triple
-  `distinct` (`HashAggregate` pair, partial map-side); the one other
-  Exchange in the tree is the dictionary-side `first(embedding)` agg —
-  O(dictionary) rows, not O(corpus).
+* exactly ONE `BroadcastHashJoin ... BuildRight` on `alias_norm` — zero
+  shuffle on the (skewed) mention stream; the dictionary side is a
+  `link_score >= 0.99` filter over the precomputed scores.
+* no `ArrowEvalPython` anywhere: the link score is a dictionary column
+  computed when the dictionary is built, so no Python runs after the kernel.
+* the only `Exchange` belongs to the evidence-triple `distinct`
+  (`HashAggregate` pair, partial map-side).
 * all four bullets are GATED in `tests/test_plan_gates.py` against
   `queryExecution().executedPlan()` at HEAD, so this dossier can no longer
   drift from the executed plan (the r4 staleness defect).
