@@ -492,11 +492,12 @@ _CONSIST_SEED = {
 
 def q_doc_consistency(spark, sf):
     # §2.8/M9-counterpart: document-level label-consistency propagation
-    # (operators/consistency.py propagate_labels — the declarative twin of
-    # the kernel pass the fused hot path runs per page). Output = the
-    # propagated mentions only: O positions that inherited an in-document
-    # untied majority label.
-    from stackoverflowner_spark.operators.consistency import propagate_labels
+    # through operators/consistency.py propagate_mentions — the Spark twin
+    # the checkpointed pipeline runs, of the kernel pass the fused hot path
+    # runs per page. The seed tags become single-token seed mentions; output
+    # = the propagated mentions only (the seeds anti-joined away): uncovered
+    # positions that inherited an in-document untied majority label.
+    from stackoverflowner_spark.operators.consistency import propagate_mentions
     docs = _t(spark, sf, "documents")
     toks = (docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
@@ -507,17 +508,22 @@ def q_doc_consistency(spark, sf):
     seed_type = F.when(F.col("pos") % 2 == 0, F.create_map(
         *[F.lit(x) for kv in _CONSIST_SEED.items() for x in kv]
     )[F.col("token0")]).otherwise(F.lit("Library"))
-    tag = F.when(F.col("token0").isin(*_CONSIST_SEED.keys())
-                 & (F.col("pos") % 3 == 0),
-                 F.concat(F.lit("B-"), seed_type)).otherwise(F.lit("O"))
+    seed = F.when(F.col("token0").isin(*_CONSIST_SEED.keys())
+                  & (F.col("pos") % 3 == 0), seed_type)
     tokens = toks.select(
         "url", (F.col("pos") / 10).cast("int").alias("sent_idx"),
         F.col("pos").cast("int").alias("pos"), cap.alias("token"),
-        tag.alias("tag"), tag.alias("orig_tag"))
-    out = propagate_labels(tokens)
-    return (out.filter((F.col("orig_tag") == "O") & (F.col("tag") != "O"))
-            .select("url", F.col("pos").cast("long").alias("pos"), "token",
-                    F.expr("substring(tag, 3)").alias("tag_type")))
+        seed.alias("seed_type"))
+    seeds = tokens.filter(F.col("seed_type").isNotNull()).select(
+        "url", "sent_idx", F.col("pos").alias("tok_start"),
+        (F.col("pos") + 1).alias("tok_end"), F.col("token").alias("surface"),
+        F.lower("token").alias("surface_norm"),
+        F.col("seed_type").alias("tag_type"))
+    out = propagate_mentions(seeds, tokens.drop("seed_type"))
+    return (out.join(seeds.select("url", "tok_start"), ["url", "tok_start"],
+                     "left_anti")
+            .select("url", F.col("tok_start").cast("long").alias("pos"),
+                    F.col("surface").alias("token"), "tag_type"))
 
 
 def q_exact_dedup(spark, sf):
@@ -1625,26 +1631,41 @@ def _doc_alias_map():
     return amap
 
 
-def q_kg_mentions_documents(spark, sf):
-    # text-ingest mode over the driver's documents table: documents become
-    # pages rows with html=null (extract falls back to the text column).
-    # ORACLED: on this plain whitespace-separated lowercase text the full
-    # kernel (Punkt sentencize -> sotok tokenize -> greedy gazetteer)
-    # provably reduces to whitespace split + 1-gram alias join, which the
-    # DuckDB oracle replays exactly (same alias source, no multi-word
-    # aliases in the map -> no greedy shadowing).
+def _doc_mentions(spark, sf):
+    """The fused kernel over the documents table in text-ingest mode: each
+    document becomes a pages row (url='doc://<doc_id>', html=null, so
+    extract falls back to the text column), tagged by the 1-gram
+    documents gazetteer."""
     from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
     from stackoverflowner_spark.operators.tagger import GazetteerTagger
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
+    pages = _t(spark, sf, "documents").select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("binary").alias("html"),
         F.col("text"),
         F.col("lang"),
     )
-    m = pages_to_mentions_fused(pages, GazetteerTagger(alias_map=_doc_alias_map()),
-                                lang_filter="en")
-    return m.select(
+    return pages_to_mentions_fused(
+        pages, GazetteerTagger(alias_map=_doc_alias_map()), lang_filter="en")
+
+
+def _doc_triples(spark, sf):
+    """The documents-derived KG: ``_doc_mentions`` through the real
+    broadcast link and triple emission."""
+    from stackoverflowner_spark.operators.link import link_broadcast
+    from stackoverflowner_spark.operators.triples import triples_from_linked
+    from stackoverflowner_spark.sources.dictionary import dictionary_df
+    return triples_from_linked(link_broadcast(
+        _doc_mentions(spark, sf), dictionary_df(spark, _DOC_EXTRA_ENTITIES)))
+
+
+def q_kg_mentions_documents(spark, sf):
+    # text-ingest mode over the driver's documents table (_doc_mentions).
+    # ORACLED: on this plain whitespace-separated lowercase text the full
+    # kernel (Punkt sentencize -> sotok tokenize -> greedy gazetteer)
+    # provably reduces to whitespace split + 1-gram alias join, which the
+    # DuckDB oracle replays exactly (same alias source, no multi-word
+    # aliases in the map -> no greedy shadowing).
+    return _doc_mentions(spark, sf).select(
         "url",
         F.col("sent_idx").cast("long").alias("sent_idx"),
         F.col("tok_start").cast("long").alias("tok_start"),
@@ -1667,22 +1688,7 @@ def q_kg_triples_documents(spark, sf):
     # threshold, so no alias is filtered), and the triple
     # construction is three projections + distinct. part_hash is dropped
     # from the compare surface only because xxhash64 has no DuckDB twin.
-    from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
-    from stackoverflowner_spark.operators.link import link_broadcast
-    from stackoverflowner_spark.operators.tagger import GazetteerTagger
-    from stackoverflowner_spark.operators.triples import triples_from_linked
-    from stackoverflowner_spark.sources.dictionary import dictionary_df
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    m = pages_to_mentions_fused(pages, GazetteerTagger(alias_map=_doc_alias_map()),
-                                lang_filter="en")
-    linked = link_broadcast(m, dictionary_df(spark, _DOC_EXTRA_ENTITIES))
-    return (triples_from_linked(linked)
+    return (_doc_triples(spark, sf)
             .select("subj", "pred", "obj", "url").distinct())
 
 
@@ -1695,26 +1701,11 @@ def q_kg_bgp(spark, sf):
     # kg_triples_documents row, so the oracle replays that derivation and
     # restates the BGP as SQL self-joins (the textbook SPARQL->SQL
     # translation this operator implements on the Spark side).
-    from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
     from stackoverflowner_spark.operators.kgquery import bgp_match
-    from stackoverflowner_spark.operators.link import link_broadcast
-    from stackoverflowner_spark.operators.tagger import GazetteerTagger
-    from stackoverflowner_spark.operators.triples import triples_from_linked
-    from stackoverflowner_spark.sources.dictionary import dictionary_df
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    m = pages_to_mentions_fused(pages, GazetteerTagger(alias_map=_doc_alias_map()),
-                                lang_filter="en")
-    linked = link_broadcast(m, dictionary_df(spark, _DOC_EXTRA_ENTITIES))
     # materialize the triple table once: bgp_match scans it once per
     # pattern (4 here), and without the lineage cut each scan replays
     # the whole Python-kernel extraction chain
-    tri = (triples_from_linked(linked)
+    tri = (_doc_triples(spark, sf)
            .select("subj", "pred", "obj").distinct().localCheckpoint())
     return bgp_match(tri, [
         ("?algo", "instance_of", "Algorithm"),
@@ -1745,23 +1736,8 @@ def q_kg_validate(spark, sf):
     # corpus, both sides of the checker exercised. Oracled from birth on
     # the pytest rotation gate; the oracle replays the triple derivation
     # and restates each anti-join as NOT EXISTS.
-    from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
-    from stackoverflowner_spark.operators.link import link_broadcast
-    from stackoverflowner_spark.operators.tagger import GazetteerTagger
-    from stackoverflowner_spark.operators.triples import triples_from_linked
     from stackoverflowner_spark.operators.validate import validate_triples
-    from stackoverflowner_spark.sources.dictionary import dictionary_df
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    m = pages_to_mentions_fused(pages, GazetteerTagger(alias_map=_doc_alias_map()),
-                                lang_filter="en")
-    linked = link_broadcast(m, dictionary_df(spark, _DOC_EXTRA_ENTITIES))
-    tri = (triples_from_linked(linked)
+    tri = (_doc_triples(spark, sf)
            .select("subj", "pred", "obj").distinct())
     rules = spark.createDataFrame(
         [("mentioned_in", "Algorithm", None),
@@ -1799,23 +1775,8 @@ def q_kg_inference(spark, sf):
     # Computational_Concept -> Concept). Oracled from birth on the pytest
     # rotation gate: the oracle replays both closures as recursive CTEs
     # and each rule as one join, same rdfs7-before-rdfs9 stratification.
-    from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
     from stackoverflowner_spark.operators.inference import rdfs_materialize
-    from stackoverflowner_spark.operators.link import link_broadcast
-    from stackoverflowner_spark.operators.tagger import GazetteerTagger
-    from stackoverflowner_spark.operators.triples import triples_from_linked
-    from stackoverflowner_spark.sources.dictionary import dictionary_df
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    m = pages_to_mentions_fused(pages, GazetteerTagger(alias_map=_doc_alias_map()),
-                                lang_filter="en")
-    linked = link_broadcast(m, dictionary_df(spark, _DOC_EXTRA_ENTITIES))
-    tri = (triples_from_linked(linked)
+    tri = (_doc_triples(spark, sf)
            .select("subj", "pred", "obj").distinct())
     schema = spark.createDataFrame(
         _KG_TAXONOMY, "subj string, pred string, obj string")

@@ -1,28 +1,31 @@
 """Document-level label-consistency as a declarative Spark operator.
 
-The production hot path applies kernel/docconsist.py INSIDE the fused
-``pages_to_mentions_fused`` page loop — a page is a document, so the pass
-rides the existing single ``mapInPandas`` with zero extra shuffle. This
-module is the declarative twin for the modular/checkpointed path, where
-tagged tokens are already materialized as a long table and the pass should
-run engine-side (window + aggregate + join, all JVM, WholeStageCodegen)
-instead of re-crossing into Python.
+The production hot path applies kernel/docconsist.py ``doc_postpass``
+INSIDE the fused ``pages_to_mentions_fused`` page loop — a page is a
+document, so the pass rides the existing single ``mapInPandas`` with zero
+extra shuffle. ``propagate_mentions`` is its one Spark twin, for the
+checkpointed path, where mentions and tokens are already materialized as
+tables and the pass should run engine-side (aggregate + window + join, all
+JVM, WholeStageCodegen) instead of re-crossing into Python.
 
-Semantics are the kernel's, restated relationally (parity-gated in
-tests/test_consistency.py):
+The kernel's rule, restated over the mention table:
 
-* votes  — single-token B- chunks whose surface passes the name-shape gate
-           vote (url, token) -> entity type, one vote per mention;
-* majority — the top-voted type per (url, token), dropped on ties or when
-           below ``min_votes``;
-* propagate — O tokens matching a voted surface (exact case) inherit
-           ``B-<type>``; existing chunks are never touched.
+* votes  — single-token mentions whose surface passes the name-shape gate
+           vote (url, surface) -> entity type, one vote per mention;
+* majority — the top-voted type per (url, surface), dropped on ties;
+* propagate — token positions no mention covers whose token matches a
+           voted surface (exact case) become new single-token mentions;
+           existing mentions are never touched.
 
-Scale shape: the vote aggregate shuffles O(mentions) rows (mentions, not
-tokens — the single-token filter happens before the exchange), and the
-relabel join shuffles O(distinct voted surfaces) against the token table
-keyed by (url, token); both partition on the url-prefixed key, so document
-locality is preserved and no key can exceed one document's token count.
+Parity with the kernel, read as chunk sets, is gated in
+tests/test_consistency.py; the checkpointed-vs-fused engine gate is
+tests/test_spark_pipeline.py::test_checkpoint_resume_no_recompute.
+
+Scale shape: the vote aggregate shuffles O(single-token mentions) rows, and
+the candidate join keys on (url, token) against the small voted-label table
+BEFORE the coverage anti-join, so the range predicate only ever sees
+candidate rows, not the whole token table; every key is url-prefixed, so no
+key can exceed one document.
 
 The shape gate's regex restatement uses Unicode classes (``\\p{Lu}`` /
 ``\\p{Nd}`` — supported by both Java regex and DuckDB's RE2) to track
@@ -39,80 +42,19 @@ from pyspark.sql import functions as F
 
 # kernel/docconsist.py name_like: len >= 2, has an alphanumeric, and has an
 # uppercase/digit/identifier char. Regex restatement for the JVM/SQL twin
-# (parameterized on the column name; see NAME_LIKE_SQL).
+# (parameterized on the column name).
 NAME_LIKE_SQL = (
     "length({c}) >= 2 and {c} rlike '[\\\\p{{L}}\\\\p{{Nd}}]' "
     "and {c} rlike '[\\\\p{{Lu}}\\\\p{{Nd}}._/-]'"
 )
-_NAME_LIKE = NAME_LIKE_SQL.format(c="token")
 
 
-def consistency_votes(tokens: DataFrame, min_votes: int = 1) -> DataFrame:
-    """Majority entity label per (url, token) from single-token mentions.
-
-    ``tokens``: one row per token — (url, sent_idx, pos, token, tag) with
-    BIO tags. Returns (url, token, tag_type, votes) for surfaces that won
-    an untied majority with at least ``min_votes`` mentions.
-    """
-    w = Window.partitionBy("url", "sent_idx").orderBy("pos")
-    nxt = F.lead("tag").over(w)
-    single = (
-        tokens
-        .withColumn("_nxt", nxt)
-        .filter(F.col("tag").startswith("B-")
-                & (F.col("_nxt").isNull() | ~F.col("_nxt").startswith("I-")))
-        .filter(F.expr(_NAME_LIKE))
-        .select("url", "token",
-                F.expr("substring(tag, 3)").alias("tag_type"))
-    )
-    votes = single.groupBy("url", "token", "tag_type").agg(
-        F.count("*").alias("votes"))
-    rk = Window.partitionBy("url", "token")
-    top = F.max("votes").over(rk)
-    n_at_top = F.sum(F.when(F.col("votes") == F.col("_top"), 1)
-                     .otherwise(0)).over(rk)
-    return (votes
-            .withColumn("_top", top)
-            .withColumn("_n_top", n_at_top)
-            .filter((F.col("votes") == F.col("_top"))
-                    & (F.col("_n_top") == 1)
-                    & (F.col("votes") >= min_votes))
-            .select("url", "token", "tag_type", "votes"))
-
-
-def propagate_labels(tokens: DataFrame, min_votes: int = 1) -> DataFrame:
-    """Kernel ``apply_consistency`` as a relational plan.
-
-    Returns the token table with ``tag`` rewritten: O tokens whose surface
-    won an in-document majority become single-token ``B-<type>`` chunks.
-    """
-    labels = consistency_votes(tokens, min_votes=min_votes).select(
-        "url", "token", F.col("tag_type").alias("_prop_type"))
-    return (tokens.join(labels, ["url", "token"], "left")
-            .withColumn(
-                "tag",
-                F.when((F.col("tag") == "O") & F.col("_prop_type").isNotNull(),
-                       F.concat(F.lit("B-"), F.col("_prop_type")))
-                .otherwise(F.col("tag")))
-            .drop("_prop_type"))
-
-
-def propagate_mentions(mentions: DataFrame, tokens: DataFrame,
-                       min_votes: int = 1) -> DataFrame:
-    """Mention-level consistency for the modular/checkpointed path.
+def propagate_mentions(mentions: DataFrame, tokens: DataFrame) -> DataFrame:
+    """Kernel ``doc_postpass`` over the mention table.
 
     ``mentions``: the MENTIONS_SCHEMA chunk table; ``tokens``: the long
-    token table (url, sent_idx, pos, token). Single-token mentions whose
-    surface passes the shape gate vote per document; uncovered token
-    positions matching an untied majority surface become new single-token
-    mentions. Returns mentions ∪ propagated, same schema — exactly the
-    kernel ``doc_postpass`` run inside the fused path (parity-gated in
-    tests/test_consistency.py on the full synthetic-pages corpus).
-
-    Scale shape: votes aggregate O(single-token mentions); the candidate
-    join keys on (url, token) against the small voted-label table BEFORE
-    the coverage anti-join, so the range predicate only ever sees candidate
-    rows, not the whole token table.
+    token table (url, sent_idx, pos, token). Returns mentions ∪ propagated,
+    same schema.
     """
     single = (mentions
               .filter((F.col("tok_end") - F.col("tok_start")) == 1)
@@ -126,8 +68,7 @@ def propagate_mentions(mentions: DataFrame, tokens: DataFrame,
                   F.when(F.col("votes") == F.col("_top"), 1)
                   .otherwise(0)).over(rk))
               .filter((F.col("votes") == F.col("_top"))
-                      & (F.col("_n_top") == 1)
-                      & (F.col("votes") >= min_votes))
+                      & (F.col("_n_top") == 1))
               .select("url", F.col("surface").alias("token"),
                       F.col("tag_type").alias("_ptype")))
     cand = tokens.join(labels, ["url", "token"])
@@ -149,15 +90,3 @@ def propagate_mentions(mentions: DataFrame, tokens: DataFrame,
         .withColumn("sent_idx", F.col("sent_idx").cast("int"))
         .withColumn("tok_start", F.col("tok_start").cast("int"))
         .withColumn("tok_end", F.col("tok_end").cast("int")))
-
-
-_PUNCT = "=+-*/{}[]()<>;:,.!?|&^%$#@~`'\"\\"
-
-
-def suppress_punct_mentions(mentions: DataFrame) -> DataFrame:
-    """Declarative twin of kernel ``suppress_punct_code_spans`` over the
-    MENTIONS table: drop Code_Block chunks whose surface is punctuation
-    only (token separators are spaces, so all-punct tokens <=> the surface
-    is punct+space only). ``translate`` keeps it in codegen — no regex."""
-    all_punct = F.translate(F.col("surface"), _PUNCT + " ", "") == ""
-    return mentions.filter(~((F.col("tag_type") == "Code_Block") & all_punct))

@@ -11,6 +11,7 @@ are not in this sandbox; the plug point is ``ModelTagger``).
 
 from __future__ import annotations
 
+import functools
 import itertools
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -340,7 +341,11 @@ class PerceptronTagger(Tagger):
                    d.get("use_seg_channel", False))
 
 
-_DEFAULT_TAGGER: dict = {}
+@functools.lru_cache(maxsize=1)
+def _load_default(path: str, mtime: float) -> PerceptronTagger:
+    """One loaded artifact per ``(path, mtime)``; a newer artifact evicts
+    the previous instance."""
+    return PerceptronTagger.load(path)
 
 
 def default_tagger() -> Tagger:
@@ -363,12 +368,7 @@ def default_tagger() -> Tagger:
         os.path.abspath(__file__))), "artifacts", "viterbi_ctc_seg.pkl.gz")
     if not os.path.exists(path):
         return GazetteerTagger()
-    key = (path, os.path.getmtime(path))
-    hit = _DEFAULT_TAGGER.get(key)
-    if hit is None:
-        _DEFAULT_TAGGER.clear()
-        hit = _DEFAULT_TAGGER[key] = PerceptronTagger.load(path)
-    return hit
+    return _load_default(path, os.path.getmtime(path))
 
 
 class SegmenterTagger(Tagger):

@@ -91,7 +91,7 @@ class KGPipeline:
         # document-level label-consistency post-pass (kernel/docconsist.py):
         # in-kernel on the fused path (zero shuffle), declarative
         # propagate_mentions on the modular path — same result, gated in
-        # tests/test_consistency.py
+        # tests/test_spark_pipeline.py::test_checkpoint_resume_no_recompute
         self.doc_consistency = doc_consistency
         self.dictionary = dictionary_df(spark)
         self.lineage = Lineage(out_root)

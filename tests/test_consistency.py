@@ -1,23 +1,25 @@
 """Document-level label-consistency: kernel semantics + Spark parity.
 
 kernel/docconsist.py is the in-fused-path authority; operators/
-consistency.py is the declarative engine twin. This gates (a) the kernel's
-vote/majority/shape/tie rules on worked examples, (b) bitwise kernel==Spark
-equality on a generated multi-document corpus, (c) the punctuation
-Code_Block suppression on both sides.
+consistency.py ``propagate_mentions`` is its Spark twin. This gates (a) the
+kernel's vote/majority/shape/tie rules on worked examples, (b) kernel ==
+twin equality, read as chunk sets, on a generated multi-document corpus
+with type-switching ``I-`` tags, (c) the strict driver oracle for the
+``doc_consistency`` entry.
 """
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
+from stackoverflowner_spark.kernel.conlleval import extract_chunks
 from stackoverflowner_spark.kernel.docconsist import (
-    apply_consistency, collect_votes, doc_postpass, majority_labels,
-    name_like, suppress_punct_code_spans)
-from stackoverflowner_spark.operators.consistency import (
-    propagate_labels, suppress_punct_mentions)
+    collect_votes, doc_postpass, majority_labels, name_like)
+from stackoverflowner_spark.operators.consistency import propagate_mentions
+from stackoverflowner_spark.operators.document_kernel import MENTIONS_SCHEMA
 from stackoverflowner_spark.session import get_spark
+
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +48,7 @@ def test_propagation_worked_example():
     tags = [["O", "O", "B-Application", "O"],
             ["O", "O", "O", "O"],
             ["O", "O"]]
-    out = apply_consistency(toks, tags)
+    out = doc_postpass(toks, tags)
     # exact-case only: "docker" stays O, both other "Docker" flip
     assert out[0] == ["O", "O", "B-Application", "O"]
     assert out[1] == ["O", "O", "O", "B-Application"]
@@ -60,19 +62,18 @@ def test_ties_and_multitoken_do_not_vote():
     votes = collect_votes(toks, tags)
     assert "Visual" not in votes and "Studio" not in votes
     assert majority_labels(votes) == {}          # 1-1 tie -> no propagation
-    out = apply_consistency(toks, tags)
+    out = doc_postpass(toks, tags)
     assert out == tags                           # nothing changed
-    # min_votes=2 also blocks a single confident mention
+    # one confident mention is enough
     toks2 = [["Redis", "a"], ["Redis", "b"]]
     tags2 = [["B-Application", "O"], ["O", "O"]]
-    assert apply_consistency(toks2, tags2, min_votes=2) == tags2
-    assert apply_consistency(toks2, tags2, min_votes=1)[1][0] == "B-Application"
+    assert doc_postpass(toks2, tags2)[1][0] == "B-Application"
 
 
 def test_existing_chunks_never_touched():
     toks = [["Redis"], ["Redis", "Redis"], ["Redis"]]
     tags = [["B-Application"], ["B-Library", "I-Library"], ["O"]]
-    out = apply_consistency(toks, tags)
+    out = doc_postpass(toks, tags)
     # the 2-token Library chunk survives verbatim (only O positions are
     # rewritten), and only the single-token mention voted
     assert out[0] == ["B-Application"]
@@ -80,24 +81,12 @@ def test_existing_chunks_never_touched():
     assert out[2] == ["B-Application"]
 
 
-def test_punct_suppression():
-    toks = ["{", "x", "=", "1", "}", "print"]
-    tags = ["B-Code_Block", "O", "B-Code_Block", "O", "B-Code_Block",
-            "B-Code_Block"]
-    out = suppress_punct_code_spans(toks, tags)
-    assert out == ["O", "O", "O", "O", "O", "B-Code_Block"]
-    # multi-token all-punct chunk also drops; mixed chunk survives
-    toks2 = ["[", "]", "a", "=", "b"]
-    tags2 = ["B-Code_Block", "I-Code_Block", "B-Code_Block", "I-Code_Block",
-             "I-Code_Block"]
-    assert suppress_punct_code_spans(toks2, tags2) == \
-        ["O", "O", "B-Code_Block", "I-Code_Block", "I-Code_Block"]
-
-
 def _synth_corpus(n_docs=40, seed=20260818):
     """Deterministic multi-doc corpus with entity mentions, ties, case
-    variants, punctuation and I- continuations."""
+    variants, punctuation, I- continuations and type-switching I- tags
+    (``B-X I-Y``: conlleval reads two chunks, so ``B-X`` is a single)."""
     rng = random.Random(seed)
+    switch = random.Random(seed + 1)
     names = ["Docker", "PASTA", "log4j", "rgeo/rgeo", "Makeen", "numpy",
              "TaskWarrior", "Redis", "the", "x"]
     types = ["Application", "Library", "Language"]
@@ -123,83 +112,58 @@ def _synth_corpus(n_docs=40, seed=20260818):
             if len(toks) >= 2 and tags[-2].startswith("B-") \
                     and rng.random() < 0.3:
                 tags[-1] = "I-" + tags[-2][2:]
+            for i in range(1, len(tags)):
+                if tags[i - 1] != "O" and switch.random() < 0.3:
+                    tags[i] = "I-" + switch.choice(
+                        [t for t in types if t != tags[i - 1][2:]])
             sents.append((toks, tags))
         docs.append((f"doc://{d}", sents))
     return docs
 
 
+def _chunk_rows(url, sents):
+    for si, (toks, tags) in enumerate(sents):
+        for typ, a, b in extract_chunks(tags):
+            surface = " ".join(toks[a:b])
+            yield (url, si, a, b, surface, surface.lower(), typ)
+
+
 def test_spark_matches_kernel_on_synth_corpus(spark):
     docs = _synth_corpus()
-    rows = []
+    mentions, tokens = [], []
     for url, sents in docs:
-        for si, (toks, tags) in enumerate(sents):
-            for p, (tok, tag) in enumerate(zip(toks, tags)):
-                rows.append((url, si, p, tok, tag))
-    df = spark.createDataFrame(
-        rows, "url string, sent_idx int, pos int, token string, tag string")
-    got = {(r.url, r.sent_idx, r.pos): r.tag
-           for r in propagate_labels(df).collect()}
+        mentions.extend(_chunk_rows(url, sents))
+        for si, (toks, _) in enumerate(sents):
+            tokens.extend((url, si, p, tok) for p, tok in enumerate(toks))
+    # the corpus must exercise the type switch (B-X I-Y: two chunks, the
+    # first a voting single) and actually propagate something
+    assert any(a.startswith("B-") and b.startswith("I-") and a[2:] != b[2:]
+               for _, sents in docs for _, tags in sents
+               for a, b in zip(tags, tags[1:]))
+    m = spark.createDataFrame(mentions, MENTIONS_SCHEMA)
+    t = spark.createDataFrame(
+        tokens, "url string, sent_idx int, pos int, token string")
+    got = {(r.url, r.sent_idx, r.tag_type, r.tok_start, r.tok_end)
+           for r in propagate_mentions(m, t).collect()}
+    want = set()
     for url, sents in docs:
-        toks = [t for t, _ in sents]
-        tags = [g for _, g in sents]
-        want = apply_consistency(toks, tags)
-        for si, w in enumerate(want):
-            for p, tag in enumerate(w):
-                assert got[(url, si, p)] == tag, (url, si, p)
-    # and with min_votes=2
-    got2 = {(r.url, r.sent_idx, r.pos): r.tag
-            for r in propagate_labels(df, min_votes=2).collect()}
-    for url, sents in docs:
-        want = apply_consistency([t for t, _ in sents],
-                                 [g for _, g in sents], min_votes=2)
-        for si, w in enumerate(want):
-            for p, tag in enumerate(w):
-                assert got2[(url, si, p)] == tag
-
-
-def test_suppress_punct_mentions_spark(spark):
-    rows = [("u", 0, 0, 1, "=", "=", "Code_Block"),
-            ("u", 0, 1, 3, "[ ]", "[ ]", "Code_Block"),
-            ("u", 0, 4, 5, "x=1", "x=1", "Code_Block"),
-            ("u", 0, 6, 7, "=", "=", "Variable")]
-    df = spark.createDataFrame(rows, "url string, sent_idx int, tok_start int,"
-                               " tok_end int, surface string, surface_norm"
-                               " string, tag_type string")
-    kept = sorted((r.surface, r.tag_type)
-                  for r in suppress_punct_mentions(df).collect())
-    assert kept == [("=", "Variable"), ("x=1", "Code_Block")]
+        new = doc_postpass([tk for tk, _ in sents], [tg for _, tg in sents])
+        for si, tags in enumerate(new):
+            want.update((url, si, typ, a, b)
+                        for typ, a, b in extract_chunks(tags))
+    assert len(want) > len(mentions)
+    assert got == want
 
 
 def test_doc_postpass_order():
-    # suppression (opt-in) runs BEFORE voting: a punct Code_Block single
-    # must not vote and then propagate
+    # a punct Code_Block single survives verbatim and, failing the shape
+    # gate, does not propagate either
     toks = [["=", "a"], ["=", "b"]]
     tags = [["B-Code_Block", "O"], ["O", "O"]]
-    out = doc_postpass(toks, tags, punct_suppress=True)
-    assert out == [["O", "O"], ["O", "O"]]
-    # default ships suppression OFF (dev-gated rejection, see docstring):
-    # the mention survives and, being punct, fails the shape gate -> no
-    # propagation either
-    out2 = doc_postpass(toks, tags)
-    assert out2 == [["B-Code_Block", "O"], ["O", "O"]]
+    assert doc_postpass(toks, tags) == [["B-Code_Block", "O"], ["O", "O"]]
 
 
-def test_ngram_propagation_opt_in():
-    # r5c option (ships OFF — exact dev no-op, see BENCH/BASELINE.md):
-    # whole-tuple bigram votes propagate onto fully-O exact matches
-    toks = [["Visual", "Studio", "rocks"],
-            ["get", "Visual", "Studio", "now"],
-            ["Visual", "basic"]]
-    tags = [["B-Application", "I-Application", "O"],
-            ["O", "O", "O", "O"],
-            ["O", "O"]]
-    out = apply_consistency(toks, tags, max_ngram=2)
-    assert out[1] == ["O", "B-Application", "I-Application", "O"]
-    assert out[2] == ["O", "O"]  # sub-span never matches
-    # default (max_ngram=1) leaves everything untouched
-    assert apply_consistency(toks, tags) == tags
-    # a partially-claimed span does not propagate
-    tags2 = [["B-Application", "I-Application", "O"],
-             ["O", "B-Library", "O", "O"], ["O", "O"]]
-    out2 = apply_consistency(toks, tags2, max_ngram=2)
-    assert out2[1] == ["O", "B-Library", "O", "O"]
+def test_driver_oracle_strict(spark):
+    from tests.oracle_harness import run_all
+    res = run_all(spark, SF, only=["doc_consistency"], strict=True)
+    assert res["doc_consistency"] == [], res["doc_consistency"]

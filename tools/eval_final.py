@@ -14,11 +14,33 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stackoverflowner_spark.kernel.conlleval import evaluate_sentences  # noqa: E402
 from stackoverflowner_spark.kernel.docconsist import doc_postpass  # noqa: E402
+from stackoverflowner_spark.kernel.goldload import (document_keys,  # noqa: E402
+                                                    parse_gold_lines)
 from stackoverflowner_spark.operators.tagger import default_tagger  # noqa: E402
-from tools.tune_consistency import group_docs, tag_split  # noqa: E402
 
 SO = "/root/reference/resources/annotated_ner_data/StackOverflow/"
 GH = "/root/reference/resources/annotated_ner_data/GitHub/GH_test_set.txt"
+
+
+def tag_split(tagger, gold_path: str):
+    """Deployment-channel predictions + gold + doc grouping for a split."""
+    raw = open(gold_path).read().splitlines()
+    sents = parse_gold_lines(raw)
+    keys = document_keys(raw)
+    assert len(keys) == len(sents), (len(keys), len(sents))
+    golds = [[t.tag for t in s] for s in sents]
+    toks = [[t.word for t in s] for s in sents]
+    inputs = [tagger._model_inputs([t.word for t in s],
+                                   [t.md_label for t in s]) for s in sents]
+    preds = tagger.model.tag_sentences(inputs)
+    return toks, golds, preds, keys
+
+
+def group_docs(keys):
+    docs = {}
+    for i, k in enumerate(keys):
+        docs.setdefault(k, []).append(i)
+    return list(docs.values())
 
 
 def eval_with_postpass(tagger, gold_path):

@@ -166,7 +166,7 @@ def main() -> None:
         f.write(open(gold).read())
         f.writelines(placeholder_aug_lines(parsed))
         # @-handle User_Name augmentation, dev-gated at n_aug=100
-        # (tools/tune_handles.py: overall dev F1 +0.25 alone, +0.60
+        # (BENCH/BASELINE.md r5b: overall dev F1 +0.25 alone, +0.60
         # combined with the doc-consistency pass; n_aug=300 regressed
         # -0.66 and was rejected)
         f.writelines(handle_aug_lines(parsed, n_aug=100))
