@@ -85,17 +85,23 @@ def doc_postpass(sent_tokens: Sequence[Sequence[str]],
     Returns new tag rows (inputs are not mutated). Only positions currently
     O are touched, each becoming a single-token ``B-<type>`` chunk, so every
     existing chunk survives verbatim (dev: +0.34 F1 / +0.61 recall with a
-    train-only model).
+    train-only model). A stray ``I-X`` (an ``I-`` after O, which conlleval
+    already reads as a chunk start) is first rewritten to ``B-X``, so a
+    propagated O before it never grows it into a 2-token chunk.
     """
     labels = majority_labels(collect_votes(sent_tokens, sent_tags))
     out: List[List[str]] = []
     for tokens, tags in zip(sent_tokens, sent_tags):
         new = list(tags)
         if labels:
-            for i, (tok, tag) in enumerate(zip(tokens, new)):
+            prev = "O"
+            for i, (tok, tag) in enumerate(zip(tokens, tags)):
                 if tag == "O":
                     typ = labels.get(tok)
                     if typ is not None:
                         new[i] = "B-" + typ
+                elif prev == "O" and tag.startswith("I-"):
+                    new[i] = "B-" + tag[2:]
+                prev = tag
         out.append(new)
     return out

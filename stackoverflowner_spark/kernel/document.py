@@ -9,6 +9,7 @@ label consistency, chunk. ``extract_stage``, ``pages_to_mentions_fused``
 
 from __future__ import annotations
 
+from hashlib import blake2b
 from itertools import groupby
 from operator import itemgetter
 from typing import Dict, Iterator, List, Sequence, Tuple
@@ -17,6 +18,7 @@ from .bio import sentence_token_tags
 from .conlleval import extract_chunks
 from .docconsist import doc_postpass
 from .htmltext import ExtractionError, extract_text
+from .memo import FifoMemo
 from .sentencize import Standoff, sentencize
 from .sotok import TokenizerGuardError
 
@@ -73,32 +75,64 @@ def mention_rows(key: tuple, tokens: Sequence[str], tags: Sequence[str]
         yield key + (a, b, surface, surface.lower(), typ)
 
 
+_PAGE_MEMO = FifoMemo(8_192)
+"""Per-worker memo of each capture body's pre-tag state: a recrawl row
+whose body this worker already read skips extract, sentencize and
+tokenize+BIO. Keyed ``(url, body kind, blake2b-128 of the body)`` — the url
+because ``sentencize`` takes the doc id from it. Tags are not memoized here:
+they depend on the tagger, and the tagger's own memo serves repeats."""
+
+
+def _body_key(url: str, html, text):
+    """The memo key of the body ``read_page`` uses; None for a null row."""
+    if html is not None:
+        return url, "html", blake2b(html, digest_size=16).digest()
+    if text is not None:
+        return url, "text", blake2b(text.encode("utf-8", "surrogatepass"),
+                                    digest_size=16).digest()
+    return None
+
+
+def _page_state(url: str, html, text) -> Tuple[str, bool, tuple]:
+    """One page row -> ``(outcome, truncated, sentences)``: the ``COUNT_KEYS``
+    outcome it lands in, its cap flag, and ``(sent_idx, tokens, md_tags)``
+    tuples (empty unless the outcome is ``ok``)."""
+    try:
+        final, anns, truncated = read_page(url, html, text)
+    except PageError as e:
+        return e.reason, e.truncated, ()
+    try:
+        per_sent = sentence_token_tags(final, anns)
+    except TokenizerGuardError:  # the reference skips the file
+        return "tokenizer_guard", truncated, ()
+    return "ok", truncated, tuple((i, tuple(toks), tuple(mds))
+                                  for i, toks, mds in per_sent)
+
+
 def page_batch_mentions(urls: Sequence[str], htmls: Sequence, texts: Sequence,
                         tagger, doc_consistency: bool
                         ) -> Tuple[List[tuple], Dict[str, int]]:
     """One batch of pages -> ``(rows, counts)``: ``mention_rows`` keyed by
     ``(page position, sent_idx)``, and the ``COUNT_KEYS`` counters.
 
-    Each phase runs batch-wide: extract + sentencize every page, ONE
-    ``tag_sentences`` call (a batched decode amortizes across the batch),
-    the opt-in doc-consistency pass per page, then chunking."""
+    Each phase runs batch-wide: every page's pre-tag state (``_page_state``,
+    served from the worker's ``_PAGE_MEMO`` when this worker already read
+    the same body under the same url; a hit counts exactly as a miss
+    would), ONE ``tag_sentences`` call (a batched decode amortizes across
+    the batch), the opt-in doc-consistency pass per page, then chunking."""
     counts = dict.fromkeys(COUNT_KEYS, 0)
     sents = []  # (page_pos, url, sent_idx, tokens, md_tags)
     for pos, (url, html, text) in enumerate(zip(urls, htmls, texts)):
+        key = _body_key(url, html, text)
+        state = None if key is None else _PAGE_MEMO.get(key)
+        if state is None:
+            state = _page_state(url, html, text)
+            if key is not None:
+                _PAGE_MEMO.put(key, state)
+        outcome, truncated, per_sent = state
         counts["pages"] += 1
-        try:
-            final, anns, truncated = read_page(url, html, text)
-        except PageError as e:
-            counts[e.reason] += 1
-            counts["truncated"] += e.truncated
-            continue
+        counts[outcome] += 1
         counts["truncated"] += truncated
-        try:
-            per_sent = sentence_token_tags(final, anns)
-        except TokenizerGuardError:  # the reference skips the file
-            counts["tokenizer_guard"] += 1
-            continue
-        counts["ok"] += 1
         sents.extend((pos, url, i, toks, mds) for i, toks, mds in per_sent)
 
     tags = tagger.tag_sentences([(s[3], s[4]) for s in sents])

@@ -12,10 +12,10 @@ are not in this sandbox; the plug point is ``ModelTagger``).
 from __future__ import annotations
 
 import functools
-import itertools
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from ..kernel.ctc import is_number_token, is_url_token
+from ..kernel.memo import FifoMemo
 from ..sources.dictionary import gazetteer_map
 
 _SENTINEL_TYPES = {"Code_Block", "Output_Block", "Keyboard_IP"}
@@ -181,15 +181,17 @@ class PerceptronTagger(Tagger):
         sentences (~25% of the synthetic corpus, more on real crawls), and
         the tagger is a pure function of (tokens, md_tags) — repeats skip
         the seg/aux channels, the emission lookups and the Viterbi lattice
-        entirely. Size-capped (oldest entries evicted first), never
-        pickled. The memo lives on the tagger instance, and the kernels
-        ship the tagger as a Spark broadcast (document_kernel
+        entirely. ``_sent_cache`` is a ``FifoMemo`` (kernel/memo.py) keyed
+        ``(tuple(tokens), tuple(md_tags))``, capped at ``_SENT_CACHE_MAX``
+        entries, never pickled. It lives on the tagger instance, and the
+        kernels ship the tagger as a Spark broadcast (document_kernel
         ``_tagger_broadcast``), which each reused Python worker unpickles
         once and keeps across tasks and jobs — so the memo is per worker
         process, not per task."""
         cache = self.__dict__.get("_sent_cache")
         if cache is None:
-            cache = self.__dict__["_sent_cache"] = {}
+            cache = self.__dict__["_sent_cache"] = FifoMemo(
+                self._SENT_CACHE_MAX)
         out: List[Optional[List[str]]] = [None] * len(sentences)
         pending: Dict[tuple, List[int]] = {}
         for k, (t, m) in enumerate(sentences):
@@ -204,16 +206,8 @@ class PerceptronTagger(Tagger):
             tagged = self.model.tag_sentences(
                 [self._model_inputs(*sentences[ks[0]])
                  for ks in pending.values()])
-            # evict only as many oldest entries as the insert overshoots the
-            # cap (dict preserves insertion order) — a wholesale clear would
-            # discard every accumulated hit and let the cache overshoot by
-            # the batch's distinct-sentence count
-            overflow = len(cache) + len(pending) - self._SENT_CACHE_MAX
-            if overflow > 0:
-                for old in list(itertools.islice(iter(cache), overflow)):
-                    del cache[old]
             for (key, ks), tags in zip(pending.items(), tagged):
-                cache[key] = tags
+                cache.put(key, tags)
                 for k in ks:
                     out[k] = list(tags)
         return out  # type: ignore[return-value]

@@ -12,6 +12,11 @@ utils_ctc/prediction_ctc.py:36-43).
 ``link_score`` is the cosine a mention gets when it links to the row. The
 linker joins on ``surface_norm == alias_norm``, so that cosine depends on the
 row alone and is computed here, once per alias, by ``alias_link_score``.
+
+``dictionary_df`` is a driver-local relation (a pandas frame converted over
+Arrow plans as a ``LocalTableScan``), so the broadcast side of the link join
+is built on the JVM and no op starts a Python job to re-read the constant
+table.
 """
 
 from __future__ import annotations
@@ -111,6 +116,10 @@ def build_dictionary_rows(extra_entities: List[Tuple[str, str]] | None = None
 
 
 def dictionary_df(spark, extra_entities: List[Tuple[str, str]] | None = None):
+    """The dictionary table; a ``LocalTableScan`` in every plan (gated in
+    tests/test_plan_gates.py — PySpark silently falls back to a Python RDD
+    when the Arrow conversion fails)."""
+    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -122,7 +131,8 @@ def dictionary_df(spark, extra_entities: List[Tuple[str, str]] | None = None):
         T.StructField("freq_rank", T.IntegerType()),
         T.StructField("link_score", T.DoubleType()),
     ])
-    return spark.createDataFrame(build_dictionary_rows(extra_entities), schema)
+    return spark.createDataFrame(
+        pd.DataFrame(build_dictionary_rows(extra_entities)), schema)
 
 
 def gazetteer_map() -> dict:

@@ -4,13 +4,15 @@ kernel/docconsist.py is the in-fused-path authority; operators/
 consistency.py ``propagate_mentions`` is its Spark twin. This gates (a) the
 kernel's vote/majority/shape/tie rules on worked examples, (b) kernel ==
 twin equality, read as chunk sets, on a generated multi-document corpus
-with type-switching ``I-`` tags, (c) the strict driver oracle for the
-``doc_consistency`` entry.
+with type-switching ``I-`` tags and a stray ``I-`` after a propagated O,
+(c) the strict driver oracle for the ``doc_consistency`` entry, (d) that
+the pass only adds propagated single-token chunks (a Hypothesis property).
 """
 
 import random
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from stackoverflowner_spark.kernel.conlleval import extract_chunks
 from stackoverflowner_spark.kernel.docconsist import (
@@ -81,6 +83,12 @@ def test_existing_chunks_never_touched():
     assert out[2] == ["B-Application"]
 
 
+# a propagated O before a stray I-X (an I- after O) must not merge with it:
+# both paths give the single chunks (0,1) and (1,2) in sentence 1
+STRAY_I_SPECIMEN = [(["Docker", "x"], ["B-Application", "O"]),
+                    (["Docker", "Docker"], ["O", "I-Application"])]
+
+
 def _synth_corpus(n_docs=40, seed=20260818):
     """Deterministic multi-doc corpus with entity mentions, ties, case
     variants, punctuation, I- continuations and type-switching I- tags
@@ -118,6 +126,7 @@ def _synth_corpus(n_docs=40, seed=20260818):
                         [t for t in types if t != tags[i - 1][2:]])
             sents.append((toks, tags))
         docs.append((f"doc://{d}", sents))
+    docs.append(("doc://stray", STRAY_I_SPECIMEN))
     return docs
 
 
@@ -153,6 +162,30 @@ def test_spark_matches_kernel_on_synth_corpus(spark):
                         for typ, a, b in extract_chunks(tags))
     assert len(want) > len(mentions)
     assert got == want
+    assert {(si, a, b) for u, si, _, a, b in got if u == "doc://stray"} \
+        == {(0, 0, 1), (1, 0, 1), (1, 1, 2)}
+
+
+_tag = st.sampled_from(["O", "O", "O", "B-Application", "I-Application",
+                        "B-Library", "I-Library"])
+_sentence = st.lists(st.tuples(st.sampled_from(["Docker", "Redis", "x"]),
+                               _tag), min_size=1, max_size=6)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_sentence, min_size=1, max_size=4))
+def test_postpass_adds_only_propagated_singletons(doc):
+    """Chunks after the pass = chunks before it + one single-token chunk
+    per O position whose token has an untied vote (stray and
+    type-switching I- tags, ties and multi-sentence documents included)."""
+    toks = [[t for t, _ in s] for s in doc]
+    tags = [[g for _, g in s] for s in doc]
+    labels = majority_labels(collect_votes(toks, tags))
+    for si, new in enumerate(doc_postpass(toks, tags)):
+        want = set(extract_chunks(tags[si])) | {
+            (labels[t], i, i + 1) for i, (t, g) in enumerate(doc[si])
+            if g == "O" and t in labels}
+        assert set(extract_chunks(new)) == want
 
 
 def test_doc_postpass_order():

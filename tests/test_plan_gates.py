@@ -10,6 +10,9 @@ silently diverge from the executed one again:
   corpus-sized Arrow crossing;
 * zero ArrowEvalPython anywhere — the link score is a dictionary column,
   so no Python runs after the kernel or on the dictionary side;
+* no ``Scan ExistingRDD`` anywhere and the BroadcastExchange subtree ends
+  in ``LocalTableScan`` — the dictionary is a driver-local relation, not a
+  Python RDD that every op re-reads in a Python job;
 * exactly ONE corpus-spine shuffle Exchange (the evidence-triple
   distinct) — any other Exchange must be dictionary-sized (no
   MapInPandas in its subtree); mention linking is ONE
@@ -72,6 +75,19 @@ def test_flagship_no_python_downstream_of_kernel(flagship_plan):
     assert not arrow, (
         "ArrowEvalPython in the flagship plan — only the fused kernel may "
         "cross into Python; link scores are precomputed dictionary columns")
+
+
+def test_flagship_dictionary_is_driver_local(flagship_plan):
+    nodes = _nodes(flagship_plan)
+    rdd_scans = [n.nodeName() for n in nodes
+                 if "ExistingRDD" in n.nodeName()]
+    assert not rdd_scans, (
+        f"{rdd_scans} in the flagship plan — a Python-RDD dictionary starts "
+        "a Python job on every op")
+    bx = [n for n in nodes if n.nodeName() == "BroadcastExchange"]
+    assert len(bx) == 1
+    leaves = [n.nodeName() for n in _nodes(bx[0]) if n.children().size() == 0]
+    assert leaves == ["LocalTableScan"], leaves
 
 
 def test_flagship_single_corpus_shuffle(flagship_plan):

@@ -24,13 +24,16 @@ Checklist:
   Catalyst re-run the Python kernel once per arm; fixed in
   operators/triples.py).
 * exactly ONE `BroadcastHashJoin ... BuildRight` on `alias_norm` — zero
-  shuffle on the (skewed) mention stream; the dictionary side is a
-  `link_score >= 0.99` filter over the precomputed scores.
+  shuffle on the (skewed) mention stream; the dictionary side is the
+  `link_score >= 0.99` rows of the precomputed scores.
+* the dictionary is a driver-local relation, so its filter and projection
+  fold into one `LocalTableScan` at planning — no `Scan ExistingRDD`, and
+  no op starts a Python job to re-read it.
 * no `ArrowEvalPython` anywhere: the link score is a dictionary column
   computed when the dictionary is built, so no Python runs after the kernel.
 * the only `Exchange` belongs to the evidence-triple `distinct`
   (`HashAggregate` pair, partial map-side).
-* all four bullets are GATED in `tests/test_plan_gates.py` against
+* all of these are GATED in `tests/test_plan_gates.py` against
   `queryExecution().executedPlan()` at HEAD, so this dossier can no longer
   drift from the executed plan (the r4 staleness defect).
 """,
