@@ -40,6 +40,8 @@ from typing import Iterator, List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 END = "</w>"
 
 
@@ -98,7 +100,7 @@ def bpe_train(words: DataFrame, num_merges: int,
     early when no pair reaches ``min_pair_count``. Each iteration
     collects exactly ONE row (the argmax) — nothing corpus- or
     vocabulary-sized ever reaches the driver."""
-    seqs = _initial_seqs(words).localCheckpoint()
+    seqs = _initial_seqs(words).transform(checkpoint)
     merges: List[Tuple[str, str]] = []
     for _ in range(num_merges):
         top = (pair_counts(seqs)
@@ -110,7 +112,7 @@ def bpe_train(words: DataFrame, num_merges: int,
         merges.append((x, y))
         seqs = (seqs.select(apply_merge(F.col("seq"), x, y).alias("seq"),
                             F.col("cnt"))
-                .localCheckpoint())
+                .transform(checkpoint))
     return merges
 
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 
 def connected_components(edges: DataFrame, max_iter: int = 50,
                          checkpoint_every: int = 1) -> DataFrame:
@@ -34,13 +36,13 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     # DAG twice (labels' checkpoint rebuilt the pre-checkpoint sym), which
     # doubles the cost of an expensive edge producer (e.g. the curation
     # minhash/LSH/jaccard chain)
-    sym = sym.localCheckpoint()
+    sym = checkpoint(sym)
     labels = (
         sym.select(F.col("a").alias("node"))
         .union(sym.select(F.col("b").alias("node")))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
+        .transform(checkpoint)
     )
 
     for i in range(max_iter):
@@ -61,7 +63,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
                  .alias("old_label"))
         )
         if (i + 1) % checkpoint_every == 0:
-            merged = merged.localCheckpoint()
+            merged = checkpoint(merged)
         changed = (merged.filter(F.col("label") != F.col("old_label"))
                    .limit(1).count())
         labels = merged.select("node", "label")

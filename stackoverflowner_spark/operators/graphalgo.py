@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 
 def _undirected(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge list: (u, v) with u < v, self-loops
@@ -65,7 +67,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, tri): triangles incident to each node
     (nodes in no triangle are absent). Each triangle contributes one
     count to each of its three corners; sum(tri) == 3 * total."""
-    und = _undirected(edges).localCheckpoint()
+    und = _undirected(edges).transform(checkpoint)
 
     deg = (und.select(F.col("u").alias("n"))
            .unionAll(und.select(F.col("v").alias("n")))
@@ -106,10 +108,10 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
                                   F.col("src").alias("b")))
            .filter(F.col("a") != F.col("b"))
            .distinct()
-           .localCheckpoint())
+           .transform(checkpoint))
 
     dist = (seeds.select("node").distinct()
-            .withColumn("dist", F.lit(0)).localCheckpoint())
+            .withColumn("dist", F.lit(0)).transform(checkpoint))
     frontier = dist.select("node")
 
     # frontier-emptiness rides an observe() on the checkpoint job (no
@@ -124,7 +126,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
                .join(dist, "node", "left_anti")
                .withColumn("dist", F.lit(i))
                .observe(obs, F.count(F.lit(1)).alias("n"))
-               .localCheckpoint())
+               .transform(checkpoint))
         if int(obs.get["n"]) == 0:
             break
         dist = dist.unionByName(nxt)
@@ -140,18 +142,18 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     whose members survive a 2- or 3-core are mutually corroborated."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    und = _undirected(edges).localCheckpoint()
+    und = _undirected(edges).transform(checkpoint)
 
     for _ in range(max_iter):
         deg = (und.select(F.col("u").alias("node"))
                .unionAll(und.select(F.col("v").alias("node")))
                .groupBy("node").agg(F.count("*").alias("deg")))
-        keep = deg.filter(F.col("deg") >= k).select("node").localCheckpoint()
+        keep = checkpoint(deg.filter(F.col("deg") >= k).select("node"))
         pruned = (und.join(keep.withColumnRenamed("node", "u"), "u",
                            "left_semi")
                   .join(keep.withColumnRenamed("node", "v"), "v",
                         "left_semi")
-                  .select("u", "v").localCheckpoint())
+                  .select("u", "v").transform(checkpoint))
         if pruned.count() == und.count():
             break
         und = pruned
@@ -173,10 +175,10 @@ def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_cost: int,
                        F.col("w").cast("long").alias("w"))
           .filter((F.col("a") != F.col("b")) & (F.col("w") >= 1))
           .groupBy("a", "b").agg(F.min("w").alias("w"))
-          .localCheckpoint())
+          .transform(checkpoint))
 
     dist = (seeds.select("node").distinct()
-            .withColumn("cost", F.lit(0).cast("long")).localCheckpoint())
+            .withColumn("cost", F.lit(0).cast("long")).transform(checkpoint))
     frontier = dist
 
     # improvement-emptiness rides an observe() on the checkpoint job —
@@ -196,11 +198,11 @@ def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_cost: int,
                             | (F.col("cost") < F.col("_old")))
                     .select("node", "cost")
                     .observe(obs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint())
+                    .transform(checkpoint))
         if int(obs.get["n"]) == 0:
             break
         dist = (dist.join(improved.select("node"), "node", "left_anti")
-                .unionByName(improved).localCheckpoint())
+                .unionByName(improved).transform(checkpoint))
         frontier = improved
     return dist
 
@@ -234,12 +236,12 @@ def lpa_communities(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    und = _undirected(edges).localCheckpoint()
+    und = _undirected(edges).transform(checkpoint)
     both = (und.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
             .unionAll(und.select(F.col("v").alias("node"),
                                  F.col("u").alias("nbr"))))
     labels = (both.select("node").distinct()
-              .withColumn("community", F.col("node")).localCheckpoint())
+              .withColumn("community", F.col("node")).transform(checkpoint))
 
     win = Window.partitionBy("node").orderBy(F.col("cnt").desc(),
                                              F.col("community").asc())
@@ -248,7 +250,7 @@ def lpa_communities(edges: DataFrame, max_iter: int = 10) -> DataFrame:
                .groupBy("node", "community").agg(F.count("*").alias("cnt"))
                .withColumn("rn", F.row_number().over(win))
                .filter(F.col("rn") == 1)
-               .select("node", "community").localCheckpoint())
+               .select("node", "community").transform(checkpoint))
         changed = (nxt.join(labels, ["node", "community"], "left_anti")
                    .count())
         labels = nxt
@@ -312,7 +314,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
                                   F.col("src").alias("b")))
            .filter(F.col("a") != F.col("b"))
            .distinct()
-           .localCheckpoint())
+           .transform(checkpoint))
 
     nodes = sym.select(F.col("a").alias("node")).distinct()
     if sources is None:
@@ -331,7 +333,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
     lvl = (pivots.select(F.col("node").alias("s"),
                          F.col("node"),
                          F.lit(1).cast("long").alias("sigma"))
-           .localCheckpoint())
+           .transform(checkpoint))
     levels = [lvl]
     visited = lvl.select("s", "node")
     for _ in range(max_iter):
@@ -341,7 +343,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
                .groupBy("s", "node").agg(F.sum("sigma").alias("sigma"))
                .join(visited, ["s", "node"], "left_anti")
                .observe(obs, F.count(F.lit(1)).alias("n"))
-               .localCheckpoint())
+               .transform(checkpoint))
         if int(obs.get["n"]) == 0:
             break
         levels.append(nxt)
@@ -368,7 +370,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
                          (F.col("sigma").cast("double")
                           * F.coalesce(F.col("tsum"), F.lit(0.0)))
                          .alias("delta"))
-                 .localCheckpoint())
+                 .transform(checkpoint))
         if d > 0:  # delta(s, s) is excluded from bc by definition
             bc_parts.append(delta.select("node", "delta"))
 
@@ -431,7 +433,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
         und = (edges.select(u.alias("u"), v.alias("v"),
                             F.col(weight_col).cast("long").alias("w"))
                .groupBy("u", "v").agg(F.sum("w").alias("w")))
-    und = und.localCheckpoint()
+    und = checkpoint(und)
     m = (und.agg(F.sum("w")).collect()[0][0] or 0)
     lab = labels.select(F.col("node"), F.col("community"))
     if m == 0:
@@ -498,7 +500,7 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     if k < 2:
         raise ValueError("k must be >= 2 (the 2-truss is trivially the "
                          "whole graph)")
-    und = _undirected(edges).localCheckpoint()
+    und = _undirected(edges).transform(checkpoint)
     need = k - 2
     support = None
 
@@ -535,10 +537,10 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
                         F.coalesce(F.col("support"), F.lit(0))
                         .alias("support"))
                 .filter(F.col("support") >= need)
-                .localCheckpoint())
+                .transform(checkpoint))
         if kept.count() == und.count():
             return kept
-        und = kept.select("u", "v").localCheckpoint()
+        und = kept.select("u", "v").transform(checkpoint)
         if und.isEmpty():
             return kept
     return (und.join(support, ["u", "v"], "left")
@@ -560,7 +562,7 @@ def betweenness_batched(edges: DataFrame, k: int, batch: int = 32,
     the FULL pivot count k, not per batch."""
     if k < 1 or batch < 1:
         raise ValueError("k and batch must be >= 1")
-    pivots = sample_pivots(edges, k).localCheckpoint()
+    pivots = sample_pivots(edges, k).transform(checkpoint)
     rows = pivots.collect()  # k ids — pivot-sized, driver-bounded
     acc = None
     spark = edges.sparkSession
@@ -569,7 +571,7 @@ def betweenness_batched(edges: DataFrame, k: int, batch: int = 32,
         part = betweenness(edges, sources=chunk, max_iter=max_iter)
         acc = part if acc is None else (
             acc.unionByName(part).groupBy("node")
-            .agg(F.sum("bc").alias("bc")).localCheckpoint())
+            .agg(F.sum("bc").alias("bc")).transform(checkpoint))
     if acc is None:
         return edges.select(F.col("src").alias("node"),
                             F.lit(0.0).alias("bc")).limit(0)
@@ -621,7 +623,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
     """
     if weight_col is None:
         und = (_undirected(edges)
-               .withColumn("w", F.lit(1).cast("long")).localCheckpoint())
+               .withColumn("w", F.lit(1).cast("long")).transform(checkpoint))
         selfw = und.limit(0).select(F.col("u").alias("node"),
                                     F.col("w").alias("sw"))
     else:
@@ -635,10 +637,10 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
         allw = (edges.select(uu.alias("u"), vv.alias("v"),
                              F.col(weight_col).cast("long").alias("w"))
                 .groupBy("u", "v").agg(F.sum("w").alias("w")))
-        und = allw.filter(F.col("u") != F.col("v")).localCheckpoint()
+        und = allw.filter(F.col("u") != F.col("v")).transform(checkpoint)
         selfw = (allw.filter(F.col("u") == F.col("v"))
                  .select(F.col("u").alias("node"),
-                         F.col("w").alias("sw")).localCheckpoint())
+                         F.col("w").alias("sw")).transform(checkpoint))
     m = int(und.agg(F.sum("w")).collect()[0][0] or 0) \
         + int(selfw.agg(F.sum("sw")).collect()[0][0] or 0)
     if m == 0:
@@ -647,7 +649,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
                        "w")
             .unionAll(und.select(F.col("v").alias("node"),
                                  F.col("u").alias("nbr"), "w"))
-            .localCheckpoint())
+            .transform(checkpoint))
     pair_deg = both.groupBy("node").agg(F.sum("w").alias("pd"))
     deg = (pair_deg.join(selfw, "node", "full")
            .select("node", (F.coalesce(F.col("pd"), F.lit(0))
@@ -658,7 +660,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
     cur = (nodes.join(labels.select("node", "community"), "node", "left")
            .select("node", F.coalesce(F.col("community"), F.col("node"))
                    .alias("community"))
-           .localCheckpoint())
+           .transform(checkpoint))
 
     def _numerator(lab: DataFrame) -> int:
         lu = lab.select(F.col("node").alias("u"),
@@ -730,7 +732,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
                .select("node", F.coalesce(F.col("newc"),
                                           F.col("community"))
                        .alias("community"))
-               .localCheckpoint())
+               .transform(checkpoint))
         n2 = _numerator(nxt)
         if n2 <= best_n:  # synchronous overshoot: reject and stop
             break
@@ -794,11 +796,11 @@ def louvain(edges: DataFrame, max_levels: int = 3,
     """
     mapping = refine_communities(edges, lpa_communities(edges),
                                  max_rounds=max_rounds,
-                                 weight_col=weight_col).localCheckpoint()
+                                 weight_col=weight_col).transform(checkpoint)
     cur_edges, cur_w = edges, weight_col
     lab_on_cur = mapping  # partition of cur_edges' node set
     for _ in range(1, max_levels):
-        cg = contract_graph(cur_edges, lab_on_cur, cur_w).localCheckpoint()
+        cg = contract_graph(cur_edges, lab_on_cur, cur_w).transform(checkpoint)
         ident = (cg.select(F.col("src").alias("node"))
                  .unionAll(cg.select(F.col("dst").alias("node")))
                  .distinct()
@@ -816,6 +818,6 @@ def louvain(edges: DataFrame, max_levels: int = 3,
                    .select("node", F.coalesce(F.col("newc"),
                                               F.col("community"))
                            .alias("community"))
-                   .localCheckpoint())
+                   .transform(checkpoint))
         cur_edges, cur_w, lab_on_cur = cg, "w", lab2
     return mapping

@@ -64,6 +64,7 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
 from .sketch import RHO_MAX, estimate_constant, hll_sketch, rho_column
 
 
@@ -166,7 +167,7 @@ def _iterate_dense(edges: DataFrame, max_radius: int, b: int,
                      F.col("dst").cast("string").alias("dst"))
     if direction == "in":
         e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    e = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    e = checkpoint(e.filter(F.col("src") != F.col("dst")).distinct())
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node"))).distinct())
     h = F.md5(F.col("node").cast("string"))
@@ -189,7 +190,7 @@ def _iterate_dense(edges: DataFrame, max_radius: int, b: int,
             .alias("present"),
             F.sum(F.expr("aggregate(regs, 0L, (acc, x) -> acc + x)"))
             .alias("rhosum"))
-        ck = d.localCheckpoint()  # eager: fires the observation
+        ck = checkpoint(d)  # eager: fires the observation
         got = obs.get
         return ck, (got["present"], got["rhosum"])
 

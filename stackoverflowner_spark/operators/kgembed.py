@@ -54,6 +54,7 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stackoverflowner_spark.operators.lineage import checkpoint
 from stackoverflowner_spark.operators.prepare import partitioned_rank
 
 _DENOM = float(16 ** 15)  # 15 md5 hex chars -> uniform [0, 1)
@@ -175,24 +176,24 @@ def transe_train(triples: DataFrame, dim: int = 8, epochs: int = 5,
     per epoch (the deterministic-exact stand-in for the paper's
     minibatch SGD — same fixed points, reproducible under any cluster
     layout)."""
-    t = triples.select("subj", "pred", "obj").localCheckpoint()
+    t = triples.select("subj", "pred", "obj").transform(checkpoint)
     ents = (t.select(F.col("subj").alias("id"))
             .union(t.select(F.col("obj").alias("id")))
             .distinct())
     ent_idx = (partitioned_rank(ents, order_by=["id"], id_col="idx",
                                 partitions=partitions)
-               .select("id", "idx").localCheckpoint())
+               .select("id", "idx").transform(checkpoint))
     n_ent = ent_idx.count()
     rels = t.select(F.col("pred").alias("id")).distinct()
     ent = init_embeddings(ent_idx.select("id"), dim, seed, "ent")
     rel = _l2_normalize(init_embeddings(rels, dim, seed, "rel"))
-    rel = rel.localCheckpoint()
+    rel = checkpoint(rel)
     for epoch in range(epochs):
-        ent = _l2_normalize(ent).localCheckpoint()
+        ent = _l2_normalize(ent).transform(checkpoint)
         grads = transe_grad_fp(t, ent, rel, ent_idx, n_ent, margin,
-                               seed, epoch).localCheckpoint()
-        ent = _apply(ent, grads, "e", lr).localCheckpoint()
-        rel = _apply(rel, grads, "r", lr).localCheckpoint()
+                               seed, epoch).transform(checkpoint)
+        ent = _apply(ent, grads, "e", lr).transform(checkpoint)
+        rel = _apply(rel, grads, "r", lr).transform(checkpoint)
     return ent, rel
 
 
@@ -230,7 +231,7 @@ def transe_eval(test: DataFrame, train: DataFrame, ent: DataFrame,
         lambda a, x: a + x * x)
     truth = (q.join(tv, F.col("obj") == F.col("_t")).drop("_t")
              .withColumn("dtrue", dist_of(F.col("tv"))).drop("tv")
-             .localCheckpoint())
+             .transform(checkpoint))
     known = (train.select("subj", "pred", "obj")
              .union(test.select("subj", "pred", "obj")).distinct())
     cands = (truth.crossJoin(tv)

@@ -40,6 +40,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 _TERM_COLS = ("subj", "pred", "obj")
 
 # bounded path quantifier suffix: pred{lo,hi}
@@ -872,14 +874,14 @@ def property_path_range(triples: DataFrame, pred: str,
                          "unbounded reach")
     edges = (triples.filter(F.col("pred") == pred)
              .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-             .distinct().localCheckpoint())
+             .distinct().transform(checkpoint))
     e2 = edges.select(F.col("src").alias("__m"), F.col("dst").alias("__d"))
     cur = edges
     acc = cur if lo <= 1 else None
     for k in range(2, hi + 1):
         cur = (cur.join(e2, cur["dst"] == e2["__m"])
                .select(F.col("src"), F.col("__d").alias("dst"))
-               .distinct().localCheckpoint())
+               .distinct().transform(checkpoint))
         if cur.isEmpty():
             break
         if k >= lo:

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 
 def pagerank(edges: DataFrame, iterations: int = 20, damping: float = 0.85,
              partitions: int | None = None) -> DataFrame:
@@ -52,11 +54,11 @@ def pagerank(edges: DataFrame, iterations: int = 20, damping: float = 0.85,
          .repartition(p, "src").persist())
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint())
+             .distinct().transform(checkpoint))
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).transform(checkpoint)
     for _ in range(iterations):
         # out-degree rides the (src-partitioned) edge side so the frontier
         # join stays the iteration's single shuffle of the frontier
@@ -74,7 +76,7 @@ def pagerank(edges: DataFrame, iterations: int = 20, damping: float = 0.85,
                          (F.lit(base)
                           + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
                           ).alias("rank"))
-                 .localCheckpoint())
+                 .transform(checkpoint))
     e.unpersist()
     return ranks
 
@@ -100,11 +102,11 @@ def pagerank_weighted(edges: DataFrame, iterations: int = 20,
          .repartition(p, "src").persist())
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint())
+             .distinct().transform(checkpoint))
     n = nodes.count()
     wdeg = e.groupBy("src").agg(F.sum("_w").alias("_wd"))
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).transform(checkpoint)
     for _ in range(iterations):
         contribs = (e.join(wdeg, "src")
                     .join(ranks, F.col("src") == F.col("node"))
@@ -120,7 +122,7 @@ def pagerank_weighted(edges: DataFrame, iterations: int = 20,
                           + F.lit(damping) * F.coalesce("contrib",
                                                         F.lit(0.0))
                           ).alias("rank"))
-                 .localCheckpoint())
+                 .transform(checkpoint))
     e.unpersist()
     return ranks
 
@@ -142,8 +144,8 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node")))
              .union(seeds.select("node"))
-             .distinct().localCheckpoint())
-    s = seeds.select("node").distinct().localCheckpoint()
+             .distinct().transform(checkpoint))
+    s = seeds.select("node").distinct().transform(checkpoint)
     ns = s.count()
     if ns == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
@@ -151,9 +153,9 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     # teleport vector: uniform over seeds, 0 elsewhere
     tele = (nodes.join(s.withColumn("_t", F.lit(1.0 / ns)), "node", "left")
             .select("node", F.coalesce("_t", F.lit(0.0)).alias("t"))
-            .localCheckpoint())
+            .transform(checkpoint))
 
-    ranks = tele.select("node", F.col("t").alias("rank")).localCheckpoint()
+    ranks = tele.select("node", F.col("t").alias("rank")).transform(checkpoint)
     for _ in range(iterations):
         contribs = (e.join(deg, "src")
                     .join(ranks, F.col("src") == F.col("node"))
@@ -169,7 +171,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                           + F.lit(damping) * F.coalesce("contrib",
                                                         F.lit(0.0))
                           ).alias("rank"))
-                 .localCheckpoint())
+                 .transform(checkpoint))
     e.unpersist()
     return ranks
 
@@ -205,9 +207,9 @@ def hits(edges: DataFrame, iterations: int = 20,
     e_dst = e0.repartition(p, "dst").persist()
     nodes = (e_src.select(F.col("src").alias("node"))
              .union(e_src.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint())
-    h = nodes.withColumn("hub", F.lit(1.0)).localCheckpoint()
-    a = nodes.withColumn("authority", F.lit(0.0)).localCheckpoint()
+             .distinct().transform(checkpoint))
+    h = nodes.withColumn("hub", F.lit(1.0)).transform(checkpoint)
+    a = nodes.withColumn("authority", F.lit(0.0)).transform(checkpoint)
     for _ in range(iterations):
         a_raw = (e_src.join(h, e_src.src == h.node)
                  .groupBy("dst").agg(F.sum("hub").alias("raw")))
@@ -218,7 +220,7 @@ def hits(edges: DataFrame, iterations: int = 20,
         a = (nodes.join(a_raw, nodes.node == a_raw.dst, "left")
              .select("node", (F.coalesce("raw", F.lit(0.0)) / F.lit(na))
                      .alias("authority"))
-             .localCheckpoint())
+             .transform(checkpoint))
         h_raw = (e_dst.join(a, e_dst.dst == a.node)
                  .groupBy("src").agg(F.sum("authority").alias("raw")))
         nh = h_raw.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))))\
@@ -228,7 +230,7 @@ def hits(edges: DataFrame, iterations: int = 20,
         h = (nodes.join(h_raw, nodes.node == h_raw.src, "left")
              .select("node", (F.coalesce("raw", F.lit(0.0)) / F.lit(nh))
                      .alias("hub"))
-             .localCheckpoint())
+             .transform(checkpoint))
     e_src.unpersist()
     e_dst.unpersist()
     return h.join(a, "node").select("node", "hub", "authority")

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.kgembed import (_FP, _apply,
                                                       init_embeddings)
+from stackoverflowner_spark.operators.lineage import checkpoint
 from stackoverflowner_spark.operators.prepare import partitioned_rank
 
 
@@ -259,19 +260,19 @@ def sgns_train(walks: DataFrame, dim: int = 8, window: int = 2,
     both (id, vec array<double>). Full-batch deterministic SGD (the
     exact-reproducibility stand-in for word2vec's async SGD — same fixed
     points under any cluster layout, the kgembed discipline)."""
-    pairs = walk_pairs(walks, window).localCheckpoint()
+    pairs = walk_pairs(walks, window).transform(checkpoint)
     nodes = walks.select(F.col("node").alias("id")).distinct()
     node_idx = (partitioned_rank(nodes, order_by=["id"], id_col="idx",
                                  partitions=partitions)
-                .select("id", "idx").localCheckpoint())
+                .select("id", "idx").transform(checkpoint))
     n_nodes = node_idx.count()
     emb_in = init_embeddings(node_idx.select("id"), dim, seed, "in") \
-        .localCheckpoint()
+        .transform(checkpoint)
     emb_out = init_embeddings(node_idx.select("id"), dim, seed, "out") \
-        .localCheckpoint()
+        .transform(checkpoint)
     for epoch in range(epochs):
         grads = sgns_grad_fp(pairs, emb_in, emb_out, node_idx, n_nodes,
-                             k_neg, seed, epoch).localCheckpoint()
-        emb_in = _apply(emb_in, grads, "in", lr).localCheckpoint()
-        emb_out = _apply(emb_out, grads, "out", lr).localCheckpoint()
+                             k_neg, seed, epoch).transform(checkpoint)
+        emb_in = _apply(emb_in, grads, "in", lr).transform(checkpoint)
+        emb_out = _apply(emb_out, grads, "out", lr).transform(checkpoint)
     return emb_in, emb_out

@@ -50,6 +50,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lineage import checkpoint
+
 
 def _adjacency(edges: DataFrame) -> DataFrame:
     """(v, n, rnk, d): both directions of the canonical edge list with a
@@ -93,7 +95,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
     a single output bit (the strict DuckDB oracle gates this)."""
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    adj = _adjacency(edges).localCheckpoint()
+    adj = _adjacency(edges).transform(checkpoint)
     nodes = adj.select("v").distinct()
     if start_bucket is not None:
         nodes = nodes.filter(
@@ -105,7 +107,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
         .select(F.concat_ws("#", F.col("node"), F.col("i"))
                 .alias("walk_id"),
                 F.lit(0).cast("long").alias("step"), "node")
-        .localCheckpoint())
+        .transform(checkpoint))
     out = frontier
     for s in range(1, walk_len):
         frontier = (frontier.join(adj, frontier.node == adj.v)
@@ -113,7 +115,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
                     .select("walk_id", F.lit(s).cast("long").alias("step"),
                             F.col("n").alias("node")))
         if s % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint()
+            frontier = checkpoint(frontier)
         out = out.unionByName(frontier)
     return out
 
@@ -193,7 +195,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2,
     uniform draw so the walk backtracks instead of dying — the same
     escape hatch reference node2vec implementations take by never
     letting 1/p reach exact zero."""
-    adj = _adjacency(edges).localCheckpoint()
+    adj = _adjacency(edges).transform(checkpoint)
     nodes = adj.select("v").distinct()
     if start_bucket is not None:
         nodes = nodes.filter(
@@ -206,7 +208,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2,
                 .alias("walk_id"),
                 F.lit(0).cast("long").alias("step"),
                 F.col("node").alias("prev"), F.col("node"))
-        .localCheckpoint())
+        .transform(checkpoint))
     out = frontier.select("walk_id", "step", "node")
     prev_edge = adj.select(F.col("v").alias("_pv"), F.col("n").alias("_pn"),
                            F.lit(1).alias("_near"))
@@ -237,7 +239,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2,
                .select("walk_id", F.lit(s).cast("long").alias("step"),
                        F.col("node").alias("prev"),
                        F.col("n").alias("node"))
-               .localCheckpoint())
+               .transform(checkpoint))
         frontier = nxt
         out = out.unionByName(frontier.select("walk_id", "step", "node"))
     return out
@@ -326,7 +328,7 @@ def weighted_walks(edges: DataFrame, walks_per_node: int = 2,
     rw = Window.partitionBy("v").orderBy("n")
     adj = (und.withColumn("rnk", F.row_number().over(rw) - 1)
            .withColumn("w", F.col("w").cast("long"))
-           .localCheckpoint())
+           .transform(checkpoint))
     nodes = adj.select("v").distinct()
     if start_bucket is not None:
         nodes = nodes.filter(
@@ -338,7 +340,7 @@ def weighted_walks(edges: DataFrame, walks_per_node: int = 2,
         .select(F.concat_ws("#", F.col("node"), F.col("i"))
                 .alias("walk_id"),
                 F.lit(0).cast("long").alias("step"), "node")
-        .localCheckpoint())
+        .transform(checkpoint))
     out = frontier
     wwin = Window.partitionBy("walk_id")
     for s in range(1, walk_len):
@@ -355,7 +357,7 @@ def weighted_walks(edges: DataFrame, walks_per_node: int = 2,
                             & (F.col("draw") >= F.col("cum") - F.col("w")))
                     .select("walk_id", F.lit(s).cast("long").alias("step"),
                             F.col("n").alias("node"))
-                    .localCheckpoint())
+                    .transform(checkpoint))
         out = out.unionByName(frontier)
     return out
 
@@ -437,7 +439,7 @@ def merge_candidates(edges: DataFrame, min_jaccard_pct: int = 30,
     references it twice (adjacency build + connected probe) and without
     the lineage cut Spark re-executes the caller's full upstream DAG per
     reference — the operators/components.py r4 lesson."""
-    e = edges.select("src", "dst").localCheckpoint()
+    e = edges.select("src", "dst").transform(checkpoint)
     und = (e.select(F.col("src").alias("v"), F.col("dst").alias("n"))
            .unionAll(e.select(F.col("dst").alias("v"),
                               F.col("src").alias("n"))))
@@ -451,7 +453,7 @@ def merge_candidates(edges: DataFrame, min_jaccard_pct: int = 30,
                .agg(F.sort_array(F.collect_list("v")).alias("mem"),
                     F.any_value("ns").alias("ns"),  # identical within class
                     F.any_value("d").alias("deg"))
-               .localCheckpoint())
+               .transform(checkpoint))
     und_c = classes.select("cid", F.explode("ns").alias("x"))
     if max_degree is not None:
         degx = nbrs.select(F.col("v").alias("x"), F.col("d").alias("dx"))

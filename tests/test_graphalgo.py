@@ -232,22 +232,34 @@ def test_kcore_matches_brute_force(spark):
         assert _kcore_spark(spark, edges, k) == _brute_kcore(edges, k)
 
 
-def test_cli_analytics_flag(spark, tmp_path, capsys):
-    """run_pipeline --analytics emits pagerank/triangles/kcore parquet
-    over the produced KG's entity edges."""
+@pytest.fixture(scope="module")
+def cli_analytics(spark, tmp_path_factory):
+    """One ``run_pipeline --analytics`` run shared by the CLI tests:
+    (analytics dir, the stats line's ``analytics`` object)."""
+    import contextlib
+    import io
     import json
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
     from run_pipeline import main
 
-    out = str(tmp_path / "out")
-    ana = str(tmp_path / "ana")
-    assert main(["--synth", "200", "--mode", "fused", "--tagger",
-                 "gazetteer", "--out", out, "--analytics", ana]) == 0
-    lines = [json.loads(x) for x in
-             capsys.readouterr().out.strip().splitlines()
+    tmp = tmp_path_factory.mktemp("cli_analytics")
+    out, ana = str(tmp / "out"), str(tmp / "ana")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(["--synth", "200", "--mode", "fused", "--tagger",
+                   "gazetteer", "--out", out, "--analytics", ana])
+    assert rc == 0
+    lines = [json.loads(x) for x in buf.getvalue().strip().splitlines()
              if x.startswith("{")]
-    stats = next(l["analytics"] for l in lines if "analytics" in l)
+    return ana, next(l["analytics"] for l in lines if "analytics" in l)
+
+
+def test_cli_analytics_flag(spark, cli_analytics):
+    """run_pipeline --analytics emits pagerank/triangles/kcore parquet
+    over the produced KG's entity edges."""
+    ana, stats = cli_analytics
     assert stats["edges"] > 0 and stats["pagerank_rows"] > 0
     pr = spark.read.parquet(ana + "/pagerank")
     assert pr.count() == stats["pagerank_rows"]
@@ -317,22 +329,10 @@ def test_lpa_bipartite_oscillation_bounded(spark):
             _brute_lpa(edges, max_iter=it)
 
 
-def test_cli_analytics_emits_harmonic(spark, tmp_path, capsys):
+def test_cli_analytics_emits_harmonic(spark, cli_analytics):
     """--analytics also writes the HyperBall harmonic-centrality table
     (one row per entity-graph node, nonnegative scores)."""
-    import json
-    import sys
-    sys.path.insert(0, "/root/repo")
-    from run_pipeline import main
-
-    out = str(tmp_path / "out_h")
-    ana = str(tmp_path / "ana_h")
-    assert main(["--synth", "200", "--mode", "fused", "--tagger",
-                 "gazetteer", "--out", out, "--analytics", ana]) == 0
-    lines = [json.loads(x) for x in
-             capsys.readouterr().out.strip().splitlines()
-             if x.startswith("{")]
-    stats = next(l["analytics"] for l in lines if "analytics" in l)
+    ana, stats = cli_analytics
     h = spark.read.parquet(ana + "/harmonic")
     assert h.count() == stats["harmonic_rows"] > 0
     assert h.filter("harmonic < 0").count() == 0
