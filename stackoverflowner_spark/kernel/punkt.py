@@ -234,23 +234,27 @@ class SentenceSplitter:
     def _candidate_contexts(self, text: str):
         """Yield (match, context) pairs left-to-right, where context is the
         whitespace-delimited word containing the candidate end char plus the
-        lookahead material."""
+        lookahead material.
+
+        The word is what ``text[:m.start()].rsplit(None, 1)[-1]`` gives,
+        found by scanning back from the candidate; a candidate inside the
+        word before a later kept one is skipped. Each character is scanned
+        at most once, so the pass is linear in the text.
+        """
         kept = []
-        before_words = {}
-        before_start = None
+        word_start = None
         for m in reversed(list(_END_CONTEXT_RE.finditer(text))):
-            if kept and m.end() > before_start:
+            if kept and m.end() > word_start:
                 continue
-            prefix = text[: m.start()]
-            parts = prefix.rsplit(None, 1)
-            if len(parts) == 2:
-                before_start = len(parts[0])
-            else:
-                before_start = 0
-            before_words[m] = parts[-1] if parts else ""
-            kept.append(m)
-        for m in reversed(kept):
-            yield m, before_words[m] + m.group() + m.group("after_tok")
+            end = m.start()
+            while end and text[end - 1].isspace():
+                end -= 1
+            word_start = end
+            while word_start and not text[word_start - 1].isspace():
+                word_start -= 1
+            kept.append((m, text[word_start:end]))
+        for m, word in reversed(kept):
+            yield m, word + m.group() + m.group("after_tok")
 
     def _raw_slices(self, text: str) -> Iterator[slice]:
         last_break = 0

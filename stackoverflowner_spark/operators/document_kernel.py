@@ -33,6 +33,7 @@ from ..kernel.document import (  # noqa: F401  (MAX_HTML_BYTES: public here)
     MAX_HTML_BYTES, PageError, mention_rows, page_batch_mentions, read_page)
 from ..kernel.sentencize import Standoff
 from ..kernel.sotok import TokenizerGuardError
+from ..session import AppCache
 
 EXTRACTED_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -152,9 +153,8 @@ def tokens_long(sentences: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, tagger id) -> (weak tagger ref, Broadcast). Bounded;
-# stale-app entries pruned on miss, cleared wholesale past the cap.
-_TAGGER_BC: dict = {}
+# id(tagger) -> (weak tagger ref, Broadcast) per application
+_TAGGER_BC = AppCache(8)
 
 
 def _tagger_broadcast(spark, tagger):
@@ -167,30 +167,17 @@ def _tagger_broadcast(spark, tagger):
     4-10x on the whole flagship versus this path — broadcast values are
     unpickled once per worker process and cached across tasks AND jobs, so
     the tagger's executor-local caches survive with them. Weakly keyed per
-    (SparkContext, tagger) so repeated pipeline calls reuse one broadcast.
+    (application, tagger) so repeated pipeline calls reuse one broadcast;
+    the weakref check keeps a new tagger that got a dead one's id() from
+    being handed its broadcast.
     """
     import weakref
 
-    sc = spark.sparkContext
-    # keyed on applicationId, not id(sc): bench.py restarts sessions
-    # in-process, and a GC'd stopped context could hand its id() to a new
-    # one, returning a destroyed Broadcast (ADVICE r4). applicationId is
-    # unique per live context; stale-app entries are pruned eagerly below
-    # instead of lingering until a size-triggered clear.
-    app_id = sc.applicationId
-    key = (app_id, id(tagger))
-    hit = _TAGGER_BC.get(key)
-    if hit is not None:
-        ref, bc = hit
-        if ref() is tagger:
-            return bc
-    for k in [k for k, (r, _) in _TAGGER_BC.items()
-              if k[0] != app_id or r() is None]:
-        _TAGGER_BC.pop(k, None)
-    if len(_TAGGER_BC) > 16:
-        _TAGGER_BC.clear()
-    bc = sc.broadcast(tagger)
-    _TAGGER_BC[key] = (weakref.ref(tagger), bc)
+    hit = _TAGGER_BC.get(spark, id(tagger))
+    if hit is not None and hit[0]() is tagger:
+        return hit[1]
+    bc = spark.sparkContext.broadcast(tagger)
+    _TAGGER_BC.put(spark, id(tagger), (weakref.ref(tagger), bc))
     return bc
 
 

@@ -32,8 +32,9 @@ cross-engine — same discipline as operators/pii.py):
    query -> no ``?``.
 
 Scale shape at 100 TB: canonicalization and href extraction are pure
-column expressions inside whole-stage codegen — scan-bound, zero
-Python, zero shuffle. The only shuffles in the graph builds are the
+column expressions inside whole-stage codegen (an anchor's href and text
+are pulled by a ``transform`` lambda, which Spark interprets) — scan-bound,
+zero Python, zero shuffle. The only shuffles in the graph builds are the
 ``distinct`` on (src, dst) and the host-level groupBy — both keyed on
 the canonical strings, i.e. O(edges), never O(pages x links^2). The
 host graph is hosts^2-bounded (tiny next to the edge list) and is the
@@ -100,19 +101,40 @@ def canonical_parts(url) -> dict[str, Column]:
             "path": path, "query": query, "valid": valid}
 
 
+def _origin(p: dict[str, Column]) -> Column:
+    """``scheme://host[:port]`` of canonical parts."""
+    return F.concat(
+        p["scheme"], F.lit("://"), p["host"],
+        F.when(p["port"] == "", F.lit("")).otherwise(
+            F.concat(F.lit(":"), p["port"])))
+
+
+def _assembled(p: dict[str, Column]) -> Column:
+    """The canonical URL from its parts; NULL unless ``valid``."""
+    assembled = F.concat(
+        _origin(p), p["path"],
+        F.when(p["query"] == "", F.lit("")).otherwise(
+            F.concat(F.lit("?"), p["query"])))
+    return F.when(p["valid"], assembled).otherwise(F.lit(None))
+
+
 def canonicalize_url(url) -> Column:
     """Canonical form of a URL (NULL for non-http(s) / hostless input).
     Pure column expression; bitwise-identical to the DuckDB restatement
     in ``__spark_entry__.oracle_sql()['link_graph']``."""
-    p = canonical_parts(url)
-    assembled = F.concat(
-        p["scheme"], F.lit("://"), p["host"],
-        F.when(p["port"] == "", F.lit("")).otherwise(
-            F.concat(F.lit(":"), p["port"])),
-        p["path"],
-        F.when(p["query"] == "", F.lit("")).otherwise(
-            F.concat(F.lit("?"), p["query"])))
-    return F.when(p["valid"], assembled).otherwise(F.lit(None))
+    return _assembled(canonical_parts(url))
+
+
+def _staged(df: DataFrame, url, prefix: str) -> tuple[DataFrame, dict]:
+    """``df`` plus the canonical parts of ``url`` as columns named
+    ``prefix + part``, and those columns. Expressions built on staged
+    parts read each one as a column; built on ``canonical_parts`` of a
+    resolved href, which is itself built on the page URL's parts, the
+    ``CaseWhen`` trees nest into each other, and Catalyst spends tens of
+    seconds optimizing them even for a handful of rows."""
+    parts = canonical_parts(url)
+    return (df.select("*", *[c.alias(prefix + k) for k, c in parts.items()]),
+            {k: F.col(prefix + k) for k in parts})
 
 
 def host_of(url) -> Column:
@@ -139,16 +161,30 @@ def extract_hrefs(html) -> Column:
         F.regexp_extract_all(h, F.lit(r"href\s*=\s*'([^']*)'"), 1))
 
 
-def resolve_href(raw, base_url) -> Column:
-    """Resolve one raw href against a page URL and canonicalize it.
-    NULL for fragments, empty hrefs, and non-web schemes."""
-    r = F.trim(_col(raw))
+def _explode_links(pages: DataFrame, url_col: str, links: Column
+                   ) -> tuple[DataFrame, dict]:
+    """One row per generated link of each page with a valid URL:
+    ``src`` (the canonical page URL), the ``links`` generator's columns,
+    and the page URL's staged parts, which are also returned."""
+    pages, b = _staged(pages, url_col, "_b_")
+    return (pages.filter(b["valid"]).select(
+        _assembled(b).alias("src"), *b.values(), links), b)
+
+
+def _resolved(links: DataFrame, raw: str, b: dict, keep: list[str]
+              ) -> DataFrame:
+    """``keep`` plus ``dst``: the href column ``raw`` resolved against the
+    page whose canonical parts are ``b``, then canonicalized. Rows whose
+    href does not resolve (fragments, empty hrefs, non-web schemes,
+    invalid targets) are dropped.
+
+    ``dst`` comes out of a generator, ``explode(array_compact(array(x)))``,
+    which drops a NULL without a Filter. Catalyst would push a filter on
+    ``dst`` (this one, or the caller's, like ``link_graph``'s
+    ``src != dst``) below the projections and inline every stage into it."""
+    r = F.trim(F.col(raw))
     lr = F.lower(r)
-    b = canonical_parts(base_url)
-    origin = F.concat(
-        b["scheme"], F.lit("://"), b["host"],
-        F.when(b["port"] == "", F.lit("")).otherwise(
-            F.concat(F.lit(":"), b["port"])))
+    origin = _origin(b)
     # directory of the base path, with its trailing '/'
     base_dir = F.regexp_replace(b["path"], "[^/]*$", "")
     skip = (r == "") | r.startswith("#")
@@ -159,8 +195,10 @@ def resolve_href(raw, base_url) -> Column:
     ).when(r.startswith("//"), F.concat(b["scheme"], F.lit(":"), r)
     ).when(r.startswith("/"), F.concat(origin, r)
     ).otherwise(F.concat(origin, base_dir, r))
-    return F.when(skip | ~b["valid"], F.lit(None)).otherwise(
-        canonicalize_url(absolute))
+    df = links.filter(~skip).select(*keep, absolute.alias("_abs"))
+    df, a = _staged(df, "_abs", "_a_")
+    return df.select(*keep, F.explode(F.array_compact(F.array(
+        _assembled(a)))).alias("dst"))
 
 
 def page_links(pages: DataFrame, url_col: str = "url",
@@ -168,13 +206,9 @@ def page_links(pages: DataFrame, url_col: str = "url",
     """pages(url, html) -> one row per (page, outlink): (src, dst), both
     canonical, fragments/scripts/invalid links dropped. Pure columnar:
     regexp_extract_all + explode, no Python."""
-    return (pages
-            .select(canonicalize_url(url_col).alias("src"),
-                    F.explode(extract_hrefs(html_col)).alias("_raw"),
-                    F.col(url_col).alias("_base"))
-            .select("src", resolve_href(F.col("_raw"), F.col("_base"))
-                    .alias("dst"))
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
+    links, b = _explode_links(
+        pages, url_col, F.explode(extract_hrefs(html_col)).alias("_raw"))
+    return _resolved(links, "_raw", b, ["src"])
 
 
 def link_graph(edges: DataFrame, drop_self: bool = True) -> DataFrame:
@@ -199,26 +233,23 @@ def extract_anchors(pages: DataFrame, url_col: str = "url",
     whitespace-collapsed, trimmed. Pure columnar."""
     els = F.regexp_extract_all(_col(html_col),
                                F.lit(r"<a\s[^>]*>[^<]*</a>"), 0)
-    base = F.col(url_col)
-    df = (pages
-          .select(canonicalize_url(url_col).alias("src"),
-                  base.alias("_base"),
-                  F.explode(els).alias("_el"))
-          .select("src", "_base",
-                  F.coalesce(
-                      F.nullif(F.regexp_extract(
-                          "_el", r'href\s*=\s*"([^"]*)"', 1), F.lit("")),
-                      F.nullif(F.regexp_extract(
-                          "_el", r"href\s*=\s*'([^']*)'", 1), F.lit(""))
-                  ).alias("_href"),
-                  F.trim(F.regexp_replace(
-                      F.lower(F.regexp_extract("_el", r">([^<]*)</a>", 1)),
-                      r"\s+", " ")).alias("anchor")))
-    return (df.select("src",
-                      resolve_href(F.col("_href"), F.col("_base"))
-                      .alias("dst"), "anchor")
-            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                    & (F.col("anchor") != "")))
+
+    def href_and_anchor(el):
+        return F.struct(
+            F.coalesce(
+                F.nullif(F.regexp_extract(
+                    el, r'href\s*=\s*"([^"]*)"', 1), F.lit("")),
+                F.nullif(F.regexp_extract(
+                    el, r"href\s*=\s*'([^']*)'", 1), F.lit(""))
+            ).alias("_href"),
+            F.trim(F.regexp_replace(
+                F.lower(F.regexp_extract(el, r">([^<]*)</a>", 1)),
+                r"\s+", " ")).alias("anchor"))
+
+    links, b = _explode_links(
+        pages, url_col, F.inline(F.transform(els, href_and_anchor)))
+    return _resolved(links.filter(F.col("anchor") != ""), "_href", b,
+                     ["src", "anchor"]).select("src", "dst", "anchor")
 
 
 # anchors that carry no entity signal (the classic web-nav stoplist)

@@ -48,3 +48,32 @@ def get_spark(app_name: str = "stackoverflowner-spark",
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+class AppCache:
+    """Driver-side values that live as long as one SparkContext, such as
+    broadcasts and DataFrames.
+
+    Keyed on ``applicationId``, not ``id(sc)``: a session restarted
+    in-process can get a stopped context's id() and would be handed that
+    context's destroyed objects. A ``put`` (made after a miss) first drops
+    every other application's entries, then the oldest entry past
+    ``maxsize``.
+    """
+
+    def __init__(self, maxsize: int):
+        self.maxsize = maxsize
+        self._d: dict = {}
+
+    def get(self, spark: SparkSession, key):
+        return self._d.get((spark.sparkContext.applicationId, key))
+
+    def put(self, spark: SparkSession, key, value) -> None:
+        app_id = spark.sparkContext.applicationId
+        d = self._d
+        for k in [k for k in d if k[0] != app_id]:
+            del d[k]
+        d.pop((app_id, key), None)
+        if len(d) >= self.maxsize:
+            del d[next(iter(d))]
+        d[(app_id, key)] = value

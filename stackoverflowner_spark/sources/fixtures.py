@@ -25,6 +25,8 @@ import hashlib
 import os
 import shutil
 
+from ..session import AppCache
+
 _CACHE_ROOT = os.environ.get("SOKG_FIXTURE_CACHE", "/tmp/sokg_fixture_cache")
 # below this size a single task is the right plan anyway (dimension tables)
 _SMALL_BYTES = 1_500_000
@@ -76,26 +78,21 @@ def splittable_path(spark, path: str, fanout: bool = False) -> str:
     return out
 
 
-# (applicationId, path, fanout) -> DataFrame. A DataFrame is only a
+# (path, fanout) -> DataFrame per application. A DataFrame is only a
 # query plan — this caches the driver-side file listing + parquet footer
 # schema read each spark.read.parquet() repeats (~30-100 ms per call,
 # and queries touch several tables), NOT any data or results: execution
-# still scans the parquet files every time. Stale-app entries pruned on
-# miss (the document_kernel._TAGGER_BC discipline).
-_DF_CACHE: dict = {}
+# still scans the parquet files every time.
+_DF_CACHE = AppCache(256)
 
 
 def read_fixture(spark, sf_dir: str, name: str, fanout: bool = False):
     """Plain ``spark.read.parquet`` over a splittable path, with the
     per-session plan (file index + schema) memoized."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, f"{sf_dir}/{name}.parquet", fanout)
-    hit = _DF_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _DF_CACHE if k[0] != app_id]:
-        _DF_CACHE.pop(k, None)
-    df = spark.read.parquet(
-        splittable_path(spark, f"{sf_dir}/{name}.parquet", fanout=fanout))
-    _DF_CACHE[key] = df
+    key = (f"{sf_dir}/{name}.parquet", fanout)
+    df = _DF_CACHE.get(spark, key)
+    if df is None:
+        df = spark.read.parquet(
+            splittable_path(spark, f"{sf_dir}/{name}.parquet", fanout=fanout))
+        _DF_CACHE.put(spark, key, df)
     return df

@@ -101,3 +101,30 @@ def test_fanout_spreads_small_files(spark, tmp_path):
     plan = (df.filter(F.col("doc_id") < 10)._jdf.queryExecution()
             .executedPlan().toString())
     assert "Exchange" not in plan
+
+
+def test_app_cache_prunes_other_apps_and_caps():
+    """``session.AppCache``: entries live per applicationId, a put drops
+    other applications' entries, and the oldest goes past ``maxsize``."""
+    from types import SimpleNamespace
+
+    from stackoverflowner_spark.session import AppCache
+
+    def app(app_id):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(applicationId=app_id))
+
+    a, b = app("app-a"), app("app-b")
+    cache = AppCache(2)
+    cache.put(a, "x", 1)
+    cache.put(a, "y", 2)
+    assert (cache.get(a, "x"), cache.get(a, "y"), cache.get(b, "x")) == (
+        1, 2, None)
+    cache.put(a, "z", 3)  # past the cap: "x", the oldest, goes
+    assert (cache.get(a, "x"), cache.get(a, "y"), cache.get(a, "z")) == (
+        None, 2, 3)
+    cache.put(a, "y", 4)  # a re-put replaces, evicting nothing
+    assert (cache.get(a, "y"), cache.get(a, "z")) == (4, 3)
+    cache.put(b, "x", 5)  # a new application drops every entry of app-a
+    assert (cache.get(a, "y"), cache.get(a, "z"), cache.get(b, "x")) == (
+        None, None, 5)

@@ -12,8 +12,7 @@ from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.linkgraph import (
     anchor_dictionary, canonicalize_url, extract_anchors, extract_hrefs,
-    host_graph, host_of, incremental_link_graph, link_graph, page_links,
-    resolve_href)
+    host_graph, host_of, incremental_link_graph, link_graph, page_links)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"

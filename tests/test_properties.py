@@ -2,7 +2,8 @@
 
 from hypothesis import given, settings, strategies as st
 
-from stackoverflowner_spark.kernel.punkt import split_sentences
+from stackoverflowner_spark.kernel.punkt import (
+    _END_CONTEXT_RE, SentenceSplitter, split_sentences)
 from stackoverflowner_spark.kernel.offsets import map_tokens_to_offsets
 from stackoverflowner_spark.kernel.sotok import tokenize
 from stackoverflowner_spark.kernel.htmltext import ExtractionError, extract_text
@@ -31,6 +32,42 @@ def test_punkt_sentences_preserve_order(text):
         pos = idx
         spans.append(idx)
     assert spans == sorted(spans)
+
+
+class _RsplitSplitter(SentenceSplitter):
+    """The splitter with the original quadratic candidate pass: the word
+    before each candidate comes from ``rsplit`` on a copy of the prefix."""
+
+    def _candidate_contexts(self, text):
+        kept = []
+        before_words = {}
+        before_start = None
+        for m in reversed(list(_END_CONTEXT_RE.finditer(text))):
+            if kept and m.end() > before_start:
+                continue
+            parts = text[: m.start()].rsplit(None, 1)
+            before_start = len(parts[0]) if len(parts) == 2 else 0
+            before_words[m] = parts[-1] if parts else ""
+            kept.append(m)
+        for m in reversed(kept):
+            yield m, before_words[m] + m.group() + m.group("after_tok")
+
+
+# dense in sentence ends, quotes and whitespace of every kind Python's
+# str.split knows (NBSP, em space, ideographic space, NEL, \x1c-\x1f)
+punkt_strategy = st.text(
+    alphabet=st.sampled_from(list("aZ9 .?!\n\t\"')(,;-") + [
+        "\u00a0", "\u2003", "\u3000", "\x85", "\x1c", "\x1f", "\r", "\u00e9"]),
+    min_size=0, max_size=300)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.one_of(punkt_strategy, text_strategy))
+def test_punkt_linear_candidates_match_rsplit(text):
+    new, ref = SentenceSplitter(), _RsplitSplitter()
+    assert ([(m.span(), c) for m, c in new._candidate_contexts(text)]
+            == [(m.span(), c) for m, c in ref._candidate_contexts(text)])
+    assert new.span_tokenize(text) == ref.span_tokenize(text)
 
 
 @settings(max_examples=300, deadline=None)
