@@ -346,7 +346,25 @@ class StructuredPerceptron:
         d.pop("_static_cache", None)
         d.pop("_ctx", None)
         d.pop("_t32", None)  # float32 copy of trans: derived, rebuilt lazily
+        # w ships packed: (keys, one C-contiguous (F, L) float64 matrix).
+        # Spark pickles broadcasts at protocol 5, where every array becomes
+        # a memoryview plus a managedbuffer, both GC-tracked: 84k weight
+        # vectors would leave ~168k objects for every collection of the
+        # worker to walk, and unpickle ~4x slower than one matrix.
+        w = d["w"]
+        d["w"] = (list(w), np.stack(list(w.values())) if w
+                  else np.zeros((0, len(self.labels))))
         return d
+
+    def __setstate__(self, state):
+        """Packed state from ``__getstate__``, or the legacy one whose ``w``
+        is a dict (the shipped ``.pkl.gz`` artifacts). ``w`` is rebuilt as
+        row views of the matrix: same keys in the same order, same bits."""
+        state = dict(state)
+        if isinstance(state.get("w"), tuple):
+            keys, mat = state["w"]
+            state["w"] = dict(zip(keys, mat))
+        self.__dict__.update(state)
 
     def _static_vec(self, w: str) -> np.ndarray:
         """Summed emission weights of the word's context-free features

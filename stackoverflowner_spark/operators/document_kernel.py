@@ -75,12 +75,14 @@ def page_bodies(pages: DataFrame, lang_filter: str | None, *extra: str
                 ) -> DataFrame:
     """The kernel's input ``(url, *extra, html, text)``. text is nulled
     where html exists, so the Arrow crossing ships one body per row, not
-    two (rows commonly carry both; this cuts Python-side ingress ~40%)."""
+    two (rows commonly carry both; this cuts Python-side ingress ~40%).
+    Built from SQL strings, as link and triples are: each ``functions``/
+    ``Column`` call costs the driver several py4j round trips per op."""
     if lang_filter:
-        pages = pages.filter(F.col("lang") == lang_filter)
-    return pages.select(
-        "url", *extra, "html",
-        F.when(F.col("html").isNull(), F.col("text")).alias("text"))
+        lit = lang_filter.replace("\\", "\\\\").replace("'", "\\'")
+        pages = pages.filter(f"lang = '{lit}'")
+    return pages.selectExpr(
+        "url", *extra, "html", "CASE WHEN html IS NULL THEN text END AS text")
 
 
 def extract_stage(pages: DataFrame, lang_filter: str | None = "en") -> DataFrame:
@@ -156,6 +158,27 @@ def tokens_long(sentences: DataFrame) -> DataFrame:
 # id(tagger) -> (weak tagger ref, Broadcast) per application
 _TAGGER_BC = AppCache(8)
 
+_HEAP_FROZEN = False
+
+
+def _freeze_worker_heap() -> None:
+    """``gc.collect(); gc.freeze()`` once per Python worker process, right
+    after a kernel UDF's first ``bc.value``.
+
+    PySpark's daemon runs a full ``gc.collect()`` after every task
+    (``pyspark/daemon.py``), and an engine worker's heap is mostly
+    long-lived: modules, their functions and classes, the tagger. Frozen
+    objects move to the permanent generation, so that collection and the
+    kernel's own gen-2 passes walk only what was created since. Refcounting
+    still frees frozen objects; memo entries added later stay collectable.
+    """
+    global _HEAP_FROZEN
+    if not _HEAP_FROZEN:
+        import gc
+        gc.collect()
+        gc.freeze()
+        _HEAP_FROZEN = True
+
 
 def _tagger_broadcast(spark, tagger):
     """Ship the tagger as an explicit Broadcast instead of a task-closure
@@ -170,6 +193,14 @@ def _tagger_broadcast(spark, tagger):
     (application, tagger) so repeated pipeline calls reuse one broadcast;
     the weakref check keeps a new tagger that got a dead one's id() from
     being handed its broadcast.
+
+    Spark pickles the value at protocol 5. The structured model ships its
+    weights packed (``StructuredPerceptron.__getstate__``: feature keys plus
+    one float64 matrix, rebuilt as row views), so a worker's unpickle adds a
+    handful of GC-tracked objects instead of ~168k, and the UDFs then call
+    ``_freeze_worker_heap`` once per worker. A worker keeps the value only
+    while its tasks use this broadcast: a task without it makes Spark drop
+    it from the worker's registry.
     """
     import weakref
 
@@ -203,6 +234,7 @@ def pages_to_mentions_fused(pages: DataFrame, tagger,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = bc.value
+        _freeze_worker_heap()
         for pdf in batches:
             urls = pdf["url"].tolist()
             rows, _counts = page_batch_mentions(
@@ -253,6 +285,7 @@ def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tagger = bc.value
+        _freeze_worker_heap()
         for pdf in batches:
             sents = [(list(t), list(m))
                      for t, m in zip(pdf["tokens"], pdf["md_tags"])]

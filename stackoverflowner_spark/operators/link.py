@@ -37,15 +37,18 @@ MIN_LINK_SCORE = 0.99
 
 
 def _linkable(dictionary: DataFrame) -> DataFrame:
-    return (dictionary.filter(F.col("link_score") >= MIN_LINK_SCORE)
-            .select("alias_norm", "canonical_id", "entity_type", "link_score"))
+    return (dictionary.filter(f"link_score >= {MIN_LINK_SCORE!r}D")
+            .selectExpr("alias_norm", "canonical_id", "entity_type",
+                        "link_score"))
 
 
 def link_broadcast(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
-    dict_side = _linkable(dictionary)
+    """The join condition and projection are SQL strings: each
+    ``functions``/``Column`` call costs the driver several py4j round trips,
+    and the flagship builds this once per op."""
     return mentions.join(
-        F.broadcast(dict_side), mentions.surface_norm == dict_side.alias_norm,
-        "inner").select(*LINKED_COLS)
+        F.broadcast(_linkable(dictionary)), F.expr("surface_norm = alias_norm"),
+        "inner").selectExpr(*LINKED_COLS)
 
 
 def link_salted(mentions: DataFrame, dictionary: DataFrame,

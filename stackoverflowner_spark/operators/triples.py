@@ -18,41 +18,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def triples_from_linked(linked: DataFrame, components: DataFrame | None = None,
-                        n_buckets: int = 64) -> DataFrame:
-    subj = F.col("canonical_id")
-    if components is not None:
-        linked = linked.join(F.broadcast(components), "canonical_id", "left")
-        subj = F.coalesce(F.col("component"), F.col("canonical_id"))
-    base = linked.select(
-        subj.alias("subj"),
-        F.col("entity_type"),
-        F.col("surface_norm"),
-        F.col("url"),
-    )
+def triples_from_linked(linked: DataFrame, n_buckets: int = 64) -> DataFrame:
+    """Evidence-level triples: every row keeps its source url, deduplicated
+    on (subj, pred, obj, url). This keeps the stage idempotent per
+    url-bucket, which is what makes bucket-granular resume safe
+    (plans/pipeline.py); logical triples are ``distinct_triples`` below.
 
-    # Evidence-level triples: every row keeps its source url, deduplicated on
-    # (subj, pred, obj, url). This keeps the stage idempotent per url-bucket,
-    # which is what makes bucket-granular resume safe (plans/pipeline.py);
-    # logical triples are `distinct_triples` below.
-    #
-    # The three predicates are emitted via ONE explode, not a union of three
-    # projections: a union would make Catalyst re-execute the upstream
-    # Python kernel once per branch (no subplan CSE across union arms — seen
-    # live in PLANS.md §1 before this rewrite, a 3x kernel recompute).
-    triples = base.select(
-        F.explode(F.array(
-            F.struct(F.col("subj"), F.lit("instance_of").alias("pred"),
-                     F.col("entity_type").alias("obj"), F.col("url")),
-            F.struct(F.col("subj"), F.lit("mentioned_in").alias("pred"),
-                     F.col("url").alias("obj"), F.col("url")),
-            F.struct(F.col("surface_norm").alias("subj"),
-                     F.lit("alias_of").alias("pred"),
-                     F.col("subj").alias("obj"), F.col("url")),
-        )).alias("t")
-    ).select("t.subj", "t.pred", "t.obj", "t.url").distinct()
-    return triples.withColumn(
-        "part_hash", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int"))
+    The three predicates are emitted via ONE generator, not a union of
+    three projections: a union would make Catalyst re-execute the upstream
+    Python kernel once per branch (no subplan CSE across union arms — seen
+    live in PLANS.md §1 before this rewrite, a 3x kernel recompute).
+
+    The plan is built from SQL strings: each ``functions``/``Column`` call
+    is several py4j round trips on the driver, and this builder runs once
+    per op."""
+    arms = ", ".join(
+        f"named_struct('subj', {s}, 'pred', '{p}', 'obj', {o}, 'url', url)"
+        for s, p, o in (("canonical_id", "instance_of", "entity_type"),
+                        ("canonical_id", "mentioned_in", "url"),
+                        ("surface_norm", "alias_of", "canonical_id")))
+    return linked.selectExpr(f"inline(array({arms}))").distinct().selectExpr(
+        "subj", "pred", "obj", "url",
+        f"CAST(pmod(xxhash64(subj), {int(n_buckets)}) AS INT) AS part_hash")
 
 
 def distinct_triples(triples: DataFrame) -> DataFrame:

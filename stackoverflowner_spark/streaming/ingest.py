@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernel.document import page_batch_mentions
-from ..operators.document_kernel import (_tagger_broadcast, page_bodies,
+from ..operators.document_kernel import (_freeze_worker_heap,
+                                         _tagger_broadcast, page_bodies,
                                          pages_to_mentions_fused)
 from ..operators.link import link
 from ..operators.tagger import GazetteerTagger
@@ -58,6 +59,7 @@ def windowed_mention_counts(pages_stream: DataFrame, tagger=None,
 
     def run(batches):
         tagger = bc.value
+        _freeze_worker_heap()
         for pdf in batches:
             urls = pdf["url"].tolist()
             stamps = pdf["warc_ts"].tolist()

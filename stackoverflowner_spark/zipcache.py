@@ -15,11 +15,17 @@ and an archive that cannot be stat'ed, take the stdlib path, so a
 rewritten, replaced or deleted zip (``addPyFile`` included) behaves as
 before. The package ``__init__`` installs it, so every Python worker that
 unpickles an engine function or broadcast has it from then on.
+
+``install()`` also re-reads and stamps the zip importers that already exist,
+through the same method (stat, then read). Their listings date from an
+unknown moment, so one read is still owed; paying it during the install
+leaves a worker's second task, not only its third, with no re-reads.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
 
 _stdlib_invalidate = zipimport.zipimporter.invalidate_caches
@@ -42,3 +48,6 @@ def _invalidate_if_changed(self) -> None:
 
 def install() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            _invalidate_if_changed(imp)

@@ -81,6 +81,20 @@ def test_deleted_archive_behaves_as_stdlib(archive, reads):
     assert importlib.import_module("zc_mod_c").Z == 3
 
 
+def test_install_stamps_existing_importers(archive, reads):
+    # an importer made before the hook: install() reads it once, so the
+    # next invalidation (a worker's second task) reads nothing
+    from stackoverflowner_spark import zipcache
+
+    assert importlib.import_module("zc_mod_a").X == 1
+    imp, before = sys.path_importer_cache[archive], reads.count(archive)
+    assert "_archive_stamp" not in imp.__dict__
+    zipcache.install()
+    assert reads.count(archive) == before + 1
+    importlib.invalidate_caches()
+    assert reads.count(archive) == before + 1
+
+
 def test_worker_after_engine_task_skips_rereads():
     from stackoverflowner_spark.operators.document_kernel import extract_stage
     from stackoverflowner_spark.session import get_spark
@@ -89,6 +103,33 @@ def test_worker_after_engine_task_skips_rereads():
                       shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     n = spark.sparkContext.defaultParallelism
+
+    def arm(batches):
+        # a worker's first task imports the package, as unpickling any
+        # engine function does, then counts every archive read from here on
+        import os
+        import time
+        import zipimport
+
+        import pandas as pd
+
+        import stackoverflowner_spark  # noqa: F401
+
+        if not hasattr(zipimport, "_zc_reads"):
+            real, count = zipimport._read_directory, [0]
+
+            def counting(path):
+                count[0] += 1
+                return real(path)
+
+            zipimport._zc_real, zipimport._zc_reads = real, count
+            zipimport._read_directory = counting
+        list(batches)
+        time.sleep(0.2)  # overlap this job's tasks so they spread over workers
+        yield pd.DataFrame([(os.getpid(),)], columns=["pid"])
+
+    armed = {r.pid for r in spark.range(2 * n, numPartitions=2 * n)
+             .mapInPandas(arm, "pid long").collect()}
     pages = spark.createDataFrame(
         [(f"u{i}", "en", f"<p>Page {i} uses Python.</p>".encode(), None)
          for i in range(2 * n)],
@@ -108,10 +149,16 @@ def test_worker_after_engine_task_skips_rereads():
         import pandas as pd
 
         list(batches)
-        time.sleep(0.2)  # overlap this job's tasks so they spread over workers
+        time.sleep(0.2)
         imported = "stackoverflowner_spark" in sys.modules
         hooked = (zipimport.zipimporter.invalidate_caches.__module__
                   == "stackoverflowner_spark.zipcache")
+        # reads since ``arm`` ran here: the set-up of every later task
+        since_arm = -1
+        if hasattr(zipimport, "_zc_reads"):
+            since_arm = zipimport._zc_reads[0]
+            zipimport._read_directory = zipimport._zc_real
+            del zipimport._zc_reads, zipimport._zc_real
         real, calls = zipimport._read_directory, []
 
         def counting(path):
@@ -123,13 +170,20 @@ def test_worker_after_engine_task_skips_rereads():
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = real
-        yield pd.DataFrame([(os.getpid(), imported, hooked, len(calls))],
-                           columns=["pid", "imported", "hooked", "reads"])
+        yield pd.DataFrame(
+            [(os.getpid(), imported, hooked, len(calls), since_arm)],
+            columns=["pid", "imported", "hooked", "reads", "since_arm"])
 
     rows = spark.range(2 * n, numPartitions=2 * n).mapInPandas(
-        probe, "pid long, imported boolean, hooked boolean, reads long"
-    ).collect()
+        probe, "pid long, imported boolean, hooked boolean, reads long, "
+        "since_arm long").collect()
     engine_workers = [r for r in rows if r.imported]
     assert engine_workers, rows  # the engine job's workers were reused
     for r in engine_workers:
         assert r.hooked and r.reads == 0, r
+    # a worker's second task re-reads nothing either: the package import
+    # in its first task already stamped every importer
+    seen = [r for r in rows if r.pid in armed and r.since_arm >= 0]
+    assert seen, (armed, rows)
+    for r in seen:
+        assert r.since_arm == 0, r

@@ -20,9 +20,12 @@ Checklist:
   any Python runs.
 * `ReadSchema` lists only `url, html, text, lang` — `warc_ts` never read.
 * exactly ONE `MapInPandas` (the fused document kernel) — the triple
-  materialization is an `explode`, NOT a union of projections (a union made
-  Catalyst re-run the Python kernel once per arm; fixed in
-  operators/triples.py).
+  materialization is one `Generate inline` over an array of three
+  `named_struct`s, NOT a union of projections (a union made Catalyst re-run
+  the Python kernel once per arm; fixed in operators/triples.py). The page
+  filter, link and triples are built from SQL strings, so the driver builds
+  an op's plan in ~130 py4j calls (gated at 250 in
+  `tests/test_op_fixed_costs.py`).
 * exactly ONE `BroadcastHashJoin ... BuildRight` on `alias_norm` — zero
   shuffle on the (skewed) mention stream; the dictionary side is the
   `link_score >= 0.99` rows of the precomputed scores.
