@@ -246,31 +246,6 @@ def pages_to_mentions_fused(pages: DataFrame, tagger,
         run, schema=MENTIONS_SCHEMA)
 
 
-def seg_tags_stage(sentences: DataFrame, segmenter) -> DataFrame:
-    """sentences -> sentence rows + binary seg_tags column (reference stage 6,
-    E2E_SoftNER.py:65-94 + segmenter predict): the aux channel the NER model
-    consumes. Row-local, narrow; one ``tag_sentences`` call per Arrow
-    batch."""
-    rows = sentences.filter(F.col("sent_idx") >= 0)
-    schema = T.StructType(list(SENTENCES_SCHEMA.fields) + [
-        T.StructField("seg_tags", T.ArrayType(T.StringType()), False)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sents = [(list(t), list(m))
-                     for t, m in zip(pdf["tokens"], pdf["md_tags"])]
-            segs = segmenter.tag_sentences(sents)
-            out = [(url, int(sent_idx), t, m, list(starts), list(ends), seg)
-                   for url, sent_idx, (t, m), starts, ends, seg in zip(
-                       pdf["url"], pdf["sent_idx"], sents, pdf["starts"],
-                       pdf["ends"], segs)]
-            yield pd.DataFrame(out, columns=[
-                "url", "sent_idx", "tokens", "md_tags", "starts", "ends",
-                "seg_tags"])
-
-    return rows.mapInPandas(run, schema=schema)
-
-
 def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
     """sentences -> mention spans using a row-local tagger.
 

@@ -54,33 +54,3 @@ def session_stats(events: DataFrame, gap_us: int = DEFAULT_GAP_US,
             .agg(F.count("*").alias("n_events"),
                  F.min("us").alias("start_us"),
                  F.max("us").alias("end_us")))
-
-
-def session_rollup_native(events: DataFrame, gap_us: int = DEFAULT_GAP_US,
-                          user_col: str = "user_id",
-                          ts_col: str = "ts") -> DataFrame:
-    """The same rollup via Spark's native ``session_window`` — the form
-    that runs UNCHANGED on a streaming DataFrame (see
-    ``streaming/sessions.py``), where the window twin above cannot
-    (no windows over streams).
-
-    Boundary alignment vs ``session_stats``: native windows are half-open
-    — an event exactly ``gap_us`` after the previous one opens a NEW
-    session, while the lag-based twin merges it (new only when gap >
-    threshold). Exact-threshold gaps are measure-zero on real micro
-    timestamps; the parity gate (tests/test_sessions.py) generates none
-    and asserts the two rollups identical. Output start_us = first event;
-    end_us = window end minus the gap = last event, matching
-    ``session_stats`` exactly.
-    """
-    gap_str = f"{gap_us} microseconds"
-    return (events.groupBy(
-                F.col(user_col),
-                F.session_window(F.col(ts_col), gap_str).alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select(user_col,
-                    F.unix_micros(F.col("w.start").cast("timestamp_ltz"))
-                     .alias("start_us"),
-                    (F.unix_micros(F.col("w.end").cast("timestamp_ltz"))
-                     - F.lit(gap_us)).alias("end_us"),
-                    "n_events"))

@@ -1,12 +1,12 @@
-"""Row-local BIO taggers (model-pluggable mention stage).
+"""Row-local BIO taggers (the mention stage).
 
 Interface per SURVEY.md §7 step 5: ``Tagger.tag(tokens, md_tags) -> tags``.
-The default deterministic implementation is a gazetteer + rules tagger
-(longest-match against the broadcast software-entity dictionary, sentinel
-md-labels passed through, CTC-style rule overrides). A transformer-based
-tagger implementing the reference's M5-M7 wordpiece/inference path plugs into
-the same interface when checkpoint weights are available (torch/transformers
-are not in this sandbox; the plug point is ``ModelTagger``).
+The fallback is a deterministic gazetteer + rules tagger (longest match
+against the broadcast software-entity dictionary, sentinel md-labels passed
+through, CTC-style rule overrides); the default is the shipped Viterbi
+perceptron (``default_tagger``). The reference's M5-M7 transformer path
+(wordpiece featurization, BERT forward) is not reproduced: its checkpoints
+are external downloads the reference does not ship.
 """
 
 from __future__ import annotations
@@ -363,173 +363,3 @@ def default_tagger() -> Tagger:
     if not os.path.exists(path):
         return GazetteerTagger()
     return _load_default(path, os.path.getmtime(path))
-
-
-class SegmenterTagger(Tagger):
-    """Binary segmenter (reference M6 semantics: labels {O, Name},
-    softner_segmenter_preditct_from_file.py). Deterministic default: a token
-    span is a Name candidate when the gazetteer or a markdown sentinel covers
-    it. The NER tagger consumes this as its ``pred_seg_label`` aux channel."""
-
-    def __init__(self, base: Optional[GazetteerTagger] = None):
-        self.base = base or GazetteerTagger()
-
-    def tag(self, tokens: Sequence[str], md_tags: Sequence[str]) -> List[str]:
-        bio = self.base.tag(tokens, md_tags)
-        return ["Name" if t != "O" else "O" for t in bio]
-
-
-class ModelTagger(Tagger):
-    """Checkpoint-backed batched inference harness (reference M5-M7:
-    utils_ner.py wordpiece featurization + softner_ner_predict_from_file.py
-    batched forward + first-wordpiece prediction alignment).
-
-    The whole harness — featurize, fixed-length batch, forward, unpad, align
-    back to words — is real and tested; only the *forward function* is
-    pluggable. ``forward_fn(input_ids[B,L], input_mask[B,L]) ->
-    logits[B,L,n_labels]`` is either a user-supplied callable (tests use a
-    deterministic numpy fake) or, when ``checkpoint_dir`` is set, a lazy
-    per-executor torch+transformers load (weights are external downloads the
-    reference does not ship, code/Readme.md:4-8 — the load path raises
-    NotImplementedError without them)."""
-
-    def __init__(self, labels: Sequence[str], vocab,
-                 forward_fn=None, checkpoint_dir: Optional[str] = None,
-                 max_seq_length: int = 128, batch_size: int = 32):
-        self.labels = list(labels)
-        self.label_map = {l: i for i, l in enumerate(self.labels)}
-        self.vocab = vocab
-        self.forward_fn = forward_fn
-        self.checkpoint_dir = checkpoint_dir
-        self.max_seq_length = max_seq_length
-        self.batch_size = batch_size
-
-    # -- forward resolution -------------------------------------------------- #
-
-    def _resolve_forward(self):
-        if self.forward_fn is not None:
-            return self.forward_fn
-        if self.checkpoint_dir:
-            return _executor_model_forward(self.checkpoint_dir)
-        raise NotImplementedError("ModelTagger needs forward_fn or checkpoint_dir")
-
-    # -- batched inference (predict_from_file evaluate() shape) ------------- #
-
-    def tag_sentences(self, sentences: List[Tuple[Sequence[str], Sequence[str]]]
-                      ) -> List[List[str]]:
-        """Tag many sentences with fixed-size forward batches. Words beyond
-        the wordpiece budget get 'O' (the reference's writer *drops* them,
-        softner_ner_predict_from_file.py:641-643 — a Tagger must stay total,
-        so the truncated tail is padded instead; disclosed divergence)."""
-        import numpy as np
-
-        from ..kernel import wordpiece as wp
-
-        forward = self._resolve_forward()
-        feats = [
-            wp.convert_example(toks, ["O"] * len(toks), [0] * len(toks),
-                               ["O"] * len(toks), self.vocab, self.label_map,
-                               self.max_seq_length)
-            for toks, _md in sentences
-        ]
-        out: List[List[str]] = []
-        for i in range(0, len(feats), self.batch_size):
-            chunk = feats[i:i + self.batch_size]
-            ids = np.array([f.input_ids for f in chunk], dtype=np.int64)
-            mask = np.array([f.input_mask for f in chunk], dtype=np.int64)
-            logits = np.asarray(forward(ids, mask))
-            pred_ids = logits.argmax(axis=-1)
-            for f, row, (toks, _md) in zip(chunk, pred_ids,
-                                           sentences[i:i + self.batch_size]):
-                kept = wp.unpad_predictions(f.label_ids, [int(x) for x in row])
-                tags = [self.labels[p] for p in kept]
-                tags += ["O"] * (len(toks) - len(tags))
-                out.append(tags[:len(toks)])
-        return out
-
-    def tag(self, tokens: Sequence[str], md_tags: Sequence[str]) -> List[str]:
-        return self.tag_sentences([(list(tokens), list(md_tags))])[0]
-
-
-_EXECUTOR_MODELS: Dict[str, object] = {}
-
-
-def _load_checkpoint_forward(checkpoint_dir: str):
-    """Resolve a checkpoint directory to a forward callable. Two formats:
-
-    * numpy checkpoint (``numpy_model.npz`` + ``config.json``,
-      kernel/np_transformer.py) — loads without torch; this is the format
-      the in-repo end-to-end gate uses, so the singleton/load/forward path
-      has real test coverage in this container.
-    * HF torch checkpoint — the reference's real SoftNER/segmenter weights
-      (external downloads, code/Readme.md:4-8); needs torch+transformers.
-    """
-    import os
-
-    from ..kernel import np_transformer as npt
-
-    if os.path.exists(os.path.join(checkpoint_dir, npt.WEIGHTS)):
-        return npt.NumpyTokenClassifier.load(checkpoint_dir).forward
-    try:  # pragma: no cover - needs external weights + torch
-        import torch  # noqa: F401
-        from transformers import AutoModelForTokenClassification
-    except ImportError as e:
-        raise NotImplementedError(
-            "checkpoint-backed ModelTagger needs torch+transformers "
-            f"(external downloads): {e}")
-    model = AutoModelForTokenClassification.from_pretrained(checkpoint_dir)
-    model.eval()
-
-    def torch_forward(input_ids, input_mask):  # pragma: no cover
-        import torch
-        with torch.no_grad():
-            return model(input_ids=torch.as_tensor(input_ids),
-                         attention_mask=torch.as_tensor(input_mask)
-                         ).logits.numpy()
-    return torch_forward
-
-
-def _executor_model_forward(checkpoint_dir: str):
-    """Executor-singleton checkpoint load: one model per worker process,
-    shared across all Arrow batches (the reference loads once per run,
-    softner_ner_predict_from_file.py:534-560)."""
-    def forward(input_ids, input_mask):
-        fwd = _EXECUTOR_MODELS.get(checkpoint_dir)
-        if fwd is None:
-            fwd = _load_checkpoint_forward(checkpoint_dir)
-            _EXECUTOR_MODELS[checkpoint_dir] = fwd
-        return fwd(input_ids, input_mask)
-    return forward
-
-
-def model_tag_stage(sentences, tagger: "ModelTagger"):
-    """sentences (url, sent_idx, tokens, md_tags, ...) -> same rows plus a
-    ``model_tags`` column: ONE Arrow-batched mapInPandas whose inner loop is
-    the tagger's fixed-size forward batching — the Spark shape of the
-    reference's batched-eval harness."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("sent_idx", T.IntegerType()),
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-        T.StructField("md_tags", T.ArrayType(T.StringType())),
-        T.StructField("model_tags", T.ArrayType(T.StringType())),
-    ])
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            sents = [(list(t), list(m))
-                     for t, m in zip(pdf["tokens"], pdf["md_tags"])]
-            tags = tagger.tag_sentences(sents) if sents else []
-            yield pd.DataFrame({
-                "url": pdf["url"], "sent_idx": pdf["sent_idx"],
-                "tokens": pdf["tokens"], "md_tags": pdf["md_tags"],
-                "model_tags": pd.Series(tags, dtype=object, index=pdf.index),
-            })
-
-    return sentences.select("url", "sent_idx", "tokens", "md_tags").mapInPandas(
-        run, schema=schema)

@@ -196,24 +196,6 @@ def test_components_random_graph_vs_union_find(spark):
     assert all(min(s) == c for c, s in got.items())
 
 
-def test_catalog_fallback_roundtrip(spark, tmp_path):
-    """Iceberg-or-parquet catalog: in this container the Iceberg runtime is
-    absent, so read/write must transparently use parquet with identical
-    call sites, and snapshot reads must fail loudly instead of silently
-    ignoring the snapshot id."""
-    import pytest as _pytest
-    from stackoverflowner_spark.sources.catalog import (
-        iceberg_available, read_table, write_table)
-    assert iceberg_available(spark) is False
-    df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    loc = str(tmp_path / "tbl")
-    write_table(df, loc, mode="overwrite", partition_by=["v"])
-    got = read_table(spark, loc)
-    assert {(r.k, r.v) for r in got.collect()} == {(1, "a"), (2, "b")}
-    with _pytest.raises(ValueError):
-        read_table(spark, loc, snapshot_id=42)
-
-
 def test_components_large_random_graph_vs_union_find(spark):
     """Canonicalization at size: 30k nodes / 40k random edges + a 500-spoke
     star (head-entity skew shape). Oracle = local union-find."""

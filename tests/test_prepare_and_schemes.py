@@ -1,10 +1,8 @@
-"""Tag schemes, wordpiece featurization, prepared-example operator."""
-
-import os
+"""Tag schemes, prepared-example operator, report formatting."""
 
 import pytest
 
-from stackoverflowner_spark.kernel import tagscheme, wordpiece
+from stackoverflowner_spark.kernel import tagscheme
 from stackoverflowner_spark.session import get_spark
 
 
@@ -38,41 +36,6 @@ def test_zero_digits_and_caps():
     assert tagscheme.cap_class("WORD") == 1
     assert tagscheme.cap_class("Word") == 2
     assert tagscheme.cap_class("wOrd") == 3
-
-
-def test_wordpiece_shape_contract():
-    corpus = ["python", "pandas", "dataframe", "select", "filter", "the",
-              "using", "groupby"] * 2
-    vocab = wordpiece.WordPieceVocab(corpus)
-    label_map = {"O": 0, "B-Library": 1, "I-Library": 2}
-    words = ["using", "pandas", "dataframe"]
-    labels = ["O", "B-Library", "O"]
-    feats = wordpiece.convert_example(
-        words, labels, [0, 1, 1], ["O", "Name", "O"], vocab, label_map,
-        max_seq_length=16)
-    assert len(feats.input_ids) == 16
-    assert len(feats.input_mask) == 16
-    assert len(feats.label_ids) == 16
-    # CLS position padded label; exactly one non-(-100) label per word
-    assert feats.label_ids[0] == wordpiece.PAD_LABEL_ID
-    real = [l for l in feats.label_ids if l != wordpiece.PAD_LABEL_ID]
-    assert real == [0, 1, 0]
-    # mask covers CLS + pieces + SEP then zeros
-    n_real = sum(feats.input_mask)
-    assert feats.input_mask[:n_real] == [1] * n_real
-    assert feats.input_ids[n_real:] == [vocab.pad_id] * (16 - n_real)
-
-
-def test_wordpiece_truncation_drops_tail():
-    vocab = wordpiece.WordPieceVocab(["aa", "bb"])
-    words = ["aa"] * 50
-    labels = ["O"] * 50
-    feats = wordpiece.convert_example(words, labels, [0] * 50, ["O"] * 50,
-                                      vocab, {"O": 0}, max_seq_length=16)
-    real = [l for l in feats.label_ids if l != wordpiece.PAD_LABEL_ID]
-    assert len(real) == 14  # 16 - CLS - SEP
-    preds = wordpiece.unpad_predictions(feats.label_ids, list(range(16)))
-    assert len(preds) == 14
 
 
 def test_prepare_dataset_operator(spark):
@@ -109,20 +72,8 @@ def test_prepare_dataset_operator(spark):
     assert "Join" in plan
 
 
-def test_segmenter_stage_and_report(spark):
-    from stackoverflowner_spark.operators.document_kernel import (
-        extract_stage, seg_tags_stage, sentences_stage)
+def test_format_report():
     from stackoverflowner_spark.operators.evalops import format_report
-    from stackoverflowner_spark.operators.tagger import SegmenterTagger
-    from stackoverflowner_spark.sources.pages import synth_pages
-
-    pages = synth_pages(spark, 40)
-    seg = seg_tags_stage(sentences_stage(extract_stage(pages)), SegmenterTagger())
-    rows = seg.collect()
-    assert rows
-    assert all(len(r.seg_tags) == len(r.tokens) for r in rows)
-    flat = {t for r in rows for t in r.seg_tags}
-    assert flat <= {"O", "Name"} and "Name" in flat
 
     report = {"__overall__": {"precision": 80.0, "recall": 40.0, "f1": 53.33,
                               "tp": 4, "guessed": 5, "truth": 10},

@@ -1,12 +1,9 @@
-"""applyInPandasWithState: accumulation across micro-batches equals batch agg."""
-
-import glob
+"""KG stream (streaming/ingest.py): watermarked windowed mention counts."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.session import get_spark
-from stackoverflowner_spark.streaming.stateful import stateful_user_totals
 
 
 @pytest.fixture(scope="module")
@@ -14,48 +11,6 @@ def spark():
     s = get_spark(app_name="sokg-stateful", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
-
-
-def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
-    src = str(tmp_path / "events")
-    sink = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # several files -> several micro-batches with maxFilesPerTrigger=1
-    events.repartition(4).write.mode("overwrite").parquet(src)
-    n_files = len(glob.glob(src + "/part-*"))
-    assert n_files >= 3
-
-    stream = (spark.readStream.schema(events.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    totals = stateful_user_totals(stream)
-
-    def sink_fn(batch_df, batch_id):
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(sink))
-
-    q = (totals.writeStream.foreachBatch(sink_fn)
-         .outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    out = spark.read.parquet(sink)
-    assert out.select("batch_id").distinct().count() >= 3
-    # the latest emission per user equals the batch aggregate
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    latest = (out.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-              .select("user_id", "n_events", "total_value"))
-    expected = events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("value").alias("total_value"))
-    joined = latest.alias("a").join(expected.alias("b"), "user_id")
-    bad = joined.filter(
-        (F.col("a.n_events") != F.col("b.n_events"))
-        | (F.abs(F.col("a.total_value") - F.col("b.total_value")) > 1e-6)).count()
-    assert bad == 0
-    assert latest.count() == expected.count()
 
 
 def test_windowed_mention_counts(spark, tmp_path):

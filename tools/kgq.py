@@ -23,11 +23,7 @@ is an alternative path; a leading ``!`` negates the set (``!p``,
 ``!p1|p2``); ``p1/p2`` is a sequence path (each step may use the other
 operators — note ``/`` splits FIRST here, so ``a|b/c`` = ``(a|b)/c``).
 ``--ntriples`` reads the input as N-Triples text instead of parquet,
-so an exported KG queries directly. ``--sparql "SELECT ... WHERE
-{ ... }"`` bypasses the mini-syntax entirely and runs a full SPARQL
-query string through ``operators/sparql.py`` (all query forms, FILTER/
-OPTIONAL/VALUES/UNION/GROUP BY, property paths, PREFIX).
-``--construct`` emits new
+so an exported KG queries directly. ``--construct`` emits new
 (subj, pred, obj) rows from each solution; ``--delete``/``--insert``
 run SPARQL UPDATE's DELETE/INSERT WHERE and print the UPDATED graph
 (kgquery.update_triples); ``--ask`` prints a boolean
@@ -71,14 +67,7 @@ def parse_patterns(s: str):
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("triples", help="triples parquet path (subj, pred, obj)")
-    ap.add_argument("where", nargs="?", default=None,
-                    help="BGP: '?s pred ?o . ?s pred2 lit' "
-                         "(omit when using --sparql)")
-    ap.add_argument("--sparql", default=None, metavar="QUERY",
-                    help="run a full SPARQL query string instead of the "
-                         "mini-syntax (operators/sparql.py: SELECT/ASK/"
-                         "CONSTRUCT/DESCRIBE/DELETE-INSERT, FILTER/BIND/"
-                         "OPTIONAL/VALUES/UNION/GROUP BY, property paths)")
+    ap.add_argument("where", help="BGP: '?s pred ?o . ?s pred2 lit'")
     ap.add_argument("--select", help="comma-separated output variables")
     ap.add_argument("--optional", default=None,
                     help="OPTIONAL block, same mini-syntax")
@@ -144,17 +133,8 @@ def main(argv=None) -> int:
     ap.add_argument("--ntriples", action="store_true",
                     help="input path is N-Triples text, not parquet "
                          "(parsed with operators/triples.parse_ntriples)")
-    ap.add_argument("--format", default="jsonl",
-                    choices=["jsonl", "srj"],
-                    help="output format for --sparql results: jsonl "
-                         "(one JSON object per binding, default) or "
-                         "srj (the W3C application/sparql-results+json "
-                         "envelope; ASK maps to its boolean form)")
     ap.add_argument("--master", default="local[8]")
     args = ap.parse_args(argv)
-    if (args.where is None) == (args.sparql is None):
-        ap.error("provide exactly one of a WHERE pattern string or "
-                 "--sparql QUERY")
     if args.construct and (args.group_by is not None or args.ask):
         ap.error("--construct is exclusive with --group-by/--ask")
     if (args.delete or args.insert) and (args.construct or args.ask
@@ -192,31 +172,6 @@ def main(argv=None) -> int:
         tri = parse_ntriples(spark.read.text(args.triples))
     else:
         tri = spark.read.parquet(args.triples)
-    if args.sparql:
-        from stackoverflowner_spark.operators.sparql import run_sparql
-        res = run_sparql(tri, args.sparql)
-        if isinstance(res, bool):
-            if args.format == "srj":
-                print(json.dumps({"head": {}, "boolean": res}))
-            else:
-                print(json.dumps({"ask": res}))
-            return 0
-        rows = res.limit(args.limit).collect()
-        if args.format == "srj":
-            cols = res.columns
-            bindings = [
-                {k: {"type": "literal", "value": str(v)}
-                 for k, v in r.asDict().items() if v is not None}
-                for r in rows]
-            print(json.dumps({"head": {"vars": cols},
-                              "results": {"bindings": bindings}},
-                             sort_keys=True))
-        else:
-            for r in rows:
-                print(json.dumps(r.asDict(), sort_keys=True))
-        print(json.dumps({"rows": len(rows), "limit": args.limit}),
-              file=sys.stderr)
-        return 0
     optional = parse_patterns(args.optional) if args.optional else None
     not_exists = (parse_patterns(args.not_exists)
                   if args.not_exists else None)
