@@ -30,29 +30,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                         fanout=name in ("documents", "embeddings"))
 
 
-# Money arithmetic in exact DECIMAL on both engines (VERDICT r4 #1): the
-# fixture money columns are 2-decimal values stored as double, so
-# DECIMAL(18,2) recovers the exact value, decimal sums are
-# order-independent, and round(...,2) can't land on a float half-cent
-# boundary (the r4 tpch_q7ish/q9ish red-hash mode: Spark's partial-agg
-# summation order vs DuckDB's differed in the last ulp on boundary
-# groups). The final cast back to double keeps output schemas unchanged.
-def _money(col: str) -> F.Column:
-    return F.col(col).cast("decimal(18,2)")
-
-
-def _disc_factor() -> F.Column:
-    # discount in [0, 0.1]; narrow precision keeps products inside
-    # DuckDB's 38-digit decimal-multiply width limit
-    return (F.lit(1).cast("decimal(3,2)")
-            - F.col("l_discount").cast("decimal(3,2)"))
-
-
-_SQL_EXT = "cast(l_extendedprice as decimal(18,2))"
-_SQL_DISC = "(cast(1 as decimal(3,2)) - cast(l_discount as decimal(3,2)))"
-# revenue term shared by q1/q3/q5/q10/q14/nation_revenue oracles
-_SQL_REV = f"{_SQL_EXT} * {_SQL_DISC}"
-
 # HyperLogLog oracle constants — shared literals with operators/sketch.py
 # so both engines divide the SAME double (see sketch.estimate_constant).
 import os as _os  # noqa: E402
@@ -63,6 +40,13 @@ if _os.path.dirname(_os.path.abspath(__file__)) not in _sys.path:
 from stackoverflowner_spark.operators.sketch import (  # noqa: E402
     RHO_MAX as _HLL_RHO_MAX, estimate_constant as _hll_estimate_constant)
 _HLL_CONST = _hll_estimate_constant(8)
+
+# Money arithmetic in exact DECIMAL on both engines (VERDICT r4 #1); the
+# helpers live in relational.py, which applies the same discipline.
+from stackoverflowner_spark.relational import (  # noqa: E402
+    _SQL_DISC, _SQL_EXT, _disc_factor, _money)
+# revenue term shared by q1/q3/q5/q10/q14/nation_revenue oracles
+_SQL_REV = f"{_SQL_EXT} * {_SQL_DISC}"
 
 
 # --------------------------------------------------------------------------- #
@@ -2261,7 +2245,7 @@ def _cosine_sql(a: str, b: str, digits: int) -> str:
 def _simhash_sql(norm: str, bits: int = 64) -> str:
     # bit b of the 64-bit value in the first 16 hex chars of md5(word);
     # hex-digit value via instr('123456789abcdef', ch) — same trick as the
-    # Spark side (operators/dedup.py:_md5_bit), so sums match exactly.
+    # Spark side (operators/dedup.py:simhash), so sums match exactly.
     sums = ", ".join(
         f"sum(case when (instr('123456789abcdef', substr(m, {16 - b // 4}, 1))"
         f" // {2 ** (b % 4)}) % 2 = 1 then 1 else -1 end) as b{b}"

@@ -2,9 +2,9 @@
 
 The reference's per-post chain (E2E_SoftNER.py:149-195): extract with
 sentinel substitution, Punkt sentencize, tokenize + BIO, tag, document-level
-label consistency, chunk. ``extract_stage``, ``pages_to_mentions_fused``
-(operators/document_kernel.py) and ``windowed_mention_counts``
-(streaming/ingest.py) are ``mapInPandas`` glue over this module.
+label consistency, chunk. ``extract_stage`` and ``pages_to_mentions_fused``
+(operators/document_kernel.py) are the ``mapInPandas`` glue over this
+module.
 """
 
 from __future__ import annotations

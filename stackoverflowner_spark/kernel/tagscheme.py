@@ -1,7 +1,8 @@
 """Tag-scheme utilities: IOB1->IOB2, IOB<->IOBES, digit zeroing, cap class.
 
-Semantics from ``/root/reference/code/Attentive_BiLSTM/utils_so.py:78-160``
-and ``loader_so.py:289-313`` (``update_tag_scheme``).
+Semantics from the reference's ``code/Attentive_BiLSTM/utils_so.py:78-160``.
+It applies them per sentence in ``loader_so.py:289-313``
+(``update_tag_scheme``); that driver loop is not ported.
 """
 
 from __future__ import annotations
@@ -81,20 +82,3 @@ def cap_class(word: str) -> int:
     if word and word[0].upper() == word[0]:
         return 2
     return 3
-
-
-def update_tag_scheme(sent_tags: List[List[str]], scheme: str = "iob"
-                      ) -> List[List[str]]:
-    """Batch conversion, loader_so.py:289-313 semantics (raises on non-IOB)."""
-    out = []
-    for i, tags in enumerate(sent_tags):
-        tags = list(tags)
-        if not to_iob2(tags):
-            raise ValueError(f"Sentences should be given in IOB format! sentence {i}")
-        if scheme == "iob":
-            out.append(tags)
-        elif scheme == "iobes":
-            out.append(iob_to_iobes(tags))
-        else:
-            raise ValueError("Unknown tagging scheme!")
-    return out

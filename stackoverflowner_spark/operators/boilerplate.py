@@ -64,13 +64,6 @@ def doc_lines(docs: DataFrame, text_col: str = "text",
                     F.md5("_n").alias("lhash")))
 
 
-def line_doc_freq(lines: DataFrame) -> DataFrame:
-    """(host, lhash, n_docs): in how many of the host's documents the
-    line occurs. The one corpus-scale aggregation of the operator."""
-    return (lines.groupBy("host", "lhash")
-            .agg(F.countDistinct("doc_id").alias("n_docs")))
-
-
 def host_doc_counts(docs: DataFrame, host_col: str = "host") -> DataFrame:
     """(host, host_docs) — hosts-sized, the broadcast side of the
     ratio test."""

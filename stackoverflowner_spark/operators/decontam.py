@@ -1,6 +1,6 @@
 """Benchmark decontamination for training-data pipelines.
 
-Removes (or flags) training documents that share any word n-gram with an
+Flags training documents that share any word n-gram with an
 evaluation/benchmark set — the standard leakage guard every public LLM
 data pipeline runs before training (GPT-3 appendix C, Gopher/Llama data
 cards use 8-13 token overlap). Not a reference-repo operator; part of
@@ -89,13 +89,3 @@ def with_contamination(docs: DataFrame, bench: DataFrame,
             .withColumn("hit_ngrams",
                         F.coalesce(F.col("hit_ngrams"), F.lit(0)).cast("long"))
             .withColumn("contaminated", F.col("hit_ngrams") > 0))
-
-
-def decontaminate(docs: DataFrame, bench: DataFrame,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 8) -> DataFrame:
-    """Drop training docs sharing any n-gram with the benchmark set.
-    Keeps ``docs``' full schema (left-anti join on the contaminated ids)."""
-    bad = (with_contamination(docs, bench, id_col, text_col, n)
-           .filter(F.col("contaminated")).select(id_col))
-    return docs.join(F.broadcast(bad), id_col, "left_anti")

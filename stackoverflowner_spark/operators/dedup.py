@@ -183,16 +183,6 @@ def embedding_near_dup_pairs(vectors: DataFrame, dim: int, threshold: float = 0.
     )
 
 
-def _md5_bit(md5_col, b: int):
-    """Bit ``b`` (0 = LSB) of the 64-bit value held in the first 16 hex chars
-    of an md5 string. Hex-digit value via ``instr('123456789abcdef', ch)``
-    (0 for '0' since instr returns 0 on miss) — the same expression is valid
-    in DuckDB, which is what makes the simhash oracle-checkable."""
-    ch = F.substring(md5_col, 16 - b // 4, 1)
-    val = F.instr(F.lit("123456789abcdef"), ch)
-    return (val / (2 ** (b % 4))).cast("int") % 2
-
-
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             bits: int = 64) -> DataFrame:
     """Sign-aggregated word-hash fingerprint, emitted as a ``bits``-char
@@ -207,9 +197,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                            lambda x: x != "")).alias("word"),
     ).withColumn("h", F.md5("word"))
     # hex nibbles extracted once per word (16 instr calls), bits derived
-    # by shift/mod — same integers as _md5_bit's per-bit substring+instr
-    # (shiftright == the old floor division for nonnegative nibbles),
-    # ~4x fewer string ops per word and a much smaller codegen body
+    # by shift/mod — same integers as a per-bit substring+instr (the form
+    # of the DuckDB oracle; shiftright == its floor division for
+    # nonnegative nibbles), ~4x fewer string ops per word and a much
+    # smaller codegen body
     nibs = F.transform(
         F.sequence(F.lit(1), F.lit(bits // 4)),
         lambda c: F.instr(F.lit("123456789abcdef"),
@@ -282,62 +273,3 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def semantic_dedup(corpus: DataFrame, dim: int, n_clusters: int = 8,
-                   threshold: float = 0.95, iters: int = 3,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroids=None) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): embedding-space dedup that bounds the
-    quadratic pair term by clustering first — k-means the corpus, compare
-    cosines only WITHIN each cluster, connect above-threshold pairs, and
-    keep one representative per duplicate group.
-
-    Returns (id, centroid, rep, keep): ``rep`` is the duplicate group's
-    representative (the lexicographically smallest member id, the
-    components operator's canonical label; singletons represent
-    themselves), ``keep`` marks the representative row.
-
-    By design this is the APPROXIMATE member of the dedup suite: a
-    near-dup pair split across two clusters is missed (the method's
-    documented trade — raise n_clusters to shrink clusters and the
-    quadratic term, lower it to shrink the split-pair risk; the exact
-    twin is ``embedding_near_dup``'s OR-amplified hyperplane LSH).
-    Float k-means/cosine puts it in the pytest-parity class with
-    IVF/PageRank, not under a SQL oracle.
-
-    Scale: the pair join is a self-equi-join ON THE CLUSTER id —
-    sum-of-cluster^2 candidates, never corpus^2; cosine verify rides JVM
-    higher-order functions; components run on the above-threshold pair
-    graph only.
-    """
-    from .components import connected_components
-    from .similarity import _dot_col, _norm_col, ivf_assignments, kmeans_fit
-
-    cents = (centroids if centroids is not None
-             else kmeans_fit(corpus, dim, n_clusters, iters,
-                             vec_col=vec_col))
-    assigned = ivf_assignments(corpus, dim, id_col=id_col, vec_col=vec_col,
-                               centroids=cents).localCheckpoint()
-    a = assigned.select("centroid", F.col(id_col).alias("id_a"),
-                        F.col(vec_col).alias("va"))
-    b = assigned.select("centroid", F.col(id_col).alias("id_b"),
-                        F.col(vec_col).alias("vb"))
-    cos = (_dot_col(F.col("va"), F.col("vb"))
-           / F.greatest(_norm_col(F.col("va")) * _norm_col(F.col("vb")),
-                        F.lit(1e-12)))
-    pairs = (a.join(b, "centroid")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .withColumn("cos", cos)
-             .filter(F.col("cos") >= threshold)
-             .select(F.col("id_a").cast("string").alias("src"),
-                     F.col("id_b").cast("string").alias("dst")))
-    comps = connected_components(pairs)
-    out = (assigned.select(F.col(id_col), "centroid")
-           .join(comps.withColumnRenamed("node", "_n"),
-                 F.col(id_col).cast("string") == F.col("_n"), "left")
-           .withColumn("rep", F.coalesce(F.col("component"),
-                                         F.col(id_col).cast("string")))
-           .withColumn("keep", F.col(id_col).cast("string") == F.col("rep"))
-           .select(id_col, "centroid", "rep", "keep"))
-    return out

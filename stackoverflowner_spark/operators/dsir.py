@@ -5,8 +5,8 @@ Selection for Language Models via Importance Resampling"): represent
 every document as hashed n-gram counts, fit two bag-of-buckets
 multinomials — one on a small TARGET corpus (the distribution you want
 more of), one on the RAW pool — and resample raw documents with Gumbel
-top-k on the per-document log-likelihood ratio. This module is the
-engine-side implementation over the documents table; nothing here reads
+top-k on the per-document log-likelihood ratio. This module builds the
+integer statistics half over the documents table; nothing here reads
 external data — target/raw are caller-supplied DataFrames.
 
 Decomposition by verifiability class (the repo's bitwise-oracle rules):
@@ -18,24 +18,16 @@ Decomposition by verifiability class (the repo's bitwise-oracle rules):
   hash (memory: DuckDB `cast('0x'||substr(md5(..),1,15) as bigint)` ==
   Spark `conv(substring(md5(..),1,15),16,10)`); oracled bitwise on the
   strict rotation gate (`dsir_stats`).
-* ``dsir_scores`` / ``dsir_select`` — the log-likelihood ratio and the
-  Gumbel perturbation are `log` floats, which are NOT IEEE-correctly-
-  rounded across engines, so these sit in the pytest-parity class
-  (exact numpy reference replay), the same split the IVF/k-means and
-  PageRank operators use. Selection is deterministic: the Gumbel noise
-  comes from a hashed uniform of (seed, doc_id), never from an RNG.
+* The log-likelihood-ratio scoring and Gumbel top-k resampling that
+  consume these statistics are not implemented here: their ``log``
+  floats are not IEEE-correctly-rounded across engines, so they could
+  only be gated by a numpy replay, and no engine path selects documents.
 
 Scale: one shuffle for per-(doc, bucket) counts, O(total bigrams) — the
-gopher/minhash cost class; the stats table is B rows (B ~ thousands)
-and always broadcasts; scoring is a broadcast join + per-doc sum; the
-top-k is Spark's TakeOrdered (per-partition heads + driver merge of k),
-never a global sort materialization.
+gopher/minhash cost class; the stats table is B rows (B ~ thousands).
 """
 
 from __future__ import annotations
-
-import math
-from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -81,50 +73,3 @@ def dsir_bucket_stats(target: DataFrame, raw: DataFrame,
                     F.coalesce("raw_c", F.lit(0)).cast("long")
                     .alias("raw_c")))
 
-
-def _totals(stats: DataFrame) -> Tuple[int, int]:
-    row = stats.agg(F.sum("target_c"), F.sum("raw_c")).collect()[0]
-    return int(row[0] or 0), int(row[1] or 0)
-
-
-def dsir_scores(raw: DataFrame, stats: DataFrame,
-                id_col: str = "doc_id", text_col: str = "text",
-                buckets: int = 4096, alpha: float = 1.0) -> DataFrame:
-    """(id, score): per-document log-likelihood ratio
-    sum_b c_b * [log p_target(b) - log p_raw(b)] under add-alpha
-    smoothing. Documents with no bigrams score 0."""
-    T, R = _totals(stats)
-    log_t = F.log((F.col("target_c") + alpha) / (T + alpha * buckets))
-    log_r = F.log((F.col("raw_c") + alpha) / (R + alpha * buckets))
-    ratio = stats.select("bucket", (log_t - log_r).alias("llr"))
-    doc = hashed_bigram_buckets(raw, id_col, text_col, buckets)
-    return (doc.join(F.broadcast(ratio), "bucket", "left")
-            .groupBy(id_col)
-            .agg(F.sum(F.col("c") * F.coalesce("llr", F.lit(0.0)))
-                 .alias("score"))
-            .unionByName(  # no-bigram docs keep a 0 score row
-                raw.select(id_col).join(doc.select(id_col).distinct(),
-                                        id_col, "left_anti")
-                .withColumn("score", F.lit(0.0))))
-
-
-def dsir_select(raw: DataFrame, stats: DataFrame, k: int,
-                id_col: str = "doc_id", text_col: str = "text",
-                buckets: int = 4096, alpha: float = 1.0,
-                seed: int = 0) -> DataFrame:
-    """Gumbel top-k importance resampling: keep the k documents with the
-    largest score + Gumbel(seed, id) — equivalent to sampling without
-    replacement proportional to exp(score). The Gumbel comes from a
-    hashed uniform of (seed, doc_id): deterministic, backfill-stable,
-    partitioning-independent (the hash-sampling discipline of
-    operators/sampling.py)."""
-    u = ((F.conv(F.substring(
-        F.md5(F.concat_ws("|", F.lit(str(seed)),
-                          F.col(id_col).cast("string"))), 1, _HEX), 16, 10)
-        .cast("double") + 0.5) / float(1 << (4 * _HEX)))
-    gumbel = -F.log(-F.log(u))
-    scored = dsir_scores(raw, stats, id_col, text_col, buckets, alpha)
-    return (scored.withColumn("key", F.col("score") + gumbel)
-            .orderBy(F.col("key").desc(), F.col(id_col).asc())
-            .limit(k)
-            .select(id_col, "score"))

@@ -480,112 +480,6 @@ def modularity(edges: DataFrame, labels: DataFrame,
          / F.lit(float(4 * m * m))).alias("q"))
 
 
-def ktruss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
-    """edges(src, dst) (undirected reading) -> (u, v, support): the
-    k-truss — the maximal subgraph in which every EDGE closes >= k-2
-    triangles — with each surviving edge's final support. The
-    edge-grade cohesion probe one notch stricter than ``kcore`` (a
-    k-truss is always inside the (k-1)-core): alias-cluster edges that
-    survive the 3-truss are triangle-corroborated, the edge-level
-    version of the triangle_count node signal.
-
-    Iterative support peeling (Cohen 2008): count per-edge support on
-    the CURRENT subgraph via the same degree-ordered oriented triangle
-    enumeration as ``triangle_count`` (exactly-once per triangle,
-    O(sqrt(E)) wedge fan-out bound), drop edges below k-2, repeat to
-    fixpoint. The result is unique — peeling order cannot change the
-    maximal fixpoint — so output is deterministic. Shrinking fixpoints
-    are not recursive-CTE-expressible; pytest-parity class with kcore.
-    """
-    if k < 2:
-        raise ValueError("k must be >= 2 (the 2-truss is trivially the "
-                         "whole graph)")
-    und = _undirected(edges).transform(checkpoint)
-    need = k - 2
-    support = None
-
-    for _ in range(max_iter):
-        deg = (und.select(F.col("u").alias("n"))
-               .unionAll(und.select(F.col("v").alias("n")))
-               .groupBy("n").agg(F.count("*").alias("deg")))
-        du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
-        dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
-        withdeg = und.join(du, "u").join(dv, "v")
-        fwd = (F.col("du") < F.col("dv")) | \
-            ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        oriented = withdeg.select(
-            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"))
-        e1 = oriented.select("a", "b")
-        e2 = oriented.select(F.col("a").alias("a2"), F.col("b").alias("c"))
-        wedges = e1.join(e2, e1.a == e2.a2).select("a", "b", "c")
-        closing = oriented.select(F.col("a").alias("b"),
-                                  F.col("b").alias("c"))
-        tris = wedges.join(closing, ["b", "c"])
-        # each triangle supports its three undirected edges
-        tri_edges = (
-            tris.select(F.least("a", "b").alias("u"),
-                        F.greatest("a", "b").alias("v"))
-            .unionAll(tris.select(F.least("a", "c").alias("u"),
-                                  F.greatest("a", "c").alias("v")))
-            .unionAll(tris.select(F.least("b", "c").alias("u"),
-                                  F.greatest("b", "c").alias("v"))))
-        support = (tri_edges.groupBy("u", "v")
-                   .agg(F.count("*").cast("long").alias("support")))
-        kept = (und.join(support, ["u", "v"], "left")
-                .select("u", "v",
-                        F.coalesce(F.col("support"), F.lit(0))
-                        .alias("support"))
-                .filter(F.col("support") >= need)
-                .transform(checkpoint))
-        if kept.count() == und.count():
-            return kept
-        und = kept.select("u", "v").transform(checkpoint)
-        if und.isEmpty():
-            return kept
-    return (und.join(support, ["u", "v"], "left")
-            .select("u", "v", F.coalesce(F.col("support"), F.lit(0))
-                    .alias("support")))
-
-
-def betweenness_batched(edges: DataFrame, k: int, batch: int = 32,
-                        max_iter: int = 30,
-                        scale: bool = False) -> DataFrame:
-    """``betweenness`` over k hash-sampled pivots, processed in batches
-    of ``batch`` pivots with the partial centrality sums accumulated
-    between batches — the implemented form of the pivot-batch memory
-    bound the base operator documents: per-batch state is
-    O(batch * V) frontier rows instead of O(k * V), at the cost of
-    one forward+backward sweep per batch. Dependencies are additive
-    over pivots, so the batched sum IS the single-batch result (gated
-    exactly in tests). ``scale=True`` applies the V/K estimator over
-    the FULL pivot count k, not per batch."""
-    if k < 1 or batch < 1:
-        raise ValueError("k and batch must be >= 1")
-    pivots = sample_pivots(edges, k).transform(checkpoint)
-    rows = pivots.collect()  # k ids — pivot-sized, driver-bounded
-    acc = None
-    spark = edges.sparkSession
-    for i in range(0, len(rows), batch):
-        chunk = spark.createDataFrame(rows[i:i + batch])
-        part = betweenness(edges, sources=chunk, max_iter=max_iter)
-        acc = part if acc is None else (
-            acc.unionByName(part).groupBy("node")
-            .agg(F.sum("bc").alias("bc")).transform(checkpoint))
-    if acc is None:
-        return edges.select(F.col("src").alias("node"),
-                            F.lit(0.0).alias("bc")).limit(0)
-    if scale:
-        nodes_n = (edges.select(F.col("src").alias("n"))
-                   .unionAll(edges.select(F.col("dst").alias("n")))
-                   .filter(F.col("n").isNotNull()).distinct().count())
-        if rows:
-            acc = acc.select("node", (F.col("bc")
-                                      * F.lit(nodes_n / len(rows)))
-                             .alias("bc"))
-    return acc
-
-
 def refine_communities(edges: DataFrame, labels: DataFrame,
                        max_rounds: int = 5,
                        weight_col: str = None) -> DataFrame:
@@ -738,86 +632,3 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
             break
         cur, best_n = nxt, n2
     return cur
-
-
-def contract_graph(edges: DataFrame, labels: DataFrame,
-                   weight_col: str = None) -> DataFrame:
-    """Louvain aggregation phase: collapse each community to one
-    supernode -> weighted edges (src, dst, w) where inter-community
-    weight sums onto one undirected edge and INTRA-community weight
-    becomes the supernode's self-loop — the exact information the
-    weighted ``modularity``/``refine_communities`` self-loop reading
-    consumes, so Q(contracted, identity) == Q(original, labels)
-    EXACTLY (gated in tests). Unlabeled nodes contract as singletons.
-
-    One label join per endpoint + one (community pair) sum — all
-    partial-agg; output is community-count-sized.
-    """
-    if weight_col is None:
-        base = _undirected(edges).withColumn("w", F.lit(1).cast("long"))
-    else:
-        uu = F.least(F.col("src"), F.col("dst"))
-        vv = F.greatest(F.col("src"), F.col("dst"))
-        base = (edges.select(uu.alias("u"), vv.alias("v"),
-                             F.col(weight_col).cast("long").alias("w"))
-                .groupBy("u", "v").agg(F.sum("w").alias("w")))
-    lab = labels.select("node", "community")
-    lu = lab.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = lab.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    tagged = (base.join(lu, "u", "left").join(lv, "v", "left")
-              .select(F.coalesce(F.col("cu"), F.col("u")).alias("cu"),
-                      F.coalesce(F.col("cv"), F.col("v")).alias("cv"),
-                      "w"))
-    return (tagged.select(F.least("cu", "cv").alias("src"),
-                          F.greatest("cu", "cv").alias("dst"), "w")
-            .groupBy("src", "dst").agg(F.sum("w").alias("w")))
-
-
-def louvain(edges: DataFrame, max_levels: int = 3,
-            max_rounds: int = 5, weight_col: str = None) -> DataFrame:
-    """Full Louvain community detection (Blondel et al. 2008), in this
-    module's deterministic-exact discipline -> (node, community).
-
-    Level 1 refines an ``lpa_communities`` partition on the input graph
-    (the synchronous local-move phase needs a non-singleton start — see
-    ``refine_communities``; LPA is the deterministic initializer).
-    Each further level CONTRACTS the communities to supernodes
-    (``contract_graph``: inter-community weights summed, intra weight
-    as self-loops) and re-refines the weighted community graph from
-    its identity partition, then composes the mapping back to original
-    nodes. Stops early when a level makes no move. Every accepted step
-    strictly increases the ORIGINAL graph's exact modularity numerator
-    (the contraction preserves Q exactly — the self-loop reading — so
-    the per-level accept gates compose), making the whole pipeline
-    Q-monotone and deterministic.
-
-    Scale shape: level 1 dominates (the O(E) refine rounds); every
-    later level runs on a community-count-sized graph.
-    """
-    mapping = refine_communities(edges, lpa_communities(edges),
-                                 max_rounds=max_rounds,
-                                 weight_col=weight_col).transform(checkpoint)
-    cur_edges, cur_w = edges, weight_col
-    lab_on_cur = mapping  # partition of cur_edges' node set
-    for _ in range(1, max_levels):
-        cg = contract_graph(cur_edges, lab_on_cur, cur_w).transform(checkpoint)
-        ident = (cg.select(F.col("src").alias("node"))
-                 .unionAll(cg.select(F.col("dst").alias("node")))
-                 .distinct()
-                 .withColumn("community", F.col("node")))
-        lab2 = refine_communities(cg, ident, max_rounds=max_rounds,
-                                  weight_col="w")
-        no_moves = (lab2.filter(F.col("node") != F.col("community"))
-                    .isEmpty())
-        if no_moves:
-            break
-        mapping = (mapping
-                   .join(lab2.withColumnRenamed("node", "community")
-                         .withColumnRenamed("community", "newc"),
-                         "community", "left")
-                   .select("node", F.coalesce(F.col("newc"),
-                                              F.col("community"))
-                           .alias("community"))
-                   .transform(checkpoint))
-        cur_edges, cur_w, lab_on_cur = cg, "w", lab2
-    return mapping

@@ -1,5 +1,5 @@
-"""HyperBall: HLL-counter propagation for ball sizes, the neighborhood
-function, and approximate harmonic/closeness centrality at graph scale.
+"""HyperBall: HLL-counter propagation for ball sizes and approximate
+harmonic centrality at graph scale.
 
 The web-scale centrality algorithm (Boldi & Vigna, "In-Core Computation
 of Geometric Centralities with HyperBall", 2013 — the method behind the
@@ -11,13 +11,10 @@ node an HLL counter seeded with itself, then iterate
 so after t rounds ``|B_t(v)|`` estimates the number of nodes within
 distance t of v — an all-sources BFS in O(diameter) rounds whose state
 is O(nodes · m) counters instead of O(nodes^2) distances. From the
-per-radius ball sizes follow, with no further graph work:
-
-* the **neighborhood function** N(t) = sum_v |B_t(v)| (how many pairs
-  are within distance t — the distance distribution's CDF);
-* **harmonic centrality** H(v) = sum_{t>=1} (|B_t(v)| - |B_{t-1}(v)|)/t,
-  the principled centrality for disconnected/web graphs (unreachable
-  nodes contribute 0 instead of breaking the mean, as closeness does).
+per-radius ball sizes follows, with no further graph work, **harmonic
+centrality** H(v) = sum_{t>=1} (|B_t(v)| - |B_{t-1}(v)|)/t, the
+principled centrality for disconnected/web graphs (unreachable nodes
+contribute 0 instead of breaking the mean, as closeness does).
 
 DataFrame realization: counters are the REGISTER TABLES of
 ``operators/sketch.py`` — (node, reg, rho) rows, md5-derived and
@@ -65,34 +62,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lineage import checkpoint
-from .sketch import RHO_MAX, estimate_constant, hll_sketch, rho_column
-
-
-def _ball_estimate(regs: DataFrame, b: int) -> DataFrame:
-    """Per-node ball-size estimate from a register table:
-    -> (node, est double). Raw HLL harmonic estimate with the
-    linear-counting small-range correction (the regime balls start in).
-    """
-    m = 1 << b
-    c = estimate_constant(b)
-    agg = regs.groupBy("node").agg(
-        F.count("*").cast("long").alias("present"),
-        F.sum(F.expr(f"shiftleft(1L, {RHO_MAX} - rho)")).alias("z_reg"))
-    zeros = (F.lit(m).cast("long") - F.col("present"))
-    z_num = F.col("z_reg") + zeros * F.lit(1 << RHO_MAX).cast("long")
-    raw = F.lit(c) / z_num.cast("double")
-    lc = F.lit(float(m)) * F.log(F.lit(float(m)) / zeros.cast("double"))
-    est = F.when((zeros > 0) & (raw <= F.lit(2.5 * m)), lc).otherwise(raw)
-    return agg.select("node", est.alias("est"))
+from .sketch import RHO_MAX, estimate_constant, rho_column
 
 
 def _dense_estimate(dense: DataFrame, b: int) -> DataFrame:
-    """Row-local twin of ``_ball_estimate`` over the dense counter rows
-    (node, regs array<int>[m], 0 = empty register): no groupBy at all.
-    An empty register's z term is shiftleft(1, RHO_MAX - 0) == the
-    zeros * 2^RHO_MAX term of the sparse estimator, so one aggregate fold
-    over the array IS the exact z_num; the division and linear-counting
-    branch are the identical expressions — bitwise-equal output."""
+    """Per-node ball-size estimate -> (node, est double), row-local over
+    the dense counter rows (node, regs array<int>[m], 0 = empty
+    register): no groupBy at all. Raw HLL harmonic estimate with the
+    linear-counting small-range correction (the regime balls start in).
+    An empty register's z term is shiftleft(1, RHO_MAX - 0), the
+    2^RHO_MAX every empty register adds to the harmonic sum, so one
+    aggregate fold over the array IS the exact integer z_num."""
     m = 1 << b
     c = estimate_constant(b)
     z_num = F.expr(
@@ -232,14 +212,6 @@ def _iterate_dense(edges: DataFrame, max_radius: int, b: int,
         yield r, dense
 
 
-def neighborhood_function(balls: DataFrame) -> DataFrame:
-    """-> (radius, nf double): N(r) = sum over nodes of |B_r(node)| —
-    the estimated count of ordered pairs within distance r (including
-    the r=0 self-pairs). One bounded agg over the hyperball output."""
-    return (balls.groupBy("radius").agg(F.sum("est").alias("nf"))
-            .orderBy("radius"))
-
-
 def harmonic_centrality_est(balls: DataFrame) -> DataFrame:
     """-> (node, harmonic double): H(v) = sum_{r>=1} (|B_r|-|B_{r-1}|)/r
     from the hyperball per-radius estimates — nodes first reached at
@@ -290,47 +262,3 @@ def exact_harmonic(edges: List[Tuple[str, str]],
             frontier = nxt
         out[v] = sum(1.0 / d for u, d in dist.items() if d > 0)
     return out
-
-
-def effective_diameter(balls: DataFrame, q: float = 0.9) -> DataFrame:
-    """-> one row (q, eff_diameter double, max_radius, nf_max): the
-    standard web-graph distance summary — the smallest radius at which
-    the neighborhood function reaches a fraction ``q`` of its final
-    value, with the textbook linear interpolation between the two
-    straddling radii (Palmer et al. 2002; the number reported as
-    "effective diameter" in the web/social-graph literature). Input is
-    the ``hyperball`` output; the whole computation is two bounded aggs
-    over the (radius)-sized neighborhood function — driver cost O(max
-    radius), nothing corpus-scale.
-
-    Interpolation: with N(r-1) < q*N(max) <= N(r),
-    eff = (r-1) + (q*N(max) - N(r-1)) / (N(r) - N(r-1)); radius 0
-    (the self-pairs) anchors the curve's left end. A truncated
-    ``max_radius`` that stopped before convergence yields the
-    truncation-relative value — same caveat as the harmonic tail,
-    documented on ``hyperball``.
-    """
-    if not (0.0 < q <= 1.0):
-        raise ValueError("q must be in (0, 1]")
-    nf = neighborhood_function(balls).collect()  # O(max radius) rows
-    if not nf:
-        raise ValueError("empty hyperball output")
-    rad = {int(r.radius): float(r.nf) for r in nf}
-    rmax = max(rad)
-    target = q * rad[rmax]
-    eff = float(rmax)
-    prev_r, prev_n = 0, rad.get(0, 0.0)
-    for r in range(0, rmax + 1):
-        if r not in rad:
-            continue
-        if rad[r] >= target:
-            if r == 0 or rad[r] == prev_n:
-                eff = float(r)
-            else:
-                eff = prev_r + (target - prev_n) / (rad[r] - prev_n)
-            break
-        prev_r, prev_n = r, rad[r]
-    spark = balls.sparkSession
-    return spark.createDataFrame(
-        [(float(q), float(eff), int(rmax), float(rad[rmax]))],
-        "q double, eff_diameter double, max_radius int, nf_max double")

@@ -88,13 +88,3 @@ def incremental_update(pages_a: DataFrame, pages_b: DataFrame,
                .select(*triples_a.columns))
     fresh = rebuild_fn(work)
     return carried.unionByName(fresh.select(*carried.columns))
-
-
-def update_report(pages_a: DataFrame, pages_b: DataFrame,
-                  fp_cols: Sequence[str] = DEFAULT_FP_COLS) -> DataFrame:
-    """Per-status page counts for the planned update — the number an
-    operator checks before launching the kernel job (added+changed is the
-    work size; at 100 TB this is the difference between minutes and
-    days)."""
-    return (page_delta(pages_a, pages_b, fp_cols)
-            .groupBy("status").agg(F.count("*").alias("n_pages")))

@@ -77,7 +77,7 @@ def _pattern_df(triples: DataFrame, pattern: Sequence[str],
     alternation inverts the WHOLE alternation — ``^p1|p2`` here means
     SPARQL's ``^(p1|p2)``, NOT the spec's ``(^p1)|p2`` precedence
     (mixed-direction alternation is a union of two scans, not one
-    filter; write ``union_bgp`` blocks for that — documented
+    filter; union two ``bgp_match`` results for that — documented
     divergence). Alternation does not combine with closure in one term
     (``(p1|p2)+`` — union two closure patterns instead; raised
     explicitly). Predicates literally named with a
@@ -673,28 +673,6 @@ def _apply_values(acc: DataFrame, bound: Sequence[str],
     return out
 
 
-def union_bgp(triples: DataFrame, blocks: Sequence[Sequence[Sequence[str]]],
-              select: Sequence[str],
-              distinct: bool = True) -> DataFrame:
-    """SPARQL ``{ BGP1 } UNION { BGP2 } ...``: each block is compiled
-    independently and the binding sets are unioned on the shared
-    ``select`` columns (every block must bind all of them — SPARQL's
-    unbound-var NULLs are deliberately rejected here; use ``optional``
-    inside a block for that). DISTINCT collapses duplicates across
-    blocks, matching SPARQL set semantics.
-    """
-    if not blocks:
-        raise ValueError("empty UNION")
-    outs = []
-    for i, pats in enumerate(blocks):
-        df = bgp_match(triples, pats, select=select, distinct=False)
-        outs.append(df)
-    acc = outs[0]
-    for df in outs[1:]:
-        acc = acc.unionByName(df)
-    return acc.distinct() if distinct else acc
-
-
 _AGG_FNS = {
     "count": lambda v: F.count(v),
     "count_distinct": lambda v: F.countDistinct(v),
@@ -781,29 +759,6 @@ def bgp_agg(triples: DataFrame, patterns: Sequence[Sequence[str]],
     return out
 
 
-def property_path(triples: DataFrame, start_var: str,
-                  preds: Sequence[str], end_var: str,
-                  distinct: bool = True) -> DataFrame:
-    """Fixed-length SPARQL property path ``start p1/p2/.../pk end``.
-
-    Sugar over ``bgp_match``: hop i joins on the intermediate variable
-    ``_h{i}``. Returns two columns (start_var, end_var). Unbounded ``*``
-    paths are the BFS/components operators' territory
-    (``operators/graphalgo.py``, ``operators/components.py``); a fixed
-    chain stays a pure relational plan with k-1 shuffles.
-    """
-    if not preds:
-        raise ValueError("property_path needs at least one predicate")
-    pats = []
-    prev = "?" + start_var
-    for i, p in enumerate(preds):
-        nxt = "?" + end_var if i == len(preds) - 1 else f"?_h{i}"
-        pats.append((prev, p, nxt))
-        prev = nxt
-    return bgp_match(triples, pats, select=[start_var, end_var],
-                     distinct=distinct)
-
-
 def property_path_plus(triples: DataFrame, pred: str,
                        start_var: str = "start",
                        end_var: str = "end",
@@ -824,8 +779,7 @@ def property_path_plus(triples: DataFrame, pred: str,
     Scale shape: the closure loop touches only ``pred`` edges (one pushed
     ``pred = literal`` scan), so cost tracks that predicate's edge count
     and hierarchy depth — not the 10^12-triple table. Closure output is
-    pair-bounded; for corpus-diameter graphs use bfs_dist/sssp instead
-    (same guidance as ``property_path``).
+    pair-bounded; for corpus-diameter graphs use bfs_dist/sssp instead.
     """
     from .inference import transitive_closure
     edges = (triples.filter(F.col("pred") == pred)

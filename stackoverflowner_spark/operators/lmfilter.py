@@ -8,21 +8,17 @@ Not a reference-repo operator; part of this engine's training-data
 surface alongside operators/textstats.py (heuristic quality) and
 operators/decontam.py (leakage guard).
 
-Two score channels, deliberately split:
-
-* **bit-cost (driver-oracled, exact).** Per bigram (w1, w2) with add-one
-  smoothing the model probability is (c12 + 1) / (c1 + V). Its cost in
-  WHOLE BITS is ``bitlen(c1 + V) - bitlen(c12 + 1)`` where
-  ``bitlen(n) = length(bin(n))`` = floor(log2 n) + 1 — pure integer
-  arithmetic on counts, so the per-document sum is order-independent
-  and bitwise-identical cross-engine (cross-engine ``ln`` is NOT
-  IEEE-correctly-rounded, so a float log-prob sum can never be driver-
-  hashed; this integer Shannon-code-length proxy can). The keep
-  decision compares rationals in integers — ``sum_bits * 10 <=
-  max_bits_x10 * n_bigrams`` — so the filter itself is exact too.
-* **float perplexity (pytest-gated).** The conventional
-  ``exp(-mean ln p)`` figure for reporting/banding, validated against a
-  dense numpy replay at 1e-12 in tests/test_lmfilter.py, never hashed.
+The score is a **bit-cost** (driver-oracled, exact). Per bigram (w1, w2)
+with add-one smoothing the model probability is (c12 + 1) / (c1 + V).
+Its cost in WHOLE BITS is ``bitlen(c1 + V) - bitlen(c12 + 1)`` where
+``bitlen(n) = length(bin(n))`` = floor(log2 n) + 1 — pure integer
+arithmetic on counts, so the per-document sum is order-independent and
+bitwise-identical cross-engine (cross-engine ``ln`` is NOT
+IEEE-correctly-rounded, so a float log-prob sum can never be driver-
+hashed; this integer Shannon-code-length proxy can). The keep decision
+compares rationals in integers — ``sum_bits * 10 <= max_bits_x10 *
+n_bigrams`` — so the filter itself is exact too. The conventional float
+perplexity ``exp(-mean ln p)`` is not computed.
 
 Scale shape at 100 TB: the model is vocab-sized (bounded by the
 reference slice, millions of rows at most) — both count tables ride
@@ -115,27 +111,3 @@ def keep_by_bitcost(scored: DataFrame, max_bits_x10: int) -> DataFrame:
     ok = (F.col("n_bigrams") == 0) | \
          (F.col("sum_bits") * 10 <= F.lit(max_bits_x10) * F.col("n_bigrams"))
     return scored.withColumn("keep", ok.cast("long"))
-
-
-def with_perplexity(docs: DataFrame, uni: DataFrame, big: DataFrame,
-                    vocab_size: int, text_col: str = "text") -> DataFrame:
-    """Float add-one-smoothed bigram perplexity per document —
-    exp(-mean ln((c12+1)/(c1+V))) — for reporting and band selection.
-    Engine-local floats (ln is not correctly rounded cross-engine), so
-    pytest-gated against numpy, never driver-hashed. NULL for docs with
-    no bigrams."""
-    bg = _bigrams(docs, text_col)
-    j = (bg
-         .join(F.broadcast(uni), "w1", "left")
-         .join(F.broadcast(big), ["w1", "w2"], "left"))
-    lp = (F.log((F.coalesce("c12", F.lit(0)) + F.lit(1.0)))
-          - F.log((F.coalesce("c1", F.lit(0)) + F.lit(float(vocab_size)))))
-    per = (j.groupBy("doc_id")
-           .agg(F.count("*").alias("n_bigrams"),
-                F.sum(lp).alias("sum_lp")))
-    ppl = F.exp(-F.col("sum_lp") / F.col("n_bigrams"))
-    return (docs.join(per, "doc_id", "left")
-            .withColumn("perplexity",
-                        F.when(F.col("n_bigrams").isNull(),
-                               F.lit(None).cast("double")).otherwise(ppl))
-            .drop("sum_lp"))

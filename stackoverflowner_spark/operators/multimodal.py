@@ -1,12 +1,12 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
-kernels. The decode step itself is STUBBED (no image/audio libs in this
-container): ``decode_stub`` produces a deterministic fake feature vector from
-the payload bytes, and ``decode_real`` raises NotImplementedError at the
-exact spot a PIL/ffmpeg call would go. The Spark-side plumbing — schema,
-partition sizing, UDF signature, batch shape — is real and tested.
+feature-extract run as an Arrow-batched ``mapInPandas`` kernel. The decode
+step itself is STUBBED (no image/audio libs in this container):
+``decode_stub`` produces a deterministic fake feature vector from the payload
+bytes, and ``decode_real`` raises NotImplementedError at the exact spot a
+PIL/ffmpeg call would go. The Spark-side plumbing — schema, partition sizing,
+UDF signature, batch shape — is real and tested.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -93,15 +92,3 @@ def extract_features(media: DataFrame, dim: int = 16, use_stub: bool = True
             yield pd.DataFrame(rows, columns=["media_id", "kind", "features", "n_bytes"])
 
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per (media_id, frame_ts) — the
-    sampling schedule is columnar; actual frame decode is the stubbed step."""
-    v = media.filter(F.col("kind") == "video")
-    return v.select(
-        "media_id",
-        F.explode(F.sequence(
-            F.lit(0), F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-            F.lit(every_ms))).alias("frame_ts_ms"),
-    )

@@ -81,101 +81,6 @@ def pagerank(edges: DataFrame, iterations: int = 20, damping: float = 0.85,
     return ranks
 
 
-def pagerank_weighted(edges: DataFrame, iterations: int = 20,
-                      damping: float = 0.85,
-                      partitions: int | None = None,
-                      weight_col: str = "w") -> DataFrame:
-    """edges(src, dst, w) -> (node, rank): PageRank with contributions
-    proportional to edge weight — rank flows as ``rank · w / Σw(src)``.
-    The natural reading over the co-mention evidence graph
-    (operators/cooccur.comention_edges), where an edge seen in 40
-    documents should carry 40x the vote of a one-off. Multi-edges SUM
-    their weights (vs. the unweighted collapse); non-positive weights
-    are dropped. Same iteration discipline and same pytest-parity class
-    as :func:`pagerank`."""
-    spark = edges.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
-    e = (edges.select("src", "dst",
-                      F.col(weight_col).cast("double").alias("_w"))
-         .filter(F.col("_w") > 0)
-         .groupBy("src", "dst").agg(F.sum("_w").alias("_w"))
-         .repartition(p, "src").persist())
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct().transform(checkpoint))
-    n = nodes.count()
-    wdeg = e.groupBy("src").agg(F.sum("_w").alias("_wd"))
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).transform(checkpoint)
-    for _ in range(iterations):
-        contribs = (e.join(wdeg, "src")
-                    .join(ranks, F.col("src") == F.col("node"))
-                    .select("dst", (F.col("rank") * F.col("_w")
-                                    / F.col("_wd")).alias("c"))
-                    .groupBy("dst").agg(F.sum("c").alias("contrib")))
-        dangling = (ranks.join(wdeg, ranks.node == wdeg.src, "left_anti")
-                    .agg(F.sum("rank")).first()[0] or 0.0)
-        base = (1.0 - damping) / n + damping * dangling / n
-        ranks = (nodes.join(contribs, nodes.node == contribs.dst, "left")
-                 .select("node",
-                         (F.lit(base)
-                          + F.lit(damping) * F.coalesce("contrib",
-                                                        F.lit(0.0))
-                          ).alias("rank"))
-                 .transform(checkpoint))
-    e.unpersist()
-    return ranks
-
-
-def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          iterations: int = 20, damping: float = 0.85,
-                          partitions: int | None = None) -> DataFrame:
-    """edges(src, dst) + seeds(node) -> (node, rank): PageRank with the
-    teleport (and the dangling-mass redistribution) restricted to the
-    seed set — rank becomes "importance RELATIVE to these entities", the
-    topic-sensitive variant (Haveliwala 2002, public method) used for
-    seed-anchored KG expansion and trust propagation. Mass stays exactly
-    1; nodes unreachable from the seeds converge to rank 0. Same
-    iteration discipline and pytest-parity class as :func:`pagerank`."""
-    spark = edges.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
-    e = (edges.select("src", "dst").distinct()
-         .repartition(p, "src").persist())
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .union(seeds.select("node"))
-             .distinct().transform(checkpoint))
-    s = seeds.select("node").distinct().transform(checkpoint)
-    ns = s.count()
-    if ns == 0:
-        raise ValueError("personalized_pagerank needs at least one seed")
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # teleport vector: uniform over seeds, 0 elsewhere
-    tele = (nodes.join(s.withColumn("_t", F.lit(1.0 / ns)), "node", "left")
-            .select("node", F.coalesce("_t", F.lit(0.0)).alias("t"))
-            .transform(checkpoint))
-
-    ranks = tele.select("node", F.col("t").alias("rank")).transform(checkpoint)
-    for _ in range(iterations):
-        contribs = (e.join(deg, "src")
-                    .join(ranks, F.col("src") == F.col("node"))
-                    .select("dst", (F.col("rank") / F.col("deg"))
-                            .alias("c"))
-                    .groupBy("dst").agg(F.sum("c").alias("contrib")))
-        dangling = (ranks.join(deg, ranks.node == deg.src, "left_anti")
-                    .agg(F.sum("rank")).first()[0] or 0.0)
-        scale = (1.0 - damping) + damping * dangling
-        ranks = (tele.join(contribs, tele.node == contribs.dst, "left")
-                 .select("node",
-                         (F.col("t") * F.lit(scale)
-                          + F.lit(damping) * F.coalesce("contrib",
-                                                        F.lit(0.0))
-                          ).alias("rank"))
-                 .transform(checkpoint))
-    e.unpersist()
-    return ranks
-
-
 def hits(edges: DataFrame, iterations: int = 20,
          partitions: int | None = None) -> DataFrame:
     """Kleinberg's HITS on edges(src, dst) -> (node, hub, authority),
@@ -245,18 +150,3 @@ def entity_pagerank(triples: DataFrame, iterations: int = 20,
              .select("subj", "obj")
              .withColumnRenamed("subj", "src").withColumnRenamed("obj", "dst"))
     return pagerank(edges, iterations=iterations, damping=damping)
-
-
-def entity_pagerank_weighted(triples: DataFrame, iterations: int = 20,
-                             damping: float = 0.85) -> DataFrame:
-    """Evidence-weighted variant of :func:`entity_pagerank`: each
-    alias_of/instance_of edge votes once per distinct page url that
-    asserted it (the evidence-level triple table keeps urls), so a
-    relation corroborated by 40 pages outweighs a one-off extraction —
-    the co-mention-weighted reading of KG importance."""
-    w = (triples.filter(F.col("pred").isin("alias_of", "instance_of"))
-         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"),
-                 "url")
-         .groupBy("src", "dst")
-         .agg(F.count_distinct("url").alias("w")))
-    return pagerank_weighted(w, iterations=iterations, damping=damping)

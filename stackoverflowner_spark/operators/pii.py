@@ -67,16 +67,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col or text_col, t)
 
 
-def pii_document_filter(df: DataFrame, text_col: str = "text",
-                        max_hits: int = 0) -> DataFrame:
-    """Drop documents with more than ``max_hits`` PII matches (default:
-    any) — the hard-filter variant some pipelines prefer over scrubbing
-    for high-risk corpora. Keeps the input schema."""
-    counted = with_pii_counts(df, text_col)
-    return counted.filter(F.col("pii_total") <= max_hits).drop(
-        *[f"pii_{n}" for n, _, _ in PII_PATTERNS], "pii_total")
-
-
 def duckdb_mirror_sql(table: str = "docs", text_col: str = "text",
                       id_col: str = "doc_id") -> str:
     """The DuckDB restatement of ``with_pii_counts`` + ``scrub_pii`` for

@@ -59,7 +59,7 @@ def histogram_sketch(df: DataFrame, cents_col: Column,
     ``hi - lo`` must divide evenly into ``n_bins`` (exact integer bin
     bounds are the contract). Out-of-range values clamp into the edge
     bins, so the sketch stays total over any input. Mergeable: union
-    sketches and re-aggregate with ``merge_histograms``."""
+    sketches and re-sum ``cnt`` per ``bin``."""
     if n_bins < 1 or hi_cents <= lo_cents:
         raise ValueError("need n_bins >= 1 and hi_cents > lo_cents")
     if (hi_cents - lo_cents) % n_bins:
@@ -70,14 +70,6 @@ def histogram_sketch(df: DataFrame, cents_col: Column,
     bin_ = F.least(F.lit(n_bins - 1).cast("long"), raw)
     return (df.select(bin_.alias("bin"))
             .groupBy("bin").agg(F.count("*").cast("long").alias("cnt")))
-
-
-def merge_histograms(*hists: DataFrame) -> DataFrame:
-    """Sum-merge histograms built with the same binning."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    return out.groupBy("bin").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def histogram_quantiles(hist: DataFrame, q_pcts: list[int],

@@ -1,87 +1,43 @@
-"""robots.txt parsing and crawl-politeness filtering.
+"""robots.txt crawl-politeness filtering.
 
 The legality gate every crawl pipeline runs before fetching or keeping
-a page: parse each host's robots.txt into (agent, allow/disallow,
-path-prefix) rules and decide per URL whether the configured agent may
-use it. Engine-beyond-reference surface in the crawl family of
-operators/linkgraph.py / operators/crawldiff.py, motivated by
-BASELINE.json's Common-Crawl-style input.
+a page: given each host's robots.txt rules as (host, agent,
+allow/disallow, path-prefix) rows, decide per URL whether the
+configured agent may use it. Engine-beyond-reference surface in the
+crawl family of operators/linkgraph.py / operators/crawldiff.py,
+motivated by BASELINE.json's Common-Crawl-style input. Parsing the
+robots.txt text into those rows is not implemented; the
+``robots_filter`` driver entry derives its rule groups from the fixture.
 
 Semantics (the RFC 9309 core, documented subset):
 
-* rule groups start at ``User-agent:`` lines; ``Allow:`` / ``Disallow:``
-  lines bind to the most recent group. Comments (``#``) and unknown
-  directives are ignored. A group may list several consecutive
-  user-agents (all get the group's rules).
+* agent is lowercased; kind is ``allow`` or ``disallow``. An empty rule
+  path is a no-op per the RFC ("Disallow:" = allow all) and belongs
+  nowhere in the rules frame.
 * group selection per host: if any group names the target agent
   exactly (case-insensitive), ONLY those rules apply; otherwise the
   ``*`` groups apply; a host with no applicable rules allows everything.
 * per-URL decision: the longest matching path prefix wins; on a
   length tie allow beats disallow; no matching rule means allowed.
-  An empty rule path is a no-op per the RFC ("Disallow:" = allow all)
-  and is dropped at parse time.
 * ``*``/``$`` wildcards are OUT of scope (documented: their regex
   translation is a cross-engine escaping hazard; the prefix core is
   what Common Crawl itself honors for the overwhelming rule majority).
 
-Scale shape at 100 TB: robots texts are hosts-sized (millions of rows,
-kilobytes each), never corpus-sized — parsing is one narrow explode +
-one per-host window over line numbers, all on the small side. The
-per-host rules then collapse to one array row per host and ride a
-BROADCAST join onto the page scan; the longest-match pick is a
+Scale shape at 100 TB: robots rules are hosts-sized, never
+corpus-sized. The per-host rules collapse to one array row per host and
+ride a BROADCAST join onto the page scan; the longest-match pick is a
 row-local ``array_max`` over the matching rules. Net: ONE corpus scan,
 ZERO corpus shuffle, zero Python. Decision logic is pure string/integer
 column expressions, so the match core is bitwise oracle-checkable
-cross-engine (tests + the ``robots_filter`` driver entry); text parsing
-is pytest-gated on planted specimens (same split as
-operators/linkgraph.py's href extraction).
+cross-engine (tests + the ``robots_filter`` driver entry).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.linkgraph import canonical_parts
-
-
-def parse_robots(robots: DataFrame, host_col: str = "host",
-                 text_col: str = "robots_txt") -> DataFrame:
-    """robots(host, robots_txt) -> rules(host, agent, kind, prefix).
-
-    Columnar parse: split to lines, posexplode (order = group identity),
-    per-host running sum over ``User-agent`` starts assigns each
-    directive to its group, then directives join back to their group's
-    agent lines. agent is lowercased; kind in ('allow', 'disallow');
-    empty-path rules dropped (RFC no-ops)."""
-    lines = (robots
-             .select(F.col(host_col).alias("host"),
-                     F.posexplode(F.split(F.col(text_col), "\n"))
-                     .alias("line_no", "raw"))
-             # strip comments, trim
-             .select("host", "line_no",
-                     F.trim(F.regexp_replace("raw", "#.*", "")).alias("ln")))
-    directive = F.lower(F.regexp_extract("ln", r"^([A-Za-z-]+)\s*:", 1))
-    value = F.trim(F.regexp_replace("ln", r"^[A-Za-z-]+\s*:", ""))
-    parsed = lines.select(
-        "host", "line_no", directive.alias("d"), value.alias("v"))
-    # a new group starts at a user-agent line NOT directly preceded by
-    # another user-agent line (consecutive agents share one group)
-    w = Window.partitionBy("host").orderBy("line_no")
-    prev_d = F.lag("d").over(w)
-    grp = F.sum(
-        ((F.col("d") == "user-agent")
-         & (F.coalesce(prev_d, F.lit("")) != "user-agent")).cast("int")
-    ).over(w)
-    g = parsed.withColumn("grp", grp).filter(F.col("grp") > 0)
-    agents = (g.filter(F.col("d") == "user-agent")
-              .select("host", "grp", F.lower(F.col("v")).alias("agent")))
-    rules = (g.filter(F.col("d").isin("allow", "disallow")
-                      & (F.col("v") != ""))
-             .select("host", "grp", F.col("d").alias("kind"),
-                     F.col("v").alias("prefix")))
-    return (rules.join(agents, ["host", "grp"])
-            .select("host", "agent", "kind", "prefix"))
 
 
 def effective_rules(rules: DataFrame, agent: str) -> DataFrame:
@@ -100,8 +56,8 @@ def effective_rules(rules: DataFrame, agent: str) -> DataFrame:
 def robots_decide(pages: DataFrame, rules: DataFrame, agent: str = "*",
                   url_col: str = "url") -> DataFrame:
     """pages + (host, path, allowed, rule_kind, rule_prefix): the
-    longest-prefix decision per URL. ``rules`` is the 4-col
-    :func:`parse_robots` output (or any frame shaped like it).
+    longest-prefix decision per URL. ``rules`` is a 4-col
+    (host, agent, kind, prefix) frame.
 
     Zero corpus shuffle: the per-host rules collapse to ONE array row
     per host (hosts-sized), ride a broadcast join, and the longest-

@@ -10,10 +10,10 @@ Scale shape: ONE shuffle on the user key (the window partition); the
 rollup reuses the same partitioning (groupBy on a superset of the window
 key), so Catalyst plans zero additional Exchanges. Per-task memory is one
 user's events — the natural unit; a pathological single-user firehose is
-the one skew case, and that input is better served by the streaming path
-(``streaming/ingest.windowed_mention_counts``-style watermark windows)
-than by salting, because session assignment is order-dependent and cannot
-be salted without breaking gap semantics across salt boundaries.
+the one skew case, and that input is better served by a streaming path
+(watermarked event-time windows) than by salting, because session
+assignment is order-dependent and cannot be salted without breaking gap
+semantics across salt boundaries.
 
 Timestamps are compared in epoch microseconds (``unix_micros`` over the
 UTC-pinned session, matching DuckDB's ``epoch_us`` bit-for-bit), the same

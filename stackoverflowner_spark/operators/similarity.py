@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from typing import List
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -128,7 +127,7 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
 
 
 def ivf_centroids(dim: int, n_centroids: int = 8) -> List[List[float]]:
-    """Deterministic seed centroids (kmeans stand-in; same shape contract)."""
+    """Deterministic seed centroids (md5-hashed, so identical everywhere)."""
     return [
         [float(x) for x in hashed_embedding([f"ivf-centroid-{i}"], dim=dim)[0]]
         for i in range(n_centroids)
@@ -153,68 +152,20 @@ def _nearest_col(n_centroids: int):
 
 
 def ivf_assignments(corpus: DataFrame, dim: int, n_centroids: int = 8,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    centroids: List[List[float]] | None = None) -> DataFrame:
-    """Coarse IVF partitioning: assign each vector to its nearest centroid
-    (argmax cosine; lowest index wins ties). Default centroids are the
-    deterministic seeds; pass ``kmeans_fit`` output for trained ones."""
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_centroids)
+                    id_col: str = "vec_id", vec_col: str = "embedding"
+                    ) -> DataFrame:
+    """Coarse IVF partitioning: assign each vector to its nearest
+    ``ivf_centroids`` seed (argmax cosine; lowest index wins ties)."""
+    cents = ivf_centroids(dim, n_centroids)
     df = corpus.select(F.col(id_col), F.col(vec_col),
                        *_centroid_scores(F.col(vec_col), cents))
     return df.select(F.col(id_col), F.col(vec_col),
                      _nearest_col(len(cents)).alias("centroid"))
 
 
-def kmeans_fit(corpus: DataFrame, dim: int, k: int = 8, iters: int = 5,
-               vec_col: str = "embedding",
-               init: List[List[float]] | None = None) -> List[List[float]]:
-    """Distributed Lloyd iterations for IVF centroid training.
-
-    Per iteration, entirely declarative: centroid literals are baked into
-    the plan (k*dim floats — effectively a broadcast), one corpus pass
-    computes the nearest-centroid assignment with JVM higher-order
-    functions, and the mean update is a posexplode -> groupBy(centroid,
-    dim) sum/count. Partial (map-side) aggregation makes the shuffle
-    O(partitions * k * dim) rows regardless of corpus size, and only
-    k*dim aggregated floats ever reach the driver. Deterministic: seeded
-    init, lowest-index tie-breaks, no RNG — reruns converge identically.
-
-    Empty clusters keep their previous centroid (standard Lloyd fallback).
-    Assignment uses cosine (normalized dot), matching ``ivf_assignments``/
-    ``ivf_topk``; means are arithmetic (spherical k-means up to the final
-    normalization, which cosine scoring makes irrelevant).
-    """
-    cents = [list(map(float, c)) for c in (init or ivf_centroids(dim, k))]
-    for _ in range(iters):
-        assigned = corpus.select(
-            F.col(vec_col), *_centroid_scores(F.col(vec_col), cents)
-        ).select(_nearest_col(len(cents)).alias("centroid"), F.col(vec_col))
-        rows = (
-            assigned.select("centroid",
-                            F.posexplode(vec_col).alias("d", "v"))
-            .groupBy("centroid", "d")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"),
-                 F.count("*").alias("n"))
-            .collect()  # k*dim aggregated rows — driver-side tiny
-        )
-        sums: dict = {}
-        for r in rows:
-            sums[(r["centroid"], r["d"])] = (r["s"], r["n"])
-        new_cents = []
-        for c in range(len(cents)):
-            if (c, 0) in sums:
-                new_cents.append([sums[(c, d)][0] / sums[(c, d)][1]
-                                  for d in range(dim)])
-            else:
-                new_cents.append(cents[c])  # empty cluster: keep
-        cents = new_cents
-    return cents
-
-
 def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
              n_centroids: int = 8, nprobe: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding", q_id_col: str = "q_id",
-             centroids: List[List[float]] | None = None) -> DataFrame:
+             vec_col: str = "embedding", q_id_col: str = "q_id") -> DataFrame:
     """IVF search: score only corpus vectors whose centroid is among the
     query's ``nprobe`` nearest centroids.
 
@@ -222,9 +173,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     pairwise work); each query touches nprobe/n_centroids of the corpus.
     At 10^9+ vectors the assignment would be written out partitioned by
     ``centroid`` so probes prune partitions at scan time."""
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_centroids)
-    assigned = ivf_assignments(corpus, dim, n_centroids, id_col, vec_col,
-                               centroids=cents)
+    cents = ivf_centroids(dim, n_centroids)
+    assigned = ivf_assignments(corpus, dim, n_centroids, id_col, vec_col)
 
     q = queries.select(F.col(q_id_col), F.col(vec_col).alias("q_vec"),
                        *_centroid_scores(F.col(vec_col), cents))

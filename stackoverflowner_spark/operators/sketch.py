@@ -85,16 +85,6 @@ def hll_sketch(df: DataFrame, keys: list[str], value: str,
             .groupBy(*keys, "reg").agg(F.max("rho").alias("rho")))
 
 
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union register tables; max(rho) per (keys, reg). Exactly equals
-    the sketch of the unioned inputs (max is idempotent/commutative)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c not in ("reg", "rho")]
-    return out.groupBy(*keys, "reg").agg(F.max("rho").alias("rho"))
-
-
 def hll_estimate(regs: DataFrame, b: int = 8) -> DataFrame:
     """-> (keys..., present, zeros, z_num, est). ``z_num`` = Z·2^40 as an
     exact bigint; ``est`` = estimate_constant(b) / z_num, bitwise stable
@@ -179,17 +169,6 @@ def cm_sketch(df: DataFrame, keys: list[str], value: str,
             .agg(cnt.alias("cnt")))
 
 
-def cm_merge(*sketches: DataFrame) -> DataFrame:
-    """Union counter tables; sum(cnt) per cell. Exactly equals the
-    sketch of the unioned inputs (count is additive)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c not in ("depth", "bucket", "cnt")]
-    return (out.groupBy(*keys, "depth", "bucket")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
 def cm_estimate(sketch: DataFrame, probes: DataFrame, value: str,
                 d: int = CM_DEPTH, w: int = CM_WIDTH,
                 keys: list[str] | None = None) -> DataFrame:
@@ -262,15 +241,6 @@ def bloom_build(df: DataFrame, value: str, k: int = BLOOM_K,
             .agg(F.bit_or(F.call_function(
                 "shiftleft", F.lit(1).cast("long"), F.col("bit")))
                 .alias("bits")))
-
-
-def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """Union packed block tables; bit_or per block. Exactly equals the
-    filter built from the unioned inputs (OR is idempotent)."""
-    out = blooms[0]
-    for b in blooms[1:]:
-        out = out.unionByName(b)
-    return out.groupBy("block").agg(F.bit_or("bits").alias("bits"))
 
 
 def bloom_contains(value: Column, blocks: dict[int, int],

@@ -160,51 +160,3 @@ def winnow_candidates(docs: DataFrame, n: int, w: int,
     return (a.join(b, "fp")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct())
-
-
-def scrub_repeated(docs: DataFrame, n: int, stride: int = 1,
-                   min_count: int = 2, key_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """The paper's action applied per document: rebuild ``text`` with every
-    duplicated span's tokens removed (clean documents pass through
-    unchanged). Span semantics identical to ``repeated_spans``; the
-    rebuild filters each document's token array against its own spans with
-    a JVM higher-order ``filter`` over a row-local span list — span lists
-    are per-document output-sized (bounded by n_tokens / n), never a
-    corpus-sized broadcast."""
-    w = window_hashes(docs, n, stride, key_col, text_col)
-    # same one-pass count-over-partition rewrite as repeated_spans
-    hits = (w.withColumn("__cnt", F.count("*").over(
-                Window.partitionBy("whash")))
-            .filter(F.col("__cnt") >= min_count)
-            .select(key_col, "start"))
-    # per-document sorted starts; merge to [s, e) spans row-locally
-    agg = hits.groupBy(key_col).agg(
-        F.array_sort(F.collect_list("start")).alias("starts"))
-    def _merge(acc, s):
-        # F.get is null-safe on the empty accumulator (ANSI mode would
-        # make element_at(acc, -1) throw); NULL <= comparison is NULL,
-        # so the first window always takes the otherwise branch.
-        last = F.get(acc, F.size(acc) - 1)
-        return F.when(
-            s <= last["e"],
-            F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                     F.array(F.struct(
-                         last["s"].alias("s"),
-                         F.greatest(last["e"], s + n).alias("e")))),
-        ).otherwise(F.concat(acc, F.array(F.struct(
-            s.alias("s"), (s + n).alias("e")))))
-
-    spans = F.aggregate(
-        "starts", F.array().cast("array<struct<s:long,e:long>>"), _merge)
-    marked = agg.select(key_col, spans.alias("spans"))
-    joined = docs.join(marked, key_col, "left")
-    toks = F.split(F.col(text_col), " ")
-    kept = F.filter(
-        toks,
-        lambda t, i: ~F.exists(
-            F.coalesce(F.col("spans"),
-                       F.array().cast("array<struct<s:long,e:long>>")),
-            lambda sp: (i >= sp["s"]) & (i < sp["e"])))
-    out_cols = [c for c in docs.columns if c != text_col]
-    return joined.select(*out_cols, F.array_join(kept, " ").alias(text_col))

@@ -22,7 +22,7 @@ def triples_from_linked(linked: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Evidence-level triples: every row keeps its source url, deduplicated
     on (subj, pred, obj, url). This keeps the stage idempotent per
     url-bucket, which is what makes bucket-granular resume safe
-    (plans/pipeline.py); logical triples are ``distinct_triples`` below.
+    (plans/pipeline.py); logical triples are its distinct (subj, pred, obj).
 
     The three predicates are emitted via ONE generator, not a union of
     three projections: a union would make Catalyst re-execute the upstream
@@ -40,15 +40,6 @@ def triples_from_linked(linked: DataFrame, n_buckets: int = 64) -> DataFrame:
     return linked.selectExpr(f"inline(array({arms}))").distinct().selectExpr(
         "subj", "pred", "obj", "url",
         f"CAST(pmod(xxhash64(subj), {int(n_buckets)}) AS INT) AS part_hash")
-
-
-def distinct_triples(triples: DataFrame) -> DataFrame:
-    """Logical (subj, pred, obj) view over the evidence-level table."""
-    return triples.select("subj", "pred", "obj").distinct()
-
-
-def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
-    triples.write.mode(mode).partitionBy("part_hash").parquet(path)
 
 
 def write_triples_sorted(triples: DataFrame, path: str,
@@ -78,20 +69,6 @@ def write_triples_sorted(triples: DataFrame, path: str,
     if block_size is not None:
         w = w.option("parquet.block.size", str(block_size))
     w.partitionBy("part_hash").parquet(path)
-
-
-def read_subject(spark, path: str, subj: str,
-                 n_buckets: int = 64) -> DataFrame:
-    """Point lookup: compute the literal's part_hash driver-side so the
-    scan prunes to ONE partition directory, then filter subj (pushed to
-    parquet, where the sorted layout's row-group stats bound the read
-    to ~one row group)."""
-    bucket = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(subj)), F.lit(n_buckets)).cast("int")
-        .alias("b")).first().b
-    return (spark.read.parquet(path)
-            .filter((F.col("part_hash") == bucket)
-                    & (F.col("subj") == subj)))
 
 
 def _esc_literal(col: F.Column) -> F.Column:
@@ -143,18 +120,6 @@ def ntriples_lines(triples: DataFrame,
         obj, F.lit(" ."))
     return (triples.select("subj", "pred", "obj").distinct()
             .select(line.alias("line")))
-
-
-def write_triples_bucketed(triples: DataFrame, table: str, n_buckets: int = 64,
-                           mode: str = "overwrite") -> None:
-    """Bucketed managed table (`bucketBy(subj)`): downstream subject-keyed
-    joins and aggregations read co-located buckets and skip the exchange
-    entirely — the parquet+partitionBy variant above prunes partitions but
-    still shuffles on join. On Iceberg this is `bucket(N, subj)` partition
-    transform; here it is the Spark managed-table equivalent."""
-    (triples.write.mode(mode)
-     .bucketBy(n_buckets, "subj").sortBy("subj")
-     .format("parquet").saveAsTable(table))
 
 
 def _unesc_literal(col: F.Column) -> F.Column:

@@ -4,9 +4,8 @@ All are pure DataFrame aggregations: explode -> groupBy -> count ->
 row_number. These stay entirely JVM-side (whole-stage codegen); the shuffle
 key is the word, with AQE coalescing small partitions.
 
-Reference parity:
-  create_dico      utils_so.py:53-65
-  create_mapping   utils_so.py:68-76 (ids ordered by -freq, then item asc)
+Reference parity (create_dico/create_mapping, utils_so.py:53-76, are
+restated in ``__spark_entry__.q_vocab_mapping``):
   char vocab       loader_so.py:339-349
   tag vocab        loader_so.py:352-363
   entity ranking   utils_so.py:409-457 (Sort_Entity_by_Count)
@@ -24,15 +23,6 @@ def words_from_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace word explode (single-space split, like the CoNLL loaders'
     ``line.split()`` discipline on pre-tokenized text)."""
     return df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
-
-
-def create_dico(items: DataFrame, col: str = "word") -> DataFrame:
-    return items.groupBy(col).agg(F.count("*").alias("freq"))
-
-
-def create_mapping(dico: DataFrame, col: str = "word") -> DataFrame:
-    w = Window.orderBy(F.desc("freq"), F.asc(col))
-    return dico.withColumn("item_id", F.row_number().over(w))
 
 
 def char_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:

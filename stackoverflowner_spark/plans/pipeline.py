@@ -80,8 +80,7 @@ class KGPipeline:
     def __init__(self, spark: SparkSession, out_root: str,
                  n_buckets: int = 16, tagger: Optional[Tagger] = None,
                  lang_filter: Optional[str] = "en",
-                 link_strategy: str = "broadcast",
-                 doc_consistency: bool = True):
+                 link_strategy: str = "broadcast"):
         self.spark = spark
         self.out_root = out_root
         self.n_buckets = n_buckets
@@ -92,7 +91,7 @@ class KGPipeline:
         # in-kernel on the fused path (zero shuffle), declarative
         # propagate_mentions on the modular path — same result, gated in
         # tests/test_spark_pipeline.py::test_checkpoint_resume_no_recompute
-        self.doc_consistency = doc_consistency
+        self.doc_consistency = True
         self.dictionary = dictionary_df(spark)
         self.lineage = Lineage(out_root)
 

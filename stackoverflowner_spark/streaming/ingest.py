@@ -10,7 +10,6 @@ loop) into readStream -> transform -> writeStream:
   streaming read / Kafka crawl feed),
 * the fused pages->mentions kernel applied as-is (mapInPandas works on
   streaming DataFrames),
-* watermarked sliding-window mention counts as the stateful example,
 * foreachBatch triple upsert (dedup against the batch — idempotent appends).
 """
 
@@ -19,10 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernel.document import page_batch_mentions
-from ..operators.document_kernel import (_freeze_worker_heap,
-                                         _tagger_broadcast, page_bodies,
-                                         pages_to_mentions_fused)
+from ..operators.document_kernel import pages_to_mentions_fused
 from ..operators.link import link
 from ..operators.tagger import GazetteerTagger
 from ..operators.triples import triples_from_linked
@@ -36,45 +32,6 @@ def stream_pages(spark: SparkSession, pages_dir: str,
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
-    )
-
-
-def windowed_mention_counts(pages_stream: DataFrame, tagger=None,
-                            window: str = "10 minutes",
-                            slide: str = "5 minutes",
-                            watermark: str = "15 minutes") -> DataFrame:
-    """Stateful example: mention counts per entity surface in sliding event-
-    time windows of warc_ts with a late-data watermark. The kernel wrapper
-    carries the event time through the Python stage so no stream-stream join
-    is needed.
-
-    Every page is counted (no lang filter) and doc-consistency is OFF: the
-    mentions are exactly ``pages_to_mentions_fused(pages, tagger,
-    lang_filter=None, doc_consistency=False)``, the raw fused kernel and the
-    ``start_triples_stream`` default (gated in
-    tests/test_streaming_stateful.py)."""
-    import pandas as pd
-
-    bc = _tagger_broadcast(pages_stream.sparkSession, tagger or GazetteerTagger())
-
-    def run(batches):
-        tagger = bc.value
-        _freeze_worker_heap()
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            stamps = pdf["warc_ts"].tolist()
-            rows, _counts = page_batch_mentions(
-                urls, pdf["html"], pdf["text"], tagger, doc_consistency=False)
-            yield pd.DataFrame(
-                [(urls[p], stamps[p], norm) for p, _, _, _, _, norm, _ in rows],
-                columns=["url", "warc_ts", "surface_norm"])
-
-    mentions_ts = page_bodies(pages_stream, None, "warc_ts").mapInPandas(
-        run, schema="url string, warc_ts timestamp, surface_norm string")
-    return (
-        mentions_ts.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window, slide), F.col("surface_norm"))
-        .agg(F.count("*").alias("n_mentions"))
     )
 
 

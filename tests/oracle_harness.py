@@ -2,11 +2,24 @@
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import numpy as np
 import pandas as pd
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+def load_entry():
+    """A fresh module object of this checkout's ``__spark_entry__.py``."""
+    spec = importlib.util.spec_from_file_location(
+        "entrymod", os.path.join(REPO, "__spark_entry__.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def duck_con(sf_dir: str):
@@ -74,10 +87,7 @@ def compare(name: str, spark_df, oracle_df, strict: bool = False) -> list[str]:
 
 def run_all(spark, sf_dir: str, only: list[str] | None = None,
             strict: bool = False) -> dict:
-    import importlib.util
-    spec = importlib.util.spec_from_file_location("entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
 
     con = duck_con(sf_dir)
     oracles = mod.oracle_sql()

@@ -212,11 +212,8 @@ def test_snapshot_delta_planted_specimens(spark):
 
 
 def test_crawl_delta_all_classes_nonvacuous(spark):
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    from tests.oracle_harness import load_entry
+    mod = load_entry()
     d = mod.q_crawl_delta(spark, SF)
     counts = {r.status: r.n for r in delta_counts(d).collect()}
     assert set(counts) == {"added", "removed", "changed", "unchanged"}

@@ -1,23 +1,11 @@
-"""Distributed BPE training/encoding gates (operators/bpe.py):
-
-* the distributed trainer's merge list is IDENTICAL to the published
-  single-process algorithm's (bpe_train_reference) on real fixture text —
-  the tie-break (count desc, pair asc) makes both fully deterministic;
-* the JVM fold merge application matches the reference scan on the
-  overlapping-pair edge cases ("aaa", repeated merges);
-* encoding reproduces the training-time segmentation for every training
-  word (the classic lowest-rank-first equivalence) and round-trips:
-  concat(tokens) minus the end marker == the word;
-* encode runs distributed (mapInPandas) and equals the local encoder.
+"""BPE pair-count gate (operators/bpe.py): the distributed adjacent-pair
+counts over the (word, cnt) table equal a single-process count over the
+same words, end-of-word marker included.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
-from stackoverflowner_spark.operators.bpe import (END, _encode_word,
-                                                  _initial_seqs, apply_merge,
-                                                  bpe_encode, bpe_train,
-                                                  bpe_train_reference,
+from stackoverflowner_spark.operators.bpe import (END, _initial_seqs,
                                                   pair_counts, word_counts)
 from stackoverflowner_spark.session import get_spark
 
@@ -35,66 +23,6 @@ def spark():
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-def test_train_matches_reference_on_fixture(spark, docs):
-    wc = word_counts(docs)
-    local = {r.word: r.cnt for r in wc.collect()}
-    assert len(local) > 20
-    merges = bpe_train(wc, 40)
-    ref = bpe_train_reference(local, 40)
-    assert merges == ref
-    assert len(merges) == 40
-
-
-def test_apply_merge_overlap_semantics(spark):
-    df = spark.createDataFrame(
-        [(["a", "a", "a"],), (["a", "a", "a", "a"],), (["b", "a", "a"],)],
-        "seq array<string>")
-    out = [r.m for r in
-           df.select(apply_merge(F.col("seq"), "a", "a").alias("m"))
-           .collect()]
-    assert out == [["aa", "a"], ["aa", "aa"], ["b", "aa"]]
-
-
-def test_encode_reproduces_training_segmentation(docs):
-    # train on a small vocabulary, then encode each training word with the
-    # rank-greedy encoder: the resulting segmentation must equal replaying
-    # the merge list in training order (the property BPE encoders rely on)
-    local = {r.word: r.cnt for r in word_counts(docs).collect()}
-    sample = dict(sorted(local.items())[:400])
-    merges = bpe_train_reference(sample, 60)
-    ranks = {p: i for i, p in enumerate(merges)}
-    for w in sample:
-        seq = list(w) + [END]
-        for (x, y) in merges:
-            out, i = [], 0
-            while i < len(seq):
-                if i < len(seq) - 1 and seq[i] == x and seq[i + 1] == y:
-                    out.append(x + y)
-                    i += 2
-                else:
-                    out.append(seq[i])
-                    i += 1
-            seq = out
-        assert _encode_word(w, ranks) == seq, w
-        # round-trip: tokens re-concatenate to the word + end marker
-        assert "".join(_encode_word(w, ranks)) == w + END
-
-
-def test_distributed_encode_equals_local(spark, docs):
-    local = {r.word: r.cnt for r in word_counts(docs).collect()}
-    merges = bpe_train_reference(local, 30)
-    ranks = {p: i for i, p in enumerate(merges)}
-    sample = docs.orderBy("doc_id").limit(50)
-    rows = bpe_encode(sample, merges).select("doc_id", "text",
-                                             "bpe_tokens").collect()
-    assert len(rows) == 50
-    for r in rows:
-        expect = []
-        for w in (r.text or "").lower().split():
-            expect.extend(_encode_word(w, ranks))
-        assert r.bpe_tokens == expect
 
 
 def test_pair_counts_match_reference_first_iteration(spark, docs):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.decontam import (
-    benchmark_grams, decontaminate, with_contamination)
+    benchmark_grams, with_contamination)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -64,18 +64,6 @@ def test_short_docs_never_flagged(spark):
         assert r.total_ngrams == 0 and not r.contaminated
 
 
-def test_decontaminate_drops_exactly_the_flagged(spark):
-    bench = _df(spark, [(100, BENCH_SENT)])
-    docs = _df(spark, [
-        (1, "intro words then " + BENCH_SENT + " and a tail"),
-        (2, "clean document with enough distinct words to form plenty of "
-            "eight grams here"),
-    ])
-    kept = decontaminate(docs, bench, n=8)
-    assert [r.doc_id for r in kept.collect()] == [2]
-    assert kept.columns == docs.columns  # full schema preserved
-
-
 def test_benchmark_grams_distinct(spark):
     # the same sentence twice must not duplicate the broadcast set
     bench = _df(spark, [(1, BENCH_SENT), (2, BENCH_SENT)])
@@ -116,15 +104,11 @@ def test_no_corpus_shuffle_before_broadcast_join(spark):
 
 def test_driver_oracle_strict(spark):
     """Reproduce the driver's bitwise criterion for the new entry."""
-    from tests.oracle_harness import run_all
+    from tests.oracle_harness import load_entry, run_all
     res = run_all(spark, SF, only=["decontam"], strict=True)
     assert res["decontam"] == [], res["decontam"]
     # non-vacuous at this SF: some docs are actually contaminated
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     hit = (mod.q_decontam(spark, SF)
            .filter(F.col("contaminated") == 1).count())
     assert hit >= 1
@@ -279,12 +263,8 @@ def test_rotated_entries_still_green(spark, name):
     (cap_feature in r5 — slot freed for decontam; the rest in r4) keep
     their query + oracle verified here with the same strict compare the
     driver uses."""
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from tests.oracle_harness import compare, duck_con
+    from tests.oracle_harness import compare, duck_con, load_entry
+    mod = load_entry()
     sdf = getattr(mod, f"q_{name}")(spark, SF).toPandas()
     odf = duck_con(SF).execute(mod.oracle_sql()[name]).df()
     assert compare(name, sdf, odf, strict=True) == []

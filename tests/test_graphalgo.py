@@ -7,7 +7,6 @@ import random
 from collections import defaultdict, deque
 
 import pytest
-from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.graphalgo import (
     bfs_distances, kcore, triangle_count, weighted_sssp)
@@ -456,7 +455,7 @@ def test_sample_pivots_deterministic_and_bounded(spark):
                            | {str(v) for _, v in edges})
 
 
-# ---- modularity + k-truss (r5o) ----
+# ---- modularity (r5o) ----
 
 def _brute_modularity(edges, labels):
     """Textbook Q via exact fractions."""
@@ -569,66 +568,6 @@ def test_modularity_duckdb_bitwise_oracle(spark):
     assert got.q == want[2]  # bitwise: exact integer fold, one division
 
 
-def _brute_ktruss(edges, k):
-    und = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
-    while True:
-        adj = defaultdict(set)
-        for u, v in und:
-            adj[u].add(v)
-            adj[v].add(u)
-        sup = {e: len(adj[e[0]] & adj[e[1]]) for e in und}
-        bad = {e for e, s in sup.items() if s < k - 2}
-        if not bad:
-            return sup
-        und -= bad
-
-
-def _ktruss_spark(spark, edges, k):
-    from stackoverflowner_spark.operators.graphalgo import ktruss
-    df = spark.createDataFrame(
-        [(str(u), str(v)) for u, v in edges], "src string, dst string")
-    return {(r.u, r.v): r.support for r in ktruss(df, k).collect()}
-
-
-def test_ktruss_triangle_is_3truss(spark):
-    got = _ktruss_spark(spark, [("a", "b"), ("b", "c"), ("a", "c")], 3)
-    assert got == {("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 1}
-
-
-def test_ktruss_tree_empty_at_3(spark):
-    got = _ktruss_spark(spark, [("a", "b"), ("b", "c"), ("c", "d")], 3)
-    assert got == {}
-
-
-def test_ktruss_clique_k5(spark):
-    edges = [(f"n{i}", f"n{j}") for i in range(5) for j in range(i + 1, 5)]
-    got = _ktruss_spark(spark, edges, 5)
-    assert len(got) == 10 and set(got.values()) == {3}
-    assert _ktruss_spark(spark, edges, 6) == {}
-
-
-def test_ktruss_matches_brute_force(spark):
-    edges = _random_graph(n=25, m=90, seed=9)
-    for k in (3, 4):
-        # the operator canonicalizes pairs as STRINGS (least/greatest),
-        # the brute force as ints — compare under one key convention
-        want = {tuple(sorted((str(u), str(v)))): s
-                for (u, v), s in _brute_ktruss(edges, k).items()}
-        got = _ktruss_spark(spark, edges, k)
-        assert got == want, k
-
-
-def test_ktruss_inside_kminus1_core(spark):
-    # classic containment: the k-truss is a subgraph of the (k-1)-core
-    from stackoverflowner_spark.operators.graphalgo import kcore, ktruss
-    edges = _random_graph(n=30, m=110, seed=17)
-    df = spark.createDataFrame(
-        [(str(u), str(v)) for u, v in edges], "src string, dst string")
-    truss_nodes = {x for r in ktruss(df, 4).collect() for x in (r.u, r.v)}
-    core_nodes = {r.node for r in kcore(df, 3).collect()}
-    assert truss_nodes <= core_nodes
-
-
 def _brute_modularity_w(wedges, labels):
     """Weighted Q via exact fractions; wedges = [(u, v, w)]."""
     from fractions import Fraction
@@ -696,33 +635,6 @@ def test_modularity_weighted_parallel_edges_sum(spark):
     want = _brute_modularity_w(
         [("a", "b", 5), ("b", "c", 1)], [("a", "g"), ("b", "g"), ("c", "h")])
     assert row.m == 6 and row.q == pytest.approx(want, abs=1e-15)
-
-
-def test_betweenness_batched_equals_single_batch(spark):
-    from stackoverflowner_spark.operators.graphalgo import (
-        betweenness, betweenness_batched, sample_pivots)
-    edges = _random_graph(n=30, m=70, seed=29)
-    df = spark.createDataFrame(
-        [(str(u), str(v)) for u, v in edges], "src string, dst string")
-    one = {r.node: r.bc
-           for r in betweenness(df, sources=sample_pivots(df, 9)).collect()}
-    many = {r.node: r.bc
-            for r in betweenness_batched(df, k=9, batch=2).collect()}
-    assert set(one) == set(many)
-    for n in one:
-        assert many[n] == pytest.approx(one[n], rel=1e-12, abs=1e-12)
-
-
-def test_betweenness_batched_scale_uses_full_k(spark):
-    from stackoverflowner_spark.operators.graphalgo import (
-        betweenness, betweenness_batched, sample_pivots)
-    edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    scaled_one = {r.node: r.bc for r in betweenness(
-        df, sources=sample_pivots(df, 3), scale=True).collect()}
-    scaled_many = {r.node: r.bc for r in betweenness_batched(
-        df, k=3, batch=1, scale=True).collect()}
-    assert scaled_many == pytest.approx(scaled_one)
 
 
 # ---- greedy modularity refinement (r5o) ----
@@ -862,76 +774,3 @@ def test_refine_weighted_uses_weights(spark):
                  df.select("src", "dst"), lab).collect()}
     assert plain["x"] == "A"
 
-
-# ---- contraction + full Louvain (r5o) ----
-
-def test_contract_preserves_q_exactly(spark):
-    # Q(original, labels) == Q(contracted, identity) bit for bit —
-    # the self-loop reading makes contraction lossless for modularity
-    from stackoverflowner_spark.operators.graphalgo import (
-        contract_graph, lpa_communities, modularity)
-    edges = _random_graph(n=24, m=55, seed=12)
-    df = spark.createDataFrame(
-        [(str(u), str(v)) for u, v in edges], "src string, dst string")
-    lab = lpa_communities(df)
-    q_orig = modularity(df, lab).collect()[0]
-    cg = contract_graph(df, lab)
-    ident = (cg.select(F.col("src").alias("node"))
-             .unionAll(cg.select(F.col("dst").alias("node"))).distinct()
-             .withColumn("community", F.col("node")))
-    q_con = modularity(cg, ident, weight_col="w").collect()[0]
-    assert q_orig.m == q_con.m
-    assert q_orig.q == q_con.q  # bitwise
-
-
-def test_contract_sums_and_loops(spark):
-    from stackoverflowner_spark.operators.graphalgo import contract_graph
-    edges = [("a1", "a2"), ("a2", "a3"), ("a1", "b1"), ("a2", "b1"),
-             ("b1", "b2")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    lab = spark.createDataFrame(
-        [("a1", "A"), ("a2", "A"), ("a3", "A"), ("b1", "B"), ("b2", "B")],
-        "node string, community string")
-    got = {(r.src, r.dst): r.w for r in contract_graph(df, lab).collect()}
-    assert got == {("A", "A"): 2, ("B", "B"): 1, ("A", "B"): 2}
-
-
-def test_louvain_two_blocks(spark):
-    from stackoverflowner_spark.operators.graphalgo import louvain
-    edges = ([("a%d" % i, "a%d" % j) for i in range(5)
-              for j in range(i + 1, 5)]
-             + [("b%d" % i, "b%d" % j) for i in range(5)
-                for j in range(i + 1, 5)]
-             + [("a0", "b0")])
-    df = spark.createDataFrame(edges, "src string, dst string")
-    lab = {r.node: r.community for r in louvain(df).collect()}
-    a_comms = {lab["a%d" % i] for i in range(5)}
-    b_comms = {lab["b%d" % i] for i in range(5)}
-    assert len(a_comms) == 1 and len(b_comms) == 1
-    assert a_comms != b_comms
-
-
-def test_louvain_q_at_least_refined_lpa(spark):
-    from stackoverflowner_spark.operators.graphalgo import (
-        louvain, lpa_communities, modularity, refine_communities)
-    for seed in (4, 23):
-        edges = _random_graph(n=28, m=64, seed=seed)
-        df = spark.createDataFrame(
-            [(str(u), str(v)) for u, v in edges], "src string, dst string")
-        base = refine_communities(df, lpa_communities(df))
-        q_base = modularity(df, base).collect()[0].q
-        q_lv = modularity(df, louvain(df).select("node", "community")
-                          ).collect()[0].q
-        assert q_lv >= q_base, seed
-
-
-def test_louvain_partition_invariant(spark):
-    from stackoverflowner_spark.operators.graphalgo import louvain
-    edges = _random_graph(n=22, m=50, seed=31)
-    sedges = [(str(u), str(v)) for u, v in edges]
-    a = spark.createDataFrame(sedges, "src string, dst string")
-    b = spark.createDataFrame(list(reversed(sedges)),
-                              "src string, dst string").repartition(5)
-    la = sorted(map(tuple, louvain(a).collect()))
-    lb = sorted(map(tuple, louvain(b).collect()))
-    assert la == lb

@@ -135,30 +135,6 @@ def test_lineage_metrics_recorded(spark, tmp_path):
     assert "failed_rows" in d["metrics"]
 
 
-def test_bucketed_triples_join_has_no_exchange(spark, tmp_path):
-    """bucketBy(subj) co-locates subject keys: a self-join on subj must not
-    shuffle (no Exchange on either side of the SortMergeJoin)."""
-    from stackoverflowner_spark.operators.document_kernel import pages_to_mentions_fused
-    from stackoverflowner_spark.operators.link import link_broadcast
-    from stackoverflowner_spark.operators.triples import (
-        triples_from_linked, write_triples_bucketed)
-    spark.sql("drop table if exists tri_bucketed")
-    tri = triples_from_linked(link_broadcast(
-        pages_to_mentions_fused(synth_pages(spark, 60), GazetteerTagger()),
-        dictionary_df(spark)))
-    write_triples_bucketed(tri, "tri_bucketed", n_buckets=4)
-    t = spark.table("tri_bucketed")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = t.alias("a").join(t.alias("b"), "subj")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-        spark.sql("drop table if exists tri_bucketed")
-
-
 def test_components_random_graph_vs_union_find(spark):
     """Connected components vs a pure-python union-find oracle on a seeded
     random graph (200 nodes, 180 edges -> many non-trivial components)."""

@@ -15,8 +15,7 @@ import random
 import pytest
 
 from stackoverflowner_spark.operators.hyperball import (
-    exact_harmonic, harmonic_centrality_est, hyperball, iterate_registers,
-    neighborhood_function)
+    exact_harmonic, harmonic_centrality_est, hyperball, iterate_registers)
 from stackoverflowner_spark.operators.sketch import hll_sketch
 from stackoverflowner_spark.session import get_spark
 
@@ -118,18 +117,6 @@ def test_ball_estimate_accuracy(spark):
     assert max(errs) < 0.25
 
 
-def test_neighborhood_function_monotone(spark):
-    _, edges = _random_digraph(40, 90, seed=3)
-    nf = neighborhood_function(
-        hyperball(_edges_df(spark, edges), max_radius=30, b=8)).collect()
-    vals = [r.nf for r in sorted(nf, key=lambda r: r.radius)]
-    assert all(b >= a - 1e-9 for a, b in zip(vals, vals[1:]))
-    # final N(R) ~ total reachable ordered pairs (incl. self-pairs)
-    balls = _exact_balls(edges)
-    true_pairs = sum(len(byr[max(byr)]) for byr in balls.values())
-    assert abs(vals[-1] - true_pairs) / true_pairs < 0.05
-
-
 def test_harmonic_centrality_vs_exact(spark):
     _, edges = _random_digraph(50, 120, seed=5)
     est = {r.node: r.harmonic for r in harmonic_centrality_est(
@@ -165,42 +152,3 @@ def test_deterministic_across_runs(spark):
 
 
 # ---- effective diameter (r5o) ----
-
-def test_effective_diameter_path_graph(spark):
-    # directed path 0->1->2->3->4 (b large enough that HLL is exact via
-    # linear counting at these cardinalities): N(r) grows linearly, and
-    # the q=1.0 effective diameter is the true diameter 4
-    from stackoverflowner_spark.operators.hyperball import (
-        effective_diameter, hyperball)
-    edges = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(4)], "src string, dst string")
-    balls = hyperball(edges, max_radius=8, b=8)
-    row = effective_diameter(balls, q=1.0).collect()[0]
-    assert row.max_radius == 4 and row.eff_diameter == 4.0
-
-
-def test_effective_diameter_interpolates(spark):
-    from stackoverflowner_spark.operators.hyperball import (
-        effective_diameter, hyperball, neighborhood_function)
-    edges = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(9)], "src string, dst string")
-    balls = hyperball(edges, max_radius=16, b=8)
-    nf = {int(r.radius): r.nf
-          for r in neighborhood_function(balls).collect()}
-    row = effective_diameter(balls, q=0.9).collect()[0]
-    rmax = row.max_radius
-    target = 0.9 * nf[rmax]
-    below = max(r for r in nf if nf[r] < target)
-    assert below < row.eff_diameter <= below + 1
-    # exact interpolation formula replayed
-    want = below + (target - nf[below]) / (nf[below + 1] - nf[below])
-    assert row.eff_diameter == pytest.approx(want, abs=1e-12)
-
-
-def test_effective_diameter_q_validation(spark):
-    from stackoverflowner_spark.operators.hyperball import (
-        effective_diameter, hyperball)
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    balls = hyperball(edges, max_radius=4, b=6)
-    with pytest.raises(ValueError, match="q must"):
-        effective_diameter(balls, q=1.5)

@@ -15,8 +15,7 @@ the changed+added pages.
 import pytest
 from pyspark.sql import functions as F
 
-from stackoverflowner_spark.operators.incremental import (incremental_update,
-                                                          update_report)
+from stackoverflowner_spark.operators.incremental import incremental_update
 from stackoverflowner_spark.operators.tagger import GazetteerTagger
 from stackoverflowner_spark.plans.pipeline import KGPipeline
 from stackoverflowner_spark.session import get_spark
@@ -65,13 +64,6 @@ def snapshots(spark):
             b.drop("pid").localCheckpoint())
 
 
-def test_update_report_counts(spark, snapshots):
-    a, b = snapshots
-    got = {r.status: r.n_pages for r in update_report(a, b).collect()}
-    assert got == {"removed": 12, "changed": 12, "added": 20,
-                   "unchanged": 96}, got
-
-
 def test_incremental_equals_full_recompute(spark, snapshots, tmp_path):
     a, b = snapshots
     pipe = KGPipeline(spark, str(tmp_path / "kg"), tagger=GazetteerTagger())
@@ -106,7 +98,8 @@ def test_cli_incremental_mode(spark, snapshots, tmp_path, capsys):
     incremental output matches its own full-recompute output on B."""
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from run_pipeline import main
 
     a, b = snapshots

@@ -134,12 +134,8 @@ def test_plan_broadcasts_schema(spark):
 
 
 def test_driver_oracle_strict_kg_inference(spark):
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from tests.oracle_harness import compare, duck_con
+    from tests.oracle_harness import compare, duck_con, load_entry
+    mod = load_entry()
     sdf = mod.q_kg_inference(spark, SF).toPandas()
     odf = duck_con(SF).execute(mod.oracle_sql()["kg_inference"]).df()
     assert compare("kg_inference", sdf, odf, strict=True) == []

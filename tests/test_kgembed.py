@@ -254,7 +254,8 @@ def test_cli_embeddings_flag(spark, tmp_path, capsys):
     emits entity/relation vectors plus a filtered-eval stats line."""
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from run_pipeline import main
 
     out = str(tmp_path / "out")

@@ -3,17 +3,16 @@
 Gates: (a) worked-example bindings on a small hand-built KG, including
 repeated-variable and literal-filter semantics; (b) brute-force parity —
 bgp_match against a pure-Python nested-loop matcher on a generated
-random KG; (c) the no-cartesian guard; (d) property_path == chained BGP;
-(e) plan shape: literals reach the scan as pushed filters and no
-CartesianProduct/BroadcastNestedLoopJoin node appears.
+random KG; (c) the no-cartesian guard; (d) plan shape: literals reach the
+scan as pushed filters and no CartesianProduct/BroadcastNestedLoopJoin node
+appears.
 """
 
 import random
 
 import pytest
 
-from stackoverflowner_spark.operators.kgquery import (bgp_match,
-                                                      property_path)
+from stackoverflowner_spark.operators.kgquery import bgp_match
 from stackoverflowner_spark.session import get_spark
 
 
@@ -87,13 +86,6 @@ def test_cartesian_guard(spark):
 def test_all_literal_pattern_rejected(spark):
     with pytest.raises(ValueError, match="all-literal"):
         bgp_match(_df(spark), [("numpy", "instance_of", "Library")])
-
-
-def test_property_path(spark):
-    out = property_path(_df(spark), "a", ["alias_of", "mentioned_in"], "d")
-    got = sorted((r.a, r.d) for r in out.collect())
-    # 'self' aliases itself but has no mentioned_in rows, so it drops out
-    assert got == [("np", "doc://1"), ("np", "doc://2"), ("pd", "doc://1")]
 
 
 def test_optional_pattern(spark):
@@ -255,30 +247,11 @@ def test_plan_pushdown_and_no_nested_loop(spark):
     assert "instance_of" in opt and "mentioned_in" in opt
 
 
-def test_union_bgp(spark):
-    from stackoverflowner_spark.operators.kgquery import union_bgp
-    # entities that are Libraries OR are mentioned in doc://3
-    out = union_bgp(_df(spark), [
-        [("?x", "instance_of", "Library")],
-        [("?x", "mentioned_in", "doc://3")],
-    ], select=["x"])
-    assert sorted(r.x for r in out.collect()) == ["numpy", "pandas", "python"]
-    # overlap collapses under DISTINCT: Libraries OR aliased entities
-    out2 = union_bgp(_df(spark), [
-        [("?x", "instance_of", "Library")],
-        [("?a", "alias_of", "?x"), ("?x", "instance_of", "?t")],
-    ], select=["x"])
-    assert sorted(r.x for r in out2.collect()) == ["numpy", "pandas"]
-    # a block missing a select var fails loudly (Spark column resolution)
-    with pytest.raises(Exception):
-        union_bgp(_df(spark), [[("?y", "instance_of", "Library")]],
-                  select=["x"]).collect()
-
-
 def test_kgq_cli(spark, tmp_path, capsys):
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main, parse_patterns
 
     assert parse_patterns("?x a b . ?x c ?d") == [("?x", "a", "b"),
@@ -348,7 +321,8 @@ def test_bgp_agg_oracle(spark):
 def test_kgq_cli_aggregate(spark, tmp_path, capsys):
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main
 
     p = str(tmp_path / "tri_agg")
@@ -635,7 +609,8 @@ def test_order_by_unknown_var_rejected(spark):
 def test_kgq_cli_values_minus_order(spark, tmp_path, capsys):
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main
 
     p = str(tmp_path / "tri_vmo")
@@ -906,7 +881,8 @@ def test_describe(spark):
 def test_kgq_cli_filter_bind_describe(spark, tmp_path, capsys):
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main
 
     p = str(tmp_path / "tri_fbd")
@@ -1142,7 +1118,8 @@ def test_graph_inherited_by_negation_blocks(spark):
 def test_kgq_cli_graph_exists_having_sequence(spark, tmp_path, capsys):
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main
 
     p = str(tmp_path / "tri_r5n")

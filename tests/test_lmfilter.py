@@ -1,15 +1,13 @@
 """Bigram-LM quality filter: hand-computed counts and bit-costs on a
-planted corpus, numpy perplexity parity, keep-rule edges, plan shape,
-and the strict driver-criterion oracle gate for the ``lm_score`` entry.
+planted corpus, keep-rule edges, plan shape, and the strict
+driver-criterion oracle gate for the ``lm_score`` entry.
 """
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.lmfilter import (
-    keep_by_bitcost, score_bitcost, train_bigram_lm, with_perplexity)
+    keep_by_bitcost, score_bitcost, train_bigram_lm)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -78,23 +76,6 @@ def test_unseen_context_costs_bitlen_v(spark):
     assert (r.known_ctx, r.known_bigram, r.sum_bits) == (0, 0, 1)
 
 
-def test_perplexity_matches_numpy(spark):
-    ref = _docs(spark, REF)
-    uni, big, vocab = train_bigram_lm(ref)
-    docs = _docs(spark, [(10, "a b z a"), (11, "q")])
-    got = {r.doc_id: r.perplexity for r in
-           with_perplexity(docs, uni, big, vocab).collect()}
-    # numpy/python replay: p(w2|w1) = (c12+1)/(c1+V), V=3
-    cnt1 = {"a": 2, "b": 2}
-    cnt2 = {("a", "b"): 2, ("b", "a"): 1, ("b", "c"): 1}
-    toks = ["a", "b", "z", "a"]
-    lps = [math.log((cnt2.get((w1, w2), 0) + 1) / (cnt1.get(w1, 0) + 3))
-           for w1, w2 in zip(toks, toks[1:])]
-    want = math.exp(-sum(lps) / len(lps))
-    assert got[10] == pytest.approx(want, rel=1e-12)
-    assert got[11] is None
-
-
 def test_broadcast_join_plan(spark):
     """The corpus-side score path: model tables ride broadcast joins,
     no Python, and the only aggregation shuffle is keyed on doc_id."""
@@ -110,14 +91,10 @@ def test_broadcast_join_plan(spark):
 def test_driver_oracle_strict(spark):
     """Reproduce the driver's bitwise criterion for the new entry, and
     assert the keep flag is non-vacuous at this SF."""
-    from tests.oracle_harness import run_all
+    from tests.oracle_harness import load_entry, run_all
     res = run_all(spark, SF, only=["lm_score"], strict=True)
     assert res["lm_score"] == [], res["lm_score"]
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     flags = {r.keep for r in
              mod.q_lm_score(spark, SF).select("keep").distinct().collect()}
     assert flags == {0, 1}

@@ -145,7 +145,8 @@ def test_kgq_cli_ntriples_input_and_quantifier(spark, tmp_path, capsys):
     works through the CLI pattern mini-syntax."""
     import json
     import sys
-    sys.path.insert(0, "/root/repo")
+    from tests.oracle_harness import REPO
+    sys.path.insert(0, REPO)
     from tools.kgq import main
 
     df = spark.createDataFrame(

@@ -9,24 +9,14 @@ bit for bit — for the fold on real fixture vectors, so any rounding digit
 downstream is safe.
 """
 
-import importlib.util
 import struct
-import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from tests.oracle_harness import load_entry
 
 SF = "/root/testdata/sf0.01"
-
-
-def _entry():
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +33,7 @@ def test_sequential_fold_is_bitwise_equal_across_engines(spark):
 
     from stackoverflowner_spark.operators.similarity import _dot_col
 
-    mod = _entry()
+    mod = load_entry()
     con = duckdb.connect()
     con.execute(f"create view embeddings as select * from "
                 f"read_parquet('{SF}/embeddings.parquet')")

@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.pagerank import (
-    entity_pagerank, entity_pagerank_weighted, hits, pagerank,
-    pagerank_weighted, personalized_pagerank)
+    entity_pagerank, hits, pagerank)
 from stackoverflowner_spark.session import get_spark
 
 D = 0.85
@@ -190,131 +189,6 @@ def test_hits_separates_hub_from_authority(spark):
     assert ranks["dir"] == min(ranks.values())
 
 
-def np_pagerank_weighted(wedges, iterations=20, damping=D):
-    agg = defaultdict(float)
-    for s, t, w in wedges:
-        if w > 0:
-            agg[(s, t)] += float(w)
-    nodes = sorted({x for e in agg for x in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    out = defaultdict(list)
-    for (s, t), w in sorted(agg.items()):
-        out[s].append((t, w))
-    n = len(nodes)
-    r = np.full(n, 1.0 / n)
-    for _ in range(iterations):
-        contrib = np.zeros(n)
-        dangling = 0.0
-        for v in nodes:
-            if out[v]:
-                wd = sum(w for _, w in out[v])
-                for t, w in out[v]:
-                    contrib[idx[t]] += r[idx[v]] * w / wd
-            else:
-                dangling += r[idx[v]]
-        r = (1 - damping) / n + damping * dangling / n + damping * contrib
-    return dict(zip(nodes, r))
-
-
-def test_weighted_matches_numpy(spark):
-    rng = random.Random(31)
-    nodes = [f"v{i}" for i in range(40)]
-    wedges = sorted({(rng.choice(nodes), rng.choice(nodes),
-                      rng.randint(1, 9)) for _ in range(200)})
-    df = spark.createDataFrame(wedges, "src string, dst string, w int")
-    got = {r.node: r.rank
-           for r in pagerank_weighted(df, iterations=12).collect()}
-    ref = np_pagerank_weighted(wedges, iterations=12)
-    tv = sum(abs(got[v] - ref[v]) for v in got)
-    assert set(got) == set(ref) and tv < 1e-9, tv
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_weighted_heavy_edge_dominates(spark):
-    # a splits its vote 9:1 between b and c
-    df = spark.createDataFrame(
-        [("a", "b", 9), ("a", "c", 1), ("b", "a", 1), ("c", "a", 1)],
-        "src string, dst string, w int")
-    got = {r.node: r.rank
-           for r in pagerank_weighted(df, iterations=30).collect()}
-    assert got["b"] > got["c"] * 3
-
-
-def test_weighted_uniform_weights_equal_unweighted(spark):
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
-    wdf = spark.createDataFrame([(s, t, 5) for s, t in edges],
-                                "src string, dst string, w int")
-    got_w = {r.node: r.rank
-             for r in pagerank_weighted(wdf, iterations=15).collect()}
-    got_u = _spark_ranks(spark, edges, iterations=15)
-    for v in got_u:
-        assert abs(got_w[v] - got_u[v]) < 1e-12
-
-
-def np_ppr(edges, seeds, iterations=20, damping=D):
-    eset = sorted(set(edges))
-    nodes = sorted({x for e in eset for x in e} | set(seeds))
-    idx = {v: i for i, v in enumerate(nodes)}
-    out = defaultdict(list)
-    for s, t in eset:
-        out[s].append(t)
-    n = len(nodes)
-    t_vec = np.zeros(n)
-    for s in set(seeds):
-        t_vec[idx[s]] = 1.0 / len(set(seeds))
-    r = t_vec.copy()
-    for _ in range(iterations):
-        contrib = np.zeros(n)
-        dangling = 0.0
-        for v in nodes:
-            if out[v]:
-                w = r[idx[v]] / len(out[v])
-                for t in out[v]:
-                    contrib[idx[t]] += w
-            else:
-                dangling += r[idx[v]]
-        r = t_vec * ((1 - damping) + damping * dangling) \
-            + damping * contrib
-    return dict(zip(nodes, r))
-
-
-def test_ppr_matches_numpy_and_localizes(spark):
-    rng = random.Random(17)
-    nodes = [f"v{i}" for i in range(50)]
-    edges = sorted({(rng.choice(nodes), rng.choice(nodes))
-                    for _ in range(250)})
-    seeds = ["v0", "v1"]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    sdf = spark.createDataFrame([(s,) for s in seeds], "node string")
-    got = {r.node: r.rank
-           for r in personalized_pagerank(df, sdf,
-                                          iterations=12).collect()}
-    ref = np_ppr(edges, seeds, iterations=12)
-    tv = sum(abs(got[v] - ref[v]) for v in got)
-    assert set(got) == set(ref) and tv < 1e-9, tv
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_ppr_unreachable_component_gets_zero(spark):
-    # two disjoint cycles; seeding one leaves the other at exactly 0
-    edges = [("a", "b"), ("b", "a"), ("x", "y"), ("y", "x")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    sdf = spark.createDataFrame([("a",)], "node string")
-    got = {r.node: r.rank
-           for r in personalized_pagerank(df, sdf,
-                                          iterations=15).collect()}
-    assert got["x"] == 0.0 and got["y"] == 0.0
-    assert got["a"] > got["b"] > 0
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_ppr_requires_seeds(spark):
-    df = spark.createDataFrame([("a", "b")], "src string, dst string")
-    empty = spark.createDataFrame([], "node string")
-    with pytest.raises(ValueError):
-        personalized_pagerank(df, empty)
-
-
 def test_entity_pagerank_over_triples(spark):
     triples = spark.createDataFrame(
         [("pandas", "alias_of", "soft:pandas", "u1"),
@@ -330,24 +204,3 @@ def test_entity_pagerank_over_triples(spark):
     # the shared type sink accumulates the most mass
     assert got["Library"] == max(got.values())
     assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_entity_pagerank_weighted_counts_distinct_evidence(spark):
-    # pandas->Library asserted by 3 pages (one duplicated), numpy by 1:
-    # weights must be DISTINCT urls (3 vs 1), matching the numpy ref
-    rows = ([("soft:pandas", "instance_of", "Library", u)
-             for u in ("u1", "u2", "u3", "u3")]
-            + [("soft:numpy", "instance_of", "Library", "u1"),
-               ("soft:pandas", "alias_of", "soft:numpy", "u1"),
-               ("soft:pandas", "mentioned_in", "u1", "u1")])
-    triples = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, url string")
-    got = {r.node: r.rank
-           for r in entity_pagerank_weighted(triples,
-                                             iterations=12).collect()}
-    ref = np_pagerank_weighted(
-        [("soft:pandas", "Library", 3), ("soft:numpy", "Library", 1),
-         ("soft:pandas", "soft:numpy", 1)], iterations=12)
-    assert "u1" not in got          # mentioned_in stays excluded
-    tv = sum(abs(got[v] - ref[v]) for v in got)
-    assert set(got) == set(ref) and tv < 1e-9, tv

@@ -1,7 +1,7 @@
-"""PII scrub: planted specimens, filter semantics, and a bitwise
-cross-engine oracle gate (the driver's own strict compare) over the same
-planted table in DuckDB — patterns and scrub order identical by
-construction (operators/pii.duckdb_mirror_sql).
+"""PII scrub: planted specimens and a bitwise cross-engine oracle gate
+(the driver's own strict compare) over the same planted table in DuckDB —
+patterns and scrub order identical by construction
+(operators/pii.duckdb_mirror_sql).
 """
 
 import duckdb
@@ -10,8 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.pii import (
-    PII_PATTERNS, duckdb_mirror_sql, pii_document_filter, scrub_pii,
-    with_pii_counts)
+    PII_PATTERNS, duckdb_mirror_sql, scrub_pii, with_pii_counts)
 from stackoverflowner_spark.session import get_spark
 
 
@@ -63,14 +62,6 @@ def test_scrub_out_col_preserves_original(spark):
     out = scrub_pii(_df(spark), out_col="scrubbed").filter(
         F.col("doc_id") == 4).collect()[0]
     assert out.text == ROWS[3][1] and "<EMAIL>" in out.scrubbed
-
-
-def test_filter_drops_pii_docs(spark):
-    kept = pii_document_filter(_df(spark))
-    assert sorted(r.doc_id for r in kept.collect()) == [5, 6, 7]
-    assert kept.columns == ["doc_id", "text"]
-    loose = pii_document_filter(_df(spark), max_hits=2)
-    assert sorted(r.doc_id for r in loose.collect()) == [1, 2, 3, 5, 6, 7]
 
 
 def test_cross_engine_bitwise_oracle(spark):

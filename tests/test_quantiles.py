@@ -1,6 +1,6 @@
-"""Quantile gates: histogram binning/clamping, sum-merge property,
-integer ceil-rank readout edges, exact group percentiles vs numpy-free
-local replay, and tie independence."""
+"""Quantile gates: histogram binning/clamping, integer ceil-rank readout
+edges, exact group percentiles vs numpy-free local replay, and tie
+independence."""
 
 import math
 import random
@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.quantiles import (
-    exact_group_quantiles, histogram_quantiles, histogram_sketch,
-    merge_histograms, to_cents)
+    exact_group_quantiles, histogram_quantiles, histogram_sketch, to_cents)
 from stackoverflowner_spark.session import get_spark
 
 
@@ -40,20 +39,6 @@ def test_histogram_param_validation(spark):
         histogram_sketch(df, F.col("c"), 0, 100, 7)  # 100 % 7 != 0
     with pytest.raises(ValueError):
         histogram_sketch(df, F.col("c"), 10, 10, 1)
-
-
-def test_histogram_merge_equals_whole(spark):
-    rng = random.Random(3)
-    vals = [rng.randrange(0, 1000) for _ in range(500)]
-    whole = histogram_sketch(_cents_df(spark, vals), F.col("c"),
-                             0, 1000, 20)
-    a = histogram_sketch(_cents_df(spark, vals[:200]), F.col("c"),
-                         0, 1000, 20)
-    b = histogram_sketch(_cents_df(spark, vals[200:]), F.col("c"),
-                         0, 1000, 20)
-    merged = merge_histograms(a, b)
-    assert sorted((r.bin, r.cnt) for r in merged.collect()) == \
-        sorted((r.bin, r.cnt) for r in whole.collect())
 
 
 def test_histogram_quantile_readout(spark):

@@ -1,14 +1,13 @@
-"""robots.txt parse + decide: planted specimens for the parser, RFC 9309
-group selection and longest-match semantics, the zero-corpus-shuffle
-plan gate, and the strict driver-criterion oracle gate for the
-``robots_filter`` entry.
+"""robots.txt decide: RFC 9309 group selection and longest-match
+semantics, the zero-corpus-shuffle plan gate, and the strict
+driver-criterion oracle gate for the ``robots_filter`` entry.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.robots import (
-    effective_rules, parse_robots, robots_decide, robots_filter)
+    effective_rules, robots_decide, robots_filter)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -37,16 +36,6 @@ Sitemap: https://ex.com/sitemap.xml
 """
 
 
-def test_parse_robots_specimens(spark):
-    df = spark.createDataFrame([("ex.com", ROBOTS_TXT)],
-                               "host string, robots_txt string")
-    got = {(r.agent, r.kind, r.prefix) for r in parse_robots(df).collect()}
-    assert got == {
-        ("*", "disallow", "/private/"),
-        ("*", "allow", "/private/ok"),          # inline comment stripped
-        ("kgbot", "disallow", "/kg/"),          # agent lowercased
-        ("otherbot", "disallow", "/kg/"),       # consecutive agents share
-    }
     # empty Disallow (RFC no-op), Crawl-delay and Sitemap all dropped
 
 
@@ -135,14 +124,10 @@ def test_zero_corpus_shuffle_plan(spark):
 def test_driver_oracle_strict(spark):
     """Reproduce the driver's bitwise criterion for the new entry and
     assert every decision class is populated."""
-    from tests.oracle_harness import run_all
+    from tests.oracle_harness import load_entry, run_all
     res = run_all(spark, SF, only=["robots_filter"], strict=True)
     assert res["robots_filter"] == [], res["robots_filter"]
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     cls = {(r.allowed, r.rule_prefix) for r in
            mod.q_robots_filter(spark, SF)
            .select("allowed", "rule_prefix").distinct().collect()}

@@ -92,49 +92,3 @@ def test_banded_near_dup_catches_seeded_pairs(spark, clustered):
                     truth.add((a, b))
     assert truth, "fixture must contain true near-dup pairs"
     assert len(found & truth) / len(truth) >= 0.9
-
-
-def test_kmeans_fit_matches_local_lloyd_and_improves_ivf(spark, clustered):
-    """Distributed Lloyd (kmeans_fit) must (a) agree with a local numpy
-    Lloyd run from the same init within float tolerance, (b) reduce
-    within-cluster scatter vs the seed centroids, and (c) not hurt IVF
-    probe recall when its centroids replace the seeds."""
-    from stackoverflowner_spark.operators.similarity import (
-        ivf_centroids, kmeans_fit)
-
-    K, ITERS = 8, 3
-    got = kmeans_fit(clustered, dim=DIM, k=K, iters=ITERS)
-
-    vecs = np.array([r.embedding for r in
-                     clustered.orderBy("vec_id").collect()], dtype=np.float64)
-    cents = np.array(ivf_centroids(DIM, K), dtype=np.float64)
-
-    def assign(V, C):
-        # cosine argmax with lowest-index tie-break, like _nearest_col
-        sims = (V @ C.T) / np.maximum(
-            np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        return sims.argmax(axis=1)
-
-    ref = cents.copy()
-    for _ in range(ITERS):
-        a = assign(vecs, ref)
-        for c in range(K):
-            if (a == c).any():
-                ref[c] = vecs[a == c].mean(axis=0)
-    assert np.allclose(np.array(got), ref, atol=1e-5)
-
-    def scatter(C):
-        a = assign(vecs, C)
-        sims = (vecs @ C.T) / np.maximum(
-            np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-        Cn = np.maximum(np.linalg.norm(C, axis=1), 1e-12)
-        return float(np.mean(sims[np.arange(len(vecs)), a] / Cn[a]))
-
-    assert scatter(np.array(got)) > scatter(cents)  # higher mean cosine
-
-    queries = clustered.filter(F.col("vec_id") % 40 == 0).select(
-        F.col("vec_id").alias("q_id"), "embedding")
-    exact = cosine_topk(clustered, queries, k=5)
-    trained = ivf_topk(clustered, queries, dim=DIM, k=5, n_centroids=K,
-                       nprobe=4, centroids=got)
-    assert _recall(trained, exact) >= 0.9

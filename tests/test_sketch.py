@@ -1,5 +1,5 @@
-"""Sketch gates (HLL + Count-Min): bitwise DuckDB replay, merge
-exactness, duplicate/order invariance, accuracy, and the CM
+"""Sketch gates (HLL + Count-Min): bitwise DuckDB replay,
+duplicate/order invariance, accuracy, and the CM
 never-underestimate guarantee."""
 
 import duckdb
@@ -8,9 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.sketch import (
-    CM_DEPTH, CM_WIDTH, RHO_MAX, bloom_build, bloom_merge, bloom_prune,
-    cm_estimate, cm_merge, cm_sketch, estimate_constant, hll_distinct,
-    hll_estimate, hll_merge, hll_sketch)
+    CM_DEPTH, CM_WIDTH, RHO_MAX, bloom_build, bloom_prune, cm_estimate,
+    cm_sketch, estimate_constant, hll_distinct, hll_estimate, hll_sketch)
 from stackoverflowner_spark.session import get_spark
 
 
@@ -91,17 +90,6 @@ def test_estimate_bitwise_matches_duckdb(spark):
         exp["z_num"].astype(int).tolist()
     # the headline claim: float estimate identical to the last bit
     assert got["est"].tolist() == exp["est"].tolist()
-
-
-def test_merge_equals_sketch_of_union(spark):
-    a = spark.createDataFrame(_vals(400), "key string, val string")
-    b = spark.createDataFrame(_vals(400, seed="x"), "key string, val string")
-    merged = (hll_merge(hll_sketch(a, ["key"], "val"),
-                        hll_sketch(b, ["key"], "val"))
-              .toPandas().sort_values(["key", "reg"]).reset_index(drop=True))
-    direct = (hll_sketch(a.unionByName(b), ["key"], "val")
-              .toPandas().sort_values(["key", "reg"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(merged, direct, check_dtype=False)
 
 
 def test_duplicates_and_order_invariant(spark):
@@ -196,19 +184,6 @@ def test_cm_probe_of_absent_value_is_zero_or_collision(spark):
     assert est == 0
 
 
-def test_cm_merge_equals_sketch_of_union(spark):
-    a = spark.createDataFrame(_zipf(50), "key string, val string")
-    b = spark.createDataFrame(_vals(200), "key string, val string")
-    merged = (cm_merge(cm_sketch(a, ["key"], "val"),
-                       cm_sketch(b, ["key"], "val"))
-              .toPandas().sort_values(["key", "depth", "bucket"])
-              .reset_index(drop=True))
-    direct = (cm_sketch(a.unionByName(b), ["key"], "val")
-              .toPandas().sort_values(["key", "depth", "bucket"])
-              .reset_index(drop=True))
-    pd.testing.assert_frame_equal(merged, direct, check_dtype=False)
-
-
 def test_cm_order_and_partitioning_invariant(spark):
     rows = _zipf(40)
     a = spark.createDataFrame(rows, "key string, val string")
@@ -270,16 +245,6 @@ def test_bloom_blocks_bitwise_match_duckdb(spark):
         exp["block"].astype(int).tolist()
     assert got["bits"].astype(int).tolist() == \
         exp["bits"].astype(int).tolist()
-
-
-def test_bloom_merge_equals_build_of_union(spark):
-    a = spark.createDataFrame([(f"a{i}",) for i in range(200)], "v string")
-    b = spark.createDataFrame([(f"b{i}",) for i in range(200)], "v string")
-    merged = (bloom_merge(bloom_build(a, "v"), bloom_build(b, "v"))
-              .toPandas().sort_values("block").reset_index(drop=True))
-    direct = (bloom_build(a.unionByName(b), "v")
-              .toPandas().sort_values("block").reset_index(drop=True))
-    pd.testing.assert_frame_equal(merged, direct, check_dtype=False)
 
 
 def test_bloom_probe_plan_is_scan_plus_filter(spark, tmp_path):

@@ -16,8 +16,8 @@ from stackoverflowner_spark.operators.dedup import (
     exact_dedup, lsh_candidate_pairs, minhash_signatures, ngram_jaccard_pairs,
     simhash)
 from stackoverflowner_spark.operators.link import link_broadcast, link_salted
-from stackoverflowner_spark.operators.multimodal import (
-    extract_features, frame_sample_plan, synth_media)
+from stackoverflowner_spark.operators.multimodal import (extract_features,
+                                                         synth_media)
 from stackoverflowner_spark.operators.tagger import GazetteerTagger
 from stackoverflowner_spark.operators.triples import triples_from_linked
 from stackoverflowner_spark.plans.pipeline import KGPipeline
@@ -181,8 +181,6 @@ def test_multimodal_plumbing(spark):
     rows = feats.collect()
     assert len(rows) == 30
     assert all(len(r.features) == 16 for r in rows)
-    plan = frame_sample_plan(media, every_ms=1000)
-    assert plan.count() > 0
 
 
 def test_extraction_error_flagged_not_fatal(spark):

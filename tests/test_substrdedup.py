@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.substrdedup import (
-    repeated_spans, scrub_repeated, window_hashes, winnow_candidates,
-    winnowed_fingerprints)
+    repeated_spans, window_hashes, winnow_candidates, winnowed_fingerprints)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
@@ -32,15 +31,11 @@ def _uniq(prefix, k):
 
 
 def test_driver_strict_and_nonvacuous(spark):
-    from tests.oracle_harness import run_all
+    from tests.oracle_harness import load_entry, run_all
     res = run_all(spark, SF, only=["substring_dedup"], strict=True)
     assert all(v == [] for v in res.values()), res
     # the fixture's seeded near-dup family must make the entry non-vacuous
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     assert mod.q_substring_dedup(spark, SF).count() >= 2
 
 
@@ -137,23 +132,6 @@ def test_winnow_short_docs_degenerate_gracefully(spark):
     pairs = {(r.id_a, r.id_b)
              for r in winnow_candidates(docs, n=6, w=8).collect()}
     assert pairs == {(1, 2)}
-
-
-def test_scrub_removes_exactly_the_spans(spark):
-    run = [f"r{i}" for i in range(12)]
-    a_toks = _uniq("a", 5) + run + _uniq("b", 4)
-    c_toks = _uniq("c", 3) + run + _uniq("d", 6)
-    clean = " ".join(_uniq("e", 30))
-    docs = _docs(spark, [(1, " ".join(a_toks)),
-                         (2, " ".join(c_toks)),
-                         (3, clean)])
-    out = {r.doc_id: r.text for r in scrub_repeated(docs, n=8).collect()}
-    assert out[1] == " ".join(_uniq("a", 5) + _uniq("b", 4))
-    assert out[2] == " ".join(_uniq("c", 3) + _uniq("d", 6))
-    assert out[3] == clean
-    # idempotence: nothing repeated survives a scrub
-    scrubbed = _docs(spark, sorted(out.items()))
-    assert repeated_spans(scrubbed, n=8).count() == 0
 
 
 def test_param_validation(spark):

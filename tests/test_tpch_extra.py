@@ -53,11 +53,8 @@ def test_money_family_strict_bitwise_sf001(spark, con):
     # have rotated off the 50-entry driver surface (r5f/r5g) and
     # run_all(only=...) silently skips absent names — this gate must
     # keep covering the WHOLE family regardless of rotation state
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    from tests.oracle_harness import load_entry
+    mod = load_entry()
     oracles = mod.oracle_sql()
     problems = []
     for name in MONEY_QUERIES:

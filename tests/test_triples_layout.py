@@ -8,8 +8,8 @@ many row groups each layout would force a reader to decode (min <= s <=
 max). The sorted layout must cut the candidate set by >= 5x in
 aggregate — that is the entire point of the layout and this gate fails
 if a writer change silently destroys the clustering (e.g. the file
-writer re-sorting by partition column only). Functional equality and
-the pruned point-lookup plan are gated alongside.
+writer re-sorting by partition column only). Functional equality is
+gated alongside.
 """
 
 import glob
@@ -18,9 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from stackoverflowner_spark.operators.triples import (read_subject,
-                                                      write_triples,
-                                                      write_triples_sorted)
+from stackoverflowner_spark.operators.triples import write_triples_sorted
 from stackoverflowner_spark.session import get_spark
 
 N_BUCKETS = 8
@@ -107,23 +105,3 @@ def test_sorted_layout_prunes_rowgroups(spark, tmp_path):
     b = sorted(map(tuple, spark.read.parquet(clustered)
                    .select("subj", "pred", "obj", "url").collect()))
     assert a == b
-
-
-def test_read_subject_prunes_partitions(spark, tmp_path):
-    tri = _synthetic_triples(spark, n=8_000, n_subj=800)
-    path = str(tmp_path / "tri")
-    write_triples(tri, path)
-    out = read_subject(spark, path, "ent_123", n_buckets=N_BUCKETS)
-    rows = out.collect()
-    assert len(rows) > 0 and all(r.subj == "ent_123" for r in rows)
-    # exactly the probe subject's rows, vs a full-scan reference
-    ref = (spark.read.parquet(path).filter(F.col("subj") == "ent_123")
-           .count())
-    assert len(rows) == ref
-    # partition pruning: the scan reads ONE part_hash directory
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "PartitionFilters" in plan
-    scanned = out._jdf.queryExecution().executedPlan() \
-        .collectLeaves().apply(0).metrics().apply("numFiles").value()
-    n_dir_files = len(glob.glob(path + "/part_hash=*/part-*"))
-    assert scanned < n_dir_files, (scanned, n_dir_files)
