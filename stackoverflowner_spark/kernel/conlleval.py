@@ -62,14 +62,12 @@ def extract_chunks(tags: Sequence[str]) -> List[Tuple[str, int, int]]:
     return chunks
 
 
-def calc_metrics(tp: int, p: int, t: int, percent: bool = True
-                 ) -> Tuple[float, float, float]:
+def calc_metrics(tp: int, p: int, t: int) -> Tuple[float, float, float]:
+    """(precision, recall, FB1) in percent, as conlleval prints them."""
     precision = tp / p if p else 0
     recall = tp / t if t else 0
     fb1 = 2 * precision * recall / (precision + recall) if precision + recall else 0
-    if percent:
-        return 100 * precision, 100 * recall, 100 * fb1
-    return precision, recall, fb1
+    return 100 * precision, 100 * recall, 100 * fb1
 
 
 def evaluate_sentences(golds: Sequence[Sequence[str]], preds: Sequence[Sequence[str]]

@@ -169,6 +169,8 @@ class GaussianBinner:
 # --------------------------------------------------------------------------- #
 
 _EMBED_DIM = 300
+_HIDDEN = 300  # MLP hidden width
+_LR = 0.05  # full-batch gradient step
 
 
 def hashed_embedding(words: Sequence[str], dim: int = _EMBED_DIM) -> np.ndarray:
@@ -193,13 +195,13 @@ def hashed_embedding(words: Sequence[str], dim: int = _EMBED_DIM) -> np.ndarray:
 class CTCModel:
     """Binned-feature MLP with the reference architecture (model.py:15-102)."""
 
-    def __init__(self, n_binned: int, hidden: int = 300, seed: int = 9911):
-        rng = np.random.default_rng(seed)
-        lim1 = math.sqrt(6.0 / (n_binned + hidden))
-        self.w1 = rng.uniform(-lim1, lim1, size=(n_binned, hidden))
-        self.b1 = np.zeros(hidden)
-        lim2 = math.sqrt(6.0 / (hidden + _EMBED_DIM + 2))
-        self.w2 = rng.uniform(-lim2, lim2, size=(hidden + _EMBED_DIM, 2))
+    def __init__(self, n_binned: int):
+        rng = np.random.default_rng(9911)
+        lim1 = math.sqrt(6.0 / (n_binned + _HIDDEN))
+        self.w1 = rng.uniform(-lim1, lim1, size=(n_binned, _HIDDEN))
+        self.b1 = np.zeros(_HIDDEN)
+        lim2 = math.sqrt(6.0 / (_HIDDEN + _EMBED_DIM + 2))
+        self.w2 = rng.uniform(-lim2, lim2, size=(_HIDDEN + _EMBED_DIM, 2))
         self.b2 = np.zeros(2)
 
     def _forward(self, feats: np.ndarray, embeds: np.ndarray
@@ -212,7 +214,7 @@ class CTCModel:
         return h, probs
 
     def fit(self, feats: np.ndarray, embeds: np.ndarray, labels: np.ndarray,
-            epochs: int = 70, lr: float = 0.05) -> None:
+            epochs: int = 70) -> None:
         """Full-batch gradient descent (deterministic; the reference trains
         full-batch for 70 epochs, prediction_ctc.py:217-276)."""
         y = np.zeros((len(labels), 2))
@@ -227,10 +229,10 @@ class CTCModel:
             dh = dz @ self.w2[: h.shape[1]].T * (1 - h * h)
             dw1 = feats.T @ dh
             db1 = dh.sum(axis=0)
-            self.w2 -= lr * dw2
-            self.b2 -= lr * db2
-            self.w1 -= lr * dw1
-            self.b1 -= lr * db1
+            self.w2 -= _LR * dw2
+            self.b2 -= _LR * db2
+            self.w1 -= _LR * dw1
+            self.b1 -= _LR * db1
 
     def predict(self, feats: np.ndarray, embeds: np.ndarray) -> np.ndarray:
         _, probs = self._forward(feats, embeds)
@@ -248,8 +250,7 @@ class CTCArtifact:
 
     N_FEATURES = 5
 
-    def __init__(self, natural_corpus: Sequence[str], code_corpus: Sequence[str],
-                 seed: int = 9911):
+    def __init__(self, natural_corpus: Sequence[str], code_corpus: Sequence[str]):
         self.char_lm_general = CharTrigramLM(w.lower() for w in natural_corpus)
         self.word_lm_general = WordUnigramLM(w.lower() for w in natural_corpus)
         domain = list(natural_corpus) + list(code_corpus)
@@ -261,11 +262,11 @@ class CTCArtifact:
         labels = np.array([1 if w in code_set else 0 for w in train_words])
 
         raw = self.raw_features(train_words)
-        self.binner = GaussianBinner(100)
+        self.binner = GaussianBinner()
         self.binner.fit(raw, self.N_FEATURES)
         binned = self.binner.transform(raw, self.N_FEATURES)
         embeds = hashed_embedding(train_words)
-        self.model = CTCModel(binned.shape[1], seed=seed)
+        self.model = CTCModel(binned.shape[1])
         self.model.fit(binned, embeds, labels)
 
     def raw_features(self, words: Sequence[str]) -> np.ndarray:

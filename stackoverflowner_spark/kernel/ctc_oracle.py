@@ -60,19 +60,19 @@ def _url_core_pattern() -> str:
 ASCII_PATTERN = "^[!-~]+$"
 
 
-def universe_where(col: str = "token") -> str:
-    """SQL predicate for the oracled token universe (valid in both Spark
-    SQL and DuckDB)."""
+def universe_where() -> str:
+    """SQL predicate on ``token`` for the oracled token universe (valid in
+    both Spark SQL and DuckDB)."""
     core = _url_core_pattern().replace("'", "''")
     return (
-        f"{col} <> '' "
-        f"and regexp_matches({col}, '{ASCII_PATTERN}') "
-        f"and not contains({col}, ':') "
-        f"and not contains({col}, '/') "
-        f"and not contains({col}, 'www') "
-        f"and not contains({col}, '^') "
-        f"and not contains({col}, '$') "
-        f"and not regexp_matches({col}, '{core}')"
+        "token <> '' "
+        f"and regexp_matches(token, '{ASCII_PATTERN}') "
+        "and not contains(token, ':') "
+        "and not contains(token, '/') "
+        "and not contains(token, 'www') "
+        "and not contains(token, '^') "
+        "and not contains(token, '$') "
+        f"and not regexp_matches(token, '{core}')"
     )
 
 
@@ -197,7 +197,7 @@ def ctc_oracle_sql(dirpath: str, consts: dict, tokens_cte: str,
 with raw_toks as ({tokens_cte}),
 toks as (
     select token from (select distinct token from raw_toks
-                       where {universe_where('token')})
+                       where {universe_where()})
     order by md5(token) limit {limit}),
 tri as (select * from read_parquet('{d}/tri.parquet')),
 tri_tot as (select * from read_parquet('{d}/tri_tot.parquet')),

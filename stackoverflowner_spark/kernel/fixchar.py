@@ -68,13 +68,13 @@ def _sloppy_cp1252_bytes(s: str) -> bytes | None:
     return bytes(out)
 
 
-def fix_text_lite(s: str, max_passes: int = 2) -> str:
+def fix_text_lite(s: str) -> str:
     """ftfy.fix_text's core repair: text that is UTF-8 bytes mis-decoded as
     cp1252/latin-1 is re-encoded and decoded as UTF-8, as long as that
     strictly reduces mojibake debris. Pure and deterministic; no external
     dependency."""
     cur = s
-    for _ in range(max_passes):
+    for _ in range(2):
         raw = _sloppy_cp1252_bytes(cur)
         if raw is None:
             break

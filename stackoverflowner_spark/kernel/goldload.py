@@ -32,11 +32,8 @@ def _drop_sentence(joined: str) -> bool:
     return False
 
 
-def parse_gold_lines(lines: Iterable[str], merge_tags: bool = True,
-                     replace_low_freq: bool = True) -> List[List[GoldToken]]:
-    selected = set(selected_tags())
-    if merge_tags:
-        selected = {MERGE_MAP.get(t, t) for t in selected}
+def parse_gold_lines(lines: Iterable[str]) -> List[List[GoldToken]]:
+    selected = {MERGE_MAP.get(t, t) for t in selected_tags()}
     sentences: List[List[GoldToken]] = []
     sentence: List[GoldToken] = []
     for line in lines:
@@ -52,12 +49,10 @@ def parse_gold_lines(lines: Iterable[str], merge_tags: bool = True,
             continue
         word, gold_label, _raw_word, md_label = vals[0], vals[1], vals[2], vals[3]
         word = " ".join(word.split("-----"))
-        if merge_tags:
-            gold_label = merge_label(gold_label)
-        if replace_low_freq:
-            name = gold_label.replace("B-", "").replace("I-", "")
-            if gold_label != "O" and name not in selected:
-                gold_label = "O"
+        gold_label = merge_label(gold_label)
+        name = gold_label.replace("B-", "").replace("I-", "")
+        if gold_label != "O" and name not in selected:
+            gold_label = "O"
         sentence.append(GoldToken(word, md_label, gold_label))
     if sentence:
         joined = " ".join(t.word for t in sentence)

@@ -22,7 +22,7 @@ from __future__ import annotations
 import re
 from typing import Iterable, Iterator, List, Optional, Tuple
 
-DEFAULT_ABBREVIATIONS = frozenset(
+ABBREVIATIONS = frozenset(
     # read_so_post_info.py:26 / format_markdown.py:26
     ["u.s.a", "fig", "etc", "eg", "mr", "mrs", "e.g", "no", "vs", "i.e"]
 )
@@ -132,9 +132,6 @@ def _pairwise_with_none(items: Iterable) -> Iterator[Tuple[object, Optional[obje
 class SentenceSplitter:
     """Untrained Punkt sentence splitter with a fixed abbreviation set."""
 
-    def __init__(self, abbreviations: frozenset = DEFAULT_ABBREVIATIONS):
-        self._abbrev = abbreviations
-
     # ------------------------------------------------------------------ #
     # word-level tokenization (Punkt's internal word tokenizer)
     # ------------------------------------------------------------------ #
@@ -165,7 +162,7 @@ class SentenceSplitter:
             tok.ellipsis = True
         elif tok.period_final and not raw.endswith(".."):
             head = raw[:-1].lower()
-            if head in self._abbrev or head.split("-")[-1] in self._abbrev:
+            if head in ABBREVIATIONS or head.split("-")[-1] in ABBREVIATIONS:
                 tok.abbr = True
             else:
                 tok.sentbreak = True

@@ -183,17 +183,17 @@ def _roman(n: int) -> str:
     return out
 
 
-def _numbered_list_pattern(limit: int = 5) -> str:
+def _numbered_list_pattern() -> str:
     # stokenizer.py:260-282 — note the boundary lookaheads bind only to the
     # first and last alternatives (no grouping), which we keep as-is.
     parts = []
-    for i in range(1, limit + 1):
+    for i in range(1, 6):
         upper = _roman(i)
         parts.extend([upper + "\\)", upper.lower() + "\\)", str(i) + "\\)"])
     return "(?=" + BOUND + ")" + "|".join(parts) + "(?=" + BOUND + ")"
 
 
-NUMBERED_LIST = _numbered_list_pattern(5)
+NUMBERED_LIST = _numbered_list_pattern()
 
 PROTECTED_RE = re.compile(
     _any_of(

@@ -48,7 +48,7 @@ CLASS_FUNC_NAME_T2 = (
     r"(?:,\s*)?)*\))" + "(?=" + BOUND + ")"
 )
 # exactly generate_number_list(5) + "(?=Bound)": T2 has no LEADING lookahead
-NUMBERED_LIST_T2 = _numbered_list_pattern(5)[len("(?=" + BOUND + ")"):]
+NUMBERED_LIST_T2 = _numbered_list_pattern()[len("(?=" + BOUND + ")"):]
 SPECIAL_WORDS_T2 = r"^http:|^HTTP:|^vs.|^c#.net|^C#.net" + "(?=" + BOUND + ")"
 
 PROTECTED_T2_RE = re.compile(

@@ -47,16 +47,15 @@ def _norm(c):
     return F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))
 
 
-def doc_lines(docs: DataFrame, text_col: str = "text",
-              host_col: str = "host") -> DataFrame:
+def doc_lines(docs: DataFrame) -> DataFrame:
     """docs(doc_id, host, text) -> one row per non-blank line:
     (doc_id, host, line_no, line, lhash). ``line`` keeps the raw bytes
     (reassembly is lossless for kept lines); ``lhash`` is the md5 of
     the normalized line — the engine-portable identity the frequency
     statistics key on."""
     return (docs
-            .select("doc_id", F.col(host_col).alias("host"),
-                    F.posexplode(F.split(F.col(text_col), "\n"))
+            .select("doc_id", "host",
+                    F.posexplode(F.split(F.col("text"), "\n"))
                     .alias("line_no", "line"))
             .withColumn("_n", _norm(F.col("line")))
             .filter(F.col("_n") != "")
@@ -64,15 +63,14 @@ def doc_lines(docs: DataFrame, text_col: str = "text",
                     F.md5("_n").alias("lhash")))
 
 
-def host_doc_counts(docs: DataFrame, host_col: str = "host") -> DataFrame:
+def host_doc_counts(docs: DataFrame) -> DataFrame:
     """(host, host_docs) — hosts-sized, the broadcast side of the
     ratio test."""
-    return (docs.groupBy(F.col(host_col).alias("host"))
+    return (docs.groupBy("host")
             .agg(F.count("*").alias("host_docs")))
 
 
-def flag_lines(docs: DataFrame, text_col: str = "text",
-               host_col: str = "host", min_docs: int = 2,
+def flag_lines(docs: DataFrame, min_docs: int = 2,
                max_ratio_x10: int = 3) -> DataFrame:
     """Exploded lines + ``keep`` (1/0). Boilerplate iff the line occurs
     in >= min_docs documents of its host AND in strictly more than
@@ -85,14 +83,14 @@ def flag_lines(docs: DataFrame, text_col: str = "text",
         raise ValueError("min_docs must be >= 2 (a 1-of-1 line is 100% "
                          "of its host)")
     from pyspark.sql import Window
-    lines = doc_lines(docs, text_col=text_col, host_col=host_col)
+    lines = doc_lines(docs)
     # per-line document frequency as a window pair over ONE shuffle of
     # the exploded lines (dense_rank-max == count distinct doc_id, the
     # sort-based form that spills instead of buffering a set): the old
     # groupBy + self-join computed and shuffled the line explode twice
     g = Window.partitionBy("host", "lhash")
     dr = F.dense_rank().over(g.orderBy("doc_id"))
-    hd = host_doc_counts(docs, host_col=host_col)
+    hd = host_doc_counts(docs)
     bp = ((F.col("n_docs") >= min_docs)
           & (F.col("n_docs") * 10 > max_ratio_x10 * F.col("host_docs")))
     return (lines
@@ -103,8 +101,7 @@ def flag_lines(docs: DataFrame, text_col: str = "text",
             .withColumn("keep", (~bp).cast("long")))
 
 
-def remove_boilerplate(docs: DataFrame, text_col: str = "text",
-                       host_col: str = "host", min_docs: int = 2,
+def remove_boilerplate(docs: DataFrame, min_docs: int = 2,
                        max_ratio_x10: int = 3) -> DataFrame:
     """(doc_id, host, n_lines, n_kept, clean_text): the document with
     its host-frequent lines removed. n_lines counts the document's
@@ -114,8 +111,7 @@ def remove_boilerplate(docs: DataFrame, text_col: str = "text",
     empty, not as an empty string that hashes differently cross-engine).
     Documents whose text had no non-blank lines at all get
     n_lines = n_kept = 0 and NULL clean_text."""
-    flagged = flag_lines(docs, text_col=text_col, host_col=host_col,
-                         min_docs=min_docs, max_ratio_x10=max_ratio_x10)
+    flagged = flag_lines(docs, min_docs=min_docs, max_ratio_x10=max_ratio_x10)
     ordered = F.array_sort(
         F.collect_list(F.struct("line_no", "keep", "line"))
     ).cast(_LSTRUCT)
@@ -131,7 +127,7 @@ def remove_boilerplate(docs: DataFrame, text_col: str = "text",
                        F.filter("_ls", lambda s: s["keep"] == 1),
                        lambda s: s["line"]), "\n")))
            .drop("_ls"))
-    return (docs.select("doc_id", F.col(host_col).alias("host"))
+    return (docs.select("doc_id", "host")
             .join(per, ["doc_id", "host"], "left")
             .select("doc_id", "host",
                     F.coalesce("n_lines", F.lit(0)).alias("n_lines"),

@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 END = "</w>"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, cnt): lowercase whitespace words — ONE corpus pass; the
     vocabulary-sized table every training iteration runs over."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"),
+    words = F.filter(F.split(F.lower(F.col("text")), r"\s+"),
                      lambda x: x != "")
     return (docs.select(F.explode(words).alias("word"))
             .groupBy("word").agg(F.count("*").alias("cnt")))

@@ -34,8 +34,7 @@ from stackoverflowner_spark.operators.decontam import norm_tokens
 from stackoverflowner_spark.operators.lmfilter import _bigrams
 
 
-def collocations(docs: DataFrame, text_col: str = "text",
-                 min_pair_count: int = 2,
+def collocations(docs: DataFrame, min_pair_count: int = 2,
                  strong_lift_x10: int = 20) -> DataFrame:
     """(w1, w2, c12, c1, c2, lift_num, lift_den, strong) per adjacent
     token pair with ``c12 >= min_pair_count``.
@@ -44,11 +43,11 @@ def collocations(docs: DataFrame, text_col: str = "text",
     ``(c12 * N^2) / (P * c1 * c2)``; ``strong`` = 1 iff that ratio is
     >= strong_lift_x10 / 10, decided in integers (10 * num >= t * den).
     """
-    toks = docs.select(F.explode(norm_tokens(text_col)).alias("w"))
+    toks = docs.select(F.explode(norm_tokens()).alias("w"))
     uni = toks.groupBy("w").agg(F.count("*").alias("c"))
     totals = toks.agg(F.count("*").alias("n_tokens"))
 
-    pairs = _bigrams(docs, text_col)
+    pairs = _bigrams(docs)
     c12 = (pairs.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
            .filter(F.col("c12") >= min_pair_count))
     p_total = pairs.agg(F.count("*").alias("n_pairs"))

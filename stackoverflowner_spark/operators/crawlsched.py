@@ -29,16 +29,13 @@ from pyspark.sql.window import Window
 EPOCH_2024_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
 
 
-def crawl_schedule(urls: DataFrame, host_col: str = "host",
-                   url_col: str = "url",
-                   start_us: int = EPOCH_2024_US,
+def crawl_schedule(urls: DataFrame, start_us: int = EPOCH_2024_US,
                    interval_us: int = 2_000_000) -> DataFrame:
     """(host, url, slot, fetch_us): slot = the url's rank in the host's
     md5(url) order (ties broken by the url string); fetch_us =
     start_us + slot * interval_us."""
-    h = F.md5(F.col(url_col))
-    d = urls.select(F.col(host_col).alias("host"),
-                    F.col(url_col).alias("url"),
+    h = F.md5(F.col("url"))
+    d = urls.select("host", "url",
                     h.alias("_h"),
                     F.conv(F.substring(h, 1, 1), 16, 10)
                     .cast("int").alias("_b"))
@@ -57,18 +54,12 @@ def crawl_schedule(urls: DataFrame, host_col: str = "host",
                     .cast("long").alias("fetch_us")))
 
 
-def plain_schedule(urls: DataFrame, host_col: str = "host",
-                   url_col: str = "url",
-                   start_us: int = EPOCH_2024_US,
-                   interval_us: int = 2_000_000) -> DataFrame:
+def plain_schedule(urls: DataFrame) -> DataFrame:
     """The single-window reference implementation (head-host skew rides
     one task); semantics identical to ``crawl_schedule`` — the equality
     is the operator's correctness gate."""
-    w = Window.partitionBy(host_col).orderBy(F.md5(F.col(url_col)),
-                                             F.col(url_col))
+    w = Window.partitionBy("host").orderBy(F.md5(F.col("url")), "url")
     slot = (F.row_number().over(w) - 1).cast("long")
-    return urls.select(F.col(host_col).alias("host"),
-                       F.col(url_col).alias("url"),
-                       slot.alias("slot"),
-                       (F.lit(start_us) + slot * F.lit(interval_us))
+    return urls.select("host", "url", slot.alias("slot"),
+                       (F.lit(EPOCH_2024_US) + slot * F.lit(2_000_000))
                        .cast("long").alias("fetch_us"))

@@ -24,12 +24,12 @@ from pyspark.sql import types as T
 from ..kernel.ctc import CTCArtifact, GaussianBinner
 
 
-def fit_ctc(natural_corpus, code_corpus, seed: int = 9911) -> CTCArtifact:
-    return CTCArtifact(list(natural_corpus), list(code_corpus), seed=seed)
+def fit_ctc(natural_corpus, code_corpus) -> CTCArtifact:
+    return CTCArtifact(list(natural_corpus), list(code_corpus))
 
 
-def with_ctc_column(tokens: DataFrame, spark: SparkSession, artifact: CTCArtifact,
-                    token_col: str = "token") -> DataFrame:
+def with_ctc_column(tokens: DataFrame, spark: SparkSession,
+                    artifact: CTCArtifact) -> DataFrame:
     bc = spark.sparkContext.broadcast(artifact)
 
     @F.pandas_udf(T.IntegerType())
@@ -39,7 +39,7 @@ def with_ctc_column(tokens: DataFrame, spark: SparkSession, artifact: CTCArtifac
         preds = art.predict(list(uniques))
         return pd.Series(preds[codes].astype("int32"))
 
-    return tokens.withColumn("ctc", ctc_pred(F.col(token_col)))
+    return tokens.withColumn("ctc", ctc_pred(F.col("token")))
 
 
 class FreqVectorArtifact:
@@ -59,20 +59,18 @@ class FreqVectorArtifact:
         self.token_col = token_col
 
 
-def fit_freq_vector(tokens: DataFrame, token_col: str = "token",
-                    bins: int = 100, w: float = 5.0) -> FreqVectorArtifact:
+def fit_freq_vector(tokens: DataFrame) -> FreqVectorArtifact:
     """Distributed count (A7); the binner fit (A8) collects two scalars."""
-    counts = tokens.groupBy(token_col).agg(F.count("*").alias("freq"))
+    counts = tokens.groupBy("token").agg(F.count("*").alias("freq"))
     row = counts.agg(F.min("freq").alias("mn"), F.max("freq").alias("mx")).first()
     mn = float(row["mn"]) if row["mn"] is not None else 0.0
     mx = float(row["mx"]) if row["mx"] is not None else 0.0
-    return FreqVectorArtifact(counts, GaussianBinner.from_range(mn, mx, bins, w),
-                              token_col)
+    return FreqVectorArtifact(
+        counts, GaussianBinner.from_range(mn, mx, 100, 5.0), "token")
 
 
 def with_freq_vector(tokens: DataFrame, spark: SparkSession,
-                     artifact: FreqVectorArtifact,
-                     token_col: str = "token") -> DataFrame:
+                     artifact: FreqVectorArtifact) -> DataFrame:
     """Join the distributed counts (AQE decides broadcast vs shuffle), then
     one Arrow pass turns each frequency into its binned vector. Unseen
     tokens get frequency 0 like the reference's dict default."""
@@ -89,7 +87,7 @@ def with_freq_vector(tokens: DataFrame, spark: SparkSession,
                                .reshape(-1, 1), 1).astype(np.float32)
         return pd.Series([mat[c].tolist() for c in codes])
 
-    cnt = artifact.counts.withColumnRenamed(artifact.token_col, token_col)
-    joined = tokens.join(cnt, token_col, "left")
+    cnt = artifact.counts.withColumnRenamed(artifact.token_col, "token")
+    joined = tokens.join(cnt, "token", "left")
     return (joined.withColumn("freq_vector", freq_vec(F.col("freq")))
             .drop("freq"))

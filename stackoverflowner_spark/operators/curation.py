@@ -43,13 +43,12 @@ from .dedup import (lsh_candidate_pairs, minhash_signatures,
 from .sampling import dedup_clusters, hash_split
 from .textstats import with_lang_id, with_quality_score
 
-DEFAULT_SPLITS = [("train", 0.9), ("val", 0.05), ("test", 0.05)]
+SPLITS = [("train", 0.9), ("val", 0.05), ("test", 0.05)]
 
 
 def _stage_frontiers(docs: DataFrame, lang: str, min_quality: float,
-                     shingle_n: int, minhash_k: int, rows_per_band: int,
-                     jaccard_threshold: float, id_col: str, text_col: str,
-                     minhash_impl: str, simhash_bands: int = 4,
+                     jaccard_threshold: float, minhash_impl: str,
+                     simhash_bands: int = 4,
                      simhash_max_hamming: int = 3
                      ) -> Tuple[Dict[str, DataFrame], Dict[str, Observation]]:
     """The shared stage frontiers of the curation DAG, plus ``observe()``
@@ -69,16 +68,15 @@ def _stage_frontiers(docs: DataFrame, lang: str, min_quality: float,
     obs = {"in": Observation(), "lang": Observation(),
            "q": Observation(), "e": Observation()}
     scored = with_quality_score(
-        with_lang_id(docs.observe(obs["in"], F.count(F.lit(1)).alias("n")),
-                     text_col), text_col)
+        with_lang_id(docs.observe(obs["in"], F.count(F.lit(1)).alias("n"))))
     lang_kept = (scored.filter(F.col("lang_pred") == lang)
                  .observe(obs["lang"], F.count(F.lit(1)).alias("n")))
     q_kept = (lang_kept.filter(F.col("quality") >= min_quality)
               .observe(obs["q"], F.count(F.lit(1)).alias("n")))
     w = Window.partitionBy("_content_hash")
-    e_kept = (q_kept.withColumn("_content_hash", F.md5(normalized_text(text_col)))
-              .withColumn("_keep_id", F.min(id_col).over(w))
-              .filter(F.col(id_col) == F.col("_keep_id"))
+    e_kept = (q_kept.withColumn("_content_hash", F.md5(normalized_text()))
+              .withColumn("_keep_id", F.min("doc_id").over(w))
+              .filter(F.col("doc_id") == F.col("_keep_id"))
               .drop("_content_hash", "_keep_id")
               .observe(obs["e"], F.count(F.lit(1)).alias("n"))
               # e_kept feeds several consumers (signatures, jaccard
@@ -94,36 +92,30 @@ def _stage_frontiers(docs: DataFrame, lang: str, min_quality: float,
         # band join + Jaccard verification. Cheaper at scale (no k-way
         # signature fanout), coarser notion of similarity (bit distance on
         # the sign-aggregated word-hash fingerprint).
-        verified = simhash_pairs(e_kept, id_col, text_col,
-                                 bands=simhash_bands,
+        verified = simhash_pairs(e_kept, bands=simhash_bands,
                                  max_hamming=simhash_max_hamming)
     else:
         sig_fn = {"fast": minhash_signatures_fast,
                   "md5": minhash_signatures}[minhash_impl]
-        sig = sig_fn(e_kept, id_col, text_col, n=shingle_n, k=minhash_k)
-        cands = lsh_candidate_pairs(sig, id_col, rows_per_band)
-        verified = ngram_jaccard_pairs(e_kept, cands, id_col, text_col,
-                                       n=shingle_n,
+        sig = sig_fn(e_kept)
+        cands = lsh_candidate_pairs(sig)
+        verified = ngram_jaccard_pairs(e_kept, cands,
                                        threshold=jaccard_threshold)
-    clusters = dedup_clusters(verified, e_kept.select(id_col), id_col)
+    clusters = dedup_clusters(verified, e_kept.select("doc_id"))
     survivors = e_kept.join(clusters.filter(F.col("is_dup") == 0)
-                            .select(id_col), id_col, "left_semi")
+                            .select("doc_id"), "doc_id", "left_semi")
     return ({"lang_kept": lang_kept, "q_kept": q_kept, "e_kept": e_kept,
              "clusters": clusters, "survivors": survivors}, obs)
 
 
-def curate_documents(docs: DataFrame, lang: str = "en",
-                     min_quality: float = 0.3, shingle_n: int = 3,
-                     minhash_k: int = 8, rows_per_band: int = 2,
+def curate_documents(docs: DataFrame, min_quality: float = 0.3,
                      jaccard_threshold: float = 0.7,
-                     splits=None, id_col: str = "doc_id",
-                     text_col: str = "text",
                      minhash_impl: str = "fast", simhash_bands: int = 4,
                      simhash_max_hamming: int = 3) -> DataFrame:
     """documents -> curated rows with a ``split`` column.
 
-    Returns (id_col, text_col, lang_pred, quality, split) for the surviving
-    documents. Stage-by-stage:
+    Returns (doc_id, text, lang_pred, quality, split) for the surviving
+    English documents, split by ``SPLITS``. Stage-by-stage:
 
     1. language filter on the predicted language (not the stored column —
        crawls lie) — `with_lang_id`, pure column expressions;
@@ -141,12 +133,10 @@ def curate_documents(docs: DataFrame, lang: str = "en",
     executors evict it under memory pressure; the report variants
     unpersist eagerly instead.
     """
-    splits = splits or DEFAULT_SPLITS
-    f, _ = _stage_frontiers(docs, lang, min_quality, shingle_n, minhash_k,
-                            rows_per_band, jaccard_threshold, id_col, text_col,
+    f, _ = _stage_frontiers(docs, "en", min_quality, jaccard_threshold,
                             minhash_impl, simhash_bands, simhash_max_hamming)
-    return hash_split(f["survivors"], splits, id_col).select(
-        id_col, text_col, "lang_pred", "quality", "split")
+    return hash_split(f["survivors"], SPLITS).select(
+        "doc_id", "text", "lang_pred", "quality", "split")
 
 
 def _report_rows(f: Dict[str, DataFrame], obs: Dict[str, Observation]
@@ -171,12 +161,8 @@ def _report_df(spark, rows: List[Tuple[str, int, int]]) -> DataFrame:
         "stage string, rows_in long, rows_out long, dropped long")
 
 
-def curation_report(docs: DataFrame, lang: str = "en",
-                    min_quality: float = 0.3, shingle_n: int = 3,
-                    minhash_k: int = 8, rows_per_band: int = 2,
+def curation_report(docs: DataFrame, min_quality: float = 0.3,
                     jaccard_threshold: float = 0.7,
-                    id_col: str = "doc_id",
-                    text_col: str = "text",
                     minhash_impl: str = "fast", simhash_bands: int = 4,
                     simhash_max_hamming: int = 3) -> DataFrame:
     """One row per curation stage: (stage, rows_in, rows_out, dropped).
@@ -187,9 +173,8 @@ def curation_report(docs: DataFrame, lang: str = "en",
     standalone form runs the stage DAG for the counts only (one scan pass
     for n0-n3 via observe counters, plus the near-dup jobs for n4).
     """
-    f, obs = _stage_frontiers(docs, lang, min_quality, shingle_n, minhash_k,
-                              rows_per_band, jaccard_threshold, id_col,
-                              text_col, minhash_impl, simhash_bands,
+    f, obs = _stage_frontiers(docs, "en", min_quality, jaccard_threshold,
+                              minhash_impl, simhash_bands,
                               simhash_max_hamming)
     try:
         rows = _report_rows(f, obs)
@@ -199,32 +184,27 @@ def curation_report(docs: DataFrame, lang: str = "en",
 
 
 def curate_with_report(docs: DataFrame, lang: str = "en",
-                       min_quality: float = 0.3, shingle_n: int = 3,
-                       minhash_k: int = 8, rows_per_band: int = 2,
+                       min_quality: float = 0.3,
                        jaccard_threshold: float = 0.7,
-                       splits=None, id_col: str = "doc_id",
-                       text_col: str = "text",
                        minhash_impl: str = "fast",
                        materialize=None) -> DataFrame:
     """Run curation ONCE and return the report; ``materialize(curated)``
     (e.g. a parquet write) consumes the curated rows from the same persisted
     frontiers, so the expensive near-dup stage never executes twice."""
-    splits = splits or DEFAULT_SPLITS
-    f, obs = _stage_frontiers(docs, lang, min_quality, shingle_n, minhash_k,
-                              rows_per_band, jaccard_threshold, id_col,
-                              text_col, minhash_impl)
+    f, obs = _stage_frontiers(docs, lang, min_quality, jaccard_threshold,
+                              minhash_impl)
     # e_kept is persisted by _stage_frontiers; clusters feeds the near-dup
     # count and the survivor semi-join, so persist it too — every count and
     # the curated output then read the one materialized near-dup pass.
     clusters = f["clusters"].persist()
     f = dict(f, clusters=clusters)
     survivors = f["e_kept"].join(clusters.filter(F.col("is_dup") == 0)
-                                 .select(id_col), id_col, "left_semi")
+                                 .select("doc_id"), "doc_id", "left_semi")
     try:
         rows = _report_rows(f, obs)
         if materialize is not None:
-            curated = hash_split(survivors, splits, id_col).select(
-                id_col, text_col, "lang_pred", "quality", "split")
+            curated = hash_split(survivors, SPLITS).select(
+                "doc_id", "text", "lang_pred", "quality", "split")
             materialize(curated)
     finally:
         f["e_kept"].unpersist(blocking=False)

@@ -50,17 +50,15 @@ def ngrams(toks, n: int):
     return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
 
-def benchmark_grams(bench: DataFrame, text_col: str = "text",
-                    n: int = 8) -> DataFrame:
+def benchmark_grams(bench: DataFrame, n: int = 8) -> DataFrame:
     """Distinct n-grams of the benchmark set: one column ``gram``. Small
     (eval-set sized) — the caller broadcasts it."""
     return (bench
-            .select(F.explode(ngrams(norm_tokens(text_col), n)).alias("gram"))
+            .select(F.explode(ngrams(norm_tokens(), n)).alias("gram"))
             .distinct())
 
 
 def with_contamination(docs: DataFrame, bench: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
                        n: int = 8) -> DataFrame:
     """Per-document contamination counts against the benchmark set.
 
@@ -70,12 +68,12 @@ def with_contamination(docs: DataFrame, bench: DataFrame,
       hit_ngrams    — DISTINCT benchmark grams the doc shares
       contaminated  — hit_ngrams > 0
     """
-    bg = F.broadcast(benchmark_grams(bench, text_col, n))
-    toks = norm_tokens(text_col)
-    hits = (docs.select(F.col(id_col),
+    bg = F.broadcast(benchmark_grams(bench, n=n))
+    toks = norm_tokens()
+    hits = (docs.select(F.col("doc_id"),
                         F.explode(ngrams(toks, n)).alias("gram"))
             .join(bg, "gram")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.countDistinct("gram").alias("hit_ngrams")))
     # total_ngrams is just max(0, n_tokens - (n-1)) — counting does not
     # need the gram strings, so this branch skips building them (the
@@ -83,9 +81,9 @@ def with_contamination(docs: DataFrame, bench: DataFrame,
     n_toks = F.size(toks)
     total = F.when(n_toks >= n, n_toks - (n - 1)).otherwise(F.lit(0))
     return (docs
-            .select(F.col(id_col), total.cast("long")
+            .select(F.col("doc_id"), total.cast("long")
                     .alias("total_ngrams"))
-            .join(F.broadcast(hits), id_col, "left")
+            .join(F.broadcast(hits), "doc_id", "left")
             .withColumn("hit_ngrams",
                         F.coalesce(F.col("hit_ngrams"), F.lit(0)).cast("long"))
             .withColumn("contaminated", F.col("hit_ngrams") > 0))

@@ -33,17 +33,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def disambiguate(candidates: DataFrame, edges: DataFrame,
-                 doc_col: str = "doc_id", mention_col: str = "mention",
-                 ent_col: str = "entity") -> DataFrame:
+def disambiguate(candidates: DataFrame, edges: DataFrame) -> DataFrame:
     """candidates(doc, mention, entity) + edges(src, dst) ->
     (doc, mention, entity, support): one winning candidate per
     (doc, mention). Candidates with no adjacent co-mention evidence
     keep support 0 and still resolve (by entity order), so every
     mention gets exactly one assignment."""
-    cand = (candidates.select(F.col(doc_col).alias("_d"),
-                              F.col(mention_col).alias("_m"),
-                              F.col(ent_col).alias("_e"))
+    cand = (candidates.select(F.col("doc_id").alias("_d"),
+                              F.col("mention").alias("_m"),
+                              F.col("entity").alias("_e"))
             .distinct())
     sym = (edges.select(F.col("src").alias("_e"), F.col("dst").alias("_n"))
            .unionByName(edges.select(F.col("dst").alias("_e"),
@@ -67,7 +65,7 @@ def disambiguate(candidates: DataFrame, edges: DataFrame,
          .orderBy(F.col("support").desc(), F.col("_e").asc()))
     return (scored.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(F.col("_d").alias(doc_col),
-                    F.col("_m").alias(mention_col),
-                    F.col("_e").alias(ent_col),
+            .select(F.col("_d").alias("doc_id"),
+                    F.col("_m").alias("mention"),
+                    F.col("_e").alias("entity"),
                     "support"))

@@ -40,31 +40,28 @@ def _bucket(col, buckets: int):
             .cast("long") % buckets)
 
 
-def hashed_bigram_buckets(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          buckets: int = 4096) -> DataFrame:
+def hashed_bigram_buckets(df: DataFrame, buckets: int = 4096) -> DataFrame:
     """(id, bucket, c): md5-hashed word-bigram counts per document."""
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     n = F.size(words)
     grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.transform(
             F.slice(words, 1, F.greatest(n - 1, F.lit(0))),
             lambda w, i: F.concat_ws(" ", w, words[i + 1]))).alias("gram"))
     return (grams.withColumn("bucket", _bucket(F.col("gram"), buckets))
-            .groupBy(id_col, "bucket")
+            .groupBy("doc_id", "bucket")
             .agg(F.count("*").cast("long").alias("c")))
 
 
 def dsir_bucket_stats(target: DataFrame, raw: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
                       buckets: int = 4096) -> DataFrame:
     """(bucket, target_c, raw_c): integer per-bucket totals over both
     corpora — the multinomials' sufficient statistics, bitwise
     cross-engine (no floats anywhere)."""
-    t = (hashed_bigram_buckets(target, id_col, text_col, buckets)
+    t = (hashed_bigram_buckets(target, buckets=buckets)
          .groupBy("bucket").agg(F.sum("c").alias("target_c")))
-    r = (hashed_bigram_buckets(raw, id_col, text_col, buckets)
+    r = (hashed_bigram_buckets(raw, buckets=buckets)
          .groupBy("bucket").agg(F.sum("c").alias("raw_c")))
     return (t.join(r, "bucket", "full")
             .select("bucket",

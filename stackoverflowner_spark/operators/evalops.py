@@ -27,15 +27,15 @@ _SPANS_SCHEMA = T.StructType([
 ])
 
 
-def spans_table(tagged_sentences: DataFrame, gold_col: str = "gold_tags",
-                pred_col: str = "pred_tags") -> DataFrame:
+def spans_table(tagged_sentences: DataFrame) -> DataFrame:
     """(url, sent_idx, gold_tags array, pred_tags array) -> exploded spans."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for url, sent_idx, gold, pred in zip(
-                    pdf["url"], pdf["sent_idx"], pdf[gold_col], pdf[pred_col]):
+                    pdf["url"], pdf["sent_idx"], pdf["gold_tags"],
+                    pdf["pred_tags"]):
                 for typ, a, b in extract_chunks(list(gold)):
                     out.append((url, int(sent_idx), typ, a, b, "gold"))
                 for typ, a, b in extract_chunks(list(pred)):

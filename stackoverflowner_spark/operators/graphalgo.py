@@ -134,7 +134,7 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
     return dist
 
 
-def kcore(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """edges(src, dst) (undirected reading) -> (node, deg): the nodes of
     the k-core — the maximal subgraph in which every node has degree
     >= k — with their degree inside the core. Empty when no such
@@ -144,7 +144,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
         raise ValueError("k must be >= 1")
     und = _undirected(edges).transform(checkpoint)
 
-    for _ in range(max_iter):
+    for _ in range(100):
         deg = (und.select(F.col("u").alias("node"))
                .unionAll(und.select(F.col("v").alias("node")))
                .groupBy("node").agg(F.count("*").alias("deg")))
@@ -164,8 +164,8 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
             .filter(F.col("deg") >= k))
 
 
-def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_cost: int,
-                  max_iter: int = 100) -> DataFrame:
+def weighted_sssp(edges: DataFrame, seeds: DataFrame,
+                  max_cost: int) -> DataFrame:
     """edges(src, dst, w) (directed, integer w >= 1) + seeds(node) ->
     (node, cost): cheapest path cost from the nearest seed, restricted
     to paths of total cost <= ``max_cost`` (nodes only reachable above
@@ -184,7 +184,7 @@ def weighted_sssp(edges: DataFrame, seeds: DataFrame, max_cost: int,
     # improvement-emptiness rides an observe() on the checkpoint job —
     # no second isEmpty action per relaxation round
     from pyspark.sql import Observation
-    for _ in range(max_iter):
+    for _ in range(100):
         cand = (es.join(frontier, es.a == frontier.node)
                 .select(F.col("b").alias("node"),
                         (F.col("cost") + F.col("w")).alias("cost"))
@@ -274,12 +274,12 @@ def sample_pivots(edges: DataFrame, k: int) -> DataFrame:
 
 
 def betweenness(edges: DataFrame, sources: DataFrame = None,
-                max_iter: int = 30, scale: bool = False) -> DataFrame:
+                scale: bool = False) -> DataFrame:
     """Brandes betweenness centrality on the undirected, unweighted
     reading of edges(src, dst) -> (node, bc).
 
     The last member of this module's centrality family (degree is a
-    groupBy; PageRank/HITS are operators/pagerank.py; closeness/harmonic
+    groupBy; PageRank is operators/pagerank.py; closeness/harmonic
     are operators/hyperball.py): how often a node sits ON the shortest
     paths between others — the broker/bottleneck signal for KG QA
     (an alias cluster whose canonical node has far higher betweenness
@@ -336,7 +336,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
            .transform(checkpoint))
     levels = [lvl]
     visited = lvl.select("s", "node")
-    for _ in range(max_iter):
+    for _ in range(30):
         obs = Observation()
         nxt = (levels[-1].join(sym, F.col("node") == F.col("a"))
                .select("s", F.col("b").alias("node"), "sigma")
@@ -390,8 +390,7 @@ def betweenness(edges: DataFrame, sources: DataFrame = None,
     return bc
 
 
-def modularity(edges: DataFrame, labels: DataFrame,
-               weight_col: str = None) -> DataFrame:
+def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity of a community assignment -> one row
     (m, communities, q): the quality score for the partitions
     ``lpa_communities`` (or components/dedup clustering) emit.
@@ -407,33 +406,11 @@ def modularity(edges: DataFrame, labels: DataFrame,
     ``labels`` count as their own singleton community (coalesce to the
     node id).
 
-    ``weight_col`` gives the WEIGHTED generalization (integer weights
-    >= 1 — the co-mention graph's evidence counts): m becomes the total
-    weight W, e_c the internal weight, d_c the strength (weighted
-    degree) sum — the same exact-integer numerator, so still
-    bit-stable. Parallel/bidirectional duplicates SUM their weights
-    into one undirected edge (a multigraph reading; the unweighted
-    path keeps its set-of-edges reading).
-
     Scale shape: two broadcast-or-shuffle joins edge->label (the label
     table is node-sized), one degree agg, two community-keyed aggs —
     all partial-agg friendly, nothing pair-quadratic.
     """
-    if weight_col is None:
-        und = _undirected(edges).withColumn("w", F.lit(1).cast("long"))
-    else:
-        # self-loops are KEPT in the weighted reading (a contracted
-        # community graph carries intra-community weight as loops):
-        # one (v, v, w) row contributes w to m, w to its community's
-        # e_in, and 2w to the node's strength — exactly Newman's
-        # A_vv = 2*w_self convention, falling out of the symmetric
-        # degree union below with no special-casing
-        u = F.least(F.col("src"), F.col("dst"))
-        v = F.greatest(F.col("src"), F.col("dst"))
-        und = (edges.select(u.alias("u"), v.alias("v"),
-                            F.col(weight_col).cast("long").alias("w"))
-               .groupBy("u", "v").agg(F.sum("w").alias("w")))
-    und = checkpoint(und)
+    und = checkpoint(_undirected(edges).withColumn("w", F.lit(1).cast("long")))
     m = (und.agg(F.sum("w")).collect()[0][0] or 0)
     lab = labels.select(F.col("node"), F.col("community"))
     if m == 0:
@@ -481,8 +458,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
 
 
 def refine_communities(edges: DataFrame, labels: DataFrame,
-                       max_rounds: int = 5,
-                       weight_col: str = None) -> DataFrame:
+                       max_rounds: int = 5) -> DataFrame:
     """Greedy modularity refinement of a community assignment — the
     Louvain local-move phase (Blondel et al. 2008), made deterministic
     and exact: every node simultaneously evaluates moving to each
@@ -505,38 +481,14 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
     ACCEPTED partitions strictly Q-increasing and terminating — on
     rejection the previous labels return unchanged.
 
-    ``weight_col`` refines against WEIGHTED modularity (integer weights
-    >= 1, the ``modularity`` weighted reading): m becomes total weight,
-    degrees become strengths, e_vb the weight into b — the identical
-    integer gain formula, still exact.
-
     Scale shape per round: one (node, nbr_community) count agg over the
     symmetrized edges (the dominant shuffle, O(E)), community-keyed
     strength sums, a per-node max_by argmax — all partial-agg friendly;
     ``localCheckpoint`` truncates the round lineage.
     """
-    if weight_col is None:
-        und = (_undirected(edges)
-               .withColumn("w", F.lit(1).cast("long")).transform(checkpoint))
-        selfw = und.limit(0).select(F.col("u").alias("node"),
-                                    F.col("w").alias("sw"))
-    else:
-        # weighted reading keeps self-loops (contracted community
-        # graphs carry intra-community weight as loops): a loop adds w
-        # to m and to its community's e_in and 2w to the node's
-        # strength, but never to e_vc (it moves WITH the node, so it
-        # cancels out of every gain) — Newman's A_vv = 2*w_self
-        uu = F.least(F.col("src"), F.col("dst"))
-        vv = F.greatest(F.col("src"), F.col("dst"))
-        allw = (edges.select(uu.alias("u"), vv.alias("v"),
-                             F.col(weight_col).cast("long").alias("w"))
-                .groupBy("u", "v").agg(F.sum("w").alias("w")))
-        und = allw.filter(F.col("u") != F.col("v")).transform(checkpoint)
-        selfw = (allw.filter(F.col("u") == F.col("v"))
-                 .select(F.col("u").alias("node"),
-                         F.col("w").alias("sw")).transform(checkpoint))
-    m = int(und.agg(F.sum("w")).collect()[0][0] or 0) \
-        + int(selfw.agg(F.sum("sw")).collect()[0][0] or 0)
+    und = (_undirected(edges)
+           .withColumn("w", F.lit(1).cast("long")).transform(checkpoint))
+    m = int(und.agg(F.sum("w")).collect()[0][0] or 0)
     if m == 0:
         return labels.select("node", "community")
     both = (und.select(F.col("u").alias("node"), F.col("v").alias("nbr"),
@@ -544,12 +496,7 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
             .unionAll(und.select(F.col("v").alias("node"),
                                  F.col("u").alias("nbr"), "w"))
             .transform(checkpoint))
-    pair_deg = both.groupBy("node").agg(F.sum("w").alias("pd"))
-    deg = (pair_deg.join(selfw, "node", "full")
-           .select("node", (F.coalesce(F.col("pd"), F.lit(0))
-                            + F.lit(2) * F.coalesce(F.col("sw"),
-                                                    F.lit(0)))
-                   .alias("d")))
+    deg = both.groupBy("node").agg(F.sum("w").alias("d"))
     nodes = deg.select("node").distinct()
     cur = (nodes.join(labels.select("node", "community"), "node", "left")
            .select("node", F.coalesce(F.col("community"), F.col("node"))
@@ -561,17 +508,10 @@ def refine_communities(edges: DataFrame, labels: DataFrame,
                         F.col("community").alias("cu"))
         lv = lab.select(F.col("node").alias("v"),
                         F.col("community").alias("cv"))
-        e_pair = (und.join(lu, "u").join(lv, "v")
-                  .filter(F.col("cu") == F.col("cv"))
-                  .groupBy(F.col("cu").alias("community"))
-                  .agg(F.sum("w").alias("ep")))
-        e_self = (selfw.join(lab, "node")
-                  .groupBy("community").agg(F.sum("sw").alias("es")))
-        e_c = (e_pair.join(e_self, "community", "full")
-               .select("community",
-                       (F.coalesce(F.col("ep"), F.lit(0))
-                        + F.coalesce(F.col("es"), F.lit(0)))
-                       .alias("e_in")))
+        e_c = (und.join(lu, "u").join(lv, "v")
+               .filter(F.col("cu") == F.col("cv"))
+               .groupBy(F.col("cu").alias("community"))
+               .agg(F.sum("w").alias("e_in")))
         s_c = (deg.join(lab, "node")
                .groupBy("community").agg(F.sum("d").alias("s")))
         dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731

@@ -111,8 +111,7 @@ def hyperball(edges: DataFrame, max_radius: int = 16, b: int = 8,
     return out
 
 
-def iterate_registers(edges: DataFrame, max_radius: int, b: int,
-                      direction: str = "out"):
+def iterate_registers(edges: DataFrame, max_radius: int, b: int):
     """Yield (radius, register-table) per HyperBall round, starting at
     radius 0 (each node's own sketch) and stopping at the exact fixed
     point (no register changed) or ``max_radius``. The per-radius
@@ -120,7 +119,7 @@ def iterate_registers(edges: DataFrame, max_radius: int, b: int,
     exact BFS ball (HLL merge is exact) — the property
     tests/test_hyperball.py gates. Thin sparse view over the dense
     iteration: one posexplode + empty-register filter per yield."""
-    for r, dense in _iterate_dense(edges, max_radius, b, direction):
+    for r, dense in _iterate_dense(edges, max_radius, b):
         rows = (dense.select("node", F.posexplode("regs")
                              .alias("reg", "rho"))
                 .filter(F.col("rho") > 0))

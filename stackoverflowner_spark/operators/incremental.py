@@ -32,23 +32,22 @@ default): a metadata-only recrawl (new warc_ts, same bytes) is
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .crawldiff import changed_or_added, snapshot_delta
 
-DEFAULT_FP_COLS = ("html", "lang")
+FP_COLS = ("html", "lang")
 
 
-def fingerprint_pages(pages: DataFrame,
-                      fp_cols: Sequence[str] = DEFAULT_FP_COLS) -> DataFrame:
+def fingerprint_pages(pages: DataFrame) -> DataFrame:
     """(url, fp) with fp = md5 over the concatenated kernel-input columns.
     String columns are utf-8 encoded so binary and string inputs mix;
     a length prefix per column keeps the concatenation injective."""
     parts = []
-    for c in fp_cols:
+    for c in FP_COLS:
         col = F.col(c)
         if pages.schema[c].dataType.typeName() != "binary":
             col = F.encode(col.cast("string"), "UTF-8")
@@ -57,18 +56,16 @@ def fingerprint_pages(pages: DataFrame,
     return pages.select("url", F.md5(F.concat(*parts)).alias("fp"))
 
 
-def page_delta(pages_a: DataFrame, pages_b: DataFrame,
-               fp_cols: Sequence[str] = DEFAULT_FP_COLS) -> DataFrame:
+def page_delta(pages_a: DataFrame, pages_b: DataFrame) -> DataFrame:
     """snapshot_delta over page fingerprints (url-keyed)."""
-    return snapshot_delta(fingerprint_pages(pages_a, fp_cols),
-                          fingerprint_pages(pages_b, fp_cols),
+    return snapshot_delta(fingerprint_pages(pages_a),
+                          fingerprint_pages(pages_b),
                           ["url"], "fp")
 
 
 def incremental_update(pages_a: DataFrame, pages_b: DataFrame,
                        triples_a: DataFrame,
                        rebuild_fn: Callable[[DataFrame], DataFrame],
-                       fp_cols: Sequence[str] = DEFAULT_FP_COLS,
                        delta: DataFrame | None = None) -> DataFrame:
     """Triples for snapshot B, given snapshot A's pages and triples.
 
@@ -80,7 +77,7 @@ def incremental_update(pages_a: DataFrame, pages_b: DataFrame,
     reporting.
     """
     if delta is None:
-        delta = page_delta(pages_a, pages_b, fp_cols)
+        delta = page_delta(pages_a, pages_b)
     work = changed_or_added(delta, pages_b, ["url"])
     keep = delta.filter(F.col("status") == "unchanged").select("url")
     # a USING join fronts the key column; restore the caller's order

@@ -95,20 +95,16 @@ def transitive_closure(edges: DataFrame, max_iter: int = 30) -> DataFrame:
 
 
 def rdfs_materialize(triples: DataFrame,
-                     type_pred: str = "instance_of",
-                     sub_pred: str = "subclass_of",
-                     subprop_pred: str = "subproperty_of",
-                     max_depth: int = 30,
                      already_distinct: bool = False) -> DataFrame:
     """Return asserted + entailed (subj, pred, obj), distinct.
 
     The schema is read in-band from ``triples`` (RDF keeps its ontology in
-    the same graph): rows with ``pred == sub_pred`` form the class tree,
-    rows with ``pred == subprop_pred`` the property tree. Both trees are
-    closed transitively (rdfs11/rdfs5) schema-side, then:
+    the same graph): ``subclass_of`` rows form the class tree,
+    ``subproperty_of`` rows the property tree. Both trees are closed
+    transitively (rdfs11/rdfs5, at most 30 hops) schema-side, then:
 
-    * rdfs9: ``(x, type_pred, C)`` joined to the class closure emits
-      ``(x, type_pred, D)`` for every superclass D,
+    * rdfs9: ``(x, instance_of, C)`` joined to the class closure emits
+      ``(x, instance_of, D)`` for every superclass D,
     * rdfs7: ``(x, p, y)`` joined to the property closure emits
       ``(x, q, y)`` for every superproperty q.
 
@@ -124,28 +120,26 @@ def rdfs_materialize(triples: DataFrame,
         tri = tri.distinct()
 
     class_cl = transitive_closure(
-        tri.filter(F.col("pred") == sub_pred)
-           .select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
-        max_iter=max_depth)
+        tri.filter(F.col("pred") == "subclass_of")
+           .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
     prop_cl = transitive_closure(
-        tri.filter(F.col("pred") == subprop_pred)
-           .select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
-        max_iter=max_depth)
+        tri.filter(F.col("pred") == "subproperty_of")
+           .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
 
     # rdfs11 / rdfs5: the closures themselves are entailed schema triples
     inferred_sub = class_cl.select(
-        F.col("src").alias("subj"), F.lit(sub_pred).alias("pred"),
+        F.col("src").alias("subj"), F.lit("subclass_of").alias("pred"),
         F.col("dst").alias("obj"))
     inferred_subprop = prop_cl.select(
-        F.col("src").alias("subj"), F.lit(subprop_pred).alias("pred"),
+        F.col("src").alias("subj"), F.lit("subproperty_of").alias("pred"),
         F.col("dst").alias("obj"))
 
     # rdfs7 first: broadcast the closed property tree against every
-    # assertion. Runs BEFORE rdfs9 because a subproperty of ``type_pred``
+    # assertion. Runs BEFORE rdfs9 because a subproperty of ``instance_of``
     # creates new type assertions that rdfs9 must then lift through the
     # class tree — this rule stratification (close schema -> rdfs7 ->
-    # rdfs9) is complete for the ρdf fragment as long as ``sub_pred`` /
-    # ``subprop_pred`` themselves are not targets of subproperty chains
+    # rdfs9) is complete for the ρdf fragment as long as ``subclass_of`` /
+    # ``subproperty_of`` themselves are not targets of subproperty chains
     # (the pathological meta-level case, out of scope here as in every
     # production materializer).
     inferred_props = (tri.join(
@@ -155,10 +149,10 @@ def rdfs_materialize(triples: DataFrame,
 
     # rdfs9: broadcast the closed class tree against all type assertions
     # (asserted or rdfs7-derived)
-    types = with_props.filter(F.col("pred") == type_pred)
+    types = with_props.filter(F.col("pred") == "instance_of")
     inferred_types = (types.join(
         F.broadcast(class_cl), types.obj == class_cl.src)
-        .select("subj", F.lit(type_pred).alias("pred"),
+        .select("subj", F.lit("instance_of").alias("pred"),
                 F.col("dst").alias("obj")))
 
     return (with_props.unionByName(inferred_sub)

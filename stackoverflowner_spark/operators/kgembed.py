@@ -185,7 +185,7 @@ def transe_train(triples: DataFrame, dim: int = 8, epochs: int = 5,
                .select("id", "idx").transform(checkpoint))
     n_ent = ent_idx.count()
     rels = t.select(F.col("pred").alias("id")).distinct()
-    ent = init_embeddings(ent_idx.select("id"), dim, seed, "ent")
+    ent = init_embeddings(ent_idx.select("id"), dim, seed)
     rel = _l2_normalize(init_embeddings(rels, dim, seed, "rel"))
     rel = checkpoint(rel)
     for epoch in range(epochs):

@@ -707,9 +707,7 @@ def bgp_agg(triples: DataFrame, patterns: Sequence[Sequence[str]],
             filters: Optional[Sequence[str]] = None,
             having: Optional[Sequence[str]] = None,
             subselects: Optional[Sequence[DataFrame]] = None,
-            graph: Optional[str] = None,
-            graph_col: str = "url",
-            solution_distinct: bool = False) -> DataFrame:
+            graph: Optional[str] = None) -> DataFrame:
     """SPARQL ``SELECT ?g (COUNT(?x) AS ?n) ... GROUP BY ?g`` over a BGP.
 
     ``aggs`` entries are (fn, var, alias) with fn one of
@@ -719,17 +717,16 @@ def bgp_agg(triples: DataFrame, patterns: Sequence[Sequence[str]],
     sorts the group so output is engine/partitioning-independent).
     Aggregation runs over the solution
     MULTISET (SPARQL semantics: no implicit DISTINCT on the bindings —
-    ``bgp_match`` is called with distinct=False); pass
-    ``solution_distinct=True`` for the ``SELECT DISTINCT`` sub-query
-    shape. The group-by shuffles on the grouping vars with partial
-    (map-side) aggregation, so a 10^12-triple BGP rolls up without the
-    binding set ever materializing past the first agg exchange.
+    ``bgp_match`` is called with distinct=False). The group-by shuffles
+    on the grouping vars with partial (map-side) aggregation, so a
+    10^12-triple BGP rolls up without the binding set ever materializing
+    past the first agg exchange.
 
     ``having`` is SPARQL ``HAVING(expr)``: Spark SQL boolean expressions
     over the grouping vars and aggregate ALIASES, filtered after the
     aggregation (one more predicate on the post-agg stream, no extra
-    shuffle). ``exists``/``graph``/``graph_col`` pass through to the
-    solution ``bgp_match``.
+    shuffle). ``exists``/``graph`` pass through to the solution
+    ``bgp_match``.
     """
     if not aggs:
         raise ValueError("bgp_agg needs at least one (fn, var, alias)")
@@ -738,8 +735,7 @@ def bgp_agg(triples: DataFrame, patterns: Sequence[Sequence[str]],
                     minus=minus, values=values,
                     bind=bind, filters=filters,
                     subselects=subselects,
-                    graph=graph, graph_col=graph_col,
-                    distinct=solution_distinct)
+                    graph=graph, distinct=False)
     missing = [v for v in group_by if v not in sol.columns]
     if missing:
         raise ValueError(f"group_by vars {missing} not bound by the BGP")
@@ -762,8 +758,7 @@ def bgp_agg(triples: DataFrame, patterns: Sequence[Sequence[str]],
 def property_path_plus(triples: DataFrame, pred: str,
                        start_var: str = "start",
                        end_var: str = "end",
-                       zero_or_more: bool = False,
-                       max_depth: int = 30) -> DataFrame:
+                       zero_or_more: bool = False) -> DataFrame:
     """Unbounded SPARQL property path ``start pred+ end`` (or ``pred*``).
 
     ``pred+`` (one-or-more) is the transitive closure of the predicate's
@@ -784,7 +779,7 @@ def property_path_plus(triples: DataFrame, pred: str,
     from .inference import transitive_closure
     edges = (triples.filter(F.col("pred") == pred)
              .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
-    cl = transitive_closure(edges, max_iter=max_depth)
+    cl = transitive_closure(edges)
     if zero_or_more:
         nodes = (edges.select(F.col("src").alias("n"))
                  .union(edges.select(F.col("dst").alias("n"))).distinct())
@@ -797,8 +792,7 @@ def property_path_plus(triples: DataFrame, pred: str,
 def property_path_range(triples: DataFrame, pred: str,
                         lo: int, hi: int,
                         start_var: str = "start",
-                        end_var: str = "end",
-                        max_hops: int = 30) -> DataFrame:
+                        end_var: str = "end") -> DataFrame:
     """Bounded SPARQL path quantifier ``pred{lo,hi}``.
 
     Semantics follow the 2010 SPARQL 1.1 draft's ``elt{n,m}`` (dropped
@@ -815,16 +809,16 @@ def property_path_range(triples: DataFrame, pred: str,
     Scale shape: each power is one shuffle join of the current pair
     relation (pair-bounded — in practice the k-hop neighborhood of the
     single predicate's edge set, never the 10^12-triple table) against
-    the pushed ``pred = literal`` edge scan; ``hi`` bounds the loop and
-    ``localCheckpoint`` truncates lineage per power. Early exit when a
-    power comes back empty (DAG shorter than hi).
+    the pushed ``pred = literal`` edge scan; ``hi`` (at most 30) bounds
+    the loop and ``localCheckpoint`` truncates lineage per power. Early
+    exit when a power comes back empty (DAG shorter than hi).
     """
     if lo < 0 or hi < lo or hi < 1:
         raise ValueError(f"bad quantifier bounds {{{lo},{hi}}}: need "
                          "0 <= lo <= hi and hi >= 1")
-    if hi > max_hops:
-        raise ValueError(f"quantifier upper bound {hi} exceeds max_hops="
-                         f"{max_hops} — use property_path_plus for "
+    if hi > 30:
+        raise ValueError(f"quantifier upper bound {hi} exceeds max_hops=30"
+                         " — use property_path_plus for "
                          "unbounded reach")
     edges = (triples.filter(F.col("pred") == pred)
              .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
@@ -865,9 +859,7 @@ def construct(triples: DataFrame, patterns: Sequence[Sequence[str]],
               bind: Optional[Sequence[Tuple[str, str]]] = None,
               filters: Optional[Sequence[str]] = None,
               subselects: Optional[Sequence[DataFrame]] = None,
-              graph: Optional[str] = None,
-              graph_col: str = "url",
-              distinct: bool = True) -> DataFrame:
+              graph: Optional[str] = None) -> DataFrame:
     """SPARQL ``CONSTRUCT { template } WHERE { BGP }``: build NEW triples
     from every solution of the WHERE block — the declarative rule surface
     for KG enrichment (the imperative cousin of what rdfs_materialize
@@ -878,8 +870,8 @@ def construct(triples: DataFrame, patterns: Sequence[Sequence[str]],
     every template pattern, and solutions where a template variable came
     back NULL (an OPTIONAL var with no match) drop that pattern's
     instantiation — SPARQL's incomplete-triple rule. Output is a
-    (subj, pred, obj) DataFrame, DISTINCT by default (CONSTRUCT returns
-    a graph, i.e. a set).
+    (subj, pred, obj) DataFrame, DISTINCT (CONSTRUCT returns a graph,
+    i.e. a set).
 
     Scale shape: the template instantiation is a generator projection
     (one ``explode`` of a template-sized array per solution row) fused
@@ -893,9 +885,8 @@ def construct(triples: DataFrame, patterns: Sequence[Sequence[str]],
                     minus=minus, values=values,
                     bind=bind, filters=filters,
                     subselects=subselects,
-                    graph=graph, graph_col=graph_col, distinct=False)
-    out = _instantiate(sol, template)
-    return out.distinct() if distinct else out
+                    graph=graph, distinct=False)
+    return _instantiate(sol, template).distinct()
 
 
 def _instantiate(sol: DataFrame,
@@ -1000,9 +991,7 @@ def ask(triples: DataFrame, patterns: Sequence[Sequence[str]],
         bind: Optional[Sequence[Tuple[str, str]]] = None,
         filters: Optional[Sequence[str]] = None,
         exists: Optional[Sequence[Sequence[str]]] = None,
-        subselects: Optional[Sequence[DataFrame]] = None,
-        graph: Optional[str] = None,
-        graph_col: str = "url") -> bool:
+        graph: Optional[str] = None) -> bool:
     """SPARQL ``ASK { BGP }``: True iff the pattern has >= 1 solution.
     Planned as the BGP with a LIMIT 1 — every join's output is cut at
     the first row, so the probe never materializes the binding set."""
@@ -1010,8 +999,7 @@ def ask(triples: DataFrame, patterns: Sequence[Sequence[str]],
                     not_exists=not_exists, exists=exists,
                     minus=minus, values=values,
                     bind=bind, filters=filters,
-                    subselects=subselects,
-                    graph=graph, graph_col=graph_col, distinct=False)
+                    graph=graph, distinct=False)
     return sol.limit(1).count() > 0
 
 
@@ -1025,9 +1013,7 @@ def describe(triples: DataFrame, patterns: Sequence[Sequence[str]],
              bind: Optional[Sequence[Tuple[str, str]]] = None,
              filters: Optional[Sequence[str]] = None,
              exists: Optional[Sequence[Sequence[str]]] = None,
-             subselects: Optional[Sequence[DataFrame]] = None,
-             graph: Optional[str] = None,
-             graph_col: str = "url") -> DataFrame:
+             graph: Optional[str] = None) -> DataFrame:
     """SPARQL ``DESCRIBE ?var WHERE { BGP }``: every triple whose subject
     or object is a resource the query binds to ``?var`` — the spec
     leaves the description form to the engine; this one returns the
@@ -1046,7 +1032,7 @@ def describe(triples: DataFrame, patterns: Sequence[Sequence[str]],
     res = bgp_match(triples, patterns, select=[var], distinct=True,
                     optional=optional, not_exists=not_exists, exists=exists,
                     minus=minus, values=values, bind=bind, filters=filters,
-                    graph=graph, graph_col=graph_col)
+                    graph=graph)
     r = (res.select(F.col(var).alias("__resource"))
          .filter(F.col("__resource").isNotNull()))
     t = triples.select(*_TERM_COLS)

@@ -10,8 +10,9 @@ Two physical strategies, same logical result:
   skew by construction. This is the default at any scale where the dictionary
   fits comfortably in executor memory.
 * ``link_salted`` — for a dictionary too large to broadcast: explicit salted
-  repartition join. The mention side gets ``salt = pmod(xxhash64(url), S)``;
-  the dictionary side is replicated xS via ``explode(sequence(...))``. Head
+  repartition join (``salted_join``). The mention side gets
+  ``salt = pmod(xxhash64(row), S)``; the dictionary side is replicated xS
+  via ``explode(sequence(...))``. Head
   aliases ("python") then spread across S reducers instead of one. AQE skew
   join remains enabled as a backstop (session.py).
 
@@ -53,16 +54,12 @@ def link_broadcast(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
 
 def link_salted(mentions: DataFrame, dictionary: DataFrame,
                 n_salts: int = 16) -> DataFrame:
-    salted_mentions = mentions.withColumn(
-        "salt", F.pmod(F.xxhash64("url", "sent_idx", "tok_start"), F.lit(n_salts)).cast("int"))
-    salted_dict = _linkable(dictionary).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return salted_mentions.join(
-        salted_dict.hint("shuffle_hash"),
-        (salted_mentions.surface_norm == salted_dict.alias_norm)
-        & (salted_mentions.salt == salted_dict.salt),
-        "inner",
-    ).select(*LINKED_COLS)
+    """``salted_join`` with the dictionary on the replicated side, keyed on
+    the mention's ``surface_norm``."""
+    aliases = _linkable(dictionary).withColumnRenamed("alias_norm",
+                                                      "surface_norm")
+    return salted_join(mentions, aliases, "surface_norm",
+                       n_salts).select(*LINKED_COLS)
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -92,10 +89,10 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
 
 
 def link_fuzzy(mentions: DataFrame, dictionary: DataFrame,
-               max_dist: int = 1, min_len: int = 4) -> DataFrame:
+               min_len: int = 4) -> DataFrame:
     """link_broadcast plus a typo-repair pass for the leftovers: mentions
     whose surface_norm matches NO alias exactly are re-keyed to their
-    nearest alias within Levenshtein ``max_dist`` (FastSS blocked join,
+    nearest alias within Levenshtein distance 1 (FastSS blocked join,
     operators/fuzzylink.py; best = min dist, then alias order — a total
     order, so the repair is deterministic) and linked through the same
     dictionary join. Exact rows are bit-identical to plain link_broadcast —
@@ -116,7 +113,7 @@ def link_fuzzy(mentions: DataFrame, dictionary: DataFrame,
         mentions.surface_norm == aliases.alias_norm, "left_anti")
     cand = fuzzy_join(unmatched.select(F.col("surface_norm")).distinct(),
                       aliases, "surface_norm", "alias_norm",
-                      max_dist=max_dist, min_len=min_len)
+                      max_dist=1, min_len=min_len)
     w = (Window.partitionBy("surface_norm")
          .orderBy(F.col("dist").asc(), F.col("alias_norm").asc()))
     best = (cand.withColumn("_rn", F.row_number().over(w))
@@ -133,9 +130,9 @@ _STRATEGIES = {"broadcast": link_broadcast, "salted": link_salted,
                "fuzzy": link_fuzzy}
 
 
-def link(mentions: DataFrame, dictionary: DataFrame, strategy: str = "broadcast",
-         **kw) -> DataFrame:
+def link(mentions: DataFrame, dictionary: DataFrame,
+         strategy: str = "broadcast") -> DataFrame:
     if strategy not in _STRATEGIES:
         raise ValueError(f"unknown link strategy {strategy!r}; "
                          "expected broadcast|salted|fuzzy")
-    return _STRATEGIES[strategy](mentions, dictionary, **kw)
+    return _STRATEGIES[strategy](mentions, dictionary)

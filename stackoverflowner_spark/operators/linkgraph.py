@@ -116,12 +116,11 @@ def host_of(url) -> Column:
     return F.regexp_extract(_col(url), _HOSTPORT_RE, 1)
 
 
-def link_graph(edges: DataFrame, drop_self: bool = True) -> DataFrame:
+def link_graph(edges: DataFrame) -> DataFrame:
     """Distinct (src, dst) canonical edge list with host columns —
     the page-level web graph. One shuffle (the distinct)."""
-    e = edges.select("src", "dst").distinct()
-    if drop_self:
-        e = e.filter(F.col("src") != F.col("dst"))
+    e = (edges.select("src", "dst").distinct()
+         .filter(F.col("src") != F.col("dst")))
     return e.select(
         "src", "dst",
         host_of("src").alias("src_host"),

@@ -36,11 +36,11 @@ from pyspark.sql import functions as F
 from stackoverflowner_spark.operators.decontam import norm_tokens
 
 
-def _bigrams(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _bigrams(df: DataFrame) -> DataFrame:
     """One row per (doc, position): (doc_id, w1, w2). Columnar: the
     bigram array is built with transform over an index sequence and
     exploded once — no Python, no self-join."""
-    toks = norm_tokens(text_col)
+    toks = norm_tokens()
     pairs = F.when(
         F.size(toks) >= 2,
         F.transform(F.sequence(F.lit(1), F.size(toks) - 1),
@@ -52,33 +52,32 @@ def _bigrams(df: DataFrame, text_col: str = "text") -> DataFrame:
                     F.col("bg.w2").alias("w2")))
 
 
-def train_bigram_lm(ref_docs: DataFrame, text_col: str = "text"
-                    ) -> tuple[DataFrame, DataFrame, int]:
+def train_bigram_lm(ref_docs: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """(unigram_counts(w1, c1), bigram_counts(w1, w2, c12), vocab_size)
     over the reference slice. Context counts c1 are taken over bigram
     LEFT positions so probabilities normalize exactly; vocab_size over
     all tokens. Each output is vocab-sized (broadcast side downstream)."""
-    bg = _bigrams(ref_docs, text_col)
+    bg = _bigrams(ref_docs)
     big = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     # c1 is the bigram-left-position count = sum of c12 over w2, so the
     # unigram table folds out of the bigram table (vocab-sized input)
     # instead of re-exploding the reference corpus a second time
     uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (ref_docs
-             .select(F.explode(norm_tokens(text_col)).alias("w"))
+             .select(F.explode(norm_tokens()).alias("w"))
              .agg(F.countDistinct("w"))
              .first()[0])
     return uni, big, int(vocab or 0)
 
 
 def score_bitcost(docs: DataFrame, uni: DataFrame, big: DataFrame,
-                  vocab_size: int, text_col: str = "text") -> DataFrame:
+                  vocab_size: int) -> DataFrame:
     """Per-document exact LM statistics: (doc_id, n_bigrams, known_ctx,
     known_bigram, sum_bits). sum_bits is the add-one-smoothed Shannon
     code length in whole bits (see module docstring); unseen contexts
     cost bitlen(V), unseen bigrams get c12 = 0. Integer-only, hence
     order-independent and driver-hashable."""
-    bg = _bigrams(docs, text_col)
+    bg = _bigrams(docs)
     j = (bg
          .join(F.broadcast(uni), "w1", "left")
          .join(F.broadcast(big), ["w1", "w2"], "left")

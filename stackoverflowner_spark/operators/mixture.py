@@ -76,22 +76,21 @@ def mixture_rates(docs: DataFrame, target_total: int, alpha: float = 0.5,
 
 
 def sample_with_rates(docs: DataFrame, rates: DataFrame,
-                      key_col: str = "doc_id", source_col: str = "source",
-                      salt: str = "mix") -> DataFrame:
+                      key_col: str = "doc_id",
+                      source_col: str = "source") -> DataFrame:
     """Filter the corpus by the per-source rates: keep iff
     unit_hash(key) < rate. Broadcast join — the corpus never shuffles."""
     r = rates.select(source_col, "rate")
     return (docs.join(F.broadcast(r), source_col)
-            .filter(_unit_hash(F.col(key_col), salt) < F.col("rate"))
+            .filter(_unit_hash(F.col(key_col), "mix") < F.col("rate"))
             .drop("rate"))
 
 
 def temperature_sample(docs: DataFrame, target_total: int,
-                       alpha: float = 0.5, key_col: str = "doc_id",
-                       source_col: str = "source",
-                       salt: str = "mix") -> DataFrame:
+                       alpha: float = 0.5,
+                       source_col: str = "source") -> DataFrame:
     """Composed rates + sample. Expected output size ~= target_total (up to
     per-source hash variance and the rate cap for underrepresented
     sources)."""
     rates = mixture_rates(docs, target_total, alpha, source_col)
-    return sample_with_rates(docs, rates, key_col, source_col, salt)
+    return sample_with_rates(docs, rates, "doc_id", source_col)

@@ -2,11 +2,10 @@
 
 Images/audio/video ride as ``binary`` columns with a metadata struct; decode /
 feature-extract run as an Arrow-batched ``mapInPandas`` kernel. The decode
-step itself is STUBBED (no image/audio libs in this container):
+step itself is STUBBED (no image/audio libraries are installed):
 ``decode_stub`` produces a deterministic fake feature vector from the payload
-bytes, and ``decode_real`` raises NotImplementedError at the exact spot a
-PIL/ffmpeg call would go. The Spark-side plumbing — schema, partition sizing,
-UDF signature, batch shape — is real and tested.
+bytes where a PIL/ffmpeg decode would go. The Spark-side plumbing — schema,
+partition sizing, UDF signature, batch shape — is real and tested.
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ FEATURES_SCHEMA = T.StructType([
 ])
 
 
-def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
+def synth_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic opaque payloads (stand-ins for real image/audio bytes)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -48,7 +47,7 @@ def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
             rows = []
             for i in pdf["id"]:
                 i = int(i)
-                payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * (4 + i % 8)
+                payload = hashlib.sha256(f"42:{i}".encode()).digest() * (4 + i % 8)
                 kind = kinds[i % 3]
                 rows.append({
                     "media_id": i, "kind": kind, "payload": payload,
@@ -62,32 +61,22 @@ def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     return spark.range(0, n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def decode_real(payload: bytes, kind: str):  # pragma: no cover - stub
-    """Where PIL.Image.open / soundfile.read / av.open would go."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "container; use decode_stub for plumbing tests")
-
-
-def decode_stub(payload: bytes, kind: str, dim: int = 16) -> np.ndarray:
+def decode_stub(payload: bytes, kind: str) -> np.ndarray:
     """Deterministic fake decode: feature vector derived from payload bytes
     (same shape contract a real CNN/fbank featurizer would return)."""
     arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    chunks = np.array_split(arr, dim)
+    chunks = np.array_split(arr, 16)
     return np.array([c.mean() / 255.0 if len(c) else 0.0 for c in chunks],
                     dtype=np.float32)
 
 
-def extract_features(media: DataFrame, dim: int = 16, use_stub: bool = True
-                     ) -> DataFrame:
-    decode = decode_stub if use_stub else decode_real
-
+def extract_features(media: DataFrame) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
                 data = bytes(payload) if payload is not None else b""
-                feats = decode(data, kind, dim)
+                feats = decode_stub(data, kind)
                 rows.append((int(mid), kind, [float(x) for x in feats], len(data)))
             yield pd.DataFrame(rows, columns=["media_id", "kind", "features", "n_bytes"])
 

@@ -36,38 +36,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_count(docs: DataFrame) -> DataFrame:
     """Whitespace token count as ``n_tokens`` (split keeps empty strings —
     same convention both engines share)."""
     return docs.withColumn(
-        "n_tokens", F.size(F.split(F.col(text_col), " ")))
+        "n_tokens", F.size(F.split(F.col("text"), " ")))
 
 
-def chunk_documents(docs: DataFrame, window: int, stride: int,
-                    key_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int, stride: int) -> DataFrame:
     """(key, chunk_idx, chunk_len, chunk_hash) for every stride-spaced
     window of whitespace tokens. chunk_idx counts from 0; the final
     chunk(s) may be shorter than ``window``; a chunk starts at every
     stride multiple < n_tokens, so content never silently drops."""
     if stride <= 0 or window <= 0:
         raise ValueError("window and stride must be positive")
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     starts = F.sequence(F.lit(0), n - 1, F.lit(stride))
     exploded = (docs.select(
-        F.col(key_col), toks.alias("__toks"),
+        F.col("doc_id"), toks.alias("__toks"),
         F.posexplode(starts).alias("chunk_idx", "start")))
     chunk = F.slice(F.col("__toks"), F.col("start") + 1, window)
     return exploded.select(
-        key_col, F.col("chunk_idx").cast("long").alias("chunk_idx"),
+        "doc_id", F.col("chunk_idx").cast("long").alias("chunk_idx"),
         F.size(chunk).cast("long").alias("chunk_len"),
         F.md5(F.array_join(chunk, " ")).alias("chunk_hash"))
 
 
-def pack_greedy(docs: DataFrame, budget: int, n_parts: int = 64,
-                key_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def pack_greedy(docs: DataFrame, budget: int, n_parts: int = 64) -> DataFrame:
     """(key, part, bin, n_tokens): deterministic parallel sequence packing.
 
     part = first 8 md5-hex chars of the key, mod n_parts (engine-portable,
@@ -77,14 +73,14 @@ def pack_greedy(docs: DataFrame, budget: int, n_parts: int = 64,
     """
     if budget <= 0:
         raise ValueError("budget must be positive")
-    d = with_token_count(docs, text_col).select(key_col, "n_tokens")
-    part = (F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
+    d = with_token_count(docs).select("doc_id", "n_tokens")
+    part = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                    16, 10).cast("long") % n_parts)
     d = d.withColumn("part", part)
-    w = (Window.partitionBy("part").orderBy(key_col)
+    w = (Window.partitionBy("part").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cum = F.sum("n_tokens").over(w) - F.col("n_tokens")  # exclusive prefix
     return d.select(
-        key_col, "part",
+        "doc_id", "part",
         F.floor(cum / budget).cast("long").alias("bin"),
         F.col("n_tokens").cast("long").alias("n_tokens"))

@@ -81,72 +81,11 @@ def pagerank(edges: DataFrame, iterations: int = 20, damping: float = 0.85,
     return ranks
 
 
-def hits(edges: DataFrame, iterations: int = 20,
-         partitions: int | None = None) -> DataFrame:
-    """Kleinberg's HITS on edges(src, dst) -> (node, hub, authority),
-    both L2-normalized. The web-graph companion to :func:`pagerank`:
-    hubs are link directories, authorities the pages they agree on —
-    on the ``operators/linkgraph.py`` host graph this separates
-    aggregator hosts from cited hosts, which one rank column cannot.
-
-    Recurrence (matched exactly by the numpy gate in
-    tests/test_pagerank.py): h starts all-ones; per iteration
-    a = A^T h then L2-normalize, h = A a then L2-normalize. Multi-edges
-    collapse; nodes outside an update's support get 0.
-
-    Scale shape: HITS alternates grouping keys (authority groups by dst,
-    hub by src), so ONE src-partitioned edge copy would reshuffle the
-    edges every half-step. Instead the distinct edge list is persisted
-    TWICE — partitioned by src and by dst — and each half-step joins its
-    frontier against the colocated copy and aggregates with map-side
-    combine: per iteration only frontier-sized data moves, zero
-    O(edges)-row shuffles, at the documented price of 2x edge storage.
-    ``localCheckpoint`` per half-step truncates lineage; each L2 norm is
-    one scalar to the driver (same class as pagerank's dangling mass).
-    Float iteration is partial-agg-order dependent, hence pytest-gated
-    vs dense numpy, never driver-hashed (same class as k-means)."""
-    spark = edges.sparkSession
-    p = partitions or spark.sparkContext.defaultParallelism
-    e0 = edges.select("src", "dst").distinct()
-    e_src = e0.repartition(p, "src").persist()
-    e_dst = e0.repartition(p, "dst").persist()
-    nodes = (e_src.select(F.col("src").alias("node"))
-             .union(e_src.select(F.col("dst").alias("node")))
-             .distinct().transform(checkpoint))
-    h = nodes.withColumn("hub", F.lit(1.0)).transform(checkpoint)
-    a = nodes.withColumn("authority", F.lit(0.0)).transform(checkpoint)
-    for _ in range(iterations):
-        a_raw = (e_src.join(h, e_src.src == h.node)
-                 .groupBy("dst").agg(F.sum("hub").alias("raw")))
-        na = a_raw.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))))\
-            .first()[0] or 0.0
-        if na == 0.0:
-            break
-        a = (nodes.join(a_raw, nodes.node == a_raw.dst, "left")
-             .select("node", (F.coalesce("raw", F.lit(0.0)) / F.lit(na))
-                     .alias("authority"))
-             .transform(checkpoint))
-        h_raw = (e_dst.join(a, e_dst.dst == a.node)
-                 .groupBy("src").agg(F.sum("authority").alias("raw")))
-        nh = h_raw.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))))\
-            .first()[0] or 0.0
-        if nh == 0.0:
-            break
-        h = (nodes.join(h_raw, nodes.node == h_raw.src, "left")
-             .select("node", (F.coalesce("raw", F.lit(0.0)) / F.lit(nh))
-                     .alias("hub"))
-             .transform(checkpoint))
-    e_src.unpersist()
-    e_dst.unpersist()
-    return h.join(a, "node").select("node", "hub", "authority")
-
-
-def entity_pagerank(triples: DataFrame, iterations: int = 20,
-                    damping: float = 0.85) -> DataFrame:
+def entity_pagerank(triples: DataFrame, iterations: int = 20) -> DataFrame:
     """Importance over the KG's entity-to-entity structure: alias_of and
     instance_of triples form the edge list (subj -> obj), mentioned_in is
     page evidence and is excluded (urls would dominate the mass)."""
     edges = (triples.filter(F.col("pred").isin("alias_of", "instance_of"))
              .select("subj", "obj")
              .withColumnRenamed("subj", "src").withColumnRenamed("obj", "dst"))
-    return pagerank(edges, iterations=iterations, damping=damping)
+    return pagerank(edges, iterations=iterations)

@@ -38,7 +38,7 @@ PII_PATTERNS = [
 ]
 
 
-def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_counts(df: DataFrame) -> DataFrame:
     """Per-document match counts per PII category plus the total.
 
     Counts are taken on the PROGRESSIVELY SCRUBBED text (same order as
@@ -46,7 +46,7 @@ def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     IPv4-looking fragment inside an already-replaced email is not counted
     twice. Adds ``pii_email``/``pii_ipv4``/``pii_phone``/``pii_total``.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     out = df
     total = F.lit(0)
     for name, pat, sentinel in PII_PATTERNS:
@@ -57,22 +57,20 @@ def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pii_total", total.cast("long"))
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text",
-              out_col: str | None = None) -> DataFrame:
+def scrub_pii(df: DataFrame, out_col: str | None = None) -> DataFrame:
     """Replace each PII category with its typed sentinel token, in the
     fixed category order. Writes ``out_col`` (default: in place)."""
-    t = F.col(text_col)
+    t = F.col("text")
     for _, pat, sentinel in PII_PATTERNS:
         t = F.regexp_replace(t, pat, sentinel)
-    return df.withColumn(out_col or text_col, t)
+    return df.withColumn(out_col or "text", t)
 
 
-def duckdb_mirror_sql(table: str = "docs", text_col: str = "text",
-                      id_col: str = "doc_id") -> str:
+def duckdb_mirror_sql(table: str = "docs") -> str:
     """The DuckDB restatement of ``with_pii_counts`` + ``scrub_pii`` for
     the cross-engine gate: identical patterns, identical scrub order,
     counts on the progressively scrubbed text."""
-    t = text_col
+    t = "text"
     counts = []
     for name, pat, sentinel in PII_PATTERNS:
         # each count runs on the text as scrubbed by the EARLIER categories
@@ -81,7 +79,7 @@ def duckdb_mirror_sql(table: str = "docs", text_col: str = "text",
             f" as pii_{name}")
         t = f"regexp_replace({t}, '{pat}', '{sentinel}', 'g')"
     total = " + ".join(f"pii_{n}" for n, _, _ in PII_PATTERNS)
-    inner = ", ".join([id_col] + counts + [f"{t} as scrubbed"])
-    return (f"select {id_col}, pii_email, pii_ipv4, pii_phone, "
+    inner = ", ".join(["doc_id"] + counts + [f"{t} as scrubbed"])
+    return ("select doc_id, pii_email, pii_ipv4, pii_phone, "
             f"cast({total} as bigint) as pii_total, scrubbed "
             f"from (select {inner} from {table})")

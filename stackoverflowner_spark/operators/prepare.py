@@ -81,32 +81,28 @@ def partitioned_rank(df: DataFrame, order_by, id_col: str = "rank",
     ).drop("_pid")
 
 
-def word_mapping_df(sentences: DataFrame, min_freq: int = 3,
-                    words_col: str = "words",
-                    partitions: int | None = None) -> DataFrame:
+def word_mapping_df(sentences: DataFrame, min_freq: int = 3) -> DataFrame:
     """Distributed lowercased word -> id mapping ordered by (-freq, word);
     ids start at 2, reserving <PAD>=0 / <UNK>=1 like the reference's
     huge-count sentinel trick (loader_so.py:319-336, utils_so.py:68-76).
     Id assignment is the two-pass ``partitioned_rank`` — no
     single-partition Exchange anywhere in the plan (gated in tests)."""
     counts = (
-        sentences.select(F.explode(words_col).alias("w"))
+        sentences.select(F.explode("words").alias("w"))
         .select(F.lower("w").alias("word"))
         .groupBy("word").agg(F.count("*").alias("freq"))
         .filter(F.col("freq") >= min_freq)
     )
     ranked = partitioned_rank(counts, [F.desc("freq"), F.asc("word")],
-                              id_col="word_id", offset=1,
-                              partitions=partitions)
+                              id_col="word_id", offset=1)
     return ranked.select("word", F.col("word_id").cast("int").alias("word_id"))
 
 
-def build_char_mapping(sentences: DataFrame, words_col: str = "words"
-                       ) -> Dict[str, int]:
+def build_char_mapping(sentences: DataFrame) -> Dict[str, int]:
     """Char -> id (driver dict: the domain is distinct codepoints, bounded
     irrespective of corpus size; loader_so.py:339-349)."""
     counts = (
-        sentences.select(F.explode(words_col).alias("w"))
+        sentences.select(F.explode("words").alias("w"))
         .select(F.explode(F.split("w", "")).alias("c"))
         .filter(F.col("c") != "")
         .groupBy("c").count()
@@ -117,10 +113,10 @@ def build_char_mapping(sentences: DataFrame, words_col: str = "words"
     return {r["c"]: r["item_id"] - 1 for r in counts}
 
 
-def build_tag_mapping(sentences: DataFrame, tags_col: str = "tags") -> Dict[str, int]:
+def build_tag_mapping(sentences: DataFrame) -> Dict[str, int]:
     """Tag -> id (driver dict: the domain is the tag scheme, ~41 labels)."""
     counts = (
-        sentences.select(F.explode(tags_col).alias("t"))
+        sentences.select(F.explode("tags").alias("t"))
         .groupBy("t").count()
         .withColumn("item_id",
                     F.row_number().over(Window.orderBy(F.desc("count"), F.asc("t"))))

@@ -53,8 +53,8 @@ def effective_rules(rules: DataFrame, agent: str) -> DataFrame:
             .select("host", "kind", "prefix"))
 
 
-def robots_decide(pages: DataFrame, rules: DataFrame, agent: str = "*",
-                  url_col: str = "url") -> DataFrame:
+def robots_decide(pages: DataFrame, rules: DataFrame,
+                  agent: str = "*") -> DataFrame:
     """pages + (host, path, allowed, rule_kind, rule_prefix): the
     longest-prefix decision per URL. ``rules`` is a 4-col
     (host, agent, kind, prefix) frame.
@@ -68,7 +68,7 @@ def robots_decide(pages: DataFrame, rules: DataFrame, agent: str = "*",
     eff = (effective_rules(rules, agent)
            .groupBy("host")
            .agg(F.collect_list(F.struct("kind", "prefix")).alias("_rules")))
-    cp = canonical_parts(url_col)
+    cp = canonical_parts("url")
     p = (pages.withColumn("_cp_host", cp["host"])
          .withColumn("_cp_path", cp["path"]))
     j = p.join(F.broadcast(eff), p["_cp_host"] == eff["host"], "left")
@@ -93,11 +93,3 @@ def robots_decide(pages: DataFrame, rules: DataFrame, agent: str = "*",
                     allowed.alias("allowed"),
                     F.col("_best.kind").alias("rule_kind"),
                     F.col("_best.prefix").alias("rule_prefix"))
-
-
-def robots_filter(pages: DataFrame, rules: DataFrame, agent: str = "*",
-                  url_col: str = "url") -> DataFrame:
-    """Only the pages ``agent`` may keep — the politeness gate in front
-    of the extraction kernel."""
-    dec = robots_decide(pages, rules, agent, url_col=url_col)
-    return dec.filter(F.col("allowed")).select(*pages.columns)

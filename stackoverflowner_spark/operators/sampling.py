@@ -28,18 +28,16 @@ def _unit_hash(id_col: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 15), 16, 10).cast("double") / F.lit(_DENOM)
 
 
-def hash_sample(df: DataFrame, fraction: float, id_col: str = "doc_id",
-                salt: str = "sample") -> DataFrame:
-    return df.filter(_unit_hash(F.col(id_col), salt) < fraction)
+def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
+    return df.filter(_unit_hash(F.col("doc_id"), "sample") < fraction)
 
 
-def hash_split(df: DataFrame, weights: List[Tuple[str, float]],
-               id_col: str = "doc_id", salt: str = "split") -> DataFrame:
+def hash_split(df: DataFrame, weights: List[Tuple[str, float]]) -> DataFrame:
     """Adds a ``split`` column. ``weights`` = [(name, w), ...] normalized to
     cumulative thresholds; assignment = first bucket whose cumulative weight
     exceeds the row's unit hash."""
     total = sum(w for _, w in weights)
-    u = _unit_hash(F.col(id_col), salt)
+    u = _unit_hash(F.col("doc_id"), "split")
     expr = None
     acc = 0.0
     for name, w in weights[:-1]:
@@ -51,15 +49,14 @@ def hash_split(df: DataFrame, weights: List[Tuple[str, float]],
     return df.withColumn("split", split)
 
 
-def domain_cap(df: DataFrame, n: int, domain_col: str = "source",
-               order_col: str = "n_chars", id_col: str = "doc_id",
-               salt_buckets: int = 8) -> DataFrame:
+def domain_cap(df: DataFrame, n: int, salt_buckets: int = 8) -> DataFrame:
     """Keep at most ``n`` rows per domain, best-first — the per-domain cap
     every web-corpus recipe applies so one crawl-heavy host can't dominate
     the training mix (C4/RefinedWeb-style curation; complements the
     corpus-wide ``hash_sample``).
 
-    Ordering is (``order_col`` DESC, ``id_col`` ASC) — the id tie-break
+    Domains are ``source``; ordering is (``n_chars`` DESC, ``doc_id``
+    ASC) — the id tie-break
     makes the kept set a pure function of the data, so backfills and task
     retries keep identical rows (same contract as ``hash_split``).
 
@@ -71,24 +68,23 @@ def domain_cap(df: DataFrame, n: int, domain_col: str = "source",
     salt_buckets*n rows each. Stage 2's ranks equal the unsalted global
     ranks because the ordering key is total and stage 1 can only drop rows
     that rank below n within a *subset* of their domain (hence below n in
-    the full domain). Returns (id_col, domain_col, rk).
+    the full domain). Returns (doc_id, source, rk).
     """
     from pyspark.sql import Window
 
-    order = [F.desc(order_col), F.asc(id_col)]
-    w1 = Window.partitionBy(domain_col, "_salt").orderBy(*order)
-    w2 = Window.partitionBy(domain_col).orderBy(*order)
+    order = [F.desc("n_chars"), F.asc("doc_id")]
+    w1 = Window.partitionBy("source", "_salt").orderBy(*order)
+    w2 = Window.partitionBy("source").orderBy(*order)
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
+        "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_buckets)))
     stage1 = (salted.withColumn("_rk", F.row_number().over(w1))
               .filter(F.col("_rk") <= n).drop("_rk"))
     return (stage1.withColumn("rk", F.row_number().over(w2))
             .filter(F.col("rk") <= n)
-            .select(id_col, domain_col, "rk"))
+            .select("doc_id", "source", "rk"))
 
 
-def dedup_clusters(pairs: DataFrame, ids: DataFrame,
-                   id_col: str = "doc_id") -> DataFrame:
+def dedup_clusters(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     """Near-duplicate pairs -> clusters -> canonical keeper per cluster.
 
     The end-to-end dedup decision: connected components over the verified
@@ -99,13 +95,13 @@ def dedup_clusters(pairs: DataFrame, ids: DataFrame,
     edges = pairs.select(F.col("id_a").cast("string").alias("src"),
                          F.col("id_b").cast("string").alias("dst"))
     comps = connected_components(edges)
-    assign = (ids.select(F.col(id_col))
+    assign = (ids.select(F.col("doc_id"))
               .join(comps.withColumn("node", F.col("node").cast(
-                  ids.schema[id_col].dataType)),
-                  ids[id_col] == F.col("node"), "left")
-              .select(id_col, "component"))
+                  ids.schema["doc_id"].dataType)),
+                  ids["doc_id"] == F.col("node"), "left")
+              .select("doc_id", "component"))
     return assign.select(
-        F.col(id_col),
-        F.coalesce(F.col("component").cast(ids.schema[id_col].dataType),
-                   F.col(id_col)).alias("keep_id"),
-    ).withColumn("is_dup", (F.col(id_col) != F.col("keep_id")).cast("int"))
+        F.col("doc_id"),
+        F.coalesce(F.col("component").cast(ids.schema["doc_id"].dataType),
+                   F.col("doc_id")).alias("keep_id"),
+    ).withColumn("is_dup", (F.col("doc_id") != F.col("keep_id")).cast("int"))

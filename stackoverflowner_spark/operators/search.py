@@ -35,11 +35,10 @@ from pyspark.sql.window import Window
 from stackoverflowner_spark.operators.decontam import norm_tokens
 
 
-def build_postings(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def build_postings(docs: DataFrame) -> DataFrame:
     """(term, doc_id, tf): one row per distinct term per document."""
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        F.explode(norm_tokens(text_col)).alias("term"))
+    return (docs.select("doc_id",
+                        F.explode(norm_tokens()).alias("term"))
             .groupBy("term", "doc_id")
             .agg(F.count("*").cast("long").alias("tf")))
 

@@ -30,14 +30,12 @@ from pyspark.sql import functions as F
 DEFAULT_GAP_US = 6 * 3600 * 1_000_000
 
 
-def sessionize(events: DataFrame, gap_us: int = DEFAULT_GAP_US,
-               user_col: str = "user_id", ts_col: str = "ts",
-               id_col: str = "event_id") -> DataFrame:
+def sessionize(events: DataFrame, gap_us: int = DEFAULT_GAP_US) -> DataFrame:
     """Adds ``us`` (epoch micros) and ``session_seq`` (1-based per-user
     session ordinal). A session starts at the user's first event and at
     every event whose gap from the previous one exceeds ``gap_us``."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp_ltz"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     gap = us - F.lag(us).over(w)
     starts = F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0)
     # running sum over a unique ordering key: RANGE vs ROWS frames agree
@@ -45,12 +43,10 @@ def sessionize(events: DataFrame, gap_us: int = DEFAULT_GAP_US,
             .withColumn("session_seq", F.sum(starts).over(w)))
 
 
-def session_stats(events: DataFrame, gap_us: int = DEFAULT_GAP_US,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  id_col: str = "event_id") -> DataFrame:
+def session_stats(events: DataFrame, gap_us: int = DEFAULT_GAP_US) -> DataFrame:
     """(user_id, session_seq, n_events, start_us, end_us) per session."""
-    s = sessionize(events, gap_us, user_col, ts_col, id_col)
-    return (s.groupBy(user_col, "session_seq")
+    s = sessionize(events, gap_us)
+    return (s.groupBy("user_id", "session_seq")
             .agg(F.count("*").alias("n_events"),
                  F.min("us").alias("start_us"),
                  F.max("us").alias("end_us")))

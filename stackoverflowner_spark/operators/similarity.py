@@ -31,15 +31,13 @@ def _dot_col(a, b):
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                q_id_col: str = "q_id") -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k: broadcast queries x corpus scan -> window rank.
 
     ``queries(q_id, embedding)``; returns (q_id, vec_id, cosine, rank<=k).
     """
-    q = queries.select(F.col(q_id_col), F.col(vec_col).alias("q_vec"))
-    c = corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec"))
+    q = queries.select("q_id", F.col("embedding").alias("q_vec"))
+    c = corpus.select("vec_id", F.col("embedding").alias("c_vec"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .withColumn(
@@ -49,11 +47,11 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                 / (F.greatest(_norm_col(F.col("q_vec")), F.lit(1e-12))
                    * F.greatest(_norm_col(F.col("c_vec")), F.lit(1e-12))), 4))
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+        .select("q_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -93,8 +91,7 @@ def banded_signatures(df: DataFrame, planes: List[List[float]], bands: int,
 
 
 def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-                 bands: int = 4, rows_per_band: int = 3, id_col: str = "vec_id",
-                 vec_col: str = "embedding", q_id_col: str = "q_id") -> DataFrame:
+                 bands: int = 4, rows_per_band: int = 3) -> DataFrame:
     """Approximate top-k: exact rank within the union of the query's band
     buckets (b bands x r rows, OR-amplified).
 
@@ -103,14 +100,14 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     |bucket_c| * |bucket_q| — never corpus x queries."""
     planes = hyperplanes(dim, bands * rows_per_band)
     c = banded_signatures(
-        corpus.select(F.col(id_col), F.col(vec_col).alias("c_vec")),
-        planes, bands, rows_per_band, id_col, "c_vec")
+        corpus.select("vec_id", F.col("embedding").alias("c_vec")),
+        planes, bands, rows_per_band, "vec_id", "c_vec")
     q = banded_signatures(
-        queries.select(F.col(q_id_col), F.col(vec_col).alias("q_vec")),
-        planes, bands, rows_per_band, q_id_col, "q_vec")
+        queries.select("q_id", F.col("embedding").alias("q_vec")),
+        planes, bands, rows_per_band, "q_id", "q_vec")
     cand = (
         c.join(F.broadcast(q), ["band", "band_sig"])
-        .dropDuplicates([q_id_col, id_col])
+        .dropDuplicates(["q_id", "vec_id"])
     )
     scored = cand.withColumn(
         "cosine",
@@ -118,11 +115,11 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
             _dot_col(F.col("q_vec"), F.col("c_vec"))
             / (F.greatest(_norm_col(F.col("q_vec")), F.lit(1e-12))
                * F.greatest(_norm_col(F.col("c_vec")), F.lit(1e-12))), 4))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+        .select("q_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -151,21 +148,19 @@ def _nearest_col(n_centroids: int):
     return assign
 
 
-def ivf_assignments(corpus: DataFrame, dim: int, n_centroids: int = 8,
-                    id_col: str = "vec_id", vec_col: str = "embedding"
-                    ) -> DataFrame:
+def ivf_assignments(corpus: DataFrame, dim: int,
+                    n_centroids: int = 8) -> DataFrame:
     """Coarse IVF partitioning: assign each vector to its nearest
     ``ivf_centroids`` seed (argmax cosine; lowest index wins ties)."""
     cents = ivf_centroids(dim, n_centroids)
-    df = corpus.select(F.col(id_col), F.col(vec_col),
-                       *_centroid_scores(F.col(vec_col), cents))
-    return df.select(F.col(id_col), F.col(vec_col),
+    df = corpus.select("vec_id", "embedding",
+                       *_centroid_scores(F.col("embedding"), cents))
+    return df.select("vec_id", "embedding",
                      _nearest_col(len(cents)).alias("centroid"))
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             n_centroids: int = 8, nprobe: int = 3, id_col: str = "vec_id",
-             vec_col: str = "embedding", q_id_col: str = "q_id") -> DataFrame:
+             n_centroids: int = 8, nprobe: int = 3) -> DataFrame:
     """IVF search: score only corpus vectors whose centroid is among the
     query's ``nprobe`` nearest centroids.
 
@@ -174,17 +169,17 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     At 10^9+ vectors the assignment would be written out partitioned by
     ``centroid`` so probes prune partitions at scan time."""
     cents = ivf_centroids(dim, n_centroids)
-    assigned = ivf_assignments(corpus, dim, n_centroids, id_col, vec_col)
+    assigned = ivf_assignments(corpus, dim, n_centroids)
 
-    q = queries.select(F.col(q_id_col), F.col(vec_col).alias("q_vec"),
-                       *_centroid_scores(F.col(vec_col), cents))
+    q = queries.select("q_id", F.col("embedding").alias("q_vec"),
+                       *_centroid_scores(F.col("embedding"), cents))
     scores_arr = F.array(*[
         F.struct((-F.col(f"s{i}")).alias("neg_s"), F.lit(i).alias("c"))
         for i in range(n_centroids)
     ])  # sort on (-score, idx): best score first, lowest index wins ties
     probes = F.slice(F.array_sort(scores_arr), 1, nprobe)
     q_probed = q.select(
-        q_id_col, "q_vec",
+        "q_id", "q_vec",
         F.explode(F.transform(probes, lambda p: p["c"])).alias("centroid"))
 
     scored = (
@@ -192,13 +187,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
         .withColumn(
             "cosine",
             F.round(
-                _dot_col(F.col("q_vec"), F.col(vec_col))
+                _dot_col(F.col("q_vec"), F.col("embedding"))
                 / (F.greatest(_norm_col(F.col("q_vec")), F.lit(1e-12))
-                   * F.greatest(_norm_col(F.col(vec_col)), F.lit(1e-12))), 4))
+                   * F.greatest(_norm_col(F.col("embedding")),
+                                F.lit(1e-12))), 4))
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+        .select("q_id", "vec_id", "cosine", "rank")
     )

@@ -104,11 +104,10 @@ def hll_estimate(regs: DataFrame, b: int = 8) -> DataFrame:
                       .alias("est"))
 
 
-def hll_distinct(df: DataFrame, keys: list[str], value: str,
-                 b: int = 8) -> DataFrame:
+def hll_distinct(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     """sketch + estimate in one call — the per-key approximate
     distinct-count table (keys..., present, zeros, z_num, est)."""
-    return hll_estimate(hll_sketch(df, keys, value, b), b)
+    return hll_estimate(hll_sketch(df, keys, value))
 
 
 # --------------------------------------------------------------------------- #
@@ -137,17 +136,16 @@ CM_DEPTH = 4
 CM_WIDTH = 1024  # counters per row; 2^10 keeps bucket ids tiny ints
 
 
-def cm_bucket(value: Column, depth: Column, w: int = CM_WIDTH) -> Column:
+def cm_bucket(value: Column, depth: Column) -> Column:
     """Row-``depth`` bucket of ``value``: first 32 bits of
     md5('<depth>:<value>') mod w. Integer-only, engine-portable."""
     h = F.md5(F.concat(depth.cast("string"), F.lit(":"),
                        value.cast("string")))
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % F.lit(w)).cast("int")
+            % F.lit(CM_WIDTH)).cast("int")
 
 
 def cm_sketch(df: DataFrame, keys: list[str], value: str,
-              d: int = CM_DEPTH, w: int = CM_WIDTH,
               weight_col: str | None = None) -> DataFrame:
     """-> (keys..., depth int, bucket int, cnt long): the counter table,
     one row per non-zero (key, depth, bucket) cell.
@@ -157,20 +155,20 @@ def cm_sketch(df: DataFrame, keys: list[str], value: str,
     distinct values equals sketching the raw occurrences bit-for-bit
     while hashing each distinct value d times instead of each occurrence
     (gated in tests/test_sketch.py)."""
-    depth = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("depth")
+    depth = F.explode(F.sequence(F.lit(0), F.lit(CM_DEPTH - 1))
+                      ).alias("depth")
     wcols = [F.col(weight_col).alias("_w")] if weight_col else []
     cells = df.select(*keys, F.col(value).alias("_v"), *wcols, depth)
     cnt = (F.sum(F.col("_w").cast("long")) if weight_col
            else F.count("*"))
     return (cells.select(*keys, "depth",
-                         cm_bucket(F.col("_v"), F.col("depth"), w)
+                         cm_bucket(F.col("_v"), F.col("depth"))
                          .alias("bucket"), *(["_w"] if weight_col else []))
             .groupBy(*keys, "depth", "bucket")
             .agg(cnt.alias("cnt")))
 
 
 def cm_estimate(sketch: DataFrame, probes: DataFrame, value: str,
-                d: int = CM_DEPTH, w: int = CM_WIDTH,
                 keys: list[str] | None = None) -> DataFrame:
     """Point-estimate each probe value against the counter table:
     -> (keys..., <value>, est long). ``est`` = min over the d rows of
@@ -184,10 +182,11 @@ def cm_estimate(sketch: DataFrame, probes: DataFrame, value: str,
     100-TB side — never shuffles."""
     keys = keys or [c for c in sketch.columns
                     if c not in ("depth", "bucket", "cnt")]
-    depth = F.explode(F.sequence(F.lit(0), F.lit(d - 1))).alias("depth")
+    depth = F.explode(F.sequence(F.lit(0), F.lit(CM_DEPTH - 1))
+                      ).alias("depth")
     pv = (probes.select(*keys, F.col(value).alias(value)).distinct()
           .select(*keys, value, depth))
-    pv = pv.withColumn("bucket", cm_bucket(F.col(value), F.col("depth"), w))
+    pv = pv.withColumn("bucket", cm_bucket(F.col(value), F.col("depth")))
     joined = pv.join(sketch, [*keys, "depth", "bucket"], "left")
     return (joined.groupBy(*keys, value)
             .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long")))

@@ -51,30 +51,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def window_hashes(docs: DataFrame, n: int, stride: int = 1,
-                  key_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def window_hashes(docs: DataFrame, n: int, stride: int = 1) -> DataFrame:
     """(key, start, whash) for every full stride-spaced n-token window of
     whitespace tokens. Documents shorter than n emit nothing (a partial
     window cannot equal a full one elsewhere, so it cannot duplicate)."""
     if n <= 0 or stride <= 0:
         raise ValueError("n and stride must be positive")
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n_toks = F.size(toks)
     starts = F.when(n_toks >= n,
                     F.sequence(F.lit(0), n_toks - n, F.lit(stride))
                     ).otherwise(F.array().cast("array<int>"))
-    exploded = (docs.select(F.col(key_col), toks.alias("__toks"),
+    exploded = (docs.select(F.col("doc_id"), toks.alias("__toks"),
                             F.explode(starts).alias("start")))
     win = F.slice(F.col("__toks"), F.col("start") + 1, n)
     return exploded.select(
-        key_col, F.col("start").cast("long").alias("start"),
+        "doc_id", F.col("start").cast("long").alias("start"),
         F.md5(F.array_join(win, " ")).alias("whash"))
 
 
 def repeated_spans(docs: DataFrame, n: int, stride: int = 1,
-                   min_count: int = 2, key_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+                   min_count: int = 2) -> DataFrame:
     """Per-document merged duplicated-span stats:
 
     (key, dup_windows, dup_spans, dup_tokens) — window count, maximal-span
@@ -82,7 +79,7 @@ def repeated_spans(docs: DataFrame, n: int, stride: int = 1,
     Documents with no duplicated window are absent (join the result back
     to the corpus for a keep/scrub decision; absence == clean).
     """
-    w = window_hashes(docs, n, stride, key_col, text_col)
+    w = window_hashes(docs, n, stride)
     # corpus-wide occurrence count as ONE count-over-partition window
     # instead of groupBy + self-join: the former dup-set join computed the
     # exploded md5 window table TWICE (aggregate side + probe side) and
@@ -91,30 +88,28 @@ def repeated_spans(docs: DataFrame, n: int, stride: int = 1,
     hits = (w.withColumn("__cnt", F.count("*").over(
                 Window.partitionBy("whash")))
             .filter(F.col("__cnt") >= min_count)
-            .select(key_col, "start"))
+            .select("doc_id", "start"))
     prev_end = F.max(F.col("start") + n).over(
-        Window.partitionBy(key_col).orderBy("start")
+        Window.partitionBy("doc_id").orderBy("start")
         .rowsBetween(Window.unboundedPreceding, -1))
     marked = hits.select(
-        key_col, "start",
+        "doc_id", "start",
         F.when(F.col("start") > F.coalesce(prev_end, F.lit(-1)), 1)
         .otherwise(0).alias("new_span"))
     span_id = F.sum("new_span").over(
-        Window.partitionBy(key_col).orderBy("start")
+        Window.partitionBy("doc_id").orderBy("start")
         .rowsBetween(Window.unboundedPreceding, 0))
-    spans = (marked.select(key_col, "start", span_id.alias("span"))
-             .groupBy(key_col, "span")
+    spans = (marked.select("doc_id", "start", span_id.alias("span"))
+             .groupBy("doc_id", "span")
              .agg(F.count("*").alias("nw"),
                   (F.max("start") + n - F.min("start")).alias("span_len")))
-    return (spans.groupBy(key_col)
+    return (spans.groupBy("doc_id")
             .agg(F.sum("nw").cast("long").alias("dup_windows"),
                  F.count("*").cast("long").alias("dup_spans"),
                  F.sum("span_len").cast("long").alias("dup_tokens")))
 
 
-def winnowed_fingerprints(docs: DataFrame, n: int, w: int,
-                          key_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def winnowed_fingerprints(docs: DataFrame, n: int, w: int) -> DataFrame:
     """(key, fp): winnowing fingerprint selection (Schleimer/Wilkerson/
     Aiken SIGMOD'03). Per document, every n-token window is hashed
     row-locally (one ``transform`` — no explode yet) and the minimal hash
@@ -127,7 +122,7 @@ def winnowed_fingerprints(docs: DataFrame, n: int, w: int,
     for short documents)."""
     if n <= 0 or w <= 0:
         raise ValueError("n and w must be positive")
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     m = F.size(toks) - n + 1
     hashes = F.transform(
         F.sequence(F.lit(0), m - 1),
@@ -135,7 +130,7 @@ def winnowed_fingerprints(docs: DataFrame, n: int, w: int,
     empty = F.array().cast("array<string>")
     # the when() guard keeps sequence() from seeing a negative bound
     # (Spark's sequence would flip the step sign, not return empty)
-    d = docs.select(F.col(key_col),
+    d = docs.select(F.col("doc_id"),
                     F.when(m > 0, hashes).otherwise(empty).alias("__h"))
     h = F.col("__h")
     mm = F.size(h)
@@ -144,19 +139,17 @@ def winnowed_fingerprints(docs: DataFrame, n: int, w: int,
            .otherwise(F.array_distinct(F.transform(
                F.sequence(F.lit(0), mm - w),
                lambda j: F.array_min(F.slice(h, j + 1, w))))))
-    return d.select(key_col, F.explode(fps).alias("fp")).distinct()
+    return d.select("doc_id", F.explode(fps).alias("fp")).distinct()
 
 
-def winnow_candidates(docs: DataFrame, n: int, w: int,
-                      key_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def winnow_candidates(docs: DataFrame, n: int, w: int) -> DataFrame:
     """(id_a, id_b) candidate document pairs sharing a winnowing
     fingerprint — the 100-TB candidate generator (bucketed self-join on
     the fingerprint, never all-pairs), to be verified exactly by
     ``repeated_spans`` at stride 1 over the candidate subset."""
-    fp = winnowed_fingerprints(docs, n, w, key_col, text_col)
-    a = fp.select(F.col(key_col).alias("id_a"), "fp")
-    b = fp.select(F.col(key_col).alias("id_b"), "fp")
+    fp = winnowed_fingerprints(docs, n, w)
+    a = fp.select(F.col("doc_id").alias("id_a"), "fp")
+    b = fp.select(F.col("doc_id").alias("id_b"), "fp")
     return (a.join(b, "fp")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct())

@@ -34,15 +34,12 @@ class Tagger:
 
 class GazetteerTagger(Tagger):
     """Deterministic gazetteer tagger: greedy longest alias match (up to
-    ``max_ngram`` tokens) against ``alias_norm -> (canonical_id, type)``;
+    3 tokens) against ``alias_norm -> (canonical_id, type)``;
     markdown sentinel tags win over dictionary hits; IS_URL tokens become
     Website mentions unless already covered."""
 
-    def __init__(self, alias_map: Optional[Dict[str, Tuple[str, str]]] = None,
-                 max_ngram: int = 3, tag_urls: bool = True):
+    def __init__(self, alias_map: Optional[Dict[str, Tuple[str, str]]] = None):
         self.alias_map = alias_map if alias_map is not None else gazetteer_map()
-        self.max_ngram = max_ngram
-        self.tag_urls = tag_urls
         # first words of multi-word aliases: an n>1 lookup can only hit when
         # the position's word starts one, so the common case probes 1-grams
         # only (same results, ~2x fewer dict probes)
@@ -73,7 +70,7 @@ class GazetteerTagger(Tagger):
             matched = 0
             mtype = None
             if lw in multi_first and n - i > 1:
-                for ln in range(min(self.max_ngram, n - i), 0, -1):
+                for ln in range(min(3, n - i), 0, -1):
                     if any(tags[j] != "O" for j in range(i, i + ln)):
                         continue
                     hit = amap_get(" ".join(lws[i:i + ln]))
@@ -95,12 +92,11 @@ class GazetteerTagger(Tagger):
                 i += 1
         # 3. rule overlay (cheapest predicate first — the prefix test kills
         #    almost every token before the regex/number checks run)
-        if self.tag_urls:
-            for i, tok in enumerate(tokens):
-                if tags[i] == "O" and len(tok) > 4 \
-                        and lws[i].startswith(("http", "www.")) \
-                        and not is_number_token(tok) and is_url_token(tok):
-                    tags[i] = "B-Website"
+        for i, tok in enumerate(tokens):
+            if tags[i] == "O" and len(tok) > 4 \
+                    and lws[i].startswith(("http", "www.")) \
+                    and not is_number_token(tok) and is_url_token(tok):
+                tags[i] = "B-Website"
         return tags
 
 
@@ -216,7 +212,7 @@ class PerceptronTagger(Tagger):
 
     @classmethod
     def fit_from_gold(cls, gold_path: str, epochs: int = 5,
-                      min_alias_count: int = 3, structured: bool = False,
+                      structured: bool = False,
                       ctc_path: Optional[str] = None,
                       seg_path: Optional[str] = None,
                       seg_mode: str = "ref") -> "PerceptronTagger":
@@ -289,7 +285,7 @@ class PerceptronTagger(Tagger):
                 alias_counts[(" ".join(words[a:b]).lower(), typ)] += 1
         alias_types: Dict[str, str] = {}
         for (surf, typ), n in alias_counts.most_common():
-            if n >= min_alias_count and surf not in alias_types:
+            if n >= 3 and surf not in alias_types:
                 alias_types[surf] = typ
         if seg_mode not in ("ref", "own", "multi"):
             raise ValueError(f"seg_mode={seg_mode!r}: use ref | own | multi")

@@ -30,10 +30,10 @@ def _stopword_hits(text_col, words) -> "F.Column":
     return F.size(F.array_intersect(F.array_distinct(toks), arr))
 
 
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_counts(df: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword-piece count (alnum runs,
     digit runs, punct singles — a cheap proxy for BPE token budgets)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return df.withColumn(
         "ws_tokens", F.size(F.filter(F.split(t, r"\s+"), lambda x: x != ""))
     ).withColumn(
@@ -42,9 +42,9 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Length + punctuation-ratio + stopword-ratio quality heuristic."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_alpha = F.length(F.regexp_replace(t, "[^A-Za-z]", ""))
     n_punct = F.length(F.regexp_replace(t, "[^.,;:!?]", ""))
@@ -65,9 +65,9 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_id(df: DataFrame) -> DataFrame:
     """n-gram/stopword language ID: argmax of per-language stopword hits."""
-    t = F.col(text_col)
+    t = F.col("text")
     hit_cols = [
         _stopword_hits(t, ws).alias(f"hits_{lang}") for lang, ws in STOPWORDS.items()
     ]
@@ -81,8 +81,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("lang_pred", F.when(best > 0, pred).otherwise(F.lit("unk")))
 
 
-def with_repetition_stats(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition / composition filters (Rae et al. 2021 §A1.1,
     public spec): per document —
 
@@ -99,7 +98,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
     class as the MinHash shingle pass, and far cheaper than embedding the
     corpus. Thresholds follow the published Gopher ranges (mean word
     length 3-10, symbol ratio < 0.1, top-2-gram fraction < 0.2)."""
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.filter(F.split(t, " "), lambda x: x != "")
     n_words = F.size(words)
     base = (df.withColumn("n_words", n_words.cast("long"))
@@ -113,14 +112,14 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
                 1 - F.size(F.array_distinct(words)) /
                 F.greatest(n_words, F.lit(1)).cast("double"), 6)))
     grams = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.transform(
             F.slice(words, 1, F.greatest(n_words - 1, F.lit(0))),
             lambda w, i: F.concat_ws(" ", w, words[i + 1]))).alias("bigram"))
-    top = (grams.groupBy(id_col, "bigram").agg(F.count("*").alias("c"))
-           .groupBy(id_col).agg(F.max("c").alias("top_c"),
-                                F.sum("c").alias("all_c")))
-    out = (base.join(top, id_col, "left")
+    top = (grams.groupBy("doc_id", "bigram").agg(F.count("*").alias("c"))
+           .groupBy("doc_id").agg(F.max("c").alias("top_c"),
+                                  F.sum("c").alias("all_c")))
+    out = (base.join(top, "doc_id", "left")
            .withColumn("top_bigram_frac", F.round(
                F.coalesce(F.col("top_c") / F.col("all_c"), F.lit(0.0)), 6))
            .drop("top_c", "all_c"))
@@ -131,8 +130,8 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
     return out.withColumn("keep", keep)
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Normalization fingerprint: md5 over lowercased, space-collapsed text
     (rolling-hash stand-in that is reproducible in any engine)."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
+    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
     return df.withColumn("fingerprint", F.md5(F.trim(norm)))

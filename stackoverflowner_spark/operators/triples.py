@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_BASE = "https://kg.example/"  # IRI prefix of the N-Triples export
+
 
 def triples_from_linked(linked: DataFrame, n_buckets: int = 64) -> DataFrame:
     """Evidence-level triples: every row keeps its source url, deduplicated
@@ -43,7 +45,6 @@ def triples_from_linked(linked: DataFrame, n_buckets: int = 64) -> DataFrame:
 
 
 def write_triples_sorted(triples: DataFrame, path: str,
-                         mode: str = "overwrite",
                          block_size: int | None = None) -> None:
     """Subject-clustered layout: same partitioning, plus
     ``sortWithinPartitions(part_hash, subj, pred)`` before the write.
@@ -65,7 +66,7 @@ def write_triples_sorted(triples: DataFrame, path: str,
     """
     w = (triples.repartition("part_hash")
          .sortWithinPartitions("part_hash", "subj", "pred")
-         .write.mode(mode))
+         .write.mode("overwrite"))
     if block_size is not None:
         w = w.option("parquet.block.size", str(block_size))
     w.partitionBy("part_hash").parquet(path)
@@ -97,16 +98,15 @@ def _esc_iri(col: F.Column) -> F.Column:
     return out
 
 
-def ntriples_lines(triples: DataFrame,
-                   base: str = "https://kg.example/") -> DataFrame:
+def ntriples_lines(triples: DataFrame) -> DataFrame:
     """(line): the KG as RDF N-Triples — the standard interchange format
     a KG product must export. Subjects and alias/canonical objects
-    become ``<{base}ent/...>`` IRIs, predicates ``<{base}pred/...>``,
+    become ``<{_BASE}ent/...>`` IRIs, predicates ``<{_BASE}pred/...>``,
     ``mentioned_in`` objects are page IRIs as-is, and ``instance_of``
     objects are string literals. Pure column expressions (one scan, no
     shuffle beyond the upstream distinct); write with
     ``df.write.text(path)``."""
-    ent = lambda c: F.concat(F.lit("<" + base + "ent/"),
+    ent = lambda c: F.concat(F.lit("<" + _BASE + "ent/"),
                              _esc_iri(c), F.lit(">"))
     obj = (F.when(F.col("pred") == "instance_of",
                   F.concat(F.lit('"'), _esc_literal(F.col("obj")),
@@ -116,7 +116,7 @@ def ntriples_lines(triples: DataFrame,
            .otherwise(ent(F.col("obj"))))
     line = F.concat(
         ent(F.col("subj")), F.lit(" "),
-        F.lit("<" + base + "pred/"), F.col("pred"), F.lit("> "),
+        F.lit("<" + _BASE + "pred/"), F.col("pred"), F.lit("> "),
         obj, F.lit(" ."))
     return (triples.select("subj", "pred", "obj").distinct()
             .select(line.alias("line")))
@@ -149,8 +149,7 @@ def _unesc_iri(col: F.Column) -> F.Column:
     return F.replace(out, F.lit("%25"), F.lit("%"))
 
 
-def parse_ntriples(lines: DataFrame, base: str = "https://kg.example/",
-                   line_col: str = "value") -> DataFrame:
+def parse_ntriples(lines: DataFrame) -> DataFrame:
     """(line) -> (subj, pred, obj): parse N-Triples text back into the
     engine's triple schema — the read side of ``ntriples_lines``, so an
     exported KG round-trips losslessly (gated byte-exact in tests) and
@@ -163,12 +162,12 @@ def parse_ntriples(lines: DataFrame, base: str = "https://kg.example/",
     replace chains (JVM-side, whole-stage codegen; no Python in the
     row path). Lines that do not match the grammar (comments, blank
     lines, malformed rows) are dropped, the standard lenient-reader
-    contract. ``{base}ent/`` / ``{base}pred/`` IRI prefixes are
+    contract. ``{_BASE}ent/`` / ``{_BASE}pred/`` IRI prefixes are
     stripped back to bare ids; other IRIs (page urls of
     ``mentioned_in`` objects) keep their full text; quoted objects
     become plain strings (datatype/langtag-free literals, the
     exporter's profile)."""
-    raw = lines.select(F.col(line_col).alias("line"))
+    raw = lines.select(F.col("value").alias("line"))
     # <s> <p> obj .  — obj may contain spaces (quoted literal) or be
     # an IRI; the terminating " ." anchors the object span
     pat = r'^<([^>]*)> <([^>]*)> (.*) \.\s*$'
@@ -178,7 +177,7 @@ def parse_ntriples(lines: DataFrame, base: str = "https://kg.example/",
                      F.regexp_extract("line", pat, 3).alias("o_raw"))
              .filter((F.col("s_iri") != "") & (F.col("p_iri") != "")
                      & (F.col("o_raw") != "")))
-    ent_pfx, pred_pfx = base + "ent/", base + "pred/"
+    ent_pfx, pred_pfx = _BASE + "ent/", _BASE + "pred/"
     strip = lambda c, p: F.when(  # noqa: E731
         c.startswith(p), F.substring(c, len(p) + 1, 1 << 20)).otherwise(c)
     is_lit = F.col("o_raw").rlike(r'^".*"$')

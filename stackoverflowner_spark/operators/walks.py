@@ -65,6 +65,9 @@ def _adjacency(edges: DataFrame) -> DataFrame:
             .withColumn("d", F.count("*").over(Window.partitionBy("v"))))
 
 
+_WALK_SALT, _N2V_SALT, _WEIGHTED_SALT = "walk", "n2v", "wwalk"
+
+
 def _pick(salt: str, step: int) -> F.Column:
     """Engine-portable uniform pick in [0, d): md5(salt:walk_id:step)
     first 15 hex chars -> bigint (< 2^60, so never negative) mod degree."""
@@ -74,9 +77,8 @@ def _pick(salt: str, step: int) -> F.Column:
 
 
 def random_walks(edges: DataFrame, walks_per_node: int = 2,
-                 walk_len: int = 5, salt: str = "walk",
-                 start_bucket: Optional[str] = "0",
-                 checkpoint_every: int = 4) -> DataFrame:
+                 walk_len: int = 5,
+                 start_bucket: Optional[str] = "0") -> DataFrame:
     """(walk_id, step, node): ``walks_per_node`` deterministic uniform
     random walks of ``walk_len`` steps from every start node.
 
@@ -85,16 +87,14 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
     ``None`` starts from every node. Walks traverse the WHOLE graph
     either way. walk_id = "<node>#<i>".
 
-    ``checkpoint_every`` cuts the step lineage every k steps instead of
-    every step: between cuts a step's frontier is recomputed lazily by
-    the branches that reference it (at most k-1 extra frontier-sized
-    joins against the checkpointed adjacency — frontiers are O(starts),
-    never edge-sized), trading that bounded recompute for k-1 fewer
-    eager materialization barriers per k steps. Values are pure md5
+    The step lineage is cut every 4 steps instead of every step: between
+    cuts a step's frontier is recomputed lazily by the branches that
+    reference it (at most 3 extra frontier-sized joins against the
+    checkpointed adjacency — frontiers are O(starts), never edge-sized),
+    trading that bounded recompute for 3 fewer eager materialization
+    barriers per 4 steps. Values are pure md5
     functions of (salt, walk_id, step), so the plan shape cannot change
     a single output bit (the strict DuckDB oracle gates this)."""
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
     adj = _adjacency(edges).transform(checkpoint)
     nodes = adj.select("v").distinct()
     if start_bucket is not None:
@@ -111,10 +111,10 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
     out = frontier
     for s in range(1, walk_len):
         frontier = (frontier.join(adj, frontier.node == adj.v)
-                    .filter(F.col("rnk") == _pick(salt, s))
+                    .filter(F.col("rnk") == _pick(_WALK_SALT, s))
                     .select("walk_id", F.lit(s).cast("long").alias("step"),
                             F.col("n").alias("node")))
-        if s % checkpoint_every == 0:
+        if s % 4 == 0:
             frontier = checkpoint(frontier)
         out = out.unionByName(frontier)
     return out
@@ -148,7 +148,7 @@ RANDOM_WALKS_SQL_TMPL = """
 
 
 def random_walks_sql(edges_sql: str, walks_per_node: int = 2,
-                     walk_len: int = 5, salt: str = "walk",
+                     walk_len: int = 5,
                      start_bucket: Optional[str] = "0") -> str:
     """DuckDB recursive-CTE replay of ``random_walks`` over an
     edge-producing SQL (columns src, dst, canonical src < dst) — the
@@ -157,12 +157,12 @@ def random_walks_sql(edges_sql: str, walks_per_node: int = 2,
                     if start_bucket is not None else "")
     return RANDOM_WALKS_SQL_TMPL.format(
         edges_sql=edges_sql, wpn=walks_per_node, walk_len=walk_len,
-        salt=salt, start_filter=start_filter)
+        salt=_WALK_SALT, start_filter=start_filter)
 
 
 def node2vec_walks(edges: DataFrame, walks_per_node: int = 2,
                    walk_len: int = 5, w_return: int = 1, w_near: int = 4,
-                   w_far: int = 2, salt: str = "n2v",
+                   w_far: int = 2,
                    start_bucket: Optional[str] = "0") -> DataFrame:
     """(walk_id, step, node): node2vec's second-order biased walks
     (Grover & Leskovec 2016) with EXACT integer edge weights.
@@ -229,7 +229,7 @@ def node2vec_walks(edges: DataFrame, walks_per_node: int = 2,
         cum = (F.sum("weff").over(
             wwin.orderBy("rnk").rowsBetween(Window.unboundedPreceding, 0)))
         total = F.sum("weff").over(wwin)
-        h = F.md5(F.concat_ws(":", F.lit(salt), F.col("walk_id"),
+        h = F.md5(F.concat_ws(":", F.lit(_N2V_SALT), F.col("walk_id"),
                               F.lit(str(s))))
         draw = (F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
                 % total)
@@ -296,7 +296,7 @@ NODE2VEC_SQL_TMPL = """
 
 def node2vec_walks_sql(edges_sql: str, walks_per_node: int = 2,
                        walk_len: int = 5, w_return: int = 1,
-                       w_near: int = 4, w_far: int = 2, salt: str = "n2v",
+                       w_near: int = 4, w_far: int = 2,
                        start_bucket: Optional[str] = "0") -> str:
     """DuckDB recursive-CTE replay of ``node2vec_walks`` — the strict
     bitwise oracle twin (the weighted pick is integer cumulative
@@ -305,12 +305,12 @@ def node2vec_walks_sql(edges_sql: str, walks_per_node: int = 2,
                     if start_bucket is not None else "")
     return NODE2VEC_SQL_TMPL.format(
         edges_sql=edges_sql, wpn=walks_per_node, walk_len=walk_len,
-        w_return=w_return, w_near=w_near, w_far=w_far, salt=salt,
+        w_return=w_return, w_near=w_near, w_far=w_far, salt=_N2V_SALT,
         start_filter=start_filter)
 
 
 def weighted_walks(edges: DataFrame, walks_per_node: int = 2,
-                   walk_len: int = 5, salt: str = "wwalk",
+                   walk_len: int = 5,
                    start_bucket: Optional[str] = "0") -> DataFrame:
     """(walk_id, step, node): first-order walks whose step distribution
     is proportional to INTEGER edge weights — edges must carry
@@ -348,7 +348,7 @@ def weighted_walks(edges: DataFrame, walks_per_node: int = 2,
         cum = F.sum("w").over(
             wwin.orderBy("rnk").rowsBetween(Window.unboundedPreceding, 0))
         total = F.sum("w").over(wwin)
-        h = F.md5(F.concat_ws(":", F.lit(salt), F.col("walk_id"),
+        h = F.md5(F.concat_ws(":", F.lit(_WEIGHTED_SALT), F.col("walk_id"),
                               F.lit(str(s))))
         draw = (F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
                 % total)
@@ -395,7 +395,7 @@ WEIGHTED_WALKS_SQL_TMPL = """
 
 
 def weighted_walks_sql(edges_sql: str, walks_per_node: int = 2,
-                       walk_len: int = 5, salt: str = "wwalk",
+                       walk_len: int = 5,
                        start_bucket: Optional[str] = "0") -> str:
     """DuckDB recursive-CTE replay of ``weighted_walks`` — the strict
     bitwise oracle twin."""
@@ -403,7 +403,7 @@ def weighted_walks_sql(edges_sql: str, walks_per_node: int = 2,
                     if start_bucket is not None else "")
     return WEIGHTED_WALKS_SQL_TMPL.format(
         edges_sql=edges_sql, wpn=walks_per_node, walk_len=walk_len,
-        salt=salt, start_filter=start_filter)
+        salt=_WEIGHTED_SALT, start_filter=start_filter)
 
 
 def merge_candidates(edges: DataFrame, min_jaccard_pct: int = 30,

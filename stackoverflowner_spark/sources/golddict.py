@@ -42,8 +42,8 @@ def entity_phrases(gold_sentences: DataFrame) -> DataFrame:
         run, schema=_PHRASES_SCHEMA)
 
 
-def dictionary_from_gold(gold_sentences: DataFrame, min_count: int = 2,
-                         max_aliases: int = 50_000) -> DataFrame:
+def dictionary_from_gold(gold_sentences: DataFrame,
+                         min_count: int = 2) -> DataFrame:
     """Gold sentences -> entity_dict(canonical_id, alias, alias_norm,
     entity_type, embedding, freq_rank, link_score). All aggregation
     distributed; the embedding and its link score are attached in one
@@ -67,7 +67,7 @@ def dictionary_from_gold(gold_sentences: DataFrame, min_count: int = 2,
         .withColumn("freq_rank",
                     F.row_number().over(Window.orderBy(F.desc("total"),
                                                        F.asc("alias_norm"))))
-        .filter(F.col("freq_rank") <= max_aliases)
+        .filter(F.col("freq_rank") <= 50_000)
     )
     aliases = (
         counts.join(ranked, "alias_norm")

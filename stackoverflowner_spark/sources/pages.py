@@ -116,20 +116,19 @@ PAGES_SCHEMA = T.StructType([
 ])
 
 
-def synth_pages(spark: SparkSession, n_pages: int, seed: int = 42,
-                partitions: int | None = None) -> DataFrame:
+def synth_pages(spark: SparkSession, n_pages: int) -> DataFrame:
     """Distributed deterministic generation: spark.range -> mapInPandas."""
     import pandas as pd
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            rows = [synth_page(int(i), seed) for i in pdf["id"]]
+            rows = [synth_page(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(rows)
 
     # 4x tasks per core: page cost varies (html length, entity density), so
     # fat one-task-per-core partitions gate the job on the slowest task;
     # finer granularity lets the scheduler rebalance (same reasoning as
     # spark.sql.files.maxPartitionBytes tuning for real scans at 100 TB).
-    n_parts = partitions or 4 * spark.sparkContext.defaultParallelism
+    n_parts = 4 * spark.sparkContext.defaultParallelism
     rng_df = spark.range(0, n_pages, numPartitions=n_parts)
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)

@@ -96,7 +96,7 @@ FINAL_TEXT_SCHEMA = T.StructType([
 ])
 
 
-def posts_final_text(posts: DataFrame, with_header: bool = True) -> DataFrame:
+def posts_final_text(posts: DataFrame) -> DataFrame:
     """posts -> the reference's per-post tokenized text file content
     (``text_files/<post_id>.txt``): extract_text + sentencize with the
     post-id header, byte-identical to the shipped goldens (gated in tests)."""
@@ -114,7 +114,7 @@ def posts_final_text(posts: DataFrame, with_header: bool = True) -> DataFrame:
                     continue
                 try:
                     final, _ = sentencize(extract_text(body), pid,
-                                          with_header=with_header)
+                                          with_header=True)
                 except ExtractionError:
                     continue
                 out.append((pid, final))

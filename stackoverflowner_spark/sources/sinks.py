@@ -30,13 +30,12 @@ from pyspark.sql import functions as F
 SENT_SEP = "\t"  # the shipped corpus separates sentences with a lone-tab line
 
 
-def conll_blocks(sentences: DataFrame, words_col: str = "words",
-                 tags_col: str = "tags", md_col: str = "md_tags",
-                 file_col: str = "file", idx_col: str = "sent_idx") -> DataFrame:
+def conll_blocks(sentences: DataFrame, tags_col: str = "tags",
+                 md_col: str = "md_tags") -> DataFrame:
     """One 4-col CoNLL text block per sentence row. Internal spaces in a
     token are re-masked with ``-----`` exactly like the corpus (the loader
     splits lines on whitespace, loader_so.py:89)."""
-    w = F.transform(F.col(words_col), lambda x: F.regexp_replace(x, " ", "-----"))
+    w = F.transform(F.col("words"), lambda x: F.regexp_replace(x, " ", "-----"))
     lines = F.zip_with(
         F.zip_with(w, F.col(tags_col), lambda x, t: F.concat_ws("\t", x, t)),
         F.zip_with(w, F.col(md_col), lambda x, m: F.concat_ws("\t", x, m)),
@@ -44,16 +43,13 @@ def conll_blocks(sentences: DataFrame, words_col: str = "words",
     )
     block = F.concat(F.array_join(lines, "\n"), F.lit("\n" + SENT_SEP))
     return sentences.select(
-        F.col(file_col).alias("file"), F.col(idx_col).alias("sent_idx"),
+        "file", "sent_idx",
         block.alias("block"))
 
 
 def write_conll(sentences: DataFrame, path: str, n_files: int = 4,
-                words_col: str = "words", tags_col: str = "tags",
-                md_col: str = "md_tags", file_col: str = "file",
-                idx_col: str = "sent_idx") -> str:
-    blocks = conll_blocks(sentences, words_col, tags_col, md_col,
-                          file_col, idx_col)
+                tags_col: str = "tags", md_col: str = "md_tags") -> str:
+    blocks = conll_blocks(sentences, tags_col=tags_col, md_col=md_col)
     (blocks.repartitionByRange(n_files, "file", "sent_idx")
      .sortWithinPartitions("file", "sent_idx")
      .select("block")
@@ -82,22 +78,18 @@ def merge_conll_files(spark_text_dir: str, output_file: str) -> str:
     return output_file
 
 
-def prediction_blocks(sentences: DataFrame, words_col: str = "words",
-                      preds_col: str = "pred_tags", file_col: str = "file",
-                      idx_col: str = "sent_idx") -> DataFrame:
-    lines = F.zip_with(F.col(words_col), F.col(preds_col),
+def prediction_blocks(sentences: DataFrame) -> DataFrame:
+    lines = F.zip_with(F.col("words"), F.col("pred_tags"),
                        lambda w, p: F.concat_ws(" ", w, p))
     return sentences.select(
-        F.col(file_col).alias("file"), F.col(idx_col).alias("sent_idx"),
+        "file", "sent_idx",
         F.concat(F.array_join(lines, "\n"), F.lit("\n")).alias("block"))
 
 
-def write_predictions(sentences: DataFrame, path: str, n_files: int = 4,
-                      words_col: str = "words", preds_col: str = "pred_tags",
-                      file_col: str = "file", idx_col: str = "sent_idx") -> str:
+def write_predictions(sentences: DataFrame, path: str, n_files: int = 4) -> str:
     """``word pred`` lines, blank line between sentences
     (softner_ner_predict_from_file.py:628-643's writer contract)."""
-    blocks = prediction_blocks(sentences, words_col, preds_col, file_col, idx_col)
+    blocks = prediction_blocks(sentences)
     (blocks.repartitionByRange(n_files, "file", "sent_idx")
      .sortWithinPartitions("file", "sent_idx")
      .select("block")

@@ -93,8 +93,7 @@ GOLD_SCHEMA = T.StructType([
 ])
 
 
-def gold_conll(spark: SparkSession, path: str, merge_tags: bool = True,
-               replace_low_freq: bool = True) -> DataFrame:
+def gold_conll(spark: SparkSession, path: str) -> DataFrame:
     """Gold corpus -> sentence rows. Files are small (the full train split is
     ~181k lines) so each file parses in one task via binaryFiles."""
     from ..kernel.goldload import parse_gold_lines
@@ -105,7 +104,7 @@ def gold_conll(spark: SparkSession, path: str, merge_tags: bool = True,
         fname, data = item
         lines = data.decode("utf-8", "replace").splitlines()
         out = []
-        for i, sent in enumerate(parse_gold_lines(lines, merge_tags, replace_low_freq)):
+        for i, sent in enumerate(parse_gold_lines(lines)):
             out.append((fname, i,
                         [t.word for t in sent],
                         [t.md_label for t in sent],

@@ -26,11 +26,10 @@ from ..sources.dictionary import dictionary_df
 from ..sources.pages import PAGES_SCHEMA
 
 
-def stream_pages(spark: SparkSession, pages_dir: str,
-                 max_files_per_trigger: int = 4) -> DataFrame:
+def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 4)
         .parquet(pages_dir)
     )
 

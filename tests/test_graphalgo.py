@@ -568,75 +568,6 @@ def test_modularity_duckdb_bitwise_oracle(spark):
     assert got.q == want[2]  # bitwise: exact integer fold, one division
 
 
-def _brute_modularity_w(wedges, labels):
-    """Weighted Q via exact fractions; wedges = [(u, v, w)]."""
-    from fractions import Fraction
-    agg = defaultdict(int)
-    for u, v, w in wedges:
-        if u != v:
-            agg[tuple(sorted((u, v)))] += w
-    m = sum(agg.values())
-    if m == 0:
-        return 0.0
-    lab = dict(labels)
-    com = lambda n: lab.get(n, n)  # noqa: E731
-    strength = defaultdict(int)
-    e_c = defaultdict(int)
-    for (u, v), w in agg.items():
-        strength[u] += w
-        strength[v] += w
-        if com(u) == com(v):
-            e_c[com(u)] += w
-    d_c = defaultdict(int)
-    for n, d in strength.items():
-        d_c[com(n)] += d
-    return float(sum((Fraction(e_c[c], m) - Fraction(d_c[c], 2 * m) ** 2
-                      for c in d_c), Fraction(0)))
-
-
-def test_modularity_weighted_matches_fraction_brute(spark):
-    from stackoverflowner_spark.operators.graphalgo import modularity
-    rng = random.Random(41)
-    wedges = sorted({(f"n{rng.randrange(20)}", f"n{rng.randrange(20)}")
-                     for _ in range(50)})
-    wedges = [(u, v, rng.randint(1, 9)) for u, v in wedges if u != v]
-    labels = [(f"n{i}", f"g{i % 3}") for i in range(20)]
-    df = spark.createDataFrame(wedges, "src string, dst string, w long")
-    lab = spark.createDataFrame(labels, "node string, community string")
-    row = modularity(df, lab, weight_col="w").collect()[0]
-    want = _brute_modularity_w(wedges, labels)
-    assert row.q == pytest.approx(want, abs=1e-12)
-    assert row.m == sum(w for _, _, w in wedges)  # total weight
-
-
-def test_modularity_weighted_unit_weights_equal_unweighted(spark):
-    from stackoverflowner_spark.operators.graphalgo import (lpa_communities,
-                                                            modularity)
-    edges = _random_graph(n=20, m=40, seed=8)
-    sedges = [(str(u), str(v)) for u, v in edges]
-    df = spark.createDataFrame(sedges, "src string, dst string")
-    dfw = spark.createDataFrame([(u, v, 1) for u, v in sedges],
-                                "src string, dst string, w long")
-    lab = lpa_communities(df)
-    a = modularity(df, lab).collect()[0]
-    b = modularity(dfw, lab, weight_col="w").collect()[0]
-    assert (a.m, a.communities, a.q) == (b.m, b.communities, b.q)
-
-
-def test_modularity_weighted_parallel_edges_sum(spark):
-    from stackoverflowner_spark.operators.graphalgo import modularity
-    # (a,b) asserted both directions with weights 2 and 3 -> one edge w=5
-    df = spark.createDataFrame(
-        [("a", "b", 2), ("b", "a", 3), ("b", "c", 1)],
-        "src string, dst string, w long")
-    lab = spark.createDataFrame([("a", "g"), ("b", "g"), ("c", "h")],
-                                "node string, community string")
-    row = modularity(df, lab, weight_col="w").collect()[0]
-    want = _brute_modularity_w(
-        [("a", "b", 5), ("b", "c", 1)], [("a", "g"), ("b", "g"), ("c", "h")])
-    assert row.m == 6 and row.q == pytest.approx(want, abs=1e-15)
-
-
 # ---- greedy modularity refinement (r5o) ----
 
 def _brute_delta_best(edges, labels, node):
@@ -745,32 +676,3 @@ def test_refine_gain_formula_matches_fractions(spark):
     out = {r.node: r.community
            for r in refine_communities(df, lab, max_rounds=1).collect()}
     assert out["x"] == "A"
-
-
-def test_refine_weighted_uses_weights(spark):
-    # x has 2 plain edges into A-clique and 1 HEAVY edge (w=10) to B:
-    # unweighted refinement pulls x to A, weighted keeps/pulls it to B
-    from stackoverflowner_spark.operators.graphalgo import (
-        modularity, refine_communities)
-    wedges = [("x", "a1", 1), ("x", "a2", 1), ("a1", "a2", 5),
-              ("x", "b1", 10), ("b1", "b2", 5)]
-    df = spark.createDataFrame(wedges, "src string, dst string, w long")
-    lab = spark.createDataFrame(
-        [("x", "A"), ("a1", "A"), ("a2", "A"), ("b1", "B"), ("b2", "B")],
-        "node string, community string")
-    out = {r.node: r.community
-           for r in refine_communities(df, lab, weight_col="w").collect()}
-    assert out["x"] == "B"
-    q0 = modularity(df, lab, weight_col="w").collect()[0].q
-    q1 = modularity(
-        df, spark.createDataFrame(list(out.items()),
-                                  "node string, community string"),
-        weight_col="w").collect()[0].q
-    assert q1 > q0
-    # the unweighted reading of the same topology keeps x in A
-    # (2 edges to A vs 1 to B)
-    plain = {r.node: r.community
-             for r in refine_communities(
-                 df.select("src", "dst"), lab).collect()}
-    assert plain["x"] == "A"
-

@@ -1,4 +1,4 @@
-"""PageRank/HITS gates: numpy power-iteration parity, analytic closed
+"""PageRank gates: numpy power-iteration parity, analytic closed
 forms, mass conservation, and the KG entity wrapper."""
 
 import random
@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.pagerank import (
-    entity_pagerank, hits, pagerank)
+    entity_pagerank, pagerank)
 from stackoverflowner_spark.session import get_spark
 
 D = 0.85
@@ -103,90 +103,6 @@ def test_multi_edges_collapse(spark):
     got = _spark_ranks(spark, edges, iterations=15)
     ref = np_pagerank([("a", "b"), ("b", "a")], iterations=15)
     assert abs(got["a"] - ref["a"]) < 1e-12
-
-
-def np_hits(edges, iterations=20):
-    """Dense reference for the exact half-step recurrence documented on
-    :func:`hits`: h := 1; repeat a = L2norm(A^T h), h = L2norm(A a)."""
-    eset = set(edges)
-    nodes = sorted({x for e in eset for x in e})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    A = np.zeros((n, n))
-    for s, t in eset:
-        A[idx[s], idx[t]] = 1.0
-    h = np.ones(n)
-    a = np.zeros(n)
-    for _ in range(iterations):
-        a_raw = A.T @ h
-        na = np.sqrt((a_raw * a_raw).sum())
-        if na == 0.0:
-            break
-        a = a_raw / na
-        h_raw = A @ a
-        nh = np.sqrt((h_raw * h_raw).sum())
-        if nh == 0.0:
-            break
-        h = h_raw / nh
-    return ({v: h[idx[v]] for v in nodes}, {v: a[idx[v]] for v in nodes})
-
-
-def _spark_hits(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    rows = hits(df, **kw).collect()
-    return ({r.node: r.hub for r in rows},
-            {r.node: r.authority for r in rows})
-
-
-def test_hits_star_pure_roles(spark):
-    # leaves -> center: center is the unit authority, leaves equal hubs,
-    # and the mirror-image roles are exactly zero.
-    k = 4
-    edges = [(f"l{i}", "c") for i in range(k)]
-    hub, auth = _spark_hits(spark, edges, iterations=5)
-    assert abs(auth["c"] - 1.0) < 1e-12
-    assert abs(hub["c"]) < 1e-12
-    for i in range(k):
-        assert abs(hub[f"l{i}"] - 1.0 / np.sqrt(k)) < 1e-12
-        assert abs(auth[f"l{i}"]) < 1e-12
-
-
-def test_hits_random_graph_matches_numpy(spark):
-    rng = random.Random(11)
-    nodes = [f"v{i}" for i in range(50)]
-    edges = sorted({(rng.choice(nodes), rng.choice(nodes))
-                    for _ in range(250)})
-    hub, auth = _spark_hits(spark, edges, iterations=12)
-    ref_hub, ref_auth = np_hits(edges, iterations=12)
-    assert set(hub) == set(ref_hub)
-    assert sum(abs(hub[v] - ref_hub[v]) for v in hub) < 1e-9
-    assert sum(abs(auth[v] - ref_auth[v]) for v in auth) < 1e-9
-    # L2 norms are 1 after any completed half-step pair
-    assert abs(sum(x * x for x in hub.values()) - 1.0) < 1e-9
-    assert abs(sum(x * x for x in auth.values()) - 1.0) < 1e-9
-
-
-def test_hits_multi_edges_collapse(spark):
-    hub1, auth1 = _spark_hits(
-        spark, [("a", "b"), ("a", "b"), ("b", "c")], iterations=8)
-    hub2, auth2 = _spark_hits(
-        spark, [("a", "b"), ("b", "c")], iterations=8)
-    for v in hub1:
-        assert abs(hub1[v] - hub2[v]) < 1e-12
-        assert abs(auth1[v] - auth2[v]) < 1e-12
-
-
-def test_hits_separates_hub_from_authority(spark):
-    # A directory page links to every article; articles link to one
-    # another sparsely. PageRank ranks the directory low (nothing links
-    # to it) — HITS is the only signal that surfaces it.
-    arts = [f"art{i}" for i in range(5)]
-    edges = [("dir", a) for a in arts] + [("art0", "art1"), ("art1", "art2")]
-    hub, auth = _spark_hits(spark, edges, iterations=10)
-    assert hub["dir"] == max(hub.values())
-    assert abs(auth["dir"]) < 1e-12
-    ranks = _spark_ranks(spark, edges, iterations=10)
-    assert ranks["dir"] == min(ranks.values())
 
 
 def test_entity_pagerank_over_triples(spark):

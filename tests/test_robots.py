@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stackoverflowner_spark.operators.robots import (
-    effective_rules, robots_decide, robots_filter)
+    effective_rules, robots_decide)
 from stackoverflowner_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -80,17 +80,6 @@ def test_longest_match_and_tie(spark):
     assert got["https://other.com/a/x"].allowed
     assert got["https://ex.com/a/b/x"].rule_prefix == "/a/b"
     assert got["https://ex.com/free"].rule_kind is None
-
-
-def test_filter_keeps_pages_columns(spark):
-    rules = [("ex.com", "*", "disallow", "/no")]
-    pages = spark.createDataFrame(
-        [(1, "https://ex.com/no/1"), (2, "https://ex.com/yes")],
-        "doc_id long, url string")
-    out = robots_filter(pages, spark.createDataFrame(
-        rules, "host string, agent string, kind string, prefix string"))
-    assert out.columns == ["doc_id", "url"]
-    assert [r.doc_id for r in out.collect()] == [2]
 
 
 def test_zero_corpus_shuffle_plan(spark):
