@@ -15,7 +15,7 @@ from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from .offsets import map_tokens_to_offsets
 from .sentencize import Standoff
-from .sotok import TokenizerGuardError, tokenize
+from .sotok import tokenize
 
 
 @lru_cache(maxsize=65536)

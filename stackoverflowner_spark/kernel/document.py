@@ -9,6 +9,7 @@ module.
 
 from __future__ import annotations
 
+import weakref
 from hashlib import blake2b
 from itertools import groupby
 from operator import itemgetter
@@ -76,11 +77,16 @@ def mention_rows(key: tuple, tokens: Sequence[str], tags: Sequence[str]
 
 
 _PAGE_MEMO = FifoMemo(8_192)
-"""Per-worker memo of each capture body's pre-tag state: a recrawl row
-whose body this worker already read skips extract, sentencize and
-tokenize+BIO. Keyed ``(url, body kind, blake2b-128 of the body)`` — the url
-because ``sentencize`` takes the doc id from it. Tags are not memoized here:
-they depend on the tagger, and the tagger's own memo serves repeats."""
+"""Per-worker memo of what each capture body yields, keyed ``(url, body
+kind, blake2b-128 of the body)`` — the url because ``sentencize`` takes the
+doc id from it. An entry is ``[outcome, truncated, sentences, rows]``:
+``_page_state``'s pre-tag state, so a recrawl row whose body this worker
+already read skips extract, sentencize and tokenize+BIO, and one slot for
+the body's final mention rows ``(weak tagger ref, doc_consistency,
+((sent_idx, tok_start, tok_end, surface, surface_norm, tag_type), ...))``,
+so it also skips tagging, doc-consistency and chunking. The rows hold for
+the tagger and flag stamped on them; another tagger or flag recomputes
+them and overwrites the slot."""
 
 
 def _body_key(url: str, html, text):
@@ -113,41 +119,80 @@ def page_batch_mentions(urls: Sequence[str], htmls: Sequence, texts: Sequence,
                         tagger, doc_consistency: bool
                         ) -> Tuple[List[tuple], Dict[str, int]]:
     """One batch of pages -> ``(rows, counts)``: ``mention_rows`` keyed by
-    ``(page position, sent_idx)``, and the ``COUNT_KEYS`` counters.
+    ``(page position, sent_idx)`` in page, sentence, chunk order, and the
+    ``COUNT_KEYS`` counters.
 
-    Each phase runs batch-wide: every page's pre-tag state (``_page_state``,
-    served from the worker's ``_PAGE_MEMO`` when this worker already read
-    the same body under the same url; a hit counts exactly as a miss
-    would), ONE ``tag_sentences`` call (a batched decode amortizes across
-    the batch), the opt-in doc-consistency pass per page, then chunking."""
+    Every page's pre-tag state comes from the worker's ``_PAGE_MEMO`` when
+    this worker already read the same body under the same url, else from
+    ``_page_state``; a hit counts exactly as a miss would. Rows are made
+    per doc-consistency unit, a run of adjacent sentence-bearing pages with
+    one url, whose sentences vote together:
+
+    * a run of copies of one body gives every copy the rows of one copy (k
+      copies cast k times one copy's votes: the same majorities and ties),
+      so it is served from the entry's rows when this tagger and flag made
+      them, and else tagged once and stored;
+    * a run that mixes bodies is tagged whole and stores no rows.
+
+    What is left to tag goes to ONE ``tag_sentences`` call (a batched
+    decode amortizes across the batch), then one ``doc_postpass`` per run
+    when ``doc_consistency``, then chunking."""
     counts = dict.fromkeys(COUNT_KEYS, 0)
-    sents = []  # (page_pos, url, sent_idx, tokens, md_tags)
+    bearing = []  # (url, page_pos, key, entry) of each sentence-bearing page
     for pos, (url, html, text) in enumerate(zip(urls, htmls, texts)):
         key = _body_key(url, html, text)
-        state = None if key is None else _PAGE_MEMO.get(key)
-        if state is None:
-            state = _page_state(url, html, text)
+        entry = None if key is None else _PAGE_MEMO.get(key)
+        if entry is None:
+            entry = [*_page_state(url, html, text), None]
             if key is not None:
-                _PAGE_MEMO.put(key, state)
-        outcome, truncated, per_sent = state
+                _PAGE_MEMO.put(key, entry)
+        outcome, truncated, per_sent, _rows = entry
         counts["pages"] += 1
         counts[outcome] += 1
         counts["truncated"] += truncated
-        sents.extend((pos, url, i, toks, mds) for i, toks, mds in per_sent)
+        if per_sent:
+            bearing.append((url, pos, key, entry))
 
-    tags = tagger.tag_sentences([(s[3], s[4]) for s in sents])
-    if doc_consistency:
-        # a run of sentences sharing a url is one document, so adjacent
-        # recaptures of a url vote together
-        tags = list(tags)
-        i = 0
-        for _url, run in groupby(sents, key=itemgetter(1)):
-            toks = [s[3] for s in run]
-            j = i + len(toks)
-            tags[i:j] = doc_postpass(toks, tags[i:j])
-            i = j
+    units = []  # per run: (page positions, entry), or (None, rows) if mixed
+    jobs = []   # (entry or None, out rows, [(row key, tokens, md_tags)])
+    queued = set()
+    for _url, run in groupby(bearing, key=itemgetter(0)):
+        run = list(run)
+        key, entry = run[0][2], run[0][3]
+        if key is not None and all(r[2] == key for r in run):
+            units.append(([r[1] for r in run], entry))
+            stamp = entry[3]
+            if (stamp is None or stamp[0]() is not tagger
+                    or stamp[1] != doc_consistency) and id(entry) not in queued:
+                queued.add(id(entry))
+                jobs.append((entry, [], [((i,), toks, mds)
+                                         for i, toks, mds in entry[2]]))
+        else:
+            rows = []
+            units.append((None, rows))
+            jobs.append((None, rows, [((r[1], i), toks, mds) for r in run
+                                      for i, toks, mds in r[3][2]]))
 
-    rows: List[tuple] = []
-    for (pos, _url, sent_idx, toks, _mds), sent_tags in zip(sents, tags):
-        rows.extend(mention_rows((pos, sent_idx), toks, sent_tags))
-    return rows, counts
+    tags = jobs and tagger.tag_sentences([s[1:] for job in jobs
+                                          for s in job[2]])
+    ref, i = weakref.ref(tagger), 0
+    for entry, rows, sents in jobs:
+        j = i + len(sents)
+        run_tags = tags[i:j]
+        if doc_consistency:
+            run_tags = doc_postpass([s[1] for s in sents], run_tags)
+        for (key, toks, _mds), sent_tags in zip(sents, run_tags):
+            rows.extend(mention_rows(key, toks, sent_tags))
+        if entry is not None:
+            entry[3] = (ref, doc_consistency, tuple(rows))
+        i = j
+
+    out: List[tuple] = []
+    for positions, got in units:
+        if positions is None:
+            out.extend(got)
+        else:
+            rows = got[3][2]
+            for pos in positions:
+                out.extend([(pos,) + r for r in rows])
+    return out, counts

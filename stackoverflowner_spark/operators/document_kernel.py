@@ -155,10 +155,11 @@ def tokens_long(sentences: DataFrame) -> DataFrame:
     )
 
 
-# id(tagger) -> (weak tagger ref, Broadcast) per application
+# id(tagger) -> (weak tagger ref, Broadcast, token) per application
 _TAGGER_BC = AppCache(8)
 
 _HEAP_FROZEN = False
+_WORKER_TAGGER = (None, None)  # (token, tagger) this worker holds
 
 
 def _freeze_worker_heap() -> None:
@@ -180,36 +181,58 @@ def _freeze_worker_heap() -> None:
         _HEAP_FROZEN = True
 
 
-def _tagger_broadcast(spark, tagger):
-    """Ship the tagger as an explicit Broadcast instead of a task-closure
-    capture.
+def _worker_tagger(bc, token):
+    """The tagger of broadcast ``bc`` in this worker, unpickled only when
+    the worker does not hold the one minted with ``token`` yet.
+
+    A Python task that does not use ``bc`` makes Spark drop it from the
+    worker's broadcast registry, and the next ``bc.value`` would unpickle
+    a new tagger: with an empty sentence memo, a rebuilt ``_ctx_vecs``
+    (~0.12 s), and none of the page memo's rows stamped with it. The
+    worker-side ``Broadcast`` carries only a file path, so the driver
+    mints ``token`` with the broadcast and the UDFs capture it."""
+    global _WORKER_TAGGER
+    if _WORKER_TAGGER[0] != token:
+        _WORKER_TAGGER = (token, bc.value)
+        _freeze_worker_heap()
+    return _WORKER_TAGGER[1]
+
+
+def _ship_tagger(spark, tagger):
+    """``(Broadcast, token)`` of ``tagger`` for this application: the
+    tagger ships as an explicit Broadcast instead of a task-closure
+    capture, and ``token`` names it for ``_worker_tagger``.
 
     A learned tagger artifact is tens of MB of pickled numpy; captured in
     the UDF closure it is re-deserialized PER TASK, and at local[32] the 32
     concurrent cold unpickles (plus per-task cold feature caches) measured
-    4-10x on the whole flagship versus this path — broadcast values are
-    unpickled once per worker process and cached across tasks AND jobs, so
-    the tagger's executor-local caches survive with them. Weakly keyed per
-    (application, tagger) so repeated pipeline calls reuse one broadcast;
-    the weakref check keeps a new tagger that got a dead one's id() from
-    being handed its broadcast.
+    4-10x on the whole flagship versus this path — a worker unpickles the
+    broadcast value once and keeps it across tasks AND jobs
+    (``_worker_tagger``), so the tagger's executor-local caches survive
+    with it. Weakly keyed per (application, tagger) so repeated pipeline
+    calls reuse one broadcast; the weakref check keeps a new tagger that
+    got a dead one's id() from being handed its broadcast.
 
     Spark pickles the value at protocol 5. The structured model ships its
     weights packed (``StructuredPerceptron.__getstate__``: feature keys plus
     one float64 matrix, rebuilt as row views), so a worker's unpickle adds a
-    handful of GC-tracked objects instead of ~168k, and the UDFs then call
-    ``_freeze_worker_heap`` once per worker. A worker keeps the value only
-    while its tasks use this broadcast: a task without it makes Spark drop
-    it from the worker's registry.
+    handful of GC-tracked objects instead of ~168k, and ``_worker_tagger``
+    then calls ``_freeze_worker_heap`` once per worker.
     """
+    import uuid
     import weakref
 
     hit = _TAGGER_BC.get(spark, id(tagger))
     if hit is not None and hit[0]() is tagger:
-        return hit[1]
-    bc = spark.sparkContext.broadcast(tagger)
-    _TAGGER_BC.put(spark, id(tagger), (weakref.ref(tagger), bc))
-    return bc
+        return hit[1:]
+    shipped = spark.sparkContext.broadcast(tagger), uuid.uuid4().hex
+    _TAGGER_BC.put(spark, id(tagger), (weakref.ref(tagger), *shipped))
+    return shipped
+
+
+def _tagger_broadcast(spark, tagger):
+    """The ``Broadcast`` that ``_ship_tagger`` ships ``tagger`` in."""
+    return _ship_tagger(spark, tagger)[0]
 
 
 def pages_to_mentions_fused(pages: DataFrame, tagger,
@@ -230,11 +253,10 @@ def pages_to_mentions_fused(pages: DataFrame, tagger,
     here (the raw fused kernel stays bitwise-equal to the modular stage
     chain); KGPipeline enables it on both of its paths.
     """
-    bc = _tagger_broadcast(pages.sparkSession, tagger)
+    bc, token = _ship_tagger(pages.sparkSession, tagger)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = bc.value
-        _freeze_worker_heap()
+        tagger = _worker_tagger(bc, token)
         for pdf in batches:
             urls = pdf["url"].tolist()
             rows, _counts = page_batch_mentions(
@@ -252,15 +274,14 @@ def mentions_stage(sentences: DataFrame, tagger) -> DataFrame:
     ``tagger`` is any ``Tagger`` from operators.tagger (gazetteer default,
     model-pluggable per SURVEY.md §7 step 5). Row-local => narrow; the tagger
     ships as an explicit broadcast, unpickled once per worker
-    (see _tagger_broadcast), and decodes each Arrow batch in one
+    (see _ship_tagger), and decodes each Arrow batch in one
     ``tag_sentences`` call, as the fused kernel does.
     """
     rows = sentences.filter(F.col("sent_idx") >= 0)
-    bc = _tagger_broadcast(sentences.sparkSession, tagger)
+    bc, token = _ship_tagger(sentences.sparkSession, tagger)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tagger = bc.value
-        _freeze_worker_heap()
+        tagger = _worker_tagger(bc, token)
         for pdf in batches:
             sents = [(list(t), list(m))
                      for t, m in zip(pdf["tokens"], pdf["md_tags"])]

@@ -14,7 +14,7 @@ engines).
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -181,8 +181,8 @@ class PerceptronTagger(Tagger):
         ``(tuple(tokens), tuple(md_tags))``, capped at ``_SENT_CACHE_MAX``
         entries, never pickled. It lives on the tagger instance, and the
         kernels ship the tagger as a Spark broadcast (document_kernel
-        ``_tagger_broadcast``), which each reused Python worker unpickles
-        once and keeps across tasks and jobs — so the memo is per worker
+        ``_ship_tagger``), which each reused Python worker unpickles once
+        and keeps across tasks and jobs (``_worker_tagger``) — so the memo is per worker
         process, not per task."""
         cache = self.__dict__.get("_sent_cache")
         if cache is None:
@@ -347,7 +347,7 @@ def default_tagger() -> Tagger:
 
     Returns ONE cached instance per artifact version (keyed by mtime): the
     kernel ships the tagger as a Spark broadcast keyed by object identity
-    (document_kernel._tagger_broadcast), so a shared instance lets repeated
+    (document_kernel._ship_tagger), so a shared instance lets repeated
     pipeline runs in a session reuse one broadcast — executors unpickle the
     model once and keep their warm feature caches — instead of paying a
     fresh 32-worker cold start per run (measured ~20 s/run at local[32]).

@@ -24,7 +24,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Callable, Dict, List, Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

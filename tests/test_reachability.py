@@ -312,3 +312,52 @@ def test_every_option_is_set_by_a_caller():
                     if not done:
                         unset.add(f"{mod}.{qual}({opt})")
     assert unset == set(KEEP_OPTIONS)
+
+
+def _annotation_names(node):
+    """Names inside a string annotation (``"CTCArtifact"``)."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        try:
+            node = ast.parse(node.value, mode="eval")
+        except SyntaxError:
+            return
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n is not node):
+            yield from _annotation_names(n)
+
+
+def test_no_unused_imports():
+    """Every name a package module imports is used: it occurs as a name in
+    the module, in a string annotation or in ``__all__``. ``__future__``
+    imports and lines marked ``# noqa: F401`` (re-exports) are exempt."""
+    unused = set()
+    for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"),
+                          recursive=True):
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        lines, tree = src.splitlines(), ast.parse(src)
+        used, imported = set(), {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, (ast.arg, ast.AnnAssign)) and n.annotation:
+                used.update(_annotation_names(n.annotation))
+            elif (isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  and n.returns):
+                used.update(_annotation_names(n.returns))
+            elif (isinstance(n, ast.Assign) and any(
+                    getattr(t, "id", "") == "__all__" for t in n.targets)):
+                used.update(ast.literal_eval(n.value))
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                if getattr(n, "module", "") == "__future__" or any(
+                        "# noqa: F401" in lines[i - 1]
+                        for i in range(n.lineno, n.end_lineno + 1)):
+                    continue
+                for a in n.names:
+                    imported[a.asname or a.name.partition(".")[0]] = a.name
+        mod = _module_of(path)[len(PKG) + 1:]
+        unused |= {f"{mod}:{name}" for name in imported if name not in used}
+    assert unused == set()
